@@ -278,8 +278,8 @@ object Bench {
       // timed region (untimed; 116x2 boundaries ~= 28 s of wall).
       Thread.sleep(120)
       // Size-gated shuffle-file drain: at 100x-probe scale a single query
-      // retains a multi-GB shuffle footprint past the 120 ms settle (the
-      // ProbeQ76 experiment measured 2.6 GB deleted in 1.7-2.9 s once the
+      // retains a multi-GB shuffle footprint past the 120 ms settle (a q76
+      // experiment measured 2.6 GB deleted in 1.7-2.9 s once the
       // cleaner's weak refs are collected), and in a plain boundary that
       // deletion lands inside the NEXT query's timed region. Poll the
       // session-private local dir until it stops shrinking (bounded) so
@@ -341,12 +341,17 @@ object Bench {
     // Per-query cells are APPROXIMATE (the listener bus is async and query
     // boundaries don't drain it — a trailing task-end can credit the next
     // query), but the sum is conserved; the strict-drain protocol stays on
-    // the slow-list queries_cpu vector below.
+    // the slow-list queries_cpu vector below, which reads this same
+    // counter's delta between two drains (taskEvents is the drain's
+    // progress signal).
     val cpuAllNs = new java.util.concurrent.atomic.AtomicLong(0)
+    val taskEvents = new java.util.concurrent.atomic.AtomicLong(0)
     val cpuAllL = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        taskEvents.incrementAndGet()
         if (e.taskMetrics != null) cpuAllNs.addAndGet(e.taskMetrics.executorCpuTime)
+      }
     }
     spark.sparkContext.addSparkListener(cpuAllL)
     // Memory-bandwidth self-calibration (r17): the round's neighbor storm
@@ -533,28 +538,18 @@ object Bench {
     val (minWarmVec, cpuVec): (Seq[(String, Double)], Seq[(String, Double)]) =
       if (only.nonEmpty) (Nil, Nil)
       else {
-        val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-        val taskEvents = new java.util.concurrent.atomic.AtomicLong(0)
-        val cpuL = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            taskEvents.incrementAndGet()
-            if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-          }
-        }
-        spark.sparkContext.addSparkListener(cpuL)
         val rows = slowest.filterNot(t => failed.contains(t.name)).flatMap { t =>
           var minWall = t.warm
           var minCpu = Double.MaxValue
           var k = 0
           var broke = false
           while (k < 3 && !broke) {
-            // the bus is async: drain BEFORE resetting the CPU counter so
+            // the bus is async: drain BEFORE reading the CPU baseline so
             // a prior query's trailing task-end events can't leak into
-            // this pass's sum, and AFTER the run so this pass's trailing
+            // this pass's delta, and AFTER the run so this pass's trailing
             // events are counted before the read
             val drainedPre = PlanAudit.drainListenerBus(spark, () => taskEvents.get)
-            cpuNs.set(0)
+            val cpu0 = cpuAllNs.get
             val (sec, _, _) = once(t.name) // full boundary hygiene inside
             val drainedPost = PlanAudit.drainListenerBus(spark, () => taskEvents.get)
             // a pass that THREW returns its time-to-throw — taking that
@@ -567,10 +562,10 @@ object Bench {
               // a timed-out drain on EITHER side means this pass's CPU sum
               // may be missing trailing task-end events (understated) or
               // carrying a prior pass's (overstated) — the same undrained-
-              // read hazard the probe/spec fail on; skip the CPU sample
+              // read hazard the specs fail on; skip the CPU sample
               // (wall is listener-independent and stays)
               if (drainedPre && drainedPost)
-                minCpu = math.min(minCpu, cpuNs.get / 1e9)
+                minCpu = math.min(minCpu, (cpuAllNs.get - cpu0) / 1e9)
             }
             k += 1
           }
@@ -580,7 +575,6 @@ object Bench {
           else Some((t.name -> minWall,
             if (minCpu == Double.MaxValue) None else Some(t.name -> minCpu)))
         }
-        spark.sparkContext.removeSparkListener(cpuL)
         (rows.map(_._1), rows.flatMap(_._2))
       }
     def r3(d: Double) = (d * 1000).round / 1000.0

@@ -52,14 +52,14 @@ object PlanAudit {
     }.toMap
   }
 
-  /** One-line rendering for probe output / spec failure messages. */
+  /** One-line rendering for spec failure messages. */
   def render(s: Map[String, Int]): String =
     Keys.map(k => s"$k=${s.getOrElse(k, 0)}").mkString(", ")
 
   /** The pinned heavy-plan set: ONE definition, consumed by PlanShapeSpec
-    * (shape pinning), NarrowAmplifierSpec (test-time amplifier gate) and
-    * ProbeAmplifier (the at-scale probe) — a plan added to the audit set
-    * is then covered by all three with no silent drift. */
+    * (shape pinning) and NarrowAmplifierSpec (test-time amplifier gate) —
+    * a plan added to the audit set is then covered by both with no silent
+    * drift. */
   val PinnedPlans: Seq[String] = Seq(
     "q12_group_by_consecutive", "q21_dedup_jaccard", "q32_dedup_embed",
     "q54_dup_clusters", "q65_dedup_keep_one", "q72_keyed_multiwin",
@@ -67,8 +67,8 @@ object PlanAudit {
     "q82_asof_join", "q85_pack_per_split", "q89_multi_quantiles",
     "q99d_mse", "q110_entropy_kde")
 
-  /** The NARROW-AMPLIFIER stage predicate (one definition for spec and
-    * probe): few tasks, multi-MB shuffle write, >16× record amplification,
+  /** The NARROW-AMPLIFIER stage predicate (NarrowAmplifierSpec's gate):
+    * few tasks, multi-MB shuffle write, >16× record amplification,
     * and the input came from a shuffle (or nothing — a generator). The
     * record-level ratio and the shuffle-input condition are what separate
     * the q72 class (an AQE-coalesced exchange stays narrow on any cluster)
@@ -79,8 +79,7 @@ object PlanAudit {
     numTasks <= math.max(1, cores / 4) && writeBytes > (4L << 20) &&
       writeRec > 16L * math.max(inRec + shRec, 1L) && (shRec > 0 || inRec == 0)
 
-  /** The ABSOLUTE few-task rule (ScaleSmoke's r13 listener, also applied
-    * by ProbeAmplifier): few tasks carrying >256 MB of shuffle write is a
+  /** The ABSOLUTE few-task rule (ScaleSmoke's r13 listener): few tasks carrying >256 MB of shuffle write is a
     * serialization point regardless of how it arose. One definition, so a
     * threshold recalibration cannot leave one consumer gating stale. */
   def absoluteNarrow(numTasks: Int, cores: Int, writeBytes: Long): Boolean =
@@ -97,7 +96,7 @@ object PlanAudit {
     * or the poll saw 3 quiet windows) and false when the fallback poll
     * timed out (60 tries × 200 ms) with events possibly still in flight —
     * a caller reading flags after a false return may be reading them
-    * before trailing stage events landed, so the amplifier spec/probe
+    * before trailing stage events landed, so the amplifier spec
     * must FAIL on false rather than proceed as if drained. */
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession,
                        progress: () => Long): Boolean = {

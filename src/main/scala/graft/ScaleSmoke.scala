@@ -14,9 +14,10 @@ import graft.scale.{Ann, Dedup}
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", (2 * cpus).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1099,8 +1099,8 @@ object SparkEntry {
         pmod(col("doc_id"), lit(4)).as("shard"),
         length(col("text")).as("tlen"))
       val tmpRoot = System.getProperty("java.io.tmpdir")
-      // plan-inspection tools (PlanCheck & co) set graft.plan.only: they
-      // need the PLAN, not the audit, so the layout subject shrinks to a
+      // the plan-inspection main (PlanDump) sets graft.plan.only: it
+      // needs the PLAN, not the audit, so the layout subject shrinks to a
       // 256-row sample under a DISTINCT path suffix — a later real run in
       // the same JVM must not find the tiny layout's _SUCCESS and reuse it
       val planOnly = sys.props.get("graft.plan.only").contains("1")
@@ -1576,7 +1576,7 @@ object SparkEntry {
     // Output contract (r18): per-distance counts + order-free content
     // checksums over the COMPLETE pair set, not the pairs themselves. The
     // r15-r17 contract ORDER BY'd every emitted pair — 387M rows at 100×,
-    // measured at ~94% of the cell (ProbeQ76Sort) and the #1 structural
+    // measured at ~94% of the cell and the #1 structural
     // line, all of it test-contract cost the operator never needs (Manku
     // WWW'07 banding emits an unordered pair stream). The checksum
     // aggregate verifies strictly MORE than the sorted sample did (every

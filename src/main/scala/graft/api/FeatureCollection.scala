@@ -335,7 +335,7 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       // series, each side shuffled on the same key (reference passes one
       // windowed view per series, strided_rolling.py:455-470).
       // r19 same-source tuple fusion (guide §2.4): when every tuple series
-      // wraps the SAME frame and index column (sameResult gate, like the
+      // wraps the SAME frame and index column (Series.sameSource, like the
       // G3 fusion), the per-series assignment + (segment, index) equi-join
       // chain is the identity — ONE wide assignment off one scan carries
       // every value column, deleting n−1 scans, n−1 assignment exchanges
@@ -350,10 +350,7 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       // note below).
       val sameSourceTuple = fuseSameSourceTuples &&
         seriesSeq.lengthCompare(1) > 0 && !isSample &&
-        seriesSeq.tail.forall(s2 =>
-          s2.idxCol == series.idxCol && s2.tz == series.tz &&
-            ((s2.df eq series.df) || s2.df.queryExecution.analyzed
-              .sameResult(series.df.queryExecution.analyzed)))
+        seriesSeq.tail.forall(series.sameSource)
       val (assigned, valueCols) =
         if (seriesSeq.lengthCompare(1) == 0)
           (Segmenter.assign(rows, plan), Seq(col("__v")))
@@ -542,17 +539,12 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     // forward-fill pass and no segments-to-features join: ONE ranged scan
     // (Scan.groupRunScan) tags every row with its run id, and ONE aggregate
     // computes the run boundaries AND every feature. The generic path's
-    // 100× ablation (ProbeQ12): full query ~330-370 s CPU, of which the
+    // 100× ablation: full query ~330-370 s CPU, of which the
     // second scan + 2×rows union exchange/pin + fill-forward + the
     // runs⋈feats join — everything this branch removes — own the majority.
-    // same-source = the same analyzed plan (two `spark.read.parquet(path)`
-    // calls of one file compare equal under sameResult), same index column
-    // and same tz interpretation — everything that makes `internalPlus`
-    // over the group frame see exactly each series' `internal` rows
-    val fusible = fuseSameSource && data.forall(s =>
-      s.idxCol == group.idxCol && s.tz == group.tz &&
-        ((s.df eq group.df) || s.df.queryExecution.analyzed
-          .sameResult(group.df.queryExecution.analyzed)))
+    // Series.sameSource is what makes `internalPlus` over the group frame
+    // see exactly each series' `internal` rows
+    val fusible = fuseSameSource && data.forall(group.sameSource)
     if (fusible) return fusedGroupByConsecutive(data, group)
     genericGroupByConsecutive(data, group)
   }

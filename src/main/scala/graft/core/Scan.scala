@@ -258,7 +258,7 @@ object Scan {
   }
 
   /** [[keyedRankMulti]] specialized to QUANTILE-BRACKET consumers (r18,
-    * from the committed ProbeQ89 attribution: at 100× the exchange is ~8%
+    * from the measured q89 attribution: at 100× the exchange is ~8%
     * of the rank stage — the local window sort + stitch over every n·k row
     * dominates). A quantile needs ranks only at floor/ceil(1+(n−1)q), and
     * each such global rank falls inside exactly ONE (partition, key)
@@ -310,7 +310,7 @@ object Scan {
     * This is the 100 TB quantile shape: a map-side-combining
     * `groupBy(key, value).count()` collapses repeated values BEFORE any
     * range exchange, so the exchange + pid-pin checkpoint + window sort —
-    * the measured q89 residual at 100× (ProbeQ89) — run over the DISTINCT
+    * the measured q89 residual at 100× — run over the DISTINCT
     * (key, value) set, not every observation. Real columns repeat
     * (quantities, prices, codes, sensor LSBs); worst case (all values
     * unique) the histogram is a single extra linear map-combined pass.

@@ -86,6 +86,21 @@ final case class Series(name: String, df: DataFrame, idxCol: String,
         extra.toIndexedSeq.map { case (src, as) => col(src).as(as) }: _*)
       .where(col("__idx").isNotNull)
 
+  /** Whether `other` yields exactly this series' `__idx` for every source
+    * row: the same frame (the same object, or an analyzed plan with the same
+    * result — two `spark.read.parquet(path)` calls of one file compare
+    * equal), the same index column and the same tz interpretation, DST
+    * policies included. The gate of every same-source fusion (one scan,
+    * one bounds agg). Not keyed on `internal`'s plan: a tz-declared index
+    * embeds the series name in its conversion expression.
+    */
+  private[graft] def sameSource(other: Series): Boolean =
+    idxCol == other.idxCol && tz == other.tz &&
+      tzAmbiguous == other.tzAmbiguous &&
+      tzNonexistent == other.tzNonexistent &&
+      ((df eq other.df) || df.queryExecution.analyzed
+        .sameResult(other.df.queryExecution.analyzed))
+
   private lazy val idxExpr: org.apache.spark.sql.Column = {
     (domain, idxType, tz) match {
       case (Domain.Time, TimestampNTZType, Some(zone)) =>

@@ -594,18 +594,6 @@ object Catch22Util {
     java.lang.Double.valueOf(out)
   }
 
-  /** Debug-only: print per-member wall times from [[compute]]. */
-  @volatile var timings: Boolean = false
-  private def timed[A](name: String)(f: => A): A = {
-    if (!timings) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"  $name%-36s ${(System.nanoTime() - t0) / 1e6}%.2f ms")
-      r
-    }
-  }
-
   def compute(arr: ArrayData): InternalRow = compute(arr, catch24 = false)
 
   def compute(arr: ArrayData, catch24: Boolean): InternalRow = {
@@ -618,26 +606,26 @@ object Catch22Util {
     if (n > 0) mu /= n
     val out = new Array[Any](if (catch24) names24.length else names.length)
 
-    out(0) = timed("mode5")(histMode(x, 5))
-    out(1) = timed("mode10")(histMode(x, 10))
+    out(0) = histMode(x, 5)
+    out(1) = histMode(x, 10)
 
     // SB_BinaryStats_mean_longstretch1: binarize by the mean (1 = strictly
     // above), longest run of 1s. Empty window → null; no value above → 0.
-    out(2) = timed("longstretch1")(if (n == 0) null
-      else java.lang.Double.valueOf(longestRun(0, n, t => x(t) > mu).toDouble))
+    out(2) = if (n == 0) null
+      else java.lang.Double.valueOf(longestRun(0, n, t => x(t) > mu).toDouble)
 
     // SB_BinaryStats_diff_longstretch0: binarize successive diffs (0 =
     // strict decrease), longest run of 0s = longest run of decreases.
-    out(3) = timed("diffstretch0")(if (n < 2) null
+    out(3) = if (n < 2) null
       else java.lang.Double.valueOf(
-        longestRun(0, n - 1, t => x(t + 1) - x(t) < 0).toDouble))
+        longestRun(0, n - 1, t => x(t + 1) - x(t) < 0).toDouble)
 
     val acf = new Acf(x)
 
     // CO_f1ecac: first 1/e crossing of the ACF, linearly interpolated
     // between the straddling lags (C: out = i + (thresh − ac_i)/(ac_{i+1} −
     // ac_i) at the first i with ac_{i+1} < 1/e); n if no crossing.
-    out(4) = timed("f1ecac")(if (n < 3 || !acf.defined) null else {
+    out(4) = if (n < 3 || !acf.defined) null else {
       val thresh = 1.0 / math.E
       var res = n.toDouble
       var j = 0
@@ -648,11 +636,11 @@ object Catch22Util {
         j += 1
       }
       java.lang.Double.valueOf(res)
-    })
+    }
 
     // CO_FirstMin_ac: lag of the first local ACF minimum (ac(i) below both
     // neighbors, 1 ≤ i ≤ n−2); n if none.
-    out(5) = timed("firstmin")(if (n < 3 || !acf.defined) null else {
+    out(5) = if (n < 3 || !acf.defined) null else {
       var res = n.toDouble
       var j = 1
       var done = false
@@ -661,26 +649,26 @@ object Catch22Util {
         j += 1
       }
       java.lang.Double.valueOf(res)
-    })
+    }
 
     // CO_trev_1_num: mean cubed successive difference.
-    out(6) = timed("trev")(if (n < 2) null else {
+    out(6) = if (n < 2) null else {
       var s = 0.0; var t = 0
       while (t < n - 1) { val d = x(t + 1) - x(t); s += d * d * d; t += 1 }
       java.lang.Double.valueOf(s / (n - 1))
-    })
+    }
 
     // MD_hrv_classic_pnn40: fraction of successive diffs with |Δ| > 0.04
     // (the C kernel scales |Δ|·1000 against the 40 ms HRV threshold).
-    out(7) = timed("pnn40")(if (n < 2) null else {
+    out(7) = if (n < 2) null else {
       var k = 0; var t = 0
       while (t < n - 1) { if (math.abs(x(t + 1) - x(t)) > 0.04) k += 1; t += 1 }
       java.lang.Double.valueOf(k.toDouble / (n - 1))
-    })
+    }
 
     // FC_LocalSimple_mean3_stderr: sample std (ddof=1) of the residuals of
     // a trailing-mean-3 forecast: r_i = x_{i+3} − mean(x_i, x_{i+1}, x_{i+2}).
-    out(8) = timed("ls3stderr")(if (n < 5) null else {
+    out(8) = if (n < 5) null else {
       // two-pass variance: the one-pass (ss - s*s/m) form cancels
       // catastrophically when the residuals are (near-)constant — e.g. a
       // perfectly linear window, whose mean3 residuals are all 2b — and
@@ -697,11 +685,11 @@ object Catch22Util {
         ssd += d * d; t += 1
       }
       java.lang.Double.valueOf(math.sqrt(ssd / (m - 1)))
-    })
+    }
 
     // FC_LocalSimple_mean1_tauresrat: first-zero ACF lag of the mean-1
     // forecast residuals (= successive diffs) over that of the window.
-    out(9) = timed("tauresrat")(if (n < 3) null else {
+    out(9) = if (n < 3) null else {
       val res = new Array[Double](n - 1)
       var t = 0
       while (t < n - 1) { res(t) = x(t + 1) - x(t); t += 1 }
@@ -709,7 +697,7 @@ object Catch22Util {
       if (!acf.defined || !acfR.defined) null
       else java.lang.Double.valueOf(
         acfR.firstZero(n - 1).toDouble / acf.firstZero(n).toDouble)
-    })
+    }
 
     // Shared rect-window periodogram of the de-meaned window, bins
     // k = 1..⌊n/2⌋ (DC bin is zero by construction); FFT/DFT split via
@@ -719,7 +707,7 @@ object Catch22Util {
     val nb = n / 2
     val (spec, specTotal, specOk) =
       if (n < 4) (new Array[Double](0), 0.0, false)
-      else timed("psd") {
+      else {
         val d = new Array[Double](n)
         var sxx = 0.0
         var t0 = 0
@@ -733,7 +721,7 @@ object Catch22Util {
 
     // SP_Summaries_welch_rect_centroid: first w_k = 2πk/n whose cumulative
     // power strictly exceeds half the total.
-    out(10) = timed("centroid")(if (!specOk) null else {
+    out(10) = if (!specOk) null else {
       val half = specTotal / 2.0
       var cs = 0.0
       var kk = 0
@@ -745,14 +733,14 @@ object Catch22Util {
         kk += 1
       }
       java.lang.Double.valueOf(res)
-    })
+    }
 
     // CO_HistogramAMI_even_2_5: auto mutual information at lag 2 over a
     // 5×5 joint histogram of (x_t, x_{t+2}); bin edges are the 5 even bins
     // over the WHOLE window's [min, max] (the DN_HistogramMode grid);
     // AMI = Σ p_ij ln(p_ij / (p_i·p_j)) in nats, marginals taken over the
     // paired samples. Null for n < 3 or a constant window.
-    out(11) = timed("ami25")(if (n < 3) null else {
+    out(11) = if (n < 3) null else {
       var mn = x(0); var mx = x(0); var i2 = 1
       while (i2 < n) { if (x(i2) < mn) mn = x(i2); if (x(i2) > mx) mx = x(i2); i2 += 1 }
       if (mx <= mn) null else {
@@ -779,14 +767,14 @@ object Catch22Util {
         }
         java.lang.Double.valueOf(ami)
       }
-    })
+    }
 
     // IN_AutoMutualInfoStats_40_gaussian_fmmi: Gaussian auto-MI curve
     // A(τ) = −½·ln(1 − ac(τ)²) over τ = 1..min(40, n−1); the feature is
     // the first local minimum's lag (A below both neighbors, 2 ≤ τ ≤ L−1),
     // L if none — the ACF-based estimator over the biased global-mean ACF,
     // like the other CO members.
-    out(12) = timed("fmmi")(if (n < 3 || !acf.defined) null else {
+    out(12) = if (n < 3 || !acf.defined) null else {
       val L = math.min(40, n - 1)
       def ami(tau: Int): Double = {
         val r = acf(tau)
@@ -800,26 +788,26 @@ object Catch22Util {
         j += 1
       }
       java.lang.Double.valueOf(res)
-    })
+    }
 
     // SP_Summaries_welch_rect_area_5_1: power in the lowest fifth of the
     // spectrum as a FRACTION of total power (the raw C member is the same
     // sum under Welch scale factors, which cancel under normalization —
     // documented deviation, mirrored by the oracle). Bin count max(1, nb/5).
-    out(13) = timed("area51")(if (!specOk) null else {
+    out(13) = if (!specOk) null else {
       val kc = math.max(1, nb / 5)
       var s5 = 0.0
       var kk = 0
       while (kk < kc) { s5 += spec(kk); kk += 1 }
       java.lang.Double.valueOf(s5 / specTotal)
-    })
+    }
 
     // SB_MotifThree_quantile_hh: tertile alphabet by continuous quantiles
     // (position (n−1)·q, linear interpolation — the numpy/DuckDB
     // quantile_cont convention; letter = 0 for v ≤ q⅓, 1 for v ≤ q⅔,
     // else 2), then the Shannon entropy (nats) of the 2-letter motif
     // distribution over the n−1 index-consecutive pairs.
-    out(14) = timed("motif_hh")(if (n < 2) null else {
+    out(14) = if (n < 2) null else {
       val sorted = java.util.Arrays.copyOf(x, n)
       java.util.Arrays.sort(sorted)
       // shared continuous-quantile rule: transitionMatrix3 (the other
@@ -842,16 +830,16 @@ object Catch22Util {
         ij += 1
       }
       java.lang.Double.valueOf(h)
-    })
+    }
 
     // ---- tranche 3 ------------------------------------------------------
-    out(15) = timed("outincl_p")(outlierInclude(x, 1.0))
-    out(16) = timed("outincl_n")(outlierInclude(x, -1.0))
-    out(17) = timed("transmat")(transitionMatrix3(x, acf))
-    out(18) = timed("embed2dist")(embed2DistExpFit(x, acf))
-    out(19) = timed("fluct_dfa")(fluctAnal(x, lag = 2, dfa = true))
-    out(20) = timed("fluct_rs")(fluctAnal(x, lag = 1, dfa = false))
-    out(21) = timed("periodwang")(periodicityWang(x))
+    out(15) = outlierInclude(x, 1.0)
+    out(16) = outlierInclude(x, -1.0)
+    out(17) = transitionMatrix3(x, acf)
+    out(18) = embed2DistExpFit(x, acf)
+    out(19) = fluctAnal(x, lag = 2, dfa = true)
+    out(20) = fluctAnal(x, lag = 1, dfa = false)
+    out(21) = periodicityWang(x)
 
     if (catch24) {
       // DN_Mean / DN_Spread_Std (sample std, n−1): pycatch22's two extras

@@ -618,7 +618,8 @@ object Dedup {
     // pinned: `groups` feeds the within-signature fan-out AND the banded
     // join (two differently-shaped consumers — no exchange reuse), so
     // without the checkpoint the scan + simhash + collapse aggregate runs
-    // twice end to end (r19 100× ProbeStages: two full 500k-doc scans)
+    // twice end to end (r19 100× stage attribution: two full 500k-doc
+    // scans)
     val groups = graft.core.Pinned.checkpoint(s.groupBy("simhash")
       .agg(array_distinct(sort_array(collect_list(col(idCol)))).as("__ids")))
     val within = groups.where(size(col("__ids")) >= 2)
@@ -747,7 +748,7 @@ object Dedup {
         col("__f").getField("__pos").as("__fpos"))
     // counted broadcast — see duplicatedSpans: without it the planner
     // sort-merges the minCount-gated firsts table against the full
-    // positional index (the r19 100× ProbeStages cell: two 292 MB sorts of
+    // positional index (the r19 100× stage attribution: two 292 MB sorts of
     // the same reused exchange at ~55 s CPU each); broadcasting keeps the
     // index map-side, the SMJ degrade stays above the counted limit
     val firstsCp = graft.core.Pinned.checkpoint(firsts)

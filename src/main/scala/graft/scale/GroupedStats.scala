@@ -44,7 +44,7 @@ object GroupedStats {
     // values are collapsed to ONE row carrying their count by a map-side-
     // combining hash aggregate BEFORE the rank machinery's range exchange
     // + pid-pin checkpoint + window sort — those now run over the distinct
-    // (key, value) set (ProbeQ89 pinned them as the 100× residual). A rank
+    // (key, value) set (the measured q89 residual at 100×). A rank
     // t is covered by the unique histogram row whose span (__slo, __shi]
     // contains it, so the bracket selection/interpolation below is
     // value-identical to ranking every raw row (SpanBracketsSpec
@@ -146,7 +146,7 @@ object GroupedStats {
     // histogram pre-collapse + weighted bracket ranking (r18) — see
     // exactQuantiles: the map-side-combining count collapses repeated
     // (key, metric, value) triples before the range exchange + pid-pin
-    // checkpoint + window sort that ProbeQ89 pinned as the 100× residual
+    // checkpoint + window sort measured as the q89 residual at 100×
     // (lineitem: quantities collapse ~12×, and REPLICATED rows collapse by
     // the copy count — exactly the repetition real prices/quantities have)
     val hist = long0.groupBy(col(keyCol), col("__gs_c"), col("__gs_v"))
@@ -634,7 +634,8 @@ object GroupedStats {
     // fit join are differently-keyed consumers of an unpinned frame) and
     // shuffled it a third time into the rad⋈pairs join: at the 100×
     // corpus the doubled pair build + join read ~2/3 of q106's CPU
-    // (ProbeStages: 649 MB + 1241 MB pair exchanges, 22.6 s / 422 s CPU).
+    // (stage attribution: 649 MB + 1241 MB pair exchanges, 22.6 s / 422 s
+    // CPU).
     // `fusedRadius = false` keeps the replaced shape as the differential
     // twin (NoldsSpec pins both against the driver brute force).
     val fit0 =

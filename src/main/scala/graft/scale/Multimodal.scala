@@ -96,7 +96,7 @@ object Multimodal {
     javax.imageio.ImageIO.setUseCache(false)
 
   /** Per-thread cached ImageIO WRITERS (the q79 provider-registry lesson,
-    * applied after measuring the image path — ProbeImageIO, 32 threads ×
+    * applied after measuring the image path — 32 threads ×
     * 1500 assets): the per-record `getImageWritersByFormatName` lookup +
     * writer construction costs 1.7× wall / 3.3× CPU at q78's asset sizes
     * (encode per-record 0.31 s / 6.1 s CPU vs reuse 0.18 s / 1.8 s CPU),

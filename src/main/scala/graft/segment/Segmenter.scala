@@ -46,18 +46,14 @@ object Segmenter {
     * outer = (min, max).
     */
   def bounds(series: Seq[Series], method: String = "inner"): Bounds = {
-    // r19: series wrapping the SAME frame and index column have identical
+    // r19: series of the same source (Series.sameSource) have identical
     // index bounds — one driver agg per distinct source, not per series.
     // These aggs run EAGERLY at plan-build time, so an n-tuple feature
     // over one frame paid n full input scans before the query even
     // started (q51's three-series wcorr: 3 scans → 1).
-    def sameSrc(a: Series, b: Series): Boolean =
-      a.idxCol == b.idxCol && a.tz == b.tz &&
-        ((a.df eq b.df) || a.df.queryExecution.analyzed
-          .sameResult(b.df.queryExecution.analyzed))
     val reps = scala.collection.mutable.ArrayBuffer.empty[(Series, (Double, Double))]
     val mm = series.map { s =>
-      reps.find { case (rep, _) => sameSrc(rep, s) } match {
+      reps.find { case (rep, _) => rep.sameSource(s) } match {
         case Some((_, v)) => v
         case None =>
           val r = s.internal.agg(min(col("__idx")), max(col("__idx"))).head()

@@ -91,7 +91,7 @@ class NarrowAmplifierSpec extends SparkSpec {
       // free this query's checkpoint blocks before the next heavy test:
       // 14 heavy queries back-to-back in the shared test JVM otherwise
       // accumulate exactly the retained-storage debt Bench's boundary
-      // (and ProbeAmplifier) release — observed there as a 3.7 s query
+      // releases — observed in an at-scale run as a 3.7 s query
       // reading 19.8 s under prior queries' checkpoints
       graft.core.Pinned.release(blocking = true)
       drainBus()

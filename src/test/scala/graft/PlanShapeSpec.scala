@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.Window
+
 /** Pins the physical-plan SHAPE (shuffle-exchange count + join-strategy
   * choice, via [[PlanAudit]]) of the most expensive bench queries — the
   * top-10 plans of the r12 plan audit plus the four r13 additions
@@ -9,10 +11,15 @@ package graft
   * the same regression into a named failure at the query that changed.
   *
   * Counts are the STATIC planner output at sf0.001 under the test session
-  * (local[4], 4 shuffle partitions — same settings PlanCheck/probes use).
+  * (local[4], 4 shuffle partitions — same settings PlanDump uses).
   * AQE can only improve on this shape at runtime. If a deliberate plan
   * change moves a count, update the table here WITH the reasoning — the
   * point is that it cannot move silently.
+  *
+  * Each pinned plan must also hold no global window (a logical `Window`
+  * with an empty partitionSpec, the condition behind Spark's "No Partition
+  * Defined for Window operation" warning): cumulative scans stay
+  * range-partitioned through `graft.core.Scan`.
   *
   * Notes on the pinned values:
   *  - the broadcast_nested_loop_join=1 in q12/q73/q82 is the documented
@@ -191,13 +198,18 @@ class PlanShapeSpec extends SparkSpec {
       observed(name) = got
       assert(got == want,
         s"\n  expected: ${PlanAudit.render(want)}\n  actual:   ${PlanAudit.render(got)}")
+      // no global window (see the class doc)
+      val global = df.queryExecution.optimizedPlan.collectWithSubqueries {
+        case w: Window if w.partitionSpec.isEmpty => w.simpleString(200)
+      }
+      assert(global.isEmpty, s"single-partition windows: ${global.mkString("; ")}")
     }
   }
 
   test("the expectation table covers exactly the shared pinned-plan set") {
     // PlanAudit.PinnedPlans is the single source the amplifier spec and
-    // the at-scale probe iterate — a plan added to one audit surface must
-    // be added to all of them, and this assertion is where the drift fails
+    // this spec iterate — a plan added to one audit surface must be added
+    // to both, and this assertion is where the drift fails
     assert(expected.keySet == PlanAudit.PinnedPlans.toSet,
       s"table-only: ${expected.keySet -- PlanAudit.PinnedPlans.toSet}; " +
         s"pinned-only: ${PlanAudit.PinnedPlans.toSet -- expected.keySet}")

@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampNTZType
 import graft.SparkSpec
 import graft.core.{NaryFuncs, Series, Win}
 
@@ -93,5 +94,31 @@ class NaryFusedSpec extends SparkSpec {
       Seq(Series("a", p1, "idx", "a"), Series("b", p3, "idx", "b")),
       fuseSameSourceTuples = false)
     assert(rowsOf(gated) == rowsOf(gen))
+  }
+
+  test("one frame under two DST gap policies does not fuse: ≡ join plan") {
+    // wall 02:30 on 2024-03-31 falls in the Brussels spring gap; the two
+    // series map it to different instants (01:00Z vs 1 µs earlier), so the
+    // per-series index differs on that row and one shared assignment under
+    // the first series' policy would pair values the join plan keeps apart
+    val walls = Seq("00:00", "00:20", "00:40", "01:00", "01:20", "01:40",
+      "02:30", "03:20", "03:40", "04:00", "04:20", "04:40")
+      .map(t => s"2024-03-31 $t:00")
+    val r = new scala.util.Random(54)
+    val df = walls.map(w => (w, r.nextGaussian(), r.nextGaussian()))
+      .toDF("wall", "a", "b")
+      .withColumn("wall", col("wall").cast(TimestampNTZType))
+    val tz = Some("Europe/Brussels")
+    val fc = FeatureCollection(
+      NaryFeatureDescriptor(NaryFuncs.dot, Seq("a", "b"),
+        Some(Win.time("2h")), Some(Seq(Win.time("1h")))))
+    val data = Seq(
+      Series("a", df, "wall", "a", tz = tz, tzNonexistent = "shift_forward"),
+      Series("b", df, "wall", "b", tz = tz, tzNonexistent = "shift_backward"))
+    def rows(out: DataFrame) =
+      out.orderBy("wall").collect().toSeq.map(_.toSeq.map(r9))
+    assert(rows(fc.calculate(data, includeFinalWindow = true)) ==
+      rows(fc.calculate(data, includeFinalWindow = true,
+        fuseSameSourceTuples = false)))
   }
 }

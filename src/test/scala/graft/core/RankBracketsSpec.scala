@@ -93,7 +93,7 @@ class RankBracketsSpec extends SparkSpec {
     // one hot key spread across the session's 4 range partitions, a single
     // interior quantile → only the segment holding the median bracket (plus
     // boundary straddles) survives; at real partition counts the kept
-    // fraction is ~2·|q|/P (the ProbeQ89-motivated win)
+    // fraction is ~2·|q|/P (the win the q89 100× attribution motivated)
     val df = (0 until 40000).map(i => (1L, 0, i * 1.0)).toDF("k", "c", "v")
       .repartition(8)
     // at this row count AQE coalesces the internal range exchange to ONE

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.api.{FeatureCollection, FeatureDescriptor}
+import graft.segment.{Bounds, Segmenter}
 
 /** Timezone retention (reference: strided_rolling.py:572-596,604-614 and
   * tests/test_strided_rolling.py:1815 — tz-aware input, output index
@@ -117,6 +118,29 @@ class TimezoneSpec extends SparkSpec {
       Series("v", amb, "wall", "v", tz = Some("Europe/Brussels"),
         tzAmbiguous = "maybe").internal)
     assert(e.getMessage.contains("ambiguous policy"))
+  }
+
+  test("one frame under two DST gap policies: bounds per policy, not shared") {
+    // the last wall time, 02:30, falls in the 2024-03-31 spring gap: its
+    // instant is 01:00Z under shift_forward and 1 µs earlier under
+    // shift_backward, so the two series end at different instants even
+    // though they read the same frame and index column
+    val df = spark.createDataFrame(Seq(
+      ("2024-03-31 00:30:00", 1.0, 2.0), ("2024-03-31 01:00:00", 2.0, 3.0),
+      ("2024-03-31 01:30:00", 3.0, 1.0), ("2024-03-31 02:30:00", 4.0, 5.0)))
+      .toDF("wall", "a", "b")
+      .withColumn("wall", col("wall").cast(TimestampNTZType))
+    val tz = Some("Europe/Brussels")
+    val a = Series("a", df, "wall", "a", tz = tz, tzNonexistent = "shift_forward")
+    val b = Series("b", df, "wall", "b", tz = tz, tzNonexistent = "shift_backward")
+    assert(!a.sameSource(b))
+    val ba = Segmenter.bounds(Seq(a))
+    val bb = Segmenter.bounds(Seq(b))
+    assert(bb.end == ba.end - 1.0)
+    assert(Segmenter.bounds(Seq(a, b)) ==
+      Bounds(math.max(ba.start, bb.start), math.min(ba.end, bb.end)))
+    assert(Segmenter.bounds(Seq(a, b), "outer") ==
+      Bounds(math.min(ba.start, bb.start), math.max(ba.end, bb.end)))
   }
 
   test("mixed timezones in one calculate are rejected") {

@@ -15,8 +15,16 @@ import json
 import sys
 
 
+USAGE = "usage: make_bench_ref.py OUT ARTIFACT [ARTIFACT...]"
+
+
 def main() -> None:
-    out, *paths = sys.argv[1:]
+    args = sys.argv[1:]
+    # an option-looking argument (`--help`) must not become the OUT path
+    if len(args) < 2 or any(a.startswith("-") for a in args):
+        print(USAGE, file=sys.stderr)
+        sys.exit(2)
+    out, *paths = args
     cpu: dict[str, float] = {}
     wall: dict[str, float] = {}
     used = []
