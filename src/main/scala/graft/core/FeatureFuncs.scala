@@ -153,8 +153,8 @@ object FeatureFuncs {
   val rms: FeatureFunc = f("rms")(v => sqrt(avg(v * v)))
 
   /** Arbitrary Scala function over the index-sorted window values — the UDF
-    * escape hatch (A1/A4). Buffers (idx, value) pairs via collect_list;
-    * keep windows modest when using this path.
+    * escape hatch (A1/A4). Buffers the window in the shared sorted-collect
+    * aggregate; keep windows modest when using this path.
     */
   def fromArray(name: String, fn: Seq[Double] => Double): FeatureFunc = {
     val u = udf((arr: Seq[Double]) => fn(arr))
@@ -172,10 +172,11 @@ object FeatureFuncs {
   def fromPairs(name: String, fn: Seq[(Double, Double)] => Double): FeatureFunc = {
     val u = udf((idxs: Seq[Double], vals: Seq[Double]) => fn(idxs.zip(vals)))
     FeatureFunc(name, (idx, v) => {
-      val pairs = array_sort(collect_list(
-        when(v.isNotNull, struct(idx.as("i"), v.as("v")))))
-      u(transform(pairs, p => p.getField("i")),
-        transform(pairs, p => p.getField("v")))
+      // the shared sorted-collect buffer's index and value arrays; values
+      // cast to the UDF's element type (a no-op Spark folds away on a
+      // DOUBLE series, so the buffer still dedups with sortedVals)
+      val s = sortedCollect(idx, v.cast("double"))
+      u(s.getField("i"), s.getField("v"))
     })
   }
 
@@ -193,17 +194,23 @@ object FeatureFuncs {
   // ones fold over the index-sorted window array (the absDiffSum pattern),
   // so everything below stays a single fused per-segment aggregate).
 
-  /** The window's values, index-sorted, nulls dropped (shared plumbing for
-    * the order-dependent stock functions). r18: a native sorted-collect
-    * aggregate — primitive buffers, one long-key merge sort at eval, and
-    * guaranteed cross-descriptor sharing through aggregate dedup — replaces
+  /** The window's index-sorted values and index, null values dropped
+    * (`struct<v, i>`; shared plumbing for the order-dependent stock
+    * functions). r18: a native sorted-collect aggregate — primitive
+    * buffers, one long-key merge sort at eval, and guaranteed
+    * cross-descriptor sharing through aggregate dedup — replaces
     * `transform(array_sort(collect_list(struct(i, v))), _.v)`, whose lambda
     * chains were re-collected and re-sorted per descriptor (no CSE) with an
-    * interpreted struct comparator. Ordering and null semantics are pinned
-    * identical in SortedCollectSpec.
+    * interpreted struct comparator. The same buffer also yields the sorted
+    * index (`_.i`), so index-aware members share it. Ordering, null and
+    * index-bit semantics are pinned identical in SortedCollectSpec.
     */
-  private def sortedVals(idx: Column, v: Column): Column =
+  private def sortedCollect(idx: Column, v: Column): Column =
     graft.expr.CollectSortedVals(idx, v)
+
+  /** The values field of [[sortedCollect]]. */
+  private def sortedVals(idx: Column, v: Column): Column =
+    sortedCollect(idx, v).getField("v")
 
   /** tsfresh `abs_energy`: Σ v² (the dot product of the window with itself). */
   val absEnergy: FeatureFunc = FeatureFunc("abs_energy",
@@ -660,8 +667,10 @@ object FeatureFuncs {
   val linearTrendTimewise: FeatureFunc = {
     val outs = Seq("ltt_slope", "ltt_intercept")
     FeatureFunc("linear_trend_timewise", (idx, v) => {
-      val pairs = array_sort(collect_list(
-        when(v.isNotNull, struct(idx.as("i"), v.as("v")))))
+      // the index-sorted (i, v) window is the shared sorted-collect buffer
+      // — the same aggregate the value-only members read, so a bucket
+      // holding both plans ONE buffer and ONE sort
+      val s = sortedCollect(idx, v)
       val tmin = org.apache.spark.sql.functions.min(idx)
       val n = count(v).cast("double")
       val sv = org.apache.spark.sql.functions.sum(v)
@@ -672,7 +681,7 @@ object FeatureFuncs {
       // subexpression elimination merges the references (the old HOF fold
       // was kept single-reference precisely because LAMBDA chains get no
       // CSE; a plain expression does).
-      val a = graft.expr.LttFoldK(pairs, tmin)
+      val a = graft.expr.LttFoldK(s.getField("i"), s.getField("v"), tmin)
       val st = a.getField("st")
       val stt = a.getField("stt")
       val stv = a.getField("stv")

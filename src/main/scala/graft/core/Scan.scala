@@ -563,6 +563,16 @@ object Scan {
   def groupRunScan(df: DataFrame, orderCols: Seq[String], grpCol: String,
                    boundCol: String, runCol: String,
                    gmaxCol: String): DataFrame = {
+    // the working columns ride unqualified through withColumn/agg/join
+    // below — a caller column with one of those names would be silently
+    // REPLACED or duplicated, corrupting run ids instead of failing loudly
+    // (`__pid` is validated by `ranged`: untagged throws, tagged is reuse)
+    Seq("__flag", "__loc", "__tot", "__first", "__last", "__gmx",
+      "__prevLast", "__c", "__adj", "__off").foreach(r =>
+      require(!df.columns.contains(r), s"$r is reserved by groupRunScan"))
+    Seq(runCol, gmaxCol).foreach(r =>
+      require(!df.columns.contains(r),
+        s"output column $r already exists on the input"))
     val p = ranged(df, orderCols)
     val ord = orderCols.map(col)
     val w = Window.partitionBy("__pid").orderBy(ord: _*)

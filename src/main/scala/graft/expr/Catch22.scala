@@ -33,12 +33,21 @@ import org.apache.spark.sql.types._
   *    the window's native length n (no next-pow-2 zero padding; the Welch
   *    scale factors cancel inside the cumulative-power comparison).
   *
-  * Cost shape: every member is O(n) except the ACF members (lazy, O(n·k)
-  * where k is the stopping lag — worst case O(n²/2) on pathological
-  * monotone windows) and the spectral centroid (O(n²/2) DFT with the
-  * [[SpectralEntropyUtil]] trig-table trick). Like the DFT kernel, this is
-  * a deliberate per-WINDOW cost bounded by window length — the 100 TB axis
-  * is window count, which parallelizes embarrassingly.
+  * Cost shape: most members are O(n). The exceptions:
+  *  - the ACF members: lazy, O(n·k) where k is the stopping lag — worst
+  *    case O(n²/2) on pathological monotone windows;
+  *  - the spectral members: the direct O(n²/2) DFT up to
+  *    [[Fft.directThreshold]] samples, Bluestein O(n log n) above; the Wang
+  *    periodicity ACF is one zero-padded O(n log n) FFT pair;
+  *  - the two fluctuation-analysis members: O(n) per scale over ≤ 50
+  *    scales;
+  *  - the outlier-inclusion pair: O((n + T) log n) for its T thresholds
+  *    (T ≈ 100·max z-score ≤ 100·√n) — the samples are bucketed by the
+  *    threshold they fall below and ONE Fenwick-tree sweep reads each
+  *    threshold's position median.
+  * Like the DFT kernel, this is a deliberate per-WINDOW cost bounded by
+  * window length — the 100 TB axis is window count, which parallelizes
+  * embarrassingly.
   */
 object Catch22Util {
 
@@ -237,13 +246,60 @@ object Catch22Util {
     val msDti3 = new Array[Double](nThresh)
     val msDti4 = new Array[Double](nThresh)
     val thin = new Array[Boolean](nThresh) // fewer than 2 exceedances
-    val r = new Array[Double](n)
+    // Threshold j keeps {i : yW(i) >= j·inc}; sets only shrink as j rises.
+    // Bucket every sample by the first j whose threshold it falls below
+    // (compared against the same j·inc products, so membership is exact;
+    // nThresh = never leaves within the sweep), then sweep once: drop each
+    // bucket from a Fenwick tree of 1-based positions and read the
+    // position median by k-th-element descent. hs and the positions stay
+    // exact integers. yW is finite here — the sig and maxVal returns above
+    // turn every NaN/Inf window away.
+    val leaveAt = new Array[Int](n)
+    val bucketN = new Array[Int](nThresh + 2)
+    i = 0
+    while (i < n) {
+      val y = yW(i)
+      var g = 0
+      if (!(y < 0.0)) {
+        g = (y / inc).toInt + 1 // ≤ nThresh: y ≤ maxVal
+        while (g > 1 && y < (g - 1) * inc) g -= 1
+        while (g < nThresh && !(y < g * inc)) g += 1
+      }
+      leaveAt(i) = g
+      bucketN(g + 1) += 1
+      i += 1
+    }
+    var b = 1
+    while (b <= nThresh + 1) { bucketN(b) += bucketN(b - 1); b += 1 }
+    val byLeave = new Array[Int](n) // sample positions, grouped by leaveAt
+    i = 0
+    while (i < n) { byLeave(bucketN(leaveAt(i))) = i; bucketN(leaveAt(i)) += 1; i += 1 }
+    // Fenwick tree over positions 1..n, every sample present: node p
+    // counts the (p & −p) positions ending at p
+    val fen = new Array[Int](n + 1)
+    var p = 1
+    while (p <= n) { fen(p) = p & -p; p += 1 }
+    val topBit = Integer.highestOneBit(n)
+    // 1-based position of the k-th (1-based) present sample
+    def kth(k: Int): Double = {
+      var pos = 0; var rem = k; var step = topBit
+      while (step > 0) {
+        val q = pos + step
+        if (q <= n && fen(q) < rem) { pos = q; rem -= fen(q) }
+        step >>= 1
+      }
+      (pos + 1).toDouble
+    }
+    var hs = n
+    var next = 0 // byLeave cursor: samples before it have left
     var j = 0
     while (j < nThresh) {
-      val th = j * inc
-      var hs = 0
-      i = 0
-      while (i < n) { if (yW(i) >= th) { r(hs) = i + 1.0; hs += 1 }; i += 1 }
+      while (next < n && leaveAt(byLeave(next)) <= j) {
+        var q = byLeave(next) + 1
+        while (q <= n) { fen(q) -= 1; q += q & -q }
+        hs -= 1
+        next += 1
+      }
       if (hs == 0) {
         // float boundary: ⌊max/inc⌋·inc can exceed max by an ulp, leaving
         // the top threshold's exceedance set empty — truncate the sweep
@@ -252,7 +308,10 @@ object Catch22Util {
         nThresh = j
       } else {
         msDti3(j) = (hs - 1) * 100.0 / tot
-        msDti4(j) = medianSorted(r, hs) / (n / 2.0) - 1.0 // r ascending already
+        // midpoint median of the ascending positions (medianSorted's rule)
+        val med =
+          if (hs % 2 == 1) kth(hs / 2 + 1) else (kth(hs / 2) + kth(hs / 2 + 1)) / 2.0
+        msDti4(j) = med / (n / 2.0) - 1.0
         thin(j) = hs < 2
       }
       j += 1
@@ -403,23 +462,29 @@ object Catch22Util {
     while (i < sizeCS) { acc += x(i * lag); yCS(i) = acc; i += 1 }
     val logtt = new Array[Double](nTau)
     val logFF = new Array[Double](nTau)
+    // Σ(k+1) and Σ(k+1)² over k < τ are the same in every buffer: one
+    // running pair, extended over the ascending τ grid by left-to-right
+    // additions — the same bits as summing 1..τ afresh per buffer (exact
+    // integers below 2⁵³) — and den with them
+    var sx = 0.0; var sxx = 0.0; var kx = 0
     i = 0
     while (i < nTau) {
       val tau = tauBuf(i)
       val nBuffer = sizeCS / tau
       if (nBuffer == 0) return null
+      while (kx < tau) { kx += 1; val xv = kx.toDouble; sx += xv; sxx += xv * xv }
+      val den = tau * sxx - sx * sx
       var f = 0.0
       var j = 0
       while (j < nBuffer) {
         val lo = j * tau
-        var sx = 0.0; var sy = 0.0; var sxx = 0.0; var sxy = 0.0
+        var sy = 0.0; var sxy = 0.0
         var k = 0
         while (k < tau) {
-          val xv = (k + 1).toDouble; val yv = yCS(lo + k)
-          sx += xv; sy += yv; sxx += xv * xv; sxy += xv * yv
+          val yv = yCS(lo + k)
+          sy += yv; sxy += (k + 1).toDouble * yv
           k += 1
         }
-        val den = tau * sxx - sx * sx
         val mm = if (den == 0) 0.0 else (tau * sxy - sx * sy) / den
         val bb = (sy - mm * sx) / tau
         if (dfa) {

@@ -15,12 +15,48 @@ package graft.expr
   * convolution with the chirp, computed by three power-of-two FFTs. Chirp
   * angles are reduced mod 2n BEFORE the trig call (j²π/n with j² up to
   * 10¹⁰ would lose the angle to FP cancellation).
+  *
+  * The radix-2 core's twiddle tables are cached per power-of-two size, so
+  * repeated same-size transforms (Bluestein's three, a window battery's
+  * several) compute each table's cos/sin once; a cached table holds
+  * exactly the values a fresh one would (FftSpec pins the bits).
   */
 object Fft {
 
+  /** Sizes up to this share one cached twiddle table per size (at most
+    * 2¹⁷ entries of 16 B each: the whole cache stays under 4 MB); larger
+    * transforms build theirs per call.
+    */
+  private val CachedTwiddleMax = 1 << 18
+
+  private val twiddleCache =
+    new java.util.concurrent.ConcurrentHashMap[Int, (Array[Double], Array[Double])]()
+
+  /** Half-size twiddle table W_n^t = e^{-2πit/n}, t = 0..n/2−1, for a
+    * power-of-two n — exact trig per entry, no cumulative rotation error.
+    * Read-only once built; cached tables hold the values a fresh one would.
+    */
+  private def twiddles(n: Int): (Array[Double], Array[Double]) =
+    if (n <= CachedTwiddleMax) twiddleCache.computeIfAbsent(n, m => twiddleTable(m))
+    else twiddleTable(n)
+
+  private def twiddleTable(n: Int): (Array[Double], Array[Double]) = {
+    val half = n >> 1
+    val twR = new Array[Double](half)
+    val twI = new Array[Double](half)
+    var t = 0
+    while (t < half) {
+      val a = -2.0 * math.Pi * t / n
+      twR(t) = math.cos(a); twI(t) = math.sin(a)
+      t += 1
+    }
+    (twR, twI)
+  }
+
   /** In-place iterative radix-2 FFT (decimation-in-time); length must be a
-    * power of two. Twiddles come from one precomputed quarter table —
-    * exact trig per entry, no cumulative rotation error.
+    * power of two. Twiddles come from the size's cached half table (see
+    * [[twiddles]]), so a window's several same-size transforms — five per
+    * catch22 window — share one set of n/2 cos/sin pairs.
     */
   def radix2(re: Array[Double], im: Array[Double]): Unit = {
     val n = re.length
@@ -38,17 +74,8 @@ object Fft {
       }
       i += 1
     }
-    // one half-size twiddle table W_n^t = e^{-2πit/n}, t = 0..n/2-1;
-    // stage `len` uses stride n/len into it
-    val half = n >> 1
-    val twR = new Array[Double](half)
-    val twI = new Array[Double](half)
-    var t = 0
-    while (t < half) {
-      val a = -2.0 * math.Pi * t / n
-      twR(t) = math.cos(a); twI(t) = math.sin(a)
-      t += 1
-    }
+    // stage `len` uses stride n/len into the half-size table
+    val (twR, twI) = twiddles(n)
     var len = 2
     while (len <= n) {
       val stride = n / len

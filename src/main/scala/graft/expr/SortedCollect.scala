@@ -32,12 +32,18 @@ import org.apache.spark.sql.types._
   *      (the LttFoldK scaladoc records the same lambda-CSE cliff).
   *
   * [[CollectSortedVals]] is a TypedImperativeAggregate over (idx, value):
-  * the buffer is two growing PRIMITIVE arrays (sortable-long index keys +
-  * raw values), partials concatenate, and the single final sort runs at
+  * the buffer is two growing PRIMITIVE arrays (raw index bits + raw
+  * values), partials concatenate, and the single final sort runs at
   * `eval` as an indirect merge sort on positions with primitive long-key
   * compares. Identical aggregate calls dedup in planning (PhysicalAggregation
   * canonicalizes away the result id), so k descriptors share ONE buffer and
   * ONE sort by construction — no reliance on projection CSE.
+  *
+  * One buffer serves both views of the window: the result is
+  * `struct<v, i>`, the index-sorted values and the index in the same
+  * order. Value-only members read `v`; index-aware ones
+  * (`linear_trend_timewise`, the `fromPairs` hatch) read both, so a bucket
+  * mixing them still plans ONE sorted-collect buffer and ONE sort.
   *
   * Ordering contract (differential-pinned in SortedCollectSpec): exactly
   * Spark's `array_sort` default comparator on `struct<i: double, v: double>`
@@ -47,9 +53,10 @@ import org.apache.spark.sql.types._
   * compares longs. Null values are never collected (the replaced form's
   * `when(v.isNotNull, …)` made the struct null and collect_list dropped it);
   * null indexes collect with a sentinel key below every real key (the
-  * replaced form kept the struct and array_sort put null-first). The output
-  * is the values-only array — index order is the only thing the index
-  * contributes, so no null can appear in the result.
+  * replaced form kept the struct and array_sort put null-first). `v` never
+  * holds a null; `i` holds null at a null index's position, and otherwise
+  * the index's exact input bits (−0.0 and NaN included — the buffer keeps
+  * raw bits, not the normalizing sort keys), ≡ the replaced chain's `_.i`.
   */
 object SortKernelUtil {
 
@@ -104,42 +111,61 @@ object SortKernelUtil {
 }
 
 /** Mutable primitive buffer for [[CollectSortedVals]]: parallel growing
-  * arrays of sortable index keys and raw values. Partial merge is a raw
-  * concatenation; the sort happens once, at final eval.
+  * arrays of RAW index bits and raw values, plus the positions whose index
+  * is null (allocated on the first one). Partial merge is a raw
+  * concatenation; sort keys are derived and the sort runs once, at final
+  * eval.
   */
 final class SortedValsBuffer(initial: Int = 16) {
   var n: Int = 0
-  var ki: Array[Long] = new Array[Long](initial)
+  var ri: Array[Long] = new Array[Long](initial)
   var vs: Array[Double] = new Array[Double](initial)
+  var nullIdx: java.util.BitSet = null
 
-  def add(k: Long, v: Double): Unit = {
-    if (n == ki.length) grow(n << 1)
-    ki(n) = k
+  def add(r: Long, v: Double): Unit = {
+    if (n == ri.length) grow(n << 1)
+    ri(n) = r
     vs(n) = v
     n += 1
   }
 
+  /** A null index keeps raw bits 0 (the replaced struct's zeroed slot). */
+  def addNullIdx(v: Double): Unit = {
+    if (nullIdx == null) nullIdx = new java.util.BitSet()
+    nullIdx.set(n)
+    add(0L, v)
+  }
+
+  def isNullIdx(j: Int): Boolean = nullIdx != null && nullIdx.get(j)
+
   def appendAll(o: SortedValsBuffer): Unit = {
     val want = n + o.n
-    if (want > ki.length) {
-      var c = ki.length
+    if (want > ri.length) {
+      var c = ri.length
       while (c < want) c <<= 1
       grow(c)
     }
-    System.arraycopy(o.ki, 0, ki, n, o.n)
+    System.arraycopy(o.ri, 0, ri, n, o.n)
     System.arraycopy(o.vs, 0, vs, n, o.n)
+    if (o.nullIdx != null) {
+      if (nullIdx == null) nullIdx = new java.util.BitSet()
+      var j = o.nullIdx.nextSetBit(0)
+      while (j >= 0) { nullIdx.set(n + j); j = o.nullIdx.nextSetBit(j + 1) }
+    }
     n = want
   }
 
   private def grow(c: Int): Unit = {
-    ki = java.util.Arrays.copyOf(ki, c)
+    ri = java.util.Arrays.copyOf(ri, c)
     vs = java.util.Arrays.copyOf(vs, c)
   }
 }
 
-/** See the module note. `dataType` is the index-sorted values array;
-  * non-nullable like the collect_list chain it replaces (zero rows give an
-  * empty array, and null values are never collected).
+/** See the module note. `dataType` is `struct<v, i>`: the index-sorted
+  * values and, in the same order, the index itself (the replaced chains'
+  * `_.v` and `_.i`). Non-nullable like the collect_list chain it replaces
+  * (zero rows give empty arrays, and null values are never collected); `i`
+  * holds null where the index was null.
   */
 case class CollectSortedVals(
     left: Expression,
@@ -155,18 +181,24 @@ case class CollectSortedVals(
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires (double|bigint|int, double), got (${l.sql}, ${r.sql})")
     }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def dataType: DataType = StructType(Seq(
+    StructField("v", ArrayType(DoubleType, containsNull = false), nullable = false),
+    StructField("i", ArrayType(left.dataType, containsNull = true), nullable = false)))
   override def nullable: Boolean = false
   override def prettyName: String = "collect_sorted_vals"
 
   override def createAggregationBuffer(): SortedValsBuffer = new SortedValsBuffer()
 
-  // Integral indexes key as their own value (signed long order IS numeric
-  // order, exact at any magnitude — no double round-trip). The null
-  // sentinel collides only with a literal Long.MinValue index, where the
-  // v tie-break still yields a deterministic order.
-  @transient private lazy val keyOf: Any => Long = left.dataType match {
-    case DoubleType => i => SortKernelUtil.sortableBits(i.asInstanceOf[Double])
+  // The buffer keeps the index's RAW bits (a double's exact bit pattern,
+  // −0.0 and NaN payloads included; an integral index as its own value) so
+  // the `i` output reproduces the input bit for bit. The sort key is
+  // derived at eval: integral indexes key as their own value (signed long
+  // order IS numeric order, exact at any magnitude — no double round-trip),
+  // doubles through sortableBits. The null sentinel key collides only with
+  // a literal Long.MinValue index, where the v tie-break still yields a
+  // deterministic order.
+  @transient private lazy val rawOf: Any => Long = left.dataType match {
+    case DoubleType => i => java.lang.Double.doubleToRawLongBits(i.asInstanceOf[Double])
     case LongType => i => i.asInstanceOf[Long]
     case IntegerType => i => i.asInstanceOf[Int].toLong
   }
@@ -175,8 +207,8 @@ case class CollectSortedVals(
     val v = right.eval(input)
     if (v != null) {
       val i = left.eval(input)
-      val k = if (i == null) java.lang.Long.MIN_VALUE else keyOf(i)
-      buf.add(k, v.asInstanceOf[Double])
+      if (i == null) buf.addNullIdx(v.asInstanceOf[Double])
+      else buf.add(rawOf(i), v.asInstanceOf[Double])
     }
     buf
   }
@@ -188,20 +220,57 @@ case class CollectSortedVals(
 
   override def eval(buf: SortedValsBuffer): Any = {
     val n = buf.n
-    val perm = SortKernelUtil.sortPerm(buf.ki, buf.vs, n)
-    val out = new Array[Double](n)
+    val isDouble = left.dataType == DoubleType
+    val ki = new Array[Long](n)
     var i = 0
-    while (i < n) { out(i) = buf.vs(perm(i)); i += 1 }
-    UnsafeArrayData.fromPrimitiveArray(out)
+    while (i < n) {
+      ki(i) =
+        if (buf.isNullIdx(i)) java.lang.Long.MIN_VALUE
+        else if (isDouble) SortKernelUtil.sortableBits(java.lang.Double.longBitsToDouble(buf.ri(i)))
+        else buf.ri(i)
+      i += 1
+    }
+    val perm = SortKernelUtil.sortPerm(ki, buf.vs, n)
+    val vals = new Array[Double](n)
+    i = 0
+    while (i < n) { vals(i) = buf.vs(perm(i)); i += 1 }
+    val idx = left.dataType match {
+      case DoubleType =>
+        val a = new Array[Double](n)
+        i = 0
+        while (i < n) { a(i) = java.lang.Double.longBitsToDouble(buf.ri(perm(i))); i += 1 }
+        UnsafeArrayData.fromPrimitiveArray(a)
+      case LongType =>
+        val a = new Array[Long](n)
+        i = 0
+        while (i < n) { a(i) = buf.ri(perm(i)); i += 1 }
+        UnsafeArrayData.fromPrimitiveArray(a)
+      case IntegerType =>
+        val a = new Array[Int](n)
+        i = 0
+        while (i < n) { a(i) = buf.ri(perm(i)).toInt; i += 1 }
+        UnsafeArrayData.fromPrimitiveArray(a)
+    }
+    if (buf.nullIdx != null) {
+      i = 0
+      while (i < n) { if (buf.isNullIdx(perm(i))) idx.setNullAt(i); i += 1 }
+    }
+    new GenericInternalRow(Array[Any](UnsafeArrayData.fromPrimitiveArray(vals), idx))
   }
 
   override def serialize(buf: SortedValsBuffer): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.n * 16)
+    val nNull = if (buf.nullIdx == null) 0 else buf.nullIdx.cardinality()
+    val bb = ByteBuffer.allocate(8 + buf.n * 16 + nNull * 4)
     bb.putInt(buf.n)
     var i = 0
-    while (i < buf.n) { bb.putLong(buf.ki(i)); i += 1 }
+    while (i < buf.n) { bb.putLong(buf.ri(i)); i += 1 }
     i = 0
     while (i < buf.n) { bb.putDouble(buf.vs(i)); i += 1 }
+    bb.putInt(nNull)
+    if (nNull > 0) {
+      var j = buf.nullIdx.nextSetBit(0)
+      while (j >= 0) { bb.putInt(j); j = buf.nullIdx.nextSetBit(j + 1) }
+    }
     bb.array()
   }
 
@@ -210,10 +279,16 @@ case class CollectSortedVals(
     val n = bb.getInt()
     val buf = new SortedValsBuffer(math.max(n, 1))
     var i = 0
-    while (i < n) { buf.ki(i) = bb.getLong(); i += 1 }
+    while (i < n) { buf.ri(i) = bb.getLong(); i += 1 }
     i = 0
     while (i < n) { buf.vs(i) = bb.getDouble(); i += 1 }
     buf.n = n
+    val nNull = bb.getInt()
+    if (nNull > 0) {
+      buf.nullIdx = new java.util.BitSet(n)
+      i = 0
+      while (i < nNull) { buf.nullIdx.set(bb.getInt()); i += 1 }
+    }
     buf
   }
 

@@ -198,23 +198,25 @@ object TemporalKernelUtil {
   }
 
   /** tsfresh `linear_trend_timewise`'s single fold: (Σt, Σt², Σt·v) over
-    * the index-sorted (i, v) pairs with t = (i − tmin)/3 600 000 000 (µs →
+    * the index-sorted window — `idxs` and `vals` are the two arrays of one
+    * [[CollectSortedVals]] result — with t = (i − tmin)/3 600 000 000 (µs →
     * hours), accumulated left-to-right in exactly the replaced
     * struct-fold's order — bit-identical sums; the OLS finish stays in the
-    * caller's Column form.
+    * caller's Column form. A null index reads 0.0, as the replaced fold's
+    * zeroed struct slot did.
     */
-  def lttFold(pairs: ArrayData, tmin: Double): InternalRow = {
-    val n = pairs.numElements()
+  def lttFold(idxs: ArrayData, vals: ArrayData, tmin: Double): InternalRow = {
+    val n = vals.numElements()
     var st = 0.0
     var stt = 0.0
     var stv = 0.0
     var i = 0
     while (i < n) {
-      val p = pairs.getStruct(i, 2)
-      val t = (p.getDouble(0) - tmin) / 3600000000.0
+      val ix = if (idxs.isNullAt(i)) 0.0 else idxs.getDouble(i)
+      val t = (ix - tmin) / 3600000000.0
       st += t
       stt += t * t
-      stv += t * p.getDouble(1)
+      stv += t * vals.getDouble(i)
       i += 1
     }
     new GenericInternalRow(Array[Any](st, stt, stv))
@@ -596,34 +598,33 @@ object IndexMassK {
       ColumnBridge.expression(s), q))
 }
 
-/** linear_trend_timewise's (Σt, Σt², Σt·v) fold over sorted (i, v) pairs
-  * (see [[TemporalKernelUtil.lttFold]]); tmin is the caller's native
-  * min(idx) aggregate. */
-case class LttFoldK(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
+/** linear_trend_timewise's (Σt, Σt², Σt·v) fold over the index-sorted
+  * index and value arrays (see [[TemporalKernelUtil.lttFold]]); tmin is the
+  * caller's native min(idx) aggregate. */
+case class LttFoldK(first: Expression, second: Expression, third: Expression)
+  extends TernaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StructType(fs), _), DoubleType)
-          if fs.length == 2 && fs.forall(_.dataType == DoubleType) =>
+    (first.dataType, second.dataType, third.dataType) match {
+      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _), DoubleType) =>
         TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<struct<double,double>>, double), " +
-          s"got (${l.sql}, ${r.sql})")
+      case (i, v, t) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires (array<double>, array<double>, double), " +
+          s"got (${i.sql}, ${v.sql}, ${t.sql})")
     }
   override def nullable: Boolean = true
   override def dataType: DataType = StructType(Seq(
     StructField("st", DoubleType), StructField("stt", DoubleType),
     StructField("stv", DoubleType)))
   override def prettyName: String = "ltt_fold"
-  override def nullSafeEval(a: Any, tmin: Any): Any =
-    TemporalKernelUtil.lttFold(a.asInstanceOf[ArrayData],
-      tmin.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LttFoldK =
-    copy(left = newLeft, right = newRight)
+  override def nullSafeEval(i: Any, v: Any, tmin: Any): Any =
+    TemporalKernelUtil.lttFold(i.asInstanceOf[ArrayData],
+      v.asInstanceOf[ArrayData], tmin.asInstanceOf[Double])
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): LttFoldK =
+    copy(first = newFirst, second = newSecond, third = newThird)
 }
 object LttFoldK {
-  def apply(pairs: Column, tmin: Column): Column =
-    ColumnBridge.column(LttFoldK(ColumnBridge.expression(pairs),
-      ColumnBridge.expression(tmin)))
+  def apply(idxs: Column, vals: Column, tmin: Column): Column =
+    ColumnBridge.column(LttFoldK(ColumnBridge.expression(idxs),
+      ColumnBridge.expression(vals), ColumnBridge.expression(tmin)))
 }

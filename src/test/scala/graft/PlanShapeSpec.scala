@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.ArraySort
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
 import org.apache.spark.sql.catalyst.plans.logical.Window
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 
 /** Pins the physical-plan SHAPE (shuffle-exchange count + join-strategy
   * choice, via [[PlanAudit]]) of the most expensive bench queries — the
@@ -204,6 +207,28 @@ class PlanShapeSpec extends SparkSpec {
       }
       assert(global.isEmpty, s"single-partition windows: ${global.mkString("; ")}")
     }
+  }
+
+  test("q105's window bucket plans one sorted-collect buffer, no collect_list or array_sort") {
+    // linear_trend_timewise and the value-only members (index mass,
+    // linear_trend, Welch density) all read ONE CollectSortedVals aggregate
+    // (struct<v, i>); the struct buffer the trend kept for its index —
+    // array_sort(collect_list(struct(i, v))) — must not come back
+    val plan = SparkEntry.queries("q105_tsfresh_comb")(spark, dir)
+      .queryExecution.sparkPlan
+    val perAgg = plan.collectWithSubqueries { case a: BaseAggregateExec =>
+      a.aggregateExpressions.count(
+        _.aggregateFunction.isInstanceOf[graft.expr.CollectSortedVals])
+    }
+    assert(perAgg.contains(1) && perAgg.forall(_ <= 1),
+      s"sorted-collect aggregates per aggregate node: $perAgg")
+    val banned = plan.collectWithSubqueries { case node =>
+      node.expressions.flatMap(_.collect {
+        case e: CollectList => e.prettyName
+        case e: ArraySort => e.prettyName
+      })
+    }.flatten
+    assert(banned.isEmpty, s"found ${banned.distinct.mkString(", ")}")
   }
 
   test("the expectation table covers exactly the shared pinned-plan set") {

@@ -249,4 +249,227 @@ class Catch22Spec extends SparkSpec {
     // n < 7 → null
     assert(eval("PD_PeriodicityWang_th0_01", Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0)).isEmpty)
   }
+
+  // ---- the replaced outlier-inclusion sweep and fluctuation loops,
+  // verbatim: the reference side of the bit-for-bit differential below ----
+
+  private object Replaced {
+    private def medianSorted(a: Array[Double], len: Int): Double =
+      if (len % 2 == 1) a(len / 2) else (a(len / 2 - 1) + a(len / 2)) / 2.0
+
+    private def linreg(x: Array[Double], y: Array[Double], lo: Int, len: Int): (Double, Double) = {
+      var sx = 0.0; var sy = 0.0; var sxx = 0.0; var sxy = 0.0
+      var i = 0
+      while (i < len) {
+        val xv = x(lo + i); val yv = y(lo + i)
+        sx += xv; sy += yv; sxx += xv * xv; sxy += xv * yv
+        i += 1
+      }
+      val den = len * sxx - sx * sx
+      val m = if (den == 0) 0.0 else (len * sxy - sx * sy) / den
+      (m, (sy - m * sx) / len)
+    }
+
+    def outlierInclude(x: Array[Double], sign: Double): Any = {
+      val n = x.length
+      if (n == 0) return null
+      var mu = 0.0; var i = 0
+      while (i < n) { mu += x(i); i += 1 }
+      mu /= n
+      var sq = 0.0; i = 0
+      while (i < n) { val c = x(i) - mu; sq += c * c; i += 1 }
+      val sig = math.sqrt(sq / n)
+      if (sig == 0.0) return java.lang.Double.valueOf(0.0)
+      val inc = 0.01
+      val yW = new Array[Double](n)
+      var tot = 0
+      var maxVal = Double.NegativeInfinity
+      i = 0
+      while (i < n) {
+        yW(i) = sign * (x(i) - mu) / sig
+        if (yW(i) >= 0) tot += 1
+        if (yW(i) > maxVal) maxVal = yW(i)
+        i += 1
+      }
+      if (maxVal < inc) return java.lang.Double.valueOf(0.0)
+      var nThresh = (maxVal / inc).toInt + 1
+      val msDti3 = new Array[Double](nThresh)
+      val msDti4 = new Array[Double](nThresh)
+      val thin = new Array[Boolean](nThresh)
+      val r = new Array[Double](n)
+      var j = 0
+      while (j < nThresh) {
+        val th = j * inc
+        var hs = 0
+        i = 0
+        while (i < n) { if (yW(i) >= th) { r(hs) = i + 1.0; hs += 1 }; i += 1 }
+        if (hs == 0) {
+          nThresh = j
+        } else {
+          msDti3(j) = (hs - 1) * 100.0 / tot
+          msDti4(j) = medianSorted(r, hs) / (n / 2.0) - 1.0
+          thin(j) = hs < 2
+        }
+        j += 1
+      }
+      var mj = 0; var fbi = nThresh - 1
+      j = 0
+      while (j < nThresh) {
+        if (msDti3(j) > 2.0) mj = j
+        if (thin(nThresh - 1 - j)) fbi = nThresh - 1 - j
+        j += 1
+      }
+      val lim = math.min(mj, fbi)
+      val m4 = java.util.Arrays.copyOfRange(msDti4, 0, lim + 1)
+      java.util.Arrays.sort(m4)
+      java.lang.Double.valueOf(medianSorted(m4, lim + 1))
+    }
+
+    def fluctAnal(x: Array[Double], lag: Int, dfa: Boolean): Any = {
+      val n = x.length
+      if (n == 0) return null
+      if (n < 10) return java.lang.Double.valueOf(0.0)
+      val nTauSteps = 50
+      val linLow = math.log(5.0)
+      val linHigh = math.log((n / 2).toDouble)
+      val tauStep = (linHigh - linLow) / (nTauSteps - 1)
+      val tauBuf = new Array[Int](nTauSteps)
+      var i = 0
+      while (i < nTauSteps) {
+        tauBuf(i) = math.round(math.exp(linLow + i * tauStep)).toInt
+        i += 1
+      }
+      var nTau = nTauSteps
+      i = 0
+      while (i < nTau - 1) {
+        while (i < nTau - 1 && tauBuf(i) == tauBuf(i + 1)) {
+          var j = i + 1
+          while (j < nTau - 1) { tauBuf(j) = tauBuf(j + 1); j += 1 }
+          nTau -= 1
+        }
+        i += 1
+      }
+      if (nTau < 12) return java.lang.Double.valueOf(0.0)
+      val sizeCS = n / lag
+      val yCS = new Array[Double](sizeCS)
+      var acc = 0.0
+      i = 0
+      while (i < sizeCS) { acc += x(i * lag); yCS(i) = acc; i += 1 }
+      val logtt = new Array[Double](nTau)
+      val logFF = new Array[Double](nTau)
+      i = 0
+      while (i < nTau) {
+        val tau = tauBuf(i)
+        val nBuffer = sizeCS / tau
+        if (nBuffer == 0) return null
+        var f = 0.0
+        var j = 0
+        while (j < nBuffer) {
+          val lo = j * tau
+          var sx = 0.0; var sy = 0.0; var sxx = 0.0; var sxy = 0.0
+          var k = 0
+          while (k < tau) {
+            val xv = (k + 1).toDouble; val yv = yCS(lo + k)
+            sx += xv; sy += yv; sxx += xv * xv; sxy += xv * yv
+            k += 1
+          }
+          val den = tau * sxx - sx * sx
+          val mm = if (den == 0) 0.0 else (tau * sxy - sx * sy) / den
+          val bb = (sy - mm * sx) / tau
+          if (dfa) {
+            k = 0
+            while (k < tau) {
+              val rr = yCS(lo + k) - (mm * (k + 1) + bb); f += rr * rr; k += 1
+            }
+          } else {
+            var rmn = Double.MaxValue; var rmx = -Double.MaxValue
+            k = 0
+            while (k < tau) {
+              val rr = yCS(lo + k) - (mm * (k + 1) + bb)
+              if (rr < rmn) rmn = rr
+              if (rr > rmx) rmx = rr
+              k += 1
+            }
+            f += (rmx - rmn) * (rmx - rmn)
+          }
+          j += 1
+        }
+        val fv = if (dfa) math.sqrt(f / (nBuffer * tau)) else math.sqrt(f / nBuffer)
+        if (!(fv > 0.0)) return null
+        logtt(i) = math.log(tau.toDouble)
+        logFF(i) = math.log(fv)
+        i += 1
+      }
+      val minPoints = 6
+      var best = Double.MaxValue
+      var bestI = -1
+      var sp = minPoints
+      while (sp <= nTau - minPoints) {
+        val (m1, b1) = linreg(logtt, logFF, 0, sp)
+        val (m2, b2) = linreg(logtt, logFF, sp - 1, nTau - sp + 1)
+        var s1 = 0.0
+        var j = 0
+        while (j < sp) { val rr = logtt(j) * m1 + b1 - logFF(j); s1 += rr * rr; j += 1 }
+        var s2 = 0.0
+        j = sp - 1
+        while (j < nTau) { val rr = logtt(j) * m2 + b2 - logFF(j); s2 += rr * rr; j += 1 }
+        val e = math.sqrt(s1) + math.sqrt(s2)
+        if (e < best) { best = e; bestI = sp }
+        sp += 1
+      }
+      java.lang.Double.valueOf(bestI.toDouble / nTau)
+    }
+  }
+
+  test("catch24 ≡ the replaced outlier sweep and fluctuation loops, bit-for-bit") {
+    import graft.expr.Catch22Util
+    val rng = new scala.util.Random(22)
+    def shaped(n: Int, shape: Int): Array[Double] = shape match {
+      case 0 => var w = 50.0; Array.fill(n) { w += rng.nextGaussian(); w } // walk
+      case 1 => Array.fill(n)(rng.nextInt(4).toDouble) // heavy ties
+      case 2 => Array.fill(n)(-2.5) // constant
+      case 3 => Array.tabulate(n)(t => if (t == n / 3) 40.0 else 1.0) // single spike
+      case 4 => Array.tabulate(n)(t => 0.5 * t - 3.0) // monotone up
+      case 5 => Array.tabulate(n)(t => 1e3 - t * t * 0.01) // monotone down
+      case _ => Array.fill(n)(math.tan(math.Pi * (rng.nextDouble() - 0.5))) // Cauchy tails
+    }
+    val sizes = (0 to 40) ++ Seq(255, 256, 257) ++
+      (6 to 12).map(1 << _) ++ Seq(3300, 3456)
+    val windows = (for (n <- sizes; shape <- 0 to 6) yield shaped(n, shape)) ++ Seq(
+      Array(1.0, Double.NaN, 2.0, 5.0, 3.0),
+      Array.tabulate(300)(t => if (t == 7) Double.PositiveInfinity else t % 13),
+      Array(1e300, -1e300, 1e300, -1e300, 5.0, 6.0, 7.0, 8.0, 9.0, 10.0, 11.0),
+      Array(0.0, -0.0, 0.0, -0.0, 1.0))
+    val idx = Catch22Util.names24.zipWithIndex.toMap
+    def rawBits(row: org.apache.spark.sql.catalyst.InternalRow, f: Int): Option[Long] =
+      if (row.isNullAt(f)) None
+      else Some(java.lang.Double.doubleToRawLongBits(row.getDouble(f)))
+    def refBits(v: Any): Option[Long] =
+      Option(v).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
+    var compared = 0
+    for (x <- windows) {
+      val got = Catch22Util.compute(
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(x), catch24 = true)
+      assert(got.numFields == 24)
+      val want = Map(
+        "DN_OutlierInclude_p_001_mdrmd" -> Replaced.outlierInclude(x, 1.0),
+        "DN_OutlierInclude_n_001_mdrmd" -> Replaced.outlierInclude(x, -1.0),
+        "SC_FluctAnal_2_dfa_50_1_2_logi_prop_r1" -> Replaced.fluctAnal(x, 2, dfa = true),
+        "SC_FluctAnal_2_rsrangefit_50_1_logi_prop_r1" -> Replaced.fluctAnal(x, 1, dfa = false))
+      for ((name, v) <- want) {
+        assert(rawBits(got, idx(name)) == refBits(v),
+          s"$name diverged at n=${x.length}: kernel=${got.get(idx(name), org.apache.spark.sql.types.DoubleType)} replaced=$v")
+        compared += 1
+      }
+      // the other 20 members run code this rewrite leaves alone (their FFT
+      // twiddle tables are pinned by FftSpec); a second evaluation — every
+      // table size now cached — must reproduce all 24 fields' bits
+      val again = Catch22Util.compute(
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(x), catch24 = true)
+      for (f <- 0 until 24)
+        assert(rawBits(again, f) == rawBits(got, f),
+          s"${Catch22Util.names24(f)} not reproducible at n=${x.length}")
+    }
+    assert(compared == windows.length * 4)
+  }
 }

@@ -186,6 +186,23 @@ class ScanSpec extends SparkSpec {
     }
   }
 
+  test("groupRunScan: an input carrying a working or output column name is rejected") {
+    // each name would otherwise be silently replaced (withColumn) or
+    // duplicated (the offsets join) — e.g. a caller `__flag` column
+    val d = data.withColumn("b", col("idx"))
+    for (r <- Seq("__flag", "__loc", "__tot", "__first", "__last", "__gmx",
+        "__prevLast", "__c", "__adj", "__off", "run", "gmax"))
+      intercept[IllegalArgumentException] {
+        Scan.groupRunScan(d.withColumn(r, lit(1L)), Seq("idx"), "g", "b",
+          "run", "gmax")
+      }
+    // an untagged __pid goes through ranged's shared reserved-name check
+    intercept[IllegalArgumentException] {
+      Scan.groupRunScan(d.withColumn("__pid", lit(3)), Seq("idx"), "g", "b",
+        "run", "gmax")
+    }
+  }
+
   test("keyedRank: checkpoint-fed input, stable across evaluations (regression)") {
     // same hazard class as the fillForward regression above: the local-rank
     // window and the per-(partition, key) offset summary must agree on

@@ -9,7 +9,9 @@ import graft.SparkSpec
   * [[CollectSortedVals]] must reproduce the REPLACED chain
   * `transform(array_sort(collect_list(when(v.isNotNull, struct(i, v)))), _.v)`
   * bit-for-bit through a real grouped aggregation — duplicate and null
-  * indexes, −0.0/0.0 ties, NaN carriers and all. [[HjorthFoldK]] and
+  * indexes, −0.0/0.0 ties, NaN carriers and all — and its index field the
+  * same chain's `_.i` (the sorted index the `fromPairs` hatch and
+  * linear_trend_timewise used to buffer separately). [[HjorthFoldK]] and
   * [[PetrosianNdK]] must reproduce their replaced slice+zip_with+aggregate
   * chains (kept here verbatim) on the KernelDegenerateSpec battery, and the
   * katz path's ABS_DIFF_SUM swap is pinned against the replaced
@@ -19,10 +21,12 @@ class SortedCollectSpec extends SparkSpec {
 
   // ---- the replaced Column forms, verbatim --------------------------------
 
-  private def oldSortedVals(i: Column, v: Column): Column =
+  private def oldSorted(i: Column, v: Column, field: String): Column =
     transform(
       array_sort(collect_list(when(v.isNotNull, struct(i.as("i"), v.as("v"))))),
-      p => p.getField("v"))
+      p => p.getField(field))
+
+  private def oldSortedVals(i: Column, v: Column): Column = oldSorted(i, v, "v")
 
   private def arrDiffs(a: Column, m: Column): Column =
     zip_with(slice(a, lit(2), m), slice(a, lit(1), m), (b, c) => b - c)
@@ -68,21 +72,63 @@ class SortedCollectSpec extends SparkSpec {
     val df = rows.toSeq.toDF("g", "i", "v")
     val out = df.groupBy("g").agg(
       CollectSortedVals(col("i"), col("v")).as("k"),
-      oldSortedVals(col("i"), col("v")).as("o")).collect()
+      oldSortedVals(col("i"), col("v")).as("o"),
+      oldSorted(col("i"), col("v"), "i").as("oi"))
+      .select(col("g"), col("k.v"), col("o"), col("k.i"), col("oi")).collect()
     assert(out.nonEmpty)
+    // raw bits: −0.0 and NaN must come through the index field unchanged
+    def rawBits(d: java.lang.Double): Long =
+      if (d == null) Long.MinValue
+      else java.lang.Double.doubleToRawLongBits(d.doubleValue())
     out.foreach { row =>
-      val k = row.getSeq[Double](1)
-      val o = row.getSeq[Double](2)
-      assert(k.length == o.length, s"g=${row.getInt(0)} length ${k.length} vs ${o.length}")
-      k.indices.foreach { j =>
-        assert(java.lang.Double.doubleToLongBits(k(j)) ==
-          java.lang.Double.doubleToLongBits(o(j)),
-          s"g=${row.getInt(0)} pos $j: kernel=${k(j)} old=${o(j)}")
+      for ((a, b, what) <- Seq((1, 2, "v"), (3, 4, "i"))) {
+        val k = row.getSeq[java.lang.Double](a)
+        val o = row.getSeq[java.lang.Double](b)
+        assert(k.length == o.length,
+          s"g=${row.getInt(0)} $what length ${k.length} vs ${o.length}")
+        k.indices.foreach { j =>
+          assert(rawBits(k(j)) == rawBits(o(j)),
+            s"g=${row.getInt(0)} $what pos $j: kernel=${k(j)} old=${o(j)}")
+        }
       }
     }
-    // the all-null group must yield an EMPTY array on both sides
+    // the carriers actually reach the index field: two null indexes first,
+    // then −0.0 (its own bits, not the sort key's normalized 0.0), NaN last
+    val g7 = out.find(_.getInt(0) == 7).get.getSeq[java.lang.Double](3)
+    assert(g7.take(2).forall(_ == null))
+    assert(g7.exists(d => d != null &&
+      java.lang.Double.doubleToRawLongBits(d) == java.lang.Double.doubleToRawLongBits(-0.0)))
+    assert(g7.last.isNaN)
+    // the all-null group must yield EMPTY arrays on both sides
     val g8 = out.find(_.getInt(0) == 8).get
-    assert(g8.getSeq[Double](1).isEmpty && g8.getSeq[Double](2).isEmpty)
+    assert((1 to 4).forall(c => g8.getSeq[Any](c).isEmpty))
+  }
+
+  test("CollectSortedVals over a bigint index: values and index ≡ the replaced chain") {
+    import spark.implicits._
+    val r = new scala.util.Random(43)
+    val rows = scala.collection.mutable.ArrayBuffer[(Int, java.lang.Long, java.lang.Double)]()
+    for (g <- 0 until 4; _ <- 0 until 300)
+      rows += ((g, java.lang.Long.valueOf(r.nextInt(50).toLong * 1000000007L), r.nextDouble()))
+    rows += ((4, Long.MinValue, 1.0)); rows += ((4, Long.MaxValue, 3.0))
+    rows += ((4, 5L, null)) // null v: dropped
+    // null indexes (kept apart from a literal Long.MinValue index, whose
+    // sort key is the null sentinel — the module note's one collision)
+    rows += ((5, null, 2.0)); rows += ((5, 7L, 1.0)); rows += ((5, null, 0.5))
+    val df = rows.toSeq.toDF("g", "i", "v").repartition(3)
+    val out = df.groupBy("g").agg(
+      CollectSortedVals(col("i"), col("v")).as("k"),
+      oldSorted(col("i"), col("v"), "v").as("o"),
+      oldSorted(col("i"), col("v"), "i").as("oi"))
+      .select(col("g"), col("k.v"), col("o"), col("k.i"), col("oi")).collect()
+    assert(out.length == 6)
+    out.foreach { row =>
+      val kv = row.getSeq[Double](1); val ov = row.getSeq[Double](2)
+      assert(kv.map(java.lang.Double.doubleToRawLongBits) ==
+        ov.map(java.lang.Double.doubleToRawLongBits), s"g=${row.getInt(0)} v")
+      assert(row.getSeq[java.lang.Long](3) == row.getSeq[java.lang.Long](4),
+        s"g=${row.getInt(0)} i")
+    }
   }
 
   // windows for the scalar kernels: random + the degenerate battery

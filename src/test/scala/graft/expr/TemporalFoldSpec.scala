@@ -305,6 +305,19 @@ class TemporalFoldSpec extends SparkSpec {
 
   // ---- the replaced q105 Column forms, verbatim (r17 kernels) -------------
 
+  // linear_trend_timewise's (Σt, Σt², Σt·v) struct fold over sorted (i, v)
+  // pairs, verbatim
+  private def oldLttFold(pairs: Column, tmin: Column): Column =
+    aggregate(pairs,
+      struct(lit(0.0).as("st"), lit(0.0).as("stt"), lit(0.0).as("stv")),
+      (a, p) => {
+        val t = (p.getField("i") - tmin) / lit(3600000000.0)
+        struct(
+          (a.getField("st") + t).as("st"),
+          (a.getField("stt") + t * t).as("stt"),
+          (a.getField("stv") + t * p.getField("v")).as("stv"))
+      })
+
   test("IDX_DOT / IndexMassK / LttFoldK ≡ their replaced q105 folds, bit-for-bit") {
     import spark.implicits._
     val df = windows.toDF("w").withColumn("n", size(col("w")).cast("long"))
@@ -337,15 +350,7 @@ class TemporalFoldSpec extends SparkSpec {
     val pairs = transform(vals, (x, i) =>
       struct(((i * 7 + 1).cast("double") * 1e6).as("i"), x.as("v")))
     val tmin = element_at(pairs, 1).getField("i")
-    val oldLtt = aggregate(pairs,
-      struct(lit(0.0).as("st"), lit(0.0).as("stt"), lit(0.0).as("stv")),
-      (a, p) => {
-        val t = (p.getField("i") - tmin) / lit(3600000000.0)
-        struct(
-          (a.getField("st") + t).as("st"),
-          (a.getField("stt") + t * t).as("stt"),
-          (a.getField("stv") + t * p.getField("v")).as("stv"))
-      })
+    val oldLtt = oldLttFold(pairs, tmin)
 
     val rows = df.select(
       TemporalFoldK(vals, IDX_DOT).as("kd"), oldIdxDot.as("od"),
@@ -353,7 +358,8 @@ class TemporalFoldSpec extends SparkSpec {
       when(s > 0, IndexMassK(vals, s, 0.15)).as("k15"), oldMass(0.15).as("o15"),
       when(s > 0, IndexMassK(vals, s, 0.5)).as("k50"), oldMass(0.5).as("o50"),
       when(s > 0, IndexMassK(vals, s, 0.75)).as("k75"), oldMass(0.75).as("o75"),
-      LttFoldK(pairs, tmin).as("kl"), oldLtt.as("ol"),
+      LttFoldK(transform(pairs, p => p.getField("i")), vals, tmin).as("kl"),
+      oldLtt.as("ol"),
       vals.as("w")).collect()
     def d(r: org.apache.spark.sql.Row, i: Int): java.lang.Double =
       if (r.isNullAt(i)) null else java.lang.Double.valueOf(r.getDouble(i))
@@ -366,6 +372,34 @@ class TemporalFoldSpec extends SparkSpec {
       for (f <- 0 until 3)
         assert(bits(kl.getDouble(f)) == bits(ol.getDouble(f)),
           s"ltt field $f diverged on ${r.getSeq[Double](10)}")
+    }
+  }
+
+  test("LttFoldK over one sorted-collect buffer ≡ the replaced array_sort(collect_list(struct)) fold") {
+    import spark.implicits._
+    val r = new scala.util.Random(31)
+    val rows = scala.collection.mutable.ArrayBuffer[(Int, Double, java.lang.Double)]()
+    // irregular epoch-micro indexes, duplicates included; null values
+    // drop out of both sides' buffers but still count toward min(i)
+    for (g <- 0 until 8; _ <- 0 until (1 + r.nextInt(400))) {
+      val i = 1.7e15 + r.nextInt(5000) * 1.5e6
+      rows += ((g, i, if (r.nextInt(10) == 0) null else r.nextDouble() * 100 - 50))
+    }
+    rows += ((8, 1.7e15, null)); rows += ((8, 1.7e15 + 1e6, null)) // all-null values
+    val df = rows.toSeq.toDF("g", "i", "v").repartition(4)
+    val s = CollectSortedVals(col("i"), col("v"))
+    val pairs = array_sort(collect_list(
+      when(col("v").isNotNull, struct(col("i").as("i"), col("v").as("v")))))
+    val tmin = min(col("i"))
+    val out = df.groupBy("g").agg(
+      LttFoldK(s.getField("i"), s.getField("v"), tmin).as("k"),
+      oldLttFold(pairs, tmin).as("o")).collect()
+    assert(out.length == 9)
+    out.foreach { row =>
+      val k = row.getStruct(1); val o = row.getStruct(2)
+      for (f <- 0 until 3)
+        assert(bits(k.getDouble(f)) == bits(o.getDouble(f)),
+          s"g=${row.getInt(0)} ltt field $f: ${k.getDouble(f)} vs ${o.getDouble(f)}")
     }
   }
 }
