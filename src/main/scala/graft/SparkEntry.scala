@@ -52,9 +52,6 @@ object SparkEntry {
   private def r6z(c: String): org.apache.spark.sql.Column =
     (round(qc(c), 6) + lit(0.0)).as(c)
 
-  /** DuckDB CTE producing segments (ws, we) over `src` rows with the W1
-    * formula; mirrors Segmenter.regular + nbSegments exactly.
-    */
   /** Deterministic big-window sample shared with the oracle twins of the
     * super-linear-cost queries (q102's LZ76 phrase recursion, q103's
     * exact-SampEn pair self-join, q107's CWT convolution CTE): keep every
@@ -168,6 +165,9 @@ object SparkEntry {
   private val lz76LcpLast =
     s"t${lz76LcpSteps.size - 1}.m${lz76LcpSteps.size - 1}"
 
+  /** DuckDB CTE producing segments (ws, we) over `src` rows with the W1
+    * formula; mirrors Segmenter.regular + nbSegments exactly.
+    */
   private def segCte(W: Long, S: Long, includeFinal: Boolean = false,
                      where: String = "", src: String = "events"): String = {
     val flt = if (where.isEmpty) "" else s" WHERE $where"

@@ -199,11 +199,9 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     *                          a distributed filter over the SEGMENTS frame
     *                          (never a driver collect), and a left-semi
     *                          prune of the assigned rows — broadcast while
-    *                          the kept-segment COUNT stays at or under
-    *                          `windowKeepBroadcastLimit`, a shuffled semi
-    *                          join above it (the count is free: the kept
-    *                          frame is checkpointed for its two consumers
-    *                          anyway) — so unkept windows never pay the
+    *                          the kept-segment COUNT passes the counted
+    *                          gate (`graft.core.Gates`), a shuffled semi
+    *                          join above it — so unkept windows never pay the
     *                          collect buffers or the kernel, and a
     *                          keep-almost-everything predicate degrades to
     *                          a shuffle instead of an executor OOM.
@@ -216,9 +214,6 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     *                          dropped bucket's columns instead of dropping
     *                          rows — a shape no post-filter produces — so
     *                          that composition is rejected loudly.)
-    * @param windowKeepBroadcastLimit max kept-segment count that still
-    *                          broadcasts the semi-join side (id column
-    *                          only, 8 B/row)
     */
   def calculate(
       data: Seq[Series],
@@ -228,11 +223,7 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       windowIdx: String = "end",
       includeFinalWindow: Boolean = false,
       boundMethod: String = "inner",
-      windowKeep: Option[(Column, Column) => Column] = None,
-      windowKeepBroadcastLimit: Long = 4000000L,
-      // false forces the per-series assign + (segment, index) join plan
-      // for same-source tuples — the differential twin (NaryFusedSpec)
-      fuseSameSourceTuples: Boolean = true): DataFrame = {
+      windowKeep: Option[(Column, Column) => Column] = None): DataFrame = {
     require(windowKeep.isEmpty || (segmentStartIdxs.isEmpty &&
       segmentEndIdxs.isEmpty),
       "windowKeep is not supported with manual segments")
@@ -348,7 +339,9 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       // keeps serving genuinely different sources, where duplicates keep
       // their documented KNOWN-LIMITATION behavior (see the anchor-join
       // note below).
-      val sameSourceTuple = fuseSameSourceTuples &&
+      // `Gates.fuse` off forces the per-series join plan — the differential
+      // twin (NaryFusedSpec)
+      val sameSourceTuple = Gates.fuse &&
         seriesSeq.lengthCompare(1) > 0 && !isSample &&
         seriesSeq.tail.forall(series.sameSource)
       val (assigned, valueCols) =
@@ -368,33 +361,15 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
           (parts.reduce((a, c) => a.join(c, Seq("__seg_id", "__idx"))),
             seriesSeq.indices.map(i => col(s"__v$i")))
         }
-      // Window-level sampling gate: count rows per segment (cheap map-side
-      // partial agg), filter the SEGMENTS frame on (count, anchor) — fully
-      // distributed, window-count-linear, no driver collect — then prune
-      // the assigned rows with a left-semi join so unkept windows reach
-      // neither the collect_list buffers nor the per-window kernels.
-      // The kept-segments frame is pinned: it feeds both the semi-join and
-      // the W7 left join, and re-deriving it would re-run the count pass;
-      // the same pin makes the COUNTED broadcast degrade free — the ids
-      // broadcast only while their count is at or under the limit, else
-      // the semi join shuffles both sides (a keep-almost-everything
-      // predicate costs a shuffle, never an executor OOM; ADVICE r17).
+      // Window-level sampling gate (FeatureCollection.windowKeepPrune):
+      // unkept windows reach neither the collect buffers nor the kernels
       val (assignedG, segsG) = windowKeep match {
         case Some(keep) =>
           require(seriesSeq.lengthCompare(1) == 0 && !posToIdx,
             "windowKeep supports single-series time/sequence windows only")
-          val cnt = assigned.groupBy("__seg_id")
-            .agg(count(valueCols.head).as("__wn"))
-          val anchorC = series.restoreIdx(Segmenter.anchor(windowIdx))
-          val kept = Pinned.checkpoint(
-            plan.segments.join(cnt, Seq("__seg_id"), "left")
-              .where(keep(coalesce(col("__wn"), lit(0L)), anchorC))
-              .drop("__wn"))
-          val keptIds = kept.select("__seg_id")
-          val hinted =
-            if (kept.count() <= windowKeepBroadcastLimit) broadcast(keptIds)
-            else keptIds
-          (assigned.join(hinted, Seq("__seg_id"), "left_semi"), kept)
+          FeatureCollection.windowKeepPrune(assigned, plan.segments,
+            Seq("__seg_id"), valueCols.head,
+            series.restoreIdx(Segmenter.anchor(windowIdx)), keep)
         case None => (assigned, plan.segments)
       }
       val aggCols = ds.map(d =>
@@ -523,14 +498,7 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     * feature_collection.py:568-724). Implemented as lag→change-flag→running
     * sum → run table → broadcast range join.
     */
-  def calculateGroupByConsecutive(data: Seq[Series], group: Series): DataFrame =
-    calculateGroupByConsecutive(data, group, fuseSameSource = true)
-
-  /** `fuseSameSource = false` forces the generic union-scan plan — kept as
-    * the differential twin (G3FusedSpec pins row identity between the two).
-    */
-  def calculateGroupByConsecutive(data: Seq[Series], group: Series,
-                                  fuseSameSource: Boolean): DataFrame = {
+  def calculateGroupByConsecutive(data: Seq[Series], group: Series): DataFrame = {
     requireSameTz(data :+ group)
     // SAME-SOURCE FUSION (r19, guide §2.4 "remove shuffles/passes"): when
     // every value series reads the group series' OWN frame and index column
@@ -543,8 +511,9 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     // second scan + 2×rows union exchange/pin + fill-forward + the
     // runs⋈feats join — everything this branch removes — own the majority.
     // Series.sameSource is what makes `internalPlus` over the group frame
-    // see exactly each series' `internal` rows
-    val fusible = fuseSameSource && data.forall(group.sameSource)
+    // see exactly each series' `internal` rows. `Gates.fuse` off forces the
+    // generic union-scan plan — the differential twin (G3FusedSpec)
+    val fusible = Gates.fuse && data.forall(group.sameSource)
     if (fusible) return fusedGroupByConsecutive(data, group)
     genericGroupByConsecutive(data, group)
   }
@@ -811,4 +780,32 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
 object FeatureCollection {
   def apply(ds: AnyFeatureDescriptor*): FeatureCollection = new FeatureCollection(ds)
   def of(ds: Seq[AnyFeatureDescriptor]): FeatureCollection = new FeatureCollection(ds)
+
+  /** The window-level sampling gate shared by `calculate` and the keyed
+    * paths: count the `counted` values per window off the assigned rows
+    * (map-side partial agg), filter the SEGMENT table on (count, `anchor`)
+    * — fully distributed, window-count-linear, no driver collect — and
+    * prune the assigned rows with a left-semi join on `keys`, so unkept
+    * windows never reach the aggregate. Windows with no rows count 0.
+    *
+    * Returns (pruned rows, kept segments): the kept frame is pinned because
+    * it feeds both the semi join and the caller's W7 empty-window left join,
+    * which makes the counted broadcast gate on the semi side free — a
+    * keep-almost-everything predicate costs a shuffle, never an executor
+    * OOM.
+    */
+  private[api] def windowKeepPrune(assigned: DataFrame, segments: DataFrame,
+                                   keys: Seq[String], counted: Column,
+                                   anchor: Column,
+                                   keep: (Column, Column) => Column
+                                  ): (DataFrame, DataFrame) = {
+    val cnt = assigned.groupBy(keys.map(col): _*)
+      .agg(count(counted).as("__wn"))
+    val kept = Pinned.checkpoint(
+      segments.join(cnt, keys, "left")
+        .where(keep(coalesce(col("__wn"), lit(0L)), anchor))
+        .drop("__wn"))
+    val ids = kept.select(keys.map(col): _*)
+    (assigned.join(Gates.hint(kept)(ids), keys, "left_semi"), kept)
+  }
 }

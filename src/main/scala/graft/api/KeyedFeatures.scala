@@ -100,12 +100,18 @@ object KeyedFeatures {
   // falls back to the generic aggregate+join+pivot path. Float caveat:
   // sum/mean accumulate the same row multiset in a different order than
   // the per-window aggregate did (Spark's partial aggregation is already
-  // order-nondeterministic); Q72RollupSpec pins the differential within
-  // double rounding and exactly after the declared round(6).
+  // order-nondeterministic); Q72RollupSpec pins the differential (the
+  // generic twin under `Gates.fuse` off) within double rounding and exactly
+  // after the declared round(6).
+  //
+  // Maskability is keyed on the registry funcs' `agg` closure identity, not
+  // the FeatureFunc instance: `.as`/`.copy` keep the closure (a renamed
+  // `len.as("n")` stays fused), while `robust` builds a new one.
+  private val maskableAggs = Seq(FeatureFuncs.len, FeatureFuncs.mean,
+    FeatureFuncs.sum, FeatureFuncs.min, FeatureFuncs.max).map(_.agg)
+
   private def maskable(f: FeatureFunc): Boolean =
-    (f eq FeatureFuncs.len) || (f eq FeatureFuncs.mean) ||
-      (f eq FeatureFuncs.sum) || (f eq FeatureFuncs.min) ||
-      (f eq FeatureFuncs.max)
+    f.outputNames.isEmpty && maskableAggs.exists(_ eq f.agg)
 
   /** Single-series sugar over [[calculateWide]].
     *
@@ -147,7 +153,7 @@ object KeyedFeatures {
     *              and post-filtering, but keyed super-linear members never
     *              pay for unkept windows. Count pass, distributed segment
     *              filter, left-semi prune; broadcast while the kept count
-    *              stays at or under `windowKeepBroadcastLimit`, a shuffled
+    *              passes the counted gate (`graft.core.Gates`), a shuffled
     *              semi join above it.
     */
   def calculateWide(df: DataFrame, keyCol: String, idxCol: String,
@@ -156,8 +162,7 @@ object KeyedFeatures {
                     nary: Seq[(Seq[String], NaryFunc)] = Nil,
                     windowIdx: String = "end",
                     includeFinalWindow: Boolean = false,
-                    windowKeep: Option[(Column, Column) => Column] = None,
-                    windowKeepBroadcastLimit: Long = 4000000L): DataFrame = {
+                    windowKeep: Option[(Column, Column) => Column] = None): DataFrame = {
     require(unary.nonEmpty || nary.nonEmpty, "no features given")
     nary.foreach { case (cols, f) =>
       require(cols.lengthCompare(f.arity) == 0,
@@ -228,29 +233,14 @@ object KeyedFeatures {
     }
 
     // Keyed window-level sampling gate — the single-series windowKeep's
-    // twin: count rows per (key, window start) off the assignment explode
-    // (map-side partial agg), filter the per-key SEGMENT table on
-    // (count, anchor) — fully distributed — and prune the explode with a
-    // left-semi join BEFORE the fused aggregate, so keyed super-linear
-    // members never see unkept windows. The kept frame is pinned (it
-    // feeds the semi join and the W7 left join), which makes the counted
-    // broadcast degrade free: ids broadcast only while their count is at
-    // or under the limit, else the semi join shuffles on the key.
+    // twin (FeatureCollection.windowKeepPrune) per (key, window start): the
+    // explode is pruned BEFORE the fused aggregate, so keyed super-linear
+    // members never see unkept windows
     val (assignedG, segmentsG) = windowKeep match {
       case Some(keep) =>
-        val cnt = assigned.groupBy("__key", "__seg_start")
-          .agg(count(col(firstVal)).as("__wn"))
-        val kept = Pinned.checkpoint(
-          segments.join(cnt, Seq("__key", "__seg_start"), "left")
-            .where(keep(coalesce(col("__wn"), lit(0L)),
-              series.restoreIdx(anchorRaw)))
-            .drop("__wn"))
-        val ids = kept.select("__key", "__seg_start")
-        val hinted =
-          if (kept.count() <= windowKeepBroadcastLimit) broadcast(ids)
-          else ids
-        (assigned.join(hinted, Seq("__key", "__seg_start"), "left_semi"),
-          kept)
+        FeatureCollection.windowKeepPrune(assigned, segments,
+          Seq("__key", "__seg_start"), col(firstVal),
+          series.restoreIdx(anchorRaw), keep)
       case None => (assigned, segments)
     }
 
@@ -322,16 +312,14 @@ object KeyedFeatures {
                          nary: Seq[(Seq[String], NaryFunc)] = Nil,
                          windowIdx: String = "end",
                          includeFinalWindow: Boolean = false,
-                         windowKeep: Option[(Column, Column) => Column] = None,
-                         windowKeepBroadcastLimit: Long = 4000000L,
-                         fusedAggregate: Boolean = true): DataFrame = {
+                         windowKeep: Option[(Column, Column) => Column] = None): DataFrame = {
     require(windows.nonEmpty, "no windows given")
     require(windows.map(_._1.amount).distinct.length == windows.length,
       "duplicate windows")
     if (windows.lengthCompare(1) == 0)
       return calculateWide(df, keyCol, idxCol, windows.head._1,
         windows.head._2, unary, nary, windowIdx, includeFinalWindow,
-        windowKeep, windowKeepBroadcastLimit)
+        windowKeep)
     require(unary.nonEmpty || nary.nonEmpty, "no features given")
     nary.foreach { case (cols, f) =>
       require(cols.lengthCompare(f.arity) == 0,
@@ -383,7 +371,7 @@ object KeyedFeatures {
     // never emitted and the fused aggregate below runs directly on the
     // explode with map-side partial aggregation (see calculateWide's
     // step-3 note).
-    val fuseOk = fusedAggregate && nary.isEmpty && windowKeep.isEmpty &&
+    val fuseOk = Gates.fuse && nary.isEmpty && windowKeep.isEmpty &&
       unary.nonEmpty && unary.forall { case (_, f) => maskable(f) }
     val withStart = internal.join(bounds, Seq("__key"))
     lazy val assigned = {
@@ -463,19 +451,9 @@ object KeyedFeatures {
     // value the pivot output restores
     val (assignedG, segmentsG) = windowKeep match {
       case Some(keep) =>
-        val cnt = assigned.groupBy("__key", "__w", "__seg_start")
-          .agg(count(col(valueCols.head)).as("__wn"))
-        val kept = Pinned.checkpoint(
-          segments.join(cnt, Seq("__key", "__w", "__seg_start"), "left")
-            .where(keep(coalesce(col("__wn"), lit(0L)),
-              series.restoreIdx(col("__s0") + anchorOff)))
-            .drop("__wn"))
-        val ids = kept.select("__key", "__w", "__seg_start")
-        val hinted =
-          if (kept.count() <= windowKeepBroadcastLimit) broadcast(ids)
-          else ids
-        (assigned.join(hinted, Seq("__key", "__w", "__seg_start"),
-          "left_semi"), kept)
+        FeatureCollection.windowKeepPrune(assigned, segments,
+          Seq("__key", "__w", "__seg_start"), col(valueCols.head),
+          series.restoreIdx(col("__s0") + anchorOff), keep)
       case None => (assigned, segments)
     }
 

@@ -16,11 +16,10 @@ import org.apache.spark.sql.functions._
   * @param emptyValue  value emitted for empty windows (W7: empty segments
   *                    still produce a row; e.g. `count` → 0, others → null,
   *                    matching `len([]) == 0` vs `np.mean([]) == NaN`).
-  */
-/** @param outputNames when set, the aggregate returns a STRUCT whose fields
-  *                     are these names; the collection expands them into one
-  *                     output column each (`FuncWrapper(output_names=[...])`,
-  *                     reference: tsflex/features/function_wrapper.py:90-143)
+  * @param outputNames when set, the aggregate returns a STRUCT whose fields
+  *                    are these names; the collection expands them into one
+  *                    output column each (`FuncWrapper(output_names=[...])`,
+  *                    reference: tsflex/features/function_wrapper.py:90-143)
   */
 final case class FeatureFunc(
     name: String,

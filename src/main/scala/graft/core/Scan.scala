@@ -168,201 +168,113 @@ object Scan {
       .drop("__loc", "__off", "__pid")
   }
 
-  /** 1-based rank of each row WITHIN its `keyCol` group in `orderCol` order,
-    * plus the group's total row count, without ever putting a whole group
-    * through one task. `row_number() over (partition by key)` serializes each
-    * key into a single window task — strata in a training-data pipeline are
-    * few and HUGE (source, language), so at scale one task sorts billions of
-    * rows. Here the data is range-partitioned on (key, order) — a big group
-    * SPANS many partitions — ranked partition-locally, and stitched with a
-    * per-(partition, key) offset join computed on the tiny summary table
-    * (≤ numPartitions + numKeys − 1 rows: each partition holds a contiguous
-    * (key, order) range, so keys split across partitions only at boundaries).
-    * Group totals fall out of the same summary for free.
+  /** 1-based rank of each row WITHIN its `keyCols` group in `orderCol`
+    * order, plus the group's total row count, without ever putting a whole
+    * group through one task. `row_number() over (partition by key)`
+    * serializes each key into a single window task — strata in a
+    * training-data pipeline are few and HUGE (source, language), so at scale
+    * one task sorts billions of rows. The [[keyedStitch]] core with unit
+    * weight: ties in `orderCol` get distinct consecutive ranks, as
+    * row_number gives them.
     *
-    * The summary/totals tables broadcast to the stitch joins only while they
-    * are COUNTED at or under `broadcastLimit` rows — the summary size is
-    * driven by the KEY CARDINALITY, so a high-cardinality key (per-entity
-    * ids; use `KeyedFeatures` for those) degrades to shuffled stitch joins
-    * instead of a driver/executor OOM. The count is free: the summary is
-    * checkpointed anyway so its three consumers don't recompute it.
+    * A composite key stays several FLAT columns all the way through the
+    * range exchange, the sort, the summary and the stitch joins (which AND
+    * one null-safe equality per key column): a packed struct key would ride
+    * every exchanged row as a pointer + nested-row blob (~2-3× the bytes of
+    * the flat fields) and add an interpreted hop to every comparison.
     */
-  def keyedRank(df: DataFrame, keyCol: String, orderCol: String,
-                rankCol: String, countCol: String,
-                broadcastLimit: Long = 4000000L): DataFrame =
-    keyedRankMulti(df, Seq(keyCol), orderCol, rankCol, countCol,
-      broadcastLimit)
+  def keyedRank(df: DataFrame, keyCols: Seq[String], orderCol: String,
+                rankCol: String, countCol: String): DataFrame =
+    keyedStitch(df, keyCols, orderCol, lit(1L), rankCol, Some(countCol))
 
-  /** [[keyedRank]] under a COMPOSITE key of several FLAT columns. The
-    * single-column form forces composite callers to pack a struct — and a
-    * nested struct key rides every one of the n exchanged rows as a
-    * pointer + nested-row blob in the UnsafeRow layout (~2-3× the bytes of
-    * the flat fields) and adds an interpreted hop to every range-boundary /
-    * window-sort comparison. At the multi-metric quantile scale (n·k rows
-    * through the range exchange) the key bytes ARE the exchange volume, so
-    * the composite key stays flat all the way through the sort, the
-    * summary and the stitch joins, which simply AND one null-safe equality
-    * per key column.
-    */
-  def keyedRankMulti(df: DataFrame, keyCols: Seq[String], orderCol: String,
-                     rankCol: String, countCol: String,
-                     broadcastLimit: Long = 4000000L): DataFrame = {
-    require(keyCols.nonEmpty, "need at least one key column")
-    // __loc/__off/__tot ride unqualified through withColumn/agg below — a
-    // caller column with one of those names would be silently REPLACED
-    // (withColumn semantics), corrupting data instead of failing loudly
-    Seq("__loc", "__off", "__tot").foreach(r =>
-      require(!df.columns.contains(r), s"$r is reserved by keyedRank"))
-    // same loud-failure rule for the OUTPUT names: withColumn(rankCol)
-    // would silently REPLACE an existing caller column (r17 sweep)
-    Seq(rankCol, countCol).foreach(r =>
-      require(!df.columns.contains(r),
-        s"output column $r already exists on the input"))
-    pinnedOrder(df) // validate: untagged __pid is reserved-name collision
-    val p = pinPartitions(
-      df.drop("__pid").repartitionByRange((keyCols :+ orderCol).map(col): _*),
-      keyCols :+ orderCol)
-    val w = Window.partitionBy(("__pid" +: keyCols).map(col): _*)
-      .orderBy(orderCol)
-    val local = p.withColumn("__loc", row_number().over(w).cast("long"))
-    val perPid = Pinned.checkpoint(
-      p.groupBy(("__pid" +: keyCols).map(col): _*)
-        .agg(count(lit(1)).as("__tot")))
-    val hint: DataFrame => DataFrame =
-      if (perPid.count() <= broadcastLimit) broadcast(_) else identity
-    def renamed(prefix: String): Seq[Column] =
-      keyCols.zipWithIndex.map { case (k, i) => col(k).as(s"${prefix}$i") }
-    def eqTo(prefix: String): Column =
-      keyCols.zipWithIndex.map { case (k, i) => col(s"${prefix}$i") <=> col(k) }
-        .reduce(_ && _)
-    val b = perPid.select(col("__pid").as("b___pid") +:
-      renamed("b___key") :+ col("__tot").as("b___tot"): _*)
-    // every key equality in the stitch is NULL-SAFE (<=>): a NULL key is a
-    // legal group (SQL GROUP BY convention) and plain EqualTo would silently
-    // drop its rows at the inner stitch joins; <=> is still an equi-join
-    // key for broadcast/sort-merge, so the plan shape is unchanged
-    val offsets = perPid
-      .join(b, eqTo("b___key") && col("b___pid") < col("__pid"), "left")
-      .groupBy(("__pid" +: keyCols).map(col): _*)
-      .agg(coalesce(sum(col("b___tot")), lit(0L)).as("__off"))
-      .select(col("__pid").as("o___pid") +: renamed("o___key") :+
-        col("__off"): _*)
-    val totals = perPid.groupBy(keyCols.map(col): _*)
-      .agg(sum(col("__tot")).as(countCol))
-      .select(renamed("t___key") :+ col(countCol): _*)
-    local.join(hint(offsets), col("__pid") === col("o___pid") && eqTo("o___key"))
-      .join(hint(totals), eqTo("t___key"))
-      .withColumn(rankCol, col("__loc") + col("__off"))
-      .drop(Seq("__loc", "__off", "__pid", "o___pid") ++
-        keyCols.indices.flatMap(i => Seq(s"o___key$i", s"t___key$i")): _*)
-  }
-
-  /** [[keyedRankMulti]] specialized to QUANTILE-BRACKET consumers (r18,
-    * from the measured q89 attribution: at 100× the exchange is ~8%
-    * of the rank stage — the local window sort + stitch over every n·k row
-    * dominates). A quantile needs ranks only at floor/ceil(1+(n−1)q), and
-    * each such global rank falls inside exactly ONE (partition, key)
-    * segment of the range exchange — so the per-(partition, key) summary
-    * (already computed for the stitch) pinpoints the segments that contain
-    * a bracket target, a left-semi join keeps ONLY those segments' rows
-    * (≈ 2·|quantiles|/P of the input at P partitions), and the window
-    * sort + row_number + stitch run on that slice. Ranks on surviving rows
-    * are identical to [[keyedRankMulti]]'s — the kept segments retain all
-    * their rows, so partition-local numbering is unchanged (differential:
-    * RankBracketsSpec).
-    *
-    * Returns the kept segments' rows with `rankCol`/`countCol` attached —
-    * a SUPERSET of the bracket rows; the caller applies its
-    * rank-equals-target filter exactly as it would on the full ranking.
-    * Same counted `broadcastLimit` degrade as [[keyedRankMulti]] on every
-    * summary-sized side (the needed-segment list is additionally counted
-    * before the semi join: ≤ 2·|quantiles|·|keys| rows, but key
-    * cardinality is data). A second counted degrade handles the
-    * per-entity-key regime (keys ≫ partitions, where ~every segment holds
-    * a target): when the needed list covers ≥70% of the segments the semi
-    * prune is skipped and everything is ranked directly — identical
-    * ranks, no join overhead on the full input.
-    */
-  def keyedRankBrackets(df: DataFrame, keyCols: Seq[String], orderCol: String,
-                        rankCol: String, countCol: String,
-                        quantiles: Seq[Double],
-                        broadcastLimit: Long = 4000000L,
-                        pruneMinRows: Long = PruneMinRows): DataFrame = {
-    Seq(rankCol, countCol).foreach(r =>
-      require(!df.columns.contains(r),
-        s"output column $r already exists on the input"))
-    // weight-1 degenerate of the span core: each row's span is
-    // (rank−1, rank] — the span's upper bound IS the row's rank
-    spanBracketsCore(df, keyCols, orderCol, lit(1L), countCol, quantiles,
-      broadcastLimit, pruneMinRows)
-      .withColumnRenamed("__shi", rankCol)
-      .drop("__slo")
-  }
-
-  /** WEIGHTED sibling of [[keyedRankBrackets]] for pre-aggregated
-    * (histogram) rows: each input row carries `weightCol` ≥ 1 identical
-    * underlying observations of its `orderCol` value, and the output
-    * attaches the half-open GLOBAL span `(loCol, hiCol]` of ranks the row
-    * covers within its key (in `orderCol` order), plus the key's total
-    * weight `countCol`. With all weights 1 this reduces exactly to
-    * `keyedRankBrackets` (`hiCol` = rank).
+  /** Quantile-bracket ranking of pre-aggregated (histogram) rows: each input
+    * row carries `weightCol` ≥ 1 identical underlying observations of its
+    * `orderCol` value, and the output attaches the half-open GLOBAL span
+    * `(loCol, hiCol]` of ranks the row covers within its key (in `orderCol`
+    * order), plus the key's total weight `countCol`. With all weights 1,
+    * `hiCol` is exactly [[keyedRank]]'s rank.
     *
     * This is the 100 TB quantile shape: a map-side-combining
     * `groupBy(key, value).count()` collapses repeated values BEFORE any
-    * range exchange, so the exchange + pid-pin checkpoint + window sort —
-    * the measured q89 residual at 100× — run over the DISTINCT
-    * (key, value) set, not every observation. Real columns repeat
-    * (quantities, prices, codes, sensor LSBs); worst case (all values
-    * unique) the histogram is a single extra linear map-combined pass.
+    * range exchange, so the exchange + pid-pin checkpoint + window sort run
+    * over the DISTINCT (key, value) set, not every observation. Worst case
+    * (all values unique) the histogram is a single extra linear
+    * map-combined pass.
     *
-    * A target rank t belongs to the unique row with lo < t ≤ hi; the
-    * bracket pruning, counted broadcast degrades and the ≥70% selectivity
-    * degrade are identical to [[keyedRankBrackets]] (segment spans simply
-    * sum weights instead of counting rows). Weights must be non-null
-    * positive integers — the contract of a count aggregate.
+    * A quantile needs ranks only at floor/ceil(1+(n−1)q), and each such
+    * global rank falls inside exactly ONE (partition, key) segment of the
+    * range exchange — so above [[Gates.PruneMinRows]] ranked rows the
+    * per-(partition, key) summary pinpoints the segments that contain a
+    * bracket target and a left-semi join keeps ONLY those segments' rows
+    * (≈ 2·|quantiles|/P of the input at P partitions) for the window sort
+    * and stitch. When the needed list covers ≥70% of the segments
+    * (per-entity keys, keys ≫ partitions) the prune is skipped and
+    * everything is ranked directly. Spans on surviving rows are identical
+    * either way: the kept segments retain all their rows.
+    *
+    * Returns the kept segments' rows — a SUPERSET of the bracket rows; a
+    * target rank t belongs to the unique row with lo < t ≤ hi, and the
+    * caller applies that filter exactly as it would on the full ranking.
+    * Weights must be non-null positive integers — the contract of a count
+    * aggregate.
     */
   def keyedSpanBrackets(df: DataFrame, keyCols: Seq[String], orderCol: String,
                         weightCol: String, loCol: String, hiCol: String,
-                        countCol: String, quantiles: Seq[Double],
-                        broadcastLimit: Long = 4000000L,
-                        pruneMinRows: Long = PruneMinRows): DataFrame = {
+                        countCol: String, quantiles: Seq[Double]): DataFrame = {
     require(df.columns.contains(weightCol), s"missing weight column $weightCol")
-    Seq(loCol, hiCol, countCol).foreach(r =>
-      require(!df.columns.contains(r),
-        s"output column $r already exists on the input"))
-    spanBracketsCore(df, keyCols, orderCol, col(weightCol).cast("long"),
-      countCol, quantiles, broadcastLimit, pruneMinRows)
-      .withColumnRenamed("__slo", loCol)
-      .withColumnRenamed("__shi", hiCol)
+    require(quantiles.nonEmpty, "need at least one quantile")
+    require(!df.columns.contains(loCol),
+      s"output column $loCol already exists on the input")
+    val weight = col(weightCol).cast("long")
+    keyedStitch(df, keyCols, orderCol, weight, hiCol, Some(countCol), quantiles)
+      .withColumn(loCol, col(hiCol) - weight)
   }
 
-  /** Ranked-row total below which the bracket prune is skipped outright
-    * (r19, VERDICT r18 item 2): deciding the prune costs a second summary
-    * job + a checkpoint (the `needed` list) and, when it fires, a semi-join
-    * pass over the ranked rows — fixed scheduler/materialization overhead
-    * of ~0.5-1 s that at driver scale (sf0.1: ≤ ~1.3M histogram rows for
-    * q89) exceeds the window sort it would save, the measured q89 minwarm
-    * regression 2.01→2.92 s. Above the threshold the sort over non-bracket
-    * segments dominates and the prune decision proceeds as in r18 (with its
-    * own ≥70% selectivity degrade). Counted at runtime from the same
-    * summary aggregate that feeds the broadcast gates — scale-adaptive, not
-    * core-count tuned.
+  /** Running (inclusive) sum of `flagCol` WITHIN each `keyCol` group in
+    * `orderCol` order — the keyed sibling of [[runningSum]]: the
+    * [[keyedStitch]] core with the flag column as weight and no totals join.
     */
-  private[graft] val PruneMinRows: Long = 4000000L
+  def keyedRunningSum(df: DataFrame, keyCol: String, orderCol: String,
+                      flagCol: String, outCol: String): DataFrame =
+    keyedStitch(df, Seq(keyCol), orderCol, col(flagCol), outCol, None)
 
-  private def spanBracketsCore(df: DataFrame, keyCols: Seq[String],
-                               orderCol: String, weight: Column,
-                               countCol: String, quantiles: Seq[Double],
-                               broadcastLimit: Long,
-                               pruneMinRows: Long): DataFrame = {
+  /** The keyed stitch behind [[keyedRank]], [[keyedSpanBrackets]] and
+    * [[keyedRunningSum]]: `outCol` = the running INCLUSIVE sum of `weight`
+    * within each key in `orderCol` order, plus (when `countCol` is given)
+    * the key's total weight.
+    *
+    * The data is range-partitioned on (keys, order) — a big group SPANS
+    * many partitions — summed partition-locally, and stitched with a
+    * per-(partition, key) offset join computed on the tiny summary table
+    * (≤ numPartitions + numKeys − 1 rows: each partition holds a contiguous
+    * (key, order) range, so keys split across partitions only at
+    * boundaries). Key totals fall out of the same summary for free.
+    *
+    * The summary-sized sides broadcast to the stitch joins only while the
+    * COUNTED summary is [[Gates.broadcastable]] — its size is driven by the
+    * KEY CARDINALITY, so a high-cardinality key (per-entity ids; use
+    * `KeyedFeatures` for those) degrades to shuffled stitch joins instead
+    * of a driver/executor OOM. One summary job serves every gate: the
+    * summary is checkpointed anyway so its consumers don't recompute it.
+    * Non-empty `quantiles` turn on the bracket prune of
+    * [[keyedSpanBrackets]] (requires `countCol`).
+    */
+  private def keyedStitch(df: DataFrame, keyCols: Seq[String],
+                          orderCol: String, weight: Column, outCol: String,
+                          countCol: Option[String],
+                          quantiles: Seq[Double] = Nil): DataFrame = {
     require(keyCols.nonEmpty, "need at least one key column")
-    require(quantiles.nonEmpty, "need at least one quantile")
     quantiles.foreach(q =>
       require(q >= 0.0 && q <= 1.0, s"quantile $q outside [0, 1]"))
-    Seq("__loc", "__off", "__tot", "__hn", "__tr", "__slo", "__shi").foreach(r =>
-      require(!df.columns.contains(r), s"$r is reserved by keyedRankBrackets"))
-    require(!df.columns.contains(countCol),
-      s"output column $countCol already exists on the input")
+    // the working columns ride unqualified through withColumn/agg below — a
+    // caller column with one of those names would be silently REPLACED
+    // (withColumn semantics), corrupting data instead of failing loudly
+    Seq("__loc", "__off", "__tot", "__hn", "__tr").foreach(r =>
+      require(!df.columns.contains(r), s"$r is reserved by the keyed stitch"))
+    // same loud-failure rule for the OUTPUT names (r17 sweep)
+    (outCol +: countCol.toSeq).foreach(r =>
+      require(!df.columns.contains(r),
+        s"output column $r already exists on the input"))
     pinnedOrder(df) // validate: untagged __pid is reserved-name collision
     val p = pinPartitions(
       df.drop("__pid").repartitionByRange((keyCols :+ orderCol).map(col): _*),
@@ -370,14 +282,13 @@ object Scan {
     val perPid = Pinned.checkpoint(
       p.groupBy(("__pid" +: keyCols).map(col): _*)
         .agg(sum(weight).as("__tot"), count(lit(1)).as("__hn")))
-    // ONE summary job serving both gates: segment count (broadcast limits)
-    // and ranked-row total (the pruneMinRows degrade) — replaces the former
-    // bare perPid.count(), so the degrade costs no extra job
+    // ONE summary job serving every gate: segment count (broadcast) and
+    // ranked-row total (the bracket prune's small-input degrade)
     val srow = perPid.agg(count(lit(1)), sum(col("__hn"))).head
     val perPidCnt = srow.getLong(0)
     val rankedRows = if (srow.isNullAt(1)) 0L else srow.getLong(1)
     val hint: DataFrame => DataFrame =
-      if (perPidCnt <= broadcastLimit) broadcast(_) else identity
+      if (Gates.broadcastable(perPidCnt)) broadcast(_) else identity
     def renamed(prefix: String): Seq[Column] =
       keyCols.zipWithIndex.map { case (k, i) => col(k).as(s"${prefix}$i") }
     def eqTo(prefix: String): Column =
@@ -385,29 +296,30 @@ object Scan {
         .reduce(_ && _)
     val b = perPid.select(col("__pid").as("b___pid") +:
       renamed("b___key") :+ col("__tot").as("b___tot"): _*)
-    // per-(partition, key) rank span: global ranks (__off, __off + __tot]
-    // — null-safe key equality throughout, as in keyedRankMulti
+    // per-(partition, key) weight span: (__off, __off + __tot]. Every key
+    // equality in the stitch is NULL-SAFE (<=>): a NULL key is a legal group
+    // (SQL GROUP BY convention) and plain EqualTo would silently drop its
+    // rows at the inner stitch joins; <=> is still an equi-join key for
+    // broadcast/sort-merge, so the plan shape is unchanged
     val spans = perPid
       .join(b, eqTo("b___key") && col("b___pid") < col("__pid"), "left")
       .groupBy(("__pid" +: keyCols).map(col): _*)
       .agg(coalesce(sum(col("b___tot")), lit(0L)).as("__off"),
         first(col("__tot")).as("__tot"))
-    val totals = perPid.groupBy(keyCols.map(col): _*)
-      .agg(sum(col("__tot")).as(countCol))
-      .select(renamed("t___key") :+ col(countCol): _*)
-    // Small-input degrade (r19): below `pruneMinRows` ranked rows the
-    // bracket prune is skipped before its decision machinery is even built
-    // — no `needed` join/checkpoint/count job — and everything is ranked
-    // directly, exactly the prune-rejected plan. See [[PruneMinRows]].
-    val kept =
-      if (rankedRows <= pruneMinRows) p
-      else {
+    val totals = countCol.map(c => perPid.groupBy(keyCols.map(col): _*)
+      .agg(sum(col("__tot")).as(c))
+      .select(renamed("t___key") :+ col(c): _*))
+    val kept = (totals, countCol) match {
+      // at or under Gates.PruneMinRows ranked rows the bracket prune is
+      // skipped before its decision machinery is even built — no `needed`
+      // join/checkpoint/count job — exactly the prune-rejected plan
+      case (Some(t), Some(c)) if quantiles.nonEmpty && Gates.prunes(rankedRows) =>
         // the distinct bracket ranks per key: floor/ceil of 1 + (n-1)q
         val trExprs = quantiles.flatMap { q =>
-          val pos = lit(1.0) + (col(countCol) - 1.0) * lit(q)
+          val pos = lit(1.0) + (col(c) - 1.0) * lit(q)
           Seq(floor(pos).cast("long"), ceil(pos).cast("long"))
         }
-        val targets = totals.select(
+        val targets = t.select(
           keyCols.indices.map(i => col(s"t___key$i")) :+
             explode(array_distinct(array(trExprs: _*))).as("__tr"): _*)
         // segments containing a target — summary-sized equi join + span filter
@@ -418,71 +330,31 @@ object Scan {
               col("__tr") > col("__off") && col("__tr") <= col("__off") + col("__tot"))
           .select(col("__pid").as("n___pid") +: renamed("n___key"): _*)
           .distinct())
-        // Selectivity degrade: when key cardinality rivals the partition count
-        // (per-entity keys), nearly EVERY (partition, key) segment contains a
-        // bracket target and the semi prune keeps ~everything — the join would
-        // be pure overhead on the full input. Both counts are already paid
-        // (the frames are checkpointed for their other consumers), so rank
-        // everything directly in that regime — ranks are identical either way.
+        // Selectivity degrade: when key cardinality rivals the partition
+        // count, nearly EVERY segment contains a bracket target and the semi
+        // prune keeps ~everything — rank everything directly in that regime
         val neededCnt = needed.count()
-        val prunes = neededCnt < perPidCnt * 0.7
-        val neededHint: DataFrame => DataFrame =
-          if (neededCnt <= broadcastLimit) broadcast(_) else identity
-        if (!prunes) p
-        else p.join(neededHint(needed),
+        if (neededCnt >= perPidCnt * 0.7) p
+        else p.join(
+          (if (Gates.broadcastable(neededCnt)) broadcast(needed) else needed),
           col("__pid") === col("n___pid") && eqTo("n___key"), "left_semi")
-      }
+      case _ => p
+    }
     val w = Window.partitionBy(("__pid" +: keyCols).map(col): _*)
       .orderBy(orderCol)
-    // running INCLUSIVE weight in (pid, key)-local value order — with
-    // weight 1 this is exactly row_number (ROWS frame, so tied orderCol
-    // values get distinct consecutive positions, as row_number gave them)
+    // running INCLUSIVE weight in (pid, key)-local order — with weight 1 this
+    // is exactly row_number (ROWS frame: tied orderCol values get distinct
+    // consecutive positions)
     val local = kept.withColumn("__loc",
       sum(weight).over(w.rowsBetween(Window.unboundedPreceding, 0)))
     val offsets = spans.select(col("__pid").as("o___pid") +:
       renamed("o___key") :+ col("__off"): _*)
-    local.join(hint(offsets), col("__pid") === col("o___pid") && eqTo("o___key"))
-      .join(hint(totals), eqTo("t___key"))
-      .withColumn("__shi", col("__loc") + col("__off"))
-      .withColumn("__slo", col("__shi") - weight)
+    val stitched = local.join(hint(offsets),
+      col("__pid") === col("o___pid") && eqTo("o___key"))
+    totals.fold(stitched)(t => stitched.join(hint(t), eqTo("t___key")))
+      .withColumn(outCol, col("__loc") + col("__off"))
       .drop(Seq("__loc", "__off", "__pid", "o___pid") ++
         keyCols.indices.flatMap(i => Seq(s"o___key$i", s"t___key$i")): _*)
-  }
-
-  /** Running (inclusive) sum of `flagCol` WITHIN each `keyCol` group in
-    * `orderCol` order — the keyed sibling of [[runningSum]], with
-    * [[keyedRank]]'s layout: range-partitioned on (key, order) so one
-    * giant key spans many tasks, summed partition-locally, stitched with
-    * the per-(partition, key) offset join over the summary table. Same
-    * counted `broadcastLimit` degrade as `keyedRank`.
-    */
-  def keyedRunningSum(df: DataFrame, keyCol: String, orderCol: String,
-                      flagCol: String, outCol: String,
-                      broadcastLimit: Long = 4000000L): DataFrame = {
-    pinnedOrder(df) // validate: untagged __pid is reserved-name collision
-    val p = pinPartitions(
-      df.drop("__pid").repartitionByRange(col(keyCol), col(orderCol)),
-      Seq(keyCol, orderCol))
-    val w = Window.partitionBy("__pid", keyCol).orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = p.withColumn("__loc", sum(col(flagCol)).over(w))
-    val perPid = Pinned.checkpoint(
-      p.groupBy(col("__pid"), col(keyCol)).agg(sum(col(flagCol)).as("__tot")))
-    val hint: DataFrame => DataFrame =
-      if (perPid.count() <= broadcastLimit) broadcast(_) else identity
-    val b = perPid.select(col("__pid").as("b___pid"),
-      col(keyCol).as("b___key"), col("__tot").as("b___tot"))
-    // null-safe key equality throughout the stitch — see keyedRank
-    val offsets = perPid
-      .join(b, col("b___key") <=> col(keyCol) && col("b___pid") < col("__pid"), "left")
-      .groupBy(col("__pid"), col(keyCol))
-      .agg(coalesce(sum(col("b___tot")), lit(0L)).as("__off"))
-      .select(col("__pid").as("o___pid"), col(keyCol).as("o___key"),
-        col("__off"))
-    local.join(hint(offsets),
-        col("__pid") === col("o___pid") && col(keyCol) <=> col("o___key"))
-      .withColumn(outCol, col("__loc") + col("__off"))
-      .drop("__loc", "__off", "__pid", "o___pid", "o___key")
   }
 
   /** Fused lag → change-flag → inclusive running count in ONE ranged scan:
@@ -635,9 +507,6 @@ object Scan {
         .as("__maxgap"))
   }
 
-  /** Last non-null `valCol` at-or-before each row in `orderCols` order
-    * (distributed forward fill / as-of carry) → `outCol`.
-    */
   /** True when `dt` contains a MapType anywhere in its tree — maps are
     * neither orderable nor hashable, so callers gate sort/hash
     * participation on this (AsofJoin tie ordering, Sink tiebreak hash).
@@ -652,6 +521,9 @@ object Scan {
       case _ => false
     }
 
+  /** Last non-null `valCol` at-or-before each row in `orderCols` order
+    * (distributed forward fill / as-of carry) → `outCol`.
+    */
   def fillForward(df: DataFrame, orderCols: Seq[String], valCol: String,
                   outCol: String): DataFrame = {
     val p = ranged(df, orderCols)

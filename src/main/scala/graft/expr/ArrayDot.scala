@@ -116,10 +116,6 @@ object GraftFunctions {
       s"$fn expects a literal BOOLEAN argument, got $x")
   }
 
-  /** (name, builder) for every native expression — shared by the session
-    * registry and the cluster-wide extensions hook. Parameter positions
-    * with config semantics (k, numHashes, zone) must be literals.
-    */
   /** (min, max) accepted argument counts per SQL name. Checked by the
     * wrapper below so a wrong call raises a clear signature error at
     * resolution instead of a raw IndexOutOfBounds (too few) or a silently
@@ -147,6 +143,10 @@ object GraftFunctions {
     b(es)
   }
 
+  /** (name, builder) for every native expression — shared by the session
+    * registry and the cluster-wide extensions hook. Parameter positions
+    * with config semantics (k, numHashes, zone) must be literals.
+    */
   private[expr] val all: Seq[(String, String, Seq[Expression] => Expression)] = allRaw
     .map { case (n, c, b) => (n, c, checked(n, b)) }
 

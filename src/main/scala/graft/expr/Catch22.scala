@@ -2,9 +2,7 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -925,16 +923,9 @@ object Catch22Util {
   * (post-aggregation), not per row — codegen would buy nothing.
   */
 case class Catch22Slice(child: Expression, catch24: Boolean = false)
-  extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"catch22 requires array<double>, got ${t.sql}")
-  }
+  extends ArrayDoubleKernel {
   override def dataType: DataType =
     if (catch24) Catch22Util.dataType24 else Catch22Util.dataType
-  override def nullable: Boolean = true
   override def prettyName: String = if (catch24) "catch24" else "catch22_tranche1"
 
   override def nullSafeEval(a: Any): Any =

@@ -746,12 +746,28 @@ object EntropyKernelUtil {
   }
 }
 
+/** array<double> window kernel base: the input check and nullability every
+  * unary window kernel shares. */
 private[expr] trait ArrayDoubleKernel extends UnaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires array<double>, got ${t.sql}")
   }
+  override def nullable: Boolean = true
+}
+
+/** (array<double>, double) kernel base — an array child plus one scalar
+  * the caller computes as a NATIVE aggregate (mean, threshold, width). */
+private[expr] trait ArrayScalarKernel extends BinaryExpression
+    with CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(DoubleType, _), DoubleType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires (array<double>, double), got (${l.sql}, ${r.sql})")
+    }
   override def nullable: Boolean = true
 }
 
@@ -892,26 +908,14 @@ object ShannonFreq {
     ColumnBridge.column(ShannonFreq(ColumnBridge.expression(arr)))
 }
 
-private[expr] trait ArrayWidthKernel extends BinaryExpression
-    with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, double), got (${l.sql}, ${r.sql})")
-    }
-  override def nullable: Boolean = true
-  override def dataType: DataType = DoubleType
-}
-
 /** Native binned approximate entropy (see
   * [[EntropyKernelUtil.apenBinned]]); `right` is the quantization width
   * (any per-window scalar: an absolute tolerance, rFactor·σ, a carried
   * width column).
   */
 case class ApenBinned(left: Expression, right: Expression, m: Int)
-  extends ArrayWidthKernel {
+  extends ArrayScalarKernel {
+  override def dataType: DataType = DoubleType
   override def prettyName: String = "apen_binned"
   override def nullSafeEval(a: Any, w: Any): Any =
     EntropyKernelUtil.apenBinned(a.asInstanceOf[ArrayData],
@@ -930,7 +934,8 @@ object ApenBinned {
   * [[EntropyKernelUtil.sampenBinned]]); width as [[ApenBinned]].
   */
 case class SampenBinned(left: Expression, right: Expression, m: Int)
-  extends ArrayWidthKernel {
+  extends ArrayScalarKernel {
+  override def dataType: DataType = DoubleType
   override def prettyName: String = "sampen_binned"
   override def nullSafeEval(a: Any, w: Any): Any =
     EntropyKernelUtil.sampenBinned(a.asInstanceOf[ArrayData],

@@ -1,9 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -148,22 +146,15 @@ object MfccUtil {
   * generated-class footprint of wide battery queries small.
   */
 case class MfccSlice(child: Expression, fs: Double, numCeps: Int)
-  extends UnaryExpression with CodegenFallback {
+  extends ArrayDoubleKernel {
 
   require(numCeps >= 1 && numCeps <= MfccUtil.Nfilt - 1,
     "num_ceps must be in [1, nfilt-1]")
 
   // per-instance, built once per task after deserialization
   @transient private lazy val fbank = MfccUtil.filterbank(fs)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"mfcc requires array<double>, got ${t.sql}")
-  }
   override def dataType: DataType = StructType(
     MfccUtil.names(numCeps).map(StructField(_, DoubleType)))
-  override def nullable: Boolean = true
   override def prettyName: String = "mfcc"
 
   override def nullSafeEval(a: Any): Any =

@@ -5,9 +5,8 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -323,13 +322,7 @@ object CollectSortedVals {
   * aggregate, as before.
   */
 case class HjorthFoldK(child: Expression)
-  extends UnaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${t.sql}")
-  }
-  override def nullable: Boolean = true
+  extends ArrayDoubleKernel {
   override def dataType: DataType = StructType(Seq(
     StructField("vdx", DoubleType), StructField("vddx", DoubleType)))
   override def prettyName: String = "hjorth_fold"
@@ -385,13 +378,7 @@ object HjorthFoldK {
   * fewer than two differences return 0.0 (the empty fold's base).
   */
 case class PetrosianNdK(child: Expression)
-  extends UnaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${t.sql}")
-  }
-  override def nullable: Boolean = true
+  extends ArrayDoubleKernel {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "petrosian_nd"
   override def nullSafeEval(a: Any): Any = {

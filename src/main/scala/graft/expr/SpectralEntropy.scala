@@ -1,12 +1,10 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Runtime kernel: Shannon entropy (nats) of the DC-excluded periodogram of
   * an index-ordered window. For frequency bins k = 1..⌊n/2⌋,
@@ -63,15 +61,8 @@ object SpectralEntropyUtil {
   * per WINDOW (post-aggregation), not per row — codegen would buy nothing.
   */
 case class SpectralEntropy(child: Expression, normalize: Boolean)
-  extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"spectral_entropy requires array<double>, got ${t.sql}")
-  }
+  extends ArrayDoubleKernel {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "spectral_entropy"
 
   override def nullSafeEval(a: Any): Any =

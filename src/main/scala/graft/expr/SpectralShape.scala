@@ -2,9 +2,7 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -234,16 +232,9 @@ object WelchRelUtil {
 
 /** Native relative Welch density (see [[WelchRelUtil]]). */
 case class WelchRel(child: Expression, nCoef: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"welch_rel requires array<double>, got ${t.sql}")
-  }
+  extends ArrayDoubleKernel {
   override def dataType: DataType = StructType(
     WelchRelUtil.names(nCoef).map(StructField(_, DoubleType)))
-  override def nullable: Boolean = true
   override def prettyName: String = "welch_rel"
 
   override def nullSafeEval(a: Any): Any =
@@ -262,15 +253,8 @@ object WelchRel {
   * [[SpectralShapeUtil]]). CodegenFallback: one heavy call per WINDOW.
   */
 case class SpectralShape(child: Expression, fs: Double)
-  extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"spectral_shape requires array<double>, got ${t.sql}")
-  }
+  extends ArrayDoubleKernel {
   override def dataType: DataType = SpectralShapeUtil.dataType
-  override def nullable: Boolean = true
   override def prettyName: String = "spectral_shape"
 
   override def nullSafeEval(a: Any): Any =

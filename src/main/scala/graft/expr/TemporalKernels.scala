@@ -3,7 +3,7 @@ package graft.expr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -453,21 +453,6 @@ case class TemporalFoldK(child: Expression, mode: Int, fs: Double)
     TemporalKernelUtil.temporalFold(a.asInstanceOf[ArrayData], mode, fs)
   override protected def withNewChildInternal(
       newChild: Expression): TemporalFoldK = copy(child = newChild)
-}
-
-/** (array<double>, double) kernel base — array child plus one scalar the
-  * caller computes as a NATIVE aggregate (mean / threshold), the
-  * EntropyKernels ArrayWidthKernel shape. */
-private[expr] trait ArrayScalarKernel extends BinaryExpression
-    with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, double), got (${l.sql}, ${r.sql})")
-    }
-  override def nullable: Boolean = true
 }
 
 /** Threshold-crossing count (see [[TemporalKernelUtil.crossings]]) —

@@ -1,9 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -98,16 +96,9 @@ object WaveletUtil {
 
 /** Native Ricker-CWT wavelet battery (see [[WaveletUtil]]). */
 case class WaveletSlice(child: Expression, widths: Seq[Int])
-  extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"wavelet requires array<double>, got ${t.sql}")
-  }
+  extends ArrayDoubleKernel {
   override def dataType: DataType = StructType(
     WaveletUtil.names(widths).map(StructField(_, DoubleType)))
-  override def nullable: Boolean = true
   override def prettyName: String = "wavelet"
 
   override def nullSafeEval(a: Any): Any =
@@ -185,15 +176,8 @@ object SpectralExtrasUtil {
   */
 case class SpectralExtras(child: Expression, fs: Double, lo: Double,
                           hi: Double)
-  extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"spectral_extras requires array<double>, got ${t.sql}")
-  }
+  extends ArrayDoubleKernel {
   override def dataType: DataType = SpectralExtrasUtil.dataType
-  override def nullable: Boolean = true
   override def prettyName: String = "spectral_extras"
 
   override def nullSafeEval(a: Any): Any =

@@ -44,17 +44,15 @@ object Components {
     * shrinking) edge list via a lazy localCheckpoint; convergence is an
     * exact edge-set comparison. Throws after `maxRounds` non-converged
     * rounds rather than returning a partial closure.
-    */
-  /** @param driverEdgeLimit deduped edge lists at or under this row count
-    *   are solved driver-side with union-find (same precedent as the
-    *   k-means codebook: model-sized data on the driver, data-sized work on
-    *   the cluster) — the iterative star rounds each cost several shuffle
-    *   jobs, so for a broadcast-sized edge list the round overhead
-    *   dominates. Pass 0 to force the distributed fixpoint.
+    *
+    * Deduped edge lists at or under [[graft.core.Gates.DriverEdgeRows]]
+    * are solved driver-side with union-find (same precedent as the k-means
+    * codebook: model-sized data on the driver, data-sized work on the
+    * cluster) — the iterative star rounds each cost several shuffle jobs,
+    * so for a broadcast-sized edge list the round overhead dominates.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxRounds: Int = 25,
-                          driverEdgeLimit: Long = 1000000L): DataFrame = {
+                          maxRounds: Int = 25): DataFrame = {
     // the algorithm's least/greatest canonicalization needs a totally-
     // ordered integral id; a silent cast of string ids would either die
     // with CAST_INVALID_INPUT (ANSI) or null every edge out (non-ANSI) —
@@ -76,7 +74,7 @@ object Components {
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .distinct())
-    if (edges.count() <= driverEdgeLimit) return driverComponents(edges)
+    if (graft.core.Gates.driverSized(edges)) return driverComponents(edges)
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {

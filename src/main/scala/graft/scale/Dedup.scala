@@ -84,20 +84,16 @@ object Dedup {
       df.select(col(idCol), shingleArr(col(textCol), k).as("__arr"))
         .withColumn("__n", size(col("__arr"))))
 
-  /** Candidate pair sets below this row count are broadcast to the
-    * verification joins (~64 MB of (long, long) rows — well under executor
-    * memory); above it, verification degrades to shuffled id joins instead
-    * of an OOM. The count is free: the candidate table is checkpointed
-    * anyway to stop the two differently-keyed joins from recomputing it.
-    */
-  private val BroadcastCandLimit = 4000000L
-
   /** Exact Jaccard verification of a candidate pair set against the stored
     * shingle sets: two candidate joins pull each side's array (no index
     * re-shuffle, no per-shingle count aggregation — ONE `array_intersect`
     * per pair). Forcing the broadcast when the (counted) candidate set is
     * small skips AQE's intermediate stage materializations — measured ~2x
-    * on the warm path vs letting AQE decide.
+    * on the warm path vs letting AQE decide; above the counted gate
+    * ([[graft.core.Gates]]) verification degrades to shuffled id joins
+    * instead of an OOM. The count is free: the candidate table is
+    * checkpointed anyway to stop the two differently-keyed joins from
+    * recomputing it.
     */
   private def verifyJaccard(sets: DataFrame, idCol: String, candidates: DataFrame,
                             threshold: Double): DataFrame = {
@@ -105,8 +101,7 @@ object Dedup {
     // exchanges don't canonicalize to one — without pinning, the whole
     // candidate-generation pipeline would run twice.
     val candCp = graft.core.Pinned.checkpoint(candidates)
-    val cand = if (candCp.count() <= BroadcastCandLimit) broadcast(candCp)
-               else candCp
+    val cand = graft.core.Gates.hint(candCp)(candCp)
     val a = sets.select(col(idCol).as("id_a"), col("__arr").as("__aa"),
         col("__n").as("__na"))
       .join(cand, Seq("id_a"))
@@ -305,8 +300,8 @@ object Dedup {
     *   3. candidates (only!) verified with exact Jaccard via a semi-joined
     *      intersection count — no false positives, recall `1-(1-t^r)^b`
     *      (16 hashes / 8 bands → 97% at t=0.6).
-    */
-  /** One md5 yields FOUR independent 32-bit min-hash functions (8-hex
+    *
+    * One md5 yields FOUR independent 32-bit min-hash functions (8-hex
     * slices; lexicographic min on fixed-width lowercase hex == numeric min),
     * so `numHashes` signatures cost `numHashes/4` md5 calls per shingle —
     * the md5s are the dominant signature cost.
@@ -704,8 +699,7 @@ object Dedup {
     // the limit the SMJ returns instead of an executor OOM; the count is
     // cheap — the gated list is hash-aggregate-sized.
     val dupCp = graft.core.Pinned.checkpoint(dup)
-    val dupSide = if (dupCp.count() <= BroadcastCandLimit) broadcast(dupCp)
-                  else dupCp
+    val dupSide = graft.core.Gates.hint(dupCp)(dupCp)
     val hits = grams.join(dupSide, Seq("__h"), "left_semi")
     mergeSpans(hits, idCol, n)
   }
@@ -752,9 +746,7 @@ object Dedup {
     // the same reused exchange at ~55 s CPU each); broadcasting keeps the
     // index map-side, the SMJ degrade stays above the counted limit
     val firstsCp = graft.core.Pinned.checkpoint(firsts)
-    val firstsSide =
-      if (firstsCp.count() <= BroadcastCandLimit) broadcast(firstsCp)
-      else firstsCp
+    val firstsSide = graft.core.Gates.hint(firstsCp)(firstsCp)
     val hits = grams.join(firstsSide, Seq("__h"))
       .where(col(idCol) =!= col("__fid") || col("__pos") =!= col("__fpos"))
       .select(col(idCol), col("__pos"))

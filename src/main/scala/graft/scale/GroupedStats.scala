@@ -98,7 +98,7 @@ object GroupedStats {
     *
     * Scale shape: the metrics are unpivoted to long form (one scan of the
     * input, k rows per input row) and ranked under the composite key
-    * (key, metric) in a SINGLE `keyedRankMulti` pass — one range exchange over
+    * (key, metric) in a SINGLE `keyedSpanBrackets` pass — one range exchange over
     * n·k rows, not k exchanges of n rows, and the hot-key property is
     * preserved (a billion-row key still spans many tasks per metric). The
     * final pivot back to wide is a map-side-combining hash aggregate over
@@ -130,13 +130,13 @@ object GroupedStats {
     // metric-name string per row is both the bulk of the shuffle bytes
     // and a per-comparison string compare inside the sort — the r14 100×
     // profile attributed q89's cost to exactly that sort I/O. The (key,
-    // metricIdx) pair rides as TWO FLAT columns through keyedRankMulti
+    // metricIdx) pair rides as TWO FLAT columns through the keyed stitch
     // (r16): the earlier struct(key, idx) packing paid a pointer +
     // nested-UnsafeRow blob per exchanged row and an interpreted ordering
     // hop per sort comparison; flat fields keep the exchange key at
     // field-width and the comparisons codegen'd. NULL keyCol rows still
-    // group/join with themselves — every stitch equality inside
-    // keyedRankMulti is null-safe (<=>).
+    // group/join with themselves — every equality inside the keyed stitch
+    // is null-safe (<=>).
     val pairs = array(valCols.zipWithIndex.map { case (c, i) =>
       struct(lit(i).as("__gs_c"), col(c).cast("double").as("__gs_v")) }: _*)
     val long0 = df.select(col(keyCol), explode(pairs).as("__gs_p"))

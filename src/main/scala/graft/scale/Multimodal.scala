@@ -95,17 +95,6 @@ object Multimodal {
   private lazy val imageIoNoDiskCache: Unit =
     javax.imageio.ImageIO.setUseCache(false)
 
-  /** Per-thread cached ImageIO WRITERS (the q79 provider-registry lesson,
-    * applied after measuring the image path — 32 threads ×
-    * 1500 assets): the per-record `getImageWritersByFormatName` lookup +
-    * writer construction costs 1.7× wall / 3.3× CPU at q78's asset sizes
-    * (encode per-record 0.31 s / 6.1 s CPU vs reuse 0.18 s / 1.8 s CPU),
-    * while READER reuse buys nothing (identical 0.25 s wall either way —
-    * decode is pixel-work-bound at 58% CPU fraction, not lock-bound like
-    * the audio registry's 4%), so [[readImage]]/[[decodeFrames]] keep the
-    * per-record lookup. A thread-local is the per-partition-reuse idiom
-    * that also survives task boundaries on a reused executor thread; the
-    * writer is reset() after each asset so no state crosses records. */
   /** The cached-writer path is byte-identical to `ImageIO.write` ONLY
     * under the stock JRE provider set: `ImageIO.write` selects a writer by
     * ImageTypeSpecifier, while this cache takes the FIRST registered
@@ -125,6 +114,17 @@ object Multimodal {
       else None
     }
   }
+  /** Per-thread cached ImageIO WRITERS (the q79 provider-registry lesson,
+    * applied after measuring the image path — 32 threads ×
+    * 1500 assets): the per-record `getImageWritersByFormatName` lookup +
+    * writer construction costs 1.7× wall / 3.3× CPU at q78's asset sizes
+    * (encode per-record 0.31 s / 6.1 s CPU vs reuse 0.18 s / 1.8 s CPU),
+    * while READER reuse buys nothing (identical 0.25 s wall either way —
+    * decode is pixel-work-bound at 58% CPU fraction, not lock-bound like
+    * the audio registry's 4%), so [[readImage]]/[[decodeFrames]] keep the
+    * per-record lookup. A thread-local is the per-partition-reuse idiom
+    * that also survives task boundaries on a reused executor thread; the
+    * writer is reset() after each asset so no state crosses records. */
   private val pngWriterTL: ThreadLocal[Option[javax.imageio.ImageWriter]] =
     ThreadLocal.withInitial(() => jreWriter("png"))
   private val gifWriterTL: ThreadLocal[Option[javax.imageio.ImageWriter]] =

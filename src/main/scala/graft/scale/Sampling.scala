@@ -42,22 +42,6 @@ object Sampling {
   def deterministicSample(df: DataFrame, idCol: String, pct: Int): DataFrame =
     df.where(hashBucket(col(idCol)) < pct)
 
-  /** Stratified split with EXACT per-stratum proportions: rows rank within
-    * their stratum by md5(id) (deterministic, engine-independent) and band on
-    * the rank's percentage position `ceil(rank*100/n)`, so every stratum
-    * lands within one row of its target fraction — `deterministicSplit`'s
-    * hash gate only hits fractions in expectation, which skews small or
-    * imbalanced strata. (NOT `ntile(100)`: a stratum smaller than 100 rows
-    * fills tiles 1..n one row each, dumping the whole stratum in the first
-    * band.)
-    *
-    * Scale shape: `row_number() over (partition by stratum)` would put each
-    * ENTIRE stratum through one window task — strata are few and huge
-    * (source, language), so that's a single task sorting billions of rows at
-    * 100 TB. `Scan.keyedRank` instead range-partitions on (stratum, hash) so
-    * a big stratum spans many parallel tasks, and stitches ranks with a
-    * summary-sized offset join. No per-key single-task stage anywhere.
-    */
   /** Sequence packing: assign rows (documents) to fixed-token-budget shards
     * — the standard layout step before serializing training data. Docs are
     * laid out in a deterministic, engine-independent order (md5 of the id,
@@ -100,7 +84,7 @@ object Sampling {
     requireNoHashCol(df)
     val ranked = graft.core.Scan.keyedRank(
       df.withColumn("__h", md5(col(idCol).cast("string"))),
-      keyCol, "__h", "__rk", "__n")
+      Seq(keyCol), "__h", "__rk", "__n")
     ranked.where(col("__rk") <= cap).select(df.columns.map(col): _*)
   }
 
@@ -123,11 +107,21 @@ object Sampling {
 
   /** EXACT stratified split: within every stratum, assign the first p₁% of
     * rows (in deterministic md5-of-id order) to the first split, the next
-    * p₂% to the second, etc — band sizes exact to rounding of the stratum
-    * count, unlike hash-bucket splits whose per-stratum proportions drift
-    * at small strata. Scale shape: `Scan.keyedRank` (range-partitioned
-    * within stratum + summary-sized offset stitch), so a billion-row
-    * stratum spans many tasks; oracle: q57_stratified_split.
+    * p₂% to the second, etc. Rows rank within their stratum by md5(id)
+    * (deterministic, engine-independent) and band on the rank's percentage
+    * position `ceil(rank*100/n)`, so every stratum lands within one row of
+    * its target fraction — `deterministicSplit`'s hash gate only hits
+    * fractions in expectation, which skews small or imbalanced strata.
+    * (NOT `ntile(100)`: a stratum smaller than 100 rows fills tiles 1..n one
+    * row each, dumping the whole stratum in the first band.) Oracle:
+    * q57_stratified_split.
+    *
+    * Scale shape: `row_number() over (partition by stratum)` would put each
+    * ENTIRE stratum through one window task — strata are few and huge
+    * (source, language), so that's a single task sorting billions of rows at
+    * 100 TB. `Scan.keyedRank` instead range-partitions on (stratum, hash) so
+    * a big stratum spans many parallel tasks, and stitches ranks with a
+    * summary-sized offset join. No per-key single-task stage anywhere.
     */
   def stratifiedSplit(df: DataFrame, idCol: String, strataCol: String,
                       splits: Seq[(String, Int)]): DataFrame = {
@@ -135,7 +129,7 @@ object Sampling {
     requireNoHashCol(df)
     val ranked = graft.core.Scan.keyedRank(
       df.withColumn("__h", md5(col(idCol).cast("string"))),
-      strataCol, "__h", "__rk", "__n")
+      Seq(strataCol), "__h", "__rk", "__n")
     val tile = ceil(col("__rk") * lit(100.0) / col("__n"))
     val cum = splits.scanLeft(0)(_ + _._2).tail
     val expr = splits.zip(cum).foldRight(lit(splits.last._1): Column) {

@@ -350,8 +350,9 @@ class FeatureCollectionSpec extends SparkSpec {
     val keep = (n: org.apache.spark.sql.Column, anchor: org.apache.spark.sql.Column) =>
       n > 0 && anchor % 2 === 0 // anchors 10,13,…,37 → keeps the even half
     val bcast = fc.calculate(Seq(ser), windowKeep = Some(keep))
-    val degraded = fc.calculate(Seq(ser), windowKeep = Some(keep),
-      windowKeepBroadcastLimit = 0L)
+    val degraded = Gates.scoped(broadcastRows = 0L) {
+      fc.calculate(Seq(ser), windowKeep = Some(keep))
+    }
     // above the limit the kept-id side must carry NO forced-broadcast hint
     // (Spark may still pick a broadcast strategy from size estimates —
     // the degrade removes the unbounded FORCE, not the planner's choice)

@@ -3,14 +3,14 @@ package graft.api
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.core.{Series, FeatureFuncs}
+import graft.core.{FeatureFuncs, Gates, Series}
 import FeatureFuncs.{len, mean, min => fMin, max => fMax, sum => fSum}
 
 /** Differential spec for the r19 same-source G3 fusion
   * (`FeatureCollection.fusedGroupByConsecutive`, gated in
   * `calculateGroupByConsecutive`): on same-source inputs the fused
   * single-scan plan must be ROW-IDENTICAL to the generic
-  * union-scan/forward-fill plan (`fuseSameSource = false`), across nulls in
+  * union-scan/forward-fill plan (`Gates.scoped(fuse = false)`), across nulls in
   * the group column (runs neither started nor broken), nulls in values,
   * leading rows before the first run, trailing rows inside and beyond the
   * last segment's +1unit/day close, value rows tied on the run-start index,
@@ -39,8 +39,9 @@ class G3FusedSpec extends SparkSpec {
   private def compare(data: Seq[Series], group: Series,
                       fc: FeatureCollection = fc2): Unit = {
     val fused = fc.calculateGroupByConsecutive(data, group)
-    val generic = fc.calculateGroupByConsecutive(data, group,
-      fuseSameSource = false)
+    val generic = Gates.scoped(fuse = false) {
+      fc.calculateGroupByConsecutive(data, group)
+    }
     assert(fused.columns.toSeq == generic.columns.toSeq)
     val (f, g) = (rowsOf(fused), rowsOf(generic))
     assert(f.size == g.size, s"row counts: fused=${f.size} generic=${g.size}")
@@ -152,9 +153,10 @@ class G3FusedSpec extends SparkSpec {
     val c = a.where(col("idx") < 50)
     val gated = fc2.calculateGroupByConsecutive(
       Seq(Series("value", c, "idx", "value")), Series("grp", b, "idx", "grp"))
-    val generic = fc2.calculateGroupByConsecutive(
-      Seq(Series("value", c, "idx", "value")), Series("grp", b, "idx", "grp"),
-      fuseSameSource = false)
+    val generic = Gates.scoped(fuse = false) {
+      fc2.calculateGroupByConsecutive(
+        Seq(Series("value", c, "idx", "value")), Series("grp", b, "idx", "grp"))
+    }
     assert(rowsOf(gated) == rowsOf(generic))
   }
 }

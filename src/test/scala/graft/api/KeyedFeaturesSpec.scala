@@ -149,9 +149,11 @@ class KeyedFeaturesSpec extends SparkSpec {
       unary = Seq("x" -> len)).count() > a.size)
     assert(a.exists(r => r.getLong(2) == 0L), "expected a kept W7 empty window")
     // counted degrade: limit 0 forces the shuffled semi join, rows identical
-    val degraded = KeyedFeatures.calculateWide(df, "k", "idx",
-      Win.seq(4L), Seq(Win.seq(4L)), unary = Seq("x" -> len, "x" -> mean),
-      windowKeep = Some(keep), windowKeepBroadcastLimit = 0L)
+    val degraded = Gates.scoped(broadcastRows = 0L) {
+      KeyedFeatures.calculateWide(df, "k", "idx",
+        Win.seq(4L), Seq(Win.seq(4L)), unary = Seq("x" -> len, "x" -> mean),
+        windowKeep = Some(keep))
+    }
     assert(!degraded.queryExecution.optimizedPlan.toString.contains("broadcast"),
       "the over-limit path must not force a broadcast")
     assert(degraded.orderBy("k", "idx").collect().toSeq == a)

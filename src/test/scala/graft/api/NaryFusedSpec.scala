@@ -4,13 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 import graft.SparkSpec
-import graft.core.{NaryFuncs, Series, Win}
+import graft.core.{Gates, NaryFuncs, Series, Win}
 
 /** Differential spec for the r19 same-source TUPLE fusion in
   * `FeatureCollection.calculate`: when every series of an n-ary feature
   * wraps one frame and index column, the fused single-scan wide assignment
   * must be row-identical to the generic per-series assign + (segment,
-  * index) join plan (`fuseSameSourceTuples = false`), across null values
+  * index) join plan (`Gates.scoped(fuse = false)`), across null values
   * on any tuple member, multiple strides, includeFinalWindow, and 2- and
   * 3-series tuples. Indexes are unique — a duplicated index cross-
   * multiplies in the JOIN plan only (documented in the fusion's gate
@@ -42,7 +42,7 @@ class NaryFusedSpec extends SparkSpec {
 
   private def compare(fc: FeatureCollection, data: Seq[Series]): Unit = {
     val fused = fc.calculate(data)
-    val generic = fc.calculate(data, fuseSameSourceTuples = false)
+    val generic = Gates.scoped(fuse = false) { fc.calculate(data) }
     assert(fused.columns.toSeq == generic.columns.toSeq)
     val (f, g) = (rowsOf(fused), rowsOf(generic))
     assert(f.size == g.size, s"rows: fused=${f.size} generic=${g.size}")
@@ -69,10 +69,11 @@ class NaryFusedSpec extends SparkSpec {
     val out = fc.calculate(
       Seq(Series("a", df, "idx", "a"), Series("b", df, "idx", "b"),
         Series("w", df, "idx", "w")), includeFinalWindow = true)
-    val gen = fc.calculate(
-      Seq(Series("a", df, "idx", "a"), Series("b", df, "idx", "b"),
-        Series("w", df, "idx", "w")), includeFinalWindow = true,
-      fuseSameSourceTuples = false)
+    val gen = Gates.scoped(fuse = false) {
+      fc.calculate(
+        Seq(Series("a", df, "idx", "a"), Series("b", df, "idx", "b"),
+          Series("w", df, "idx", "w")), includeFinalWindow = true)
+    }
     assert(rowsOf(out) == rowsOf(gen))
   }
 
@@ -90,9 +91,10 @@ class NaryFusedSpec extends SparkSpec {
     val p3 = p1.where(col("idx") < 200)
     val gated = fc.calculate(
       Seq(Series("a", p1, "idx", "a"), Series("b", p3, "idx", "b")))
-    val gen = fc.calculate(
-      Seq(Series("a", p1, "idx", "a"), Series("b", p3, "idx", "b")),
-      fuseSameSourceTuples = false)
+    val gen = Gates.scoped(fuse = false) {
+      fc.calculate(
+        Seq(Series("a", p1, "idx", "a"), Series("b", p3, "idx", "b")))
+    }
     assert(rowsOf(gated) == rowsOf(gen))
   }
 
@@ -118,7 +120,8 @@ class NaryFusedSpec extends SparkSpec {
     def rows(out: DataFrame) =
       out.orderBy("wall").collect().toSeq.map(_.toSeq.map(r9))
     assert(rows(fc.calculate(data, includeFinalWindow = true)) ==
-      rows(fc.calculate(data, includeFinalWindow = true,
-        fuseSameSourceTuples = false)))
+      rows(Gates.scoped(fuse = false) {
+        fc.calculate(data, includeFinalWindow = true)
+      }))
   }
 }

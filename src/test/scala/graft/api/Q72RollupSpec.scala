@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** Differential for the r19 fused maskable-aggregate path in
   * [[KeyedFeatures.calculateWideMulti]] vs the generic
   * aggregate+join+pivot plan it replaces (the kernel-differential
-  * discipline: the replaced form stays available via
-  * `fusedAggregate = false` and is the oracle here). Row identity: same
+  * discipline: the replaced form stays available under
+  * `Gates.scoped(fuse = false)` and is the oracle here). Row identity: same
   * (key, anchor) row set, bit-equal len/min/max cells, mean/sum within
   * double-summation regrouping (and exactly equal after the round(6)
   * every declared query applies).
@@ -59,9 +59,11 @@ class Q72RollupSpec extends SparkSpec {
                   unary: Seq[(String, FeatureFunc)],
                   windowIdx: String = "end",
                   includeFinal: Boolean = false) =
-    KeyedFeatures.calculateWideMulti(df, "user_id", "ts", windows,
-      unary = unary, windowIdx = windowIdx,
-      includeFinalWindow = includeFinal, fusedAggregate = fused)
+    Gates.scoped(fuse = fused) {
+      KeyedFeatures.calculateWideMulti(df, "user_id", "ts", windows,
+        unary = unary, windowIdx = windowIdx,
+        includeFinalWindow = includeFinal)
+    }
 
   private def keyed(df: org.apache.spark.sql.DataFrame)
       : Map[(Long, Long), Seq[Option[Double]]] =
@@ -143,8 +145,10 @@ class Q72RollupSpec extends SparkSpec {
       .toDF("k", "idx", "x")
     val ws = Seq((Win.seq(2L): Win) -> Seq(Win.seq(2L): Win),
       (Win.seq(4L): Win) -> Seq(Win.seq(2L): Win))
-    val gen = KeyedFeatures.calculateWideMulti(df, "k", "idx", ws,
-      unary = Seq("x" -> len, "x" -> mean), fusedAggregate = false)
+    val gen = Gates.scoped(fuse = false) {
+      KeyedFeatures.calculateWideMulti(df, "k", "idx", ws,
+        unary = Seq("x" -> len, "x" -> mean))
+    }
     val fus = KeyedFeatures.calculateWideMulti(df, "k", "idx", ws,
       unary = Seq("x" -> len, "x" -> mean))
     assert(usesFused(fus))
@@ -175,6 +179,25 @@ class Q72RollupSpec extends SparkSpec {
     val p5 = run(df, fused = true,
       Seq("value" -> len, "value" -> FeatureFuncs.std))
     assert(!usesFused(p5))
+  }
+
+  test("renamed maskable funcs (.as) keep the fused plan: same exchanges, same rows") {
+    // maskability is keyed on the registry agg closure, which .as keeps —
+    // a renamed len/mean must not fall back to the 4-stage generic plan
+    val df = corpus(61, n = 80)
+    val plain = run(df, fused = true, Seq("value" -> len, "value" -> mean))
+    val renamed = run(df, fused = true,
+      Seq("value" -> len.as("n"), "value" -> mean.as("m")))
+    assert(usesFused(renamed), "len.as / mean.as fell off the fused path")
+    val (sp, sr) = (graft.PlanAudit.shape(plain), graft.PlanAudit.shape(renamed))
+    assert(sr("shuffle_exchange") == sp("shuffle_exchange"),
+      s"renamed ${graft.PlanAudit.render(sr)} vs plain ${graft.PlanAudit.render(sp)}")
+    assert(renamed.columns.toSeq == Seq("user_id", "ts", "value__n__w=6h",
+      "value__m__w=6h", "value__n__w=1D", "value__m__w=1D"))
+    def rows(x: org.apache.spark.sql.DataFrame) =
+      x.collect().map(_.toSeq.map(String.valueOf)).toSeq
+        .sortBy(_.mkString("|"))
+    assert(rows(renamed) == rows(plain))
   }
 
   test("q72 declaration end-to-end: fused output equals the generic path " +

@@ -3,9 +3,10 @@ package graft.core
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Differential for [[Scan.keyedRankBrackets]] vs the full
-  * [[Scan.keyedRankMulti]] it specializes (the kernel-differential
-  * discipline: the replaced form stays as the oracle IN the same commit).
+/** Differential for the bracket prune of [[Scan.keyedSpanBrackets]] (over
+  * unit weights, whose span upper bound is the row's rank) vs the full
+  * [[Scan.keyedRank]] it specializes (the kernel-differential discipline:
+  * the replaced form stays as the oracle IN the same commit).
   * The bracket path keeps only the (partition, key) segments containing a
   * floor/ceil(1+(n−1)q) rank; on surviving rows its ranks must equal the
   * full ranking's, so `brackets.where(needed)` must match
@@ -17,6 +18,14 @@ import org.apache.spark.sql.functions._
 class RankBracketsSpec extends SparkSpec {
 
   private val quantiles = Seq(0.0, 0.25, 0.5, 0.95, 1.0)
+
+  private def full(df: org.apache.spark.sql.DataFrame) =
+    Scan.keyedRank(df, Seq("k", "c"), "v", "__rk", "__n")
+
+  /** Weight-1 bracket ranking, laid out (k, c, v, __n, __rk) like [[full]]. */
+  private def brackets(df: org.apache.spark.sql.DataFrame, q: Seq[Double]) =
+    Scan.keyedSpanBrackets(df.withColumn("__w", lit(1L)), Seq("k", "c"), "v",
+      "__w", "__slo", "__rk", "__n", q).drop("__w", "__slo")
 
   private def needed = quantiles.map { q =>
     val pos = lit(1.0) + (col("__n") - 1.0) * lit(q)
@@ -44,10 +53,8 @@ class RankBracketsSpec extends SparkSpec {
     val df = data.map { case (k, c) =>
       (k, c, (rng.nextInt(40) * 0.25) + 1.0) }.toDF("k", "c", "v")
       .repartition(7)
-    val full = Scan.keyedRankMulti(df, Seq("k", "c"), "v", "__rk", "__n")
-    val brk = Scan.keyedRankBrackets(df, Seq("k", "c"), "v", "__rk", "__n",
-      quantiles, pruneMinRows = 0L)
-    val a = rows(full)
+    val brk = Gates.scoped(pruneMinRows = 0L) { brackets(df, quantiles) }
+    val a = rows(full(df))
     val b = rows(brk)
     assert(a == b, s"full bracket rows:\n${a.take(20).mkString("\n")}\n" +
       s"vs targeted:\n${b.take(20).mkString("\n")}")
@@ -65,25 +72,22 @@ class RankBracketsSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
       // default threshold (4M ≫ 40k rows) → degrade: no LeftSemi anywhere
-      val degraded = Scan.keyedRankBrackets(df, Seq("k", "c"), "v", "__rk",
-        "__n", q)
+      val degraded = brackets(df, q)
       assert(!degraded.queryExecution.optimizedPlan.toString.toLowerCase
         .contains("leftsemi"),
         "under the threshold the bracket prune must be skipped")
       // threshold forced to 0 → the r18 prune path, LeftSemi present
-      val pruned = Scan.keyedRankBrackets(df, Seq("k", "c"), "v", "__rk",
-        "__n", q, pruneMinRows = 0L)
+      val pruned = Gates.scoped(pruneMinRows = 0L) { brackets(df, q) }
       assert(pruned.queryExecution.optimizedPlan.toString.toLowerCase
         .contains("leftsemi"),
         "above the threshold the prune decision must proceed")
       // bracket rows identical on both sides of the boundary
-      val full = Scan.keyedRankMulti(df, Seq("k", "c"), "v", "__rk", "__n")
       val pos = lit(1.0) + (col("__n") - 1.0) * lit(0.5)
       val want = col("__rk") === floor(pos) || col("__rk") === ceil(pos)
       def picked(x: org.apache.spark.sql.DataFrame) =
         x.where(want).collect().map(_.getDouble(2)).toSeq.sorted
-      assert(picked(degraded) == picked(full))
-      assert(picked(pruned) == picked(full))
+      assert(picked(degraded) == picked(full(df)))
+      assert(picked(pruned) == picked(full(df)))
     } finally
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
   }
@@ -101,33 +105,33 @@ class RankBracketsSpec extends SparkSpec {
     // configured width so the partition-pinpointing is observable
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
-      val full = Scan.keyedRankMulti(df, Seq("k", "c"), "v", "__rk", "__n")
-      val brk = Scan.keyedRankBrackets(df, Seq("k", "c"), "v", "__rk", "__n",
-        Seq(0.5), pruneMinRows = 0L)
-      assert(brk.count() < full.count(),
+      val all = full(df)
+      val brk = Gates.scoped(pruneMinRows = 0L) { brackets(df, Seq(0.5)) }
+      assert(brk.count() < all.count(),
         "bracket path kept as many rows as the full ranking")
       val pos = lit(1.0) + (col("__n") - 1.0) * lit(0.5)
       val want = col("__rk") === floor(pos) || col("__rk") === ceil(pos)
       assert(brk.where(want).collect().map(_.getDouble(2)).toSeq.sorted ==
-        full.where(want).collect().map(_.getDouble(2)).toSeq.sorted)
+        all.where(want).collect().map(_.getDouble(2)).toSeq.sorted)
     } finally
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
   }
 
   test("shuffled-stitch degrade (broadcastLimit 0) stays identical") {
+    // broadcastRows = 0: every summary-sized side shuffles
     import spark.implicits._
     val rng = new scala.util.Random(5)
     val df = (0 until 2000).map(_ =>
       (rng.nextInt(6).toLong, rng.nextInt(2), rng.nextGaussian()))
       .toDF("k", "c", "v").repartition(5)
-    val full = Scan.keyedRankMulti(df, Seq("k", "c"), "v", "__rk", "__n")
-    val brk = Scan.keyedRankBrackets(df, Seq("k", "c"), "v", "__rk", "__n",
-      quantiles, broadcastLimit = 0L, pruneMinRows = 0L)
+    val brk = Gates.scoped(broadcastRows = 0L, pruneMinRows = 0L) {
+      brackets(df, quantiles)
+    }
     def slim(x: org.apache.spark.sql.DataFrame) =
       x.where(needed).select(col("k"), col("c"), col("v"), col("__rk"), col("__n"))
         .collect().map(_.toSeq).toSeq
         .sortBy(_.map(v => if (v == null) "" else v.toString).mkString("|"))
-    assert(slim(brk) == slim(full))
+    assert(slim(brk) == slim(full(df)))
   }
 
   test("per-entity-key regime: selectivity degrade skips the semi prune") {
@@ -139,13 +143,11 @@ class RankBracketsSpec extends SparkSpec {
     val df = (0 until 8000).map(i =>
       (i.toLong % 2000, 0, rng.nextGaussian())).toDF("k", "c", "v")
       .repartition(5)
-    val full = Scan.keyedRankMulti(df, Seq("k", "c"), "v", "__rk", "__n")
-    val brk = Scan.keyedRankBrackets(df, Seq("k", "c"), "v", "__rk", "__n",
-      quantiles, pruneMinRows = 0L)
+    val brk = Gates.scoped(pruneMinRows = 0L) { brackets(df, quantiles) }
     assert(!brk.queryExecution.optimizedPlan.toString.toLowerCase
       .contains("leftsemi"),
       "non-selective bracket path must skip the semi prune")
-    val a = rows(full)
+    val a = rows(full(df))
     val b = rows(brk)
     assert(a == b)
   }

@@ -182,7 +182,7 @@ class ScanSpec extends SparkSpec {
       Scan.runningSum(d.withColumn("f", lit(1L)), "idx", "f", "cum")
     }
     intercept[IllegalArgumentException] {
-      Scan.keyedRank(d, "g", "idx", "rk", "n")
+      Scan.keyedRank(d, Seq("g"), "idx", "rk", "n")
     }
   }
 
@@ -203,6 +203,23 @@ class ScanSpec extends SparkSpec {
     }
   }
 
+  test("keyedRunningSum: an input carrying a working or output column name is rejected") {
+    // the working columns ride unqualified through withColumn/agg — a
+    // caller column of that name would be silently replaced, not summed
+    import spark.implicits._
+    val df = Seq(("a", 1L, 1L), ("a", 2L, 0L), ("b", 1L, 1L)).toDF("k", "o", "f")
+    for (r <- Seq("__loc", "__off", "__tot", "cum")) {
+      val e = intercept[IllegalArgumentException] {
+        Scan.keyedRunningSum(df.withColumn(r, lit(7L)), "k", "o", "f", "cum")
+      }
+      assert(e.getMessage.contains(r), e.getMessage)
+    }
+    val got = Scan.keyedRunningSum(df, "k", "o", "f", "cum")
+      .select("k", "o", "cum").collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(got == Map(("a", 1L) -> 1L, ("a", 2L) -> 1L, ("b", 1L) -> 1L))
+  }
+
   test("keyedRank: checkpoint-fed input, stable across evaluations (regression)") {
     // same hazard class as the fillForward regression above: the local-rank
     // window and the per-(partition, key) offset summary must agree on
@@ -217,7 +234,7 @@ class ScanSpec extends SparkSpec {
       g.sortBy(_._2).zipWithIndex.map { case ((k, o, _), r) =>
         (k, o) -> ((r + 1).toLong, g.size.toLong) }
     }.toMap
-    val ranked = Scan.keyedRank(df, "key", "ord", "rk", "n")
+    val ranked = Scan.keyedRank(df, Seq("key"), "ord", "rk", "n")
     (1 to 2).foreach { i =>
       val got = ranked.select("key", "ord", "rk", "n").collect()
         .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3))))
@@ -227,7 +244,7 @@ class ScanSpec extends SparkSpec {
   }
 
   test("keyedRank above the broadcast limit degrades to shuffled stitch joins, same result") {
-    // broadcastLimit = 1 forces the summary/totals joins off the explicit
+    // broadcastRows = 1 forces the summary/totals joins off the explicit
     // broadcast hint (the OOM guard for high-cardinality keys); the ranks
     // must be bit-identical to the broadcast path
     import spark.implicits._
@@ -240,8 +257,9 @@ class ScanSpec extends SparkSpec {
       g.sortBy(_._2).zipWithIndex.map { case ((k, o, _), r) =>
         (k, o) -> ((r + 1).toLong, g.size.toLong) }
     }.toMap
-    val got = Scan.keyedRank(df, "key", "ord", "rk", "n", broadcastLimit = 1L)
-      .select("key", "ord", "rk", "n").collect()
+    val got = Gates.scoped(broadcastRows = 1L) {
+        Scan.keyedRank(df, Seq("key"), "ord", "rk", "n")
+      }.select("key", "ord", "rk", "n").collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3))))
       .toMap
     assert(got == expect)
@@ -265,16 +283,16 @@ class ScanSpec extends SparkSpec {
       g.sortBy(_._3).zipWithIndex.map { case ((k1, k2, o, _), r) =>
         (k1, k2, o) -> ((r + 1).toLong, g.size.toLong) }
     }.toMap
-    for (limit <- Seq(4000000L, 1L)) { // broadcast stitch AND shuffled stitch
-      val got = Scan.keyedRankMulti(df, Seq("key1", "key2"), "ord", "rk", "n",
-          broadcastLimit = limit)
-        .select("key1", "key2", "ord", "rk", "n").collect()
+    for (limit <- Seq(Gates.BroadcastRows, 1L)) { // broadcast AND shuffled stitch
+      val got = Gates.scoped(broadcastRows = limit) {
+          Scan.keyedRank(df, Seq("key1", "key2"), "ord", "rk", "n")
+        }.select("key1", "key2", "ord", "rk", "n").collect()
         .map(r => (r.getString(0),
           if (r.isNullAt(1)) null.asInstanceOf[java.lang.Integer]
           else java.lang.Integer.valueOf(r.getInt(1)), r.getString(2)) ->
           ((r.getLong(3), r.getLong(4))))
         .toMap
-      assert(got == expect, s"broadcastLimit=$limit diverged from the oracle")
+      assert(got == expect, s"broadcastRows=$limit diverged from the oracle")
     }
   }
 }

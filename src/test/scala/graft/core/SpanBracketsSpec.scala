@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Differential for the weighted span path ([[Scan.keyedSpanBrackets]] over
   * a `groupBy(key, value).count()` histogram) vs the RAW-ROW ranking it
-  * collapses ([[Scan.keyedRankMulti]] on every observation — the replaced
+  * collapses ([[Scan.keyedRank]] on every observation — the replaced
   * form stays as the oracle IN the same commit, the kernel-differential
   * discipline). The contract: a histogram row with weight w covers exactly
   * the w consecutive global ranks its duplicates would have held, so its
@@ -26,7 +26,7 @@ class SpanBracketsSpec extends SparkSpec {
       (0 until 250).map(_ => (None: Option[Long], rng.nextInt(2)))
     val df = data.map { case (k, c) => (k, c, rng.nextInt(9) * 0.5) }
       .toDF("k", "c", "v").repartition(7)
-    val raw = Scan.keyedRankMulti(df, Seq("k", "c"), "v", "__rk", "__n")
+    val raw = Scan.keyedRank(df, Seq("k", "c"), "v", "__rk", "__n")
       .groupBy("k", "c", "v")
       .agg((min(col("__rk")) - 1).as("lo"), max(col("__rk")).as("hi"),
         max(col("__n")).as("n"), count(lit(1)).as("w"))
@@ -34,8 +34,10 @@ class SpanBracketsSpec extends SparkSpec {
     // pruneMinRows = 0 keeps this differential on the r18 PRUNE path (the
     // r19 small-input degrade would otherwise skip it at spec scale); the
     // degrade boundary itself is pinned in RankBracketsSpec
-    val spanned = Scan.keyedSpanBrackets(hist, Seq("k", "c"), "v", "__w",
-      "__slo", "__shi", "__n", quantiles, pruneMinRows = 0L)
+    val spanned = Gates.scoped(pruneMinRows = 0L) {
+      Scan.keyedSpanBrackets(hist, Seq("k", "c"), "v", "__w",
+        "__slo", "__shi", "__n", quantiles)
+    }
     def rows(x: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
       x.select(cols.map(col): _*).collect()
         .map(_.toSeq.map(v => if (v == null) "null" else v.toString)
@@ -52,15 +54,20 @@ class SpanBracketsSpec extends SparkSpec {
     val df = (0 until 3000).map(i =>
       (rng.nextInt(5).toLong, rng.nextInt(2), i * 1.0 + rng.nextDouble() * 0.1))
       .toDF("k", "c", "v").repartition(5)
-    val viaRank = Scan.keyedRankBrackets(df, Seq("k", "c"), "v", "__rk", "__n",
-        quantiles, pruneMinRows = 0L)
+    // weight-1 spans on the bracket rows ≡ the full ranking's ranks there
+    // (the span path returns a superset of the bracket rows)
+    val needed = quantiles.map { q =>
+      val pos = lit(1.0) + (col("__n") - 1.0) * lit(q)
+      col("__rk") === floor(pos) || col("__rk") === ceil(pos)
+    }.reduce(_ || _)
+    val viaRank = Scan.keyedRank(df, Seq("k", "c"), "v", "__rk", "__n")
       .select(col("k"), col("c"), col("v"), col("__rk"), col("__n"))
-    val viaSpan = Scan.keyedSpanBrackets(df.withColumn("__w", lit(1L)),
-        Seq("k", "c"), "v", "__w", "__slo", "__shi", "__n", quantiles,
-        pruneMinRows = 0L)
-      .select(col("k"), col("c"), col("v"), col("__shi").as("__rk"), col("__n"))
+    val viaSpan = Gates.scoped(pruneMinRows = 0L) {
+        Scan.keyedSpanBrackets(df.withColumn("__w", lit(1L)),
+          Seq("k", "c"), "v", "__w", "__slo", "__shi", "__n", quantiles)
+      }.select(col("k"), col("c"), col("v"), col("__shi").as("__rk"), col("__n"))
     def rows(x: org.apache.spark.sql.DataFrame) =
-      x.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      x.where(needed).collect().map(_.toSeq.mkString("|")).toSeq.sorted
     assert(rows(viaRank) == rows(viaSpan))
   }
 
@@ -98,7 +105,7 @@ class SpanBracketsSpec extends SparkSpec {
 
 /** The REPLACED raw-row quantile pipeline, kept verbatim as the spec's
   * oracle: unpivot to (key, metricIdx, value), rank every observation with
-  * [[Scan.keyedRankMulti]], aggregate the floor/ceil bracket rows.
+  * [[Scan.keyedRank]], aggregate the floor/ceil bracket rows.
   */
 object GroupedStatsRawOracle {
   import org.apache.spark.sql.{Column, DataFrame}
@@ -111,7 +118,7 @@ object GroupedStatsRawOracle {
       .select(col(keyCol), col("__gs_p.__gs_c").as("__gs_c"),
         col("__gs_p.__gs_v").as("__gs_v"))
       .where(col("__gs_v").isNotNull)
-    val ranked = Scan.keyedRankMulti(
+    val ranked = Scan.keyedRank(
       long0, Seq(keyCol, "__gs_c"), "__gs_v", "__rk", "__n")
     val v = col("__gs_v")
     val metric = col("__gs_c")

@@ -33,9 +33,9 @@ class ComponentsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaDriver == exp)
     // distributed star-fixpoint path (forced with limit 0)
-    val viaStars = Components.connectedComponents(
-        edges.toDF("id_a", "id_b"), "id_a", "id_b", driverEdgeLimit = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaStars = graft.core.Gates.scoped(driverEdgeRows = 0L) {
+        Components.connectedComponents(edges.toDF("id_a", "id_b"), "id_a", "id_b")
+      }.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaStars == exp)
   }
 

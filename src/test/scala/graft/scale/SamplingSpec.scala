@@ -154,10 +154,11 @@ class SamplingSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(bySplit == Map("train" -> 0L, "val" -> 0L))
     // the shuffled (above-broadcast-limit) stitch path agrees
-    val viaShuffle = graft.core.Scan.keyedRunningSum(
-        df.withColumn("__h", md5(col("id").cast("string"))),
-        "split", "__h", "tok", "__cum", broadcastLimit = 1L)
-      .withColumn("shard", floor((col("__cum") - col("tok")) / lit(budget.toDouble)).cast("long"))
+    val viaShuffle = graft.core.Gates.scoped(broadcastRows = 1L) {
+        graft.core.Scan.keyedRunningSum(
+          df.withColumn("__h", md5(col("id").cast("string"))),
+          "split", "__h", "tok", "__cum")
+      }.withColumn("shard", floor((col("__cum") - col("tok")) / lit(budget.toDouble)).cast("long"))
       .select("id", "shard").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaShuffle == expect)
   }

@@ -27,8 +27,9 @@ class StarEdgesSpec extends SparkSpec {
   // forces the distributed star fixpoint too, so the differential covers
   // both CC regimes, not just the driver union-find
   private def clustersDistributed(edges: DataFrame): Set[(Long, Long)] =
-    Components.connectedComponents(edges, "id_a", "id_b",
-      driverEdgeLimit = 0L).collect()
+    graft.core.Gates.scoped(driverEdgeRows = 0L) {
+      Components.connectedComponents(edges, "id_a", "id_b")
+    }.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   private val template =
