@@ -126,9 +126,10 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     descriptors.groupBy(_.seriesNames.head).toSeq
   }
 
-  /** G1/G3 join per-series instants directly, so mixed timezones would
-    * silently misalign rather than error — enforce the same-tz contract
-    * calculate() applies (reference: strided_rolling.py:572-580).
+  /** All TIME series of one call must share a timezone (reference:
+    * strided_rolling.py:572-580): calculate() segments them together, and
+    * G1/G3 join per-series instants directly, so mixed timezones would
+    * silently misalign rather than error.
     */
   private def requireSameTz(all: Seq[Series]): Unit = {
     val tzs = all.filter(_.domain == Domain.Time).map(_.tz).distinct
@@ -232,13 +233,7 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     val byName = data.map(s => s.name -> s).toMap
     val used = requiredSeries.map(n => byName.getOrElse(n,
       throw new IllegalArgumentException(s"series $n not in data")))
-    // all TIME series in one calculate must share a timezone (reference:
-    // strided_rolling.py:572-580 "strided rolling input data must all have
-    // same timezone")
-    val tzs = used.filter(_.domain == Domain.Time).map(_.tz).distinct
-    require(tzs.lengthCompare(1) <= 0,
-      s"strided rolling input data must all have the same timezone, got: " +
-        tzs.map(_.getOrElse("<none>")).mkString(", "))
+    requireSameTz(used)
     val manualSegs = segmentStartIdxs.isDefined || segmentEndIdxs.isDefined
 
     // One bucket per (series tuple, window, effective strides): shared
@@ -539,14 +534,10 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       .withColumn("__gn", when(col("__grp").isNotNull, 0).otherwise(1))
     val scanned = Scan.groupRunScan(wide, Seq("__idx", "__gn"), "__grp",
       "__idx", "__run", "__gmax")
-    val lastExt = group.domain match {
-      case Domain.Time     => 86400e6 // +1 day (reference: :682-688)
-      case Domain.Sequence => 1.0
-    }
     // rows before the first run (run 0) and at/after the last segment's
     // close are outside every segment — the generic path's null/-1 drops
     val kept = scanned.where(col("__run") > 0 &&
-      col("__idx") < col("__gmax") + lit(lastExt))
+      col("__idx") < col("__gmax") + lit(group.domain.runEnd))
     val grpNN = col("__grp").isNotNull
     val featAggs = groupedUnary.toSeq.flatMap { case (sName, ds) =>
       ds.map { d =>
@@ -588,10 +579,6 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       min(col("__idx")).as("__start"),
       max(col("__idx")).as("__end"),
       first(col("__v")).as("__grp")))
-    val lastExt = group.domain match {
-      case Domain.Time     => 86400e6 // +1 day (reference: :682-688)
-      case Domain.Sequence => 1.0
-    }
     // run ids are CONSECUTIVE integers (inclusive running sum of change
     // flags), so "next run's start" is a plain equi-join on run+1 — a hash
     // join over the checkpointed run table, no ordered scan needed
@@ -600,7 +587,7 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
         col("__start").as("__next_start")),
       Seq("__run"), "left")
     val segs = runsLead.withColumn("__seg_end",
-      coalesce(col("__next_start"), col("__end") + lit(lastExt)))
+      coalesce(col("__next_start"), col("__end") + lit(group.domain.runEnd)))
       .select(col("__run").as("__seg_id"), col("__start").as("__seg_start"),
         col("__seg_end"), col("__start"), col("__end"), col("__grp"))
 
@@ -617,14 +604,14 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       val starts = runs.select(col("__start").as("__idx"), lit(0).as("__tag"),
         col("__run").as("__runid"), lit(null).cast(vType).as("__v"))
       // the terminator closes the LAST run at max(__seg_end) = the group
-      // series' max index + lastExt. r19: read it off the CHECKPOINTED run
+      // series' max index + runEnd. r19: read it off the CHECKPOINTED run
       // table (global max(__end) = global max(__idx) over the non-null
       // group rows — every row belongs to exactly one run and __end is the
       // run's max index), replacing a second full scan of the group input
       // with a tiny agg over the run rows (guide §2.4: remove passes; at
       // scale the saved pass is a full input read)
       val term = runs
-        .agg((max(col("__end")) + lit(lastExt)).as("__idx"))
+        .agg((max(col("__end")) + lit(group.domain.runEnd)).as("__idx"))
         .select(col("__idx"), lit(0).as("__tag"), lit(-1L).as("__runid"),
           lit(null).cast(vType).as("__v"))
       val rowsT = rows.select(col("__idx"), lit(1).as("__tag"),

@@ -113,6 +113,42 @@ object KeyedFeatures {
   private def maskable(f: FeatureFunc): Boolean =
     f.outputNames.isEmpty && maskableAggs.exists(_ eq f.agg)
 
+  /** The keyed input every entry point starts from: `__key`, the index as
+    * internal doubles (`__idx`, epoch micros for TIME) and `cols`. Null
+    * indexes are unorderable and dropped; null keys are dropped up front
+    * too (the pandas-groupby convention the reference inherits). Keeping
+    * them half-way was worse: the segment groupBy emitted a null-key window
+    * table but every equi-join below dropped the null-key DATA rows,
+    * reporting phantom empty windows. Every window and stride must share
+    * the index's domain — a "1D" window over a numeric index would
+    * otherwise run as 8.64e10 index units — and sample-count windows have
+    * no keyed form.
+    */
+  private def keyedInput(df: DataFrame, keyCol: String, idxCol: String,
+                         firstVal: String, wins: Seq[Win],
+                         cols: Seq[Column]): (Series, DataFrame) = {
+    val series = Series(firstVal, df, idxCol, firstVal)
+    wins.foreach { w =>
+      require(!w.isInstanceOf[SampleWin],
+        s"sample-count windows are not supported by keyed features: $w")
+      require(w.domain == series.domain,
+        s"window/stride domain must match series domain: $w over a " +
+          s"${series.domain} index")
+    }
+    val internal = df.select(col(keyCol).as("__key") +:
+        series.idxExpr.as("__idx") +: cols: _*)
+      .where(col("__idx").isNotNull)
+      .where(col("__key").isNotNull)
+    (series, internal)
+  }
+
+  private def requireNaryArity(nary: Seq[(Seq[String], NaryFunc)]): Unit =
+    nary.foreach { case (cols, f) =>
+      require(cols.lengthCompare(f.arity) == 0,
+        s"${f.name} consumes ${f.arity} series, got ${cols.length}: " +
+          cols.mkString("|"))
+    }
+
   /** Single-series sugar over [[calculateWide]].
     *
     * @param funcs   features to fuse into the single per-segment aggregate
@@ -164,25 +200,11 @@ object KeyedFeatures {
                     includeFinalWindow: Boolean = false,
                     windowKeep: Option[(Column, Column) => Column] = None): DataFrame = {
     require(unary.nonEmpty || nary.nonEmpty, "no features given")
-    nary.foreach { case (cols, f) =>
-      require(cols.lengthCompare(f.arity) == 0,
-        s"${f.name} consumes ${f.arity} series, got ${cols.length}: " +
-          cols.mkString("|"))
-    }
+    requireNaryArity(nary)
     val valueCols = (unary.map(_._1) ++ nary.flatMap(_._1)).distinct
     val firstVal = valueCols.head
-    val series = Series(firstVal, df, idxCol, firstVal)
-    val internal = df.select(col(keyCol).as("__key") +:
-      (series.domain match {
-        case Domain.Time     => unix_micros(col(idxCol).cast("timestamp")).cast("double")
-        case Domain.Sequence => col(idxCol).cast("double")
-      }).as("__idx") +: valueCols.map(col): _*)
-      .where(col("__idx").isNotNull)
-      // null keys: dropped up front (the pandas-groupby convention the
-      // reference inherits). Keeping them half-way was worse: the segment
-      // groupBy emitted a null-key window table but every equi-join below
-      // dropped the null-key DATA rows, reporting phantom empty windows.
-      .where(col("__key").isNotNull)
+    val (series, internal) = keyedInput(df, keyCol, idxCol, firstVal,
+      window +: strides, valueCols.map(col))
 
     val w = window.amount
     val sts = strides.map(_.amount).distinct.sorted
@@ -225,12 +247,7 @@ object KeyedFeatures {
           .as("__seg_start") +:
         col("__idx") +: valueCols.map(col): _*)
 
-    val anchorRaw = windowIdx match {
-      case "end"    => col("__seg_end")
-      case "middle" => col("__seg_start") + (col("__seg_end") - col("__seg_start")) / 2
-      case "begin"  => col("__seg_start")
-      case x => throw new IllegalArgumentException(s"bad windowIdx $x")
-    }
+    val anchorRaw = graft.segment.Segmenter.anchor(windowIdx)
 
     // Keyed window-level sampling gate — the single-series windowKeep's
     // twin (FeatureCollection.windowKeepPrune) per (key, window start): the
@@ -321,24 +338,10 @@ object KeyedFeatures {
         windows.head._2, unary, nary, windowIdx, includeFinalWindow,
         windowKeep)
     require(unary.nonEmpty || nary.nonEmpty, "no features given")
-    nary.foreach { case (cols, f) =>
-      require(cols.lengthCompare(f.arity) == 0,
-        s"${f.name} consumes ${f.arity} series, got ${cols.length}: " +
-          cols.mkString("|"))
-    }
+    requireNaryArity(nary)
     val valueCols = (unary.map(_._1) ++ nary.flatMap(_._1)).distinct
-    val series = Series(valueCols.head, df, idxCol, valueCols.head)
-    val internal = df.select(col(keyCol).as("__key") +:
-      (series.domain match {
-        case Domain.Time     => unix_micros(col(idxCol).cast("timestamp")).cast("double")
-        case Domain.Sequence => col(idxCol).cast("double")
-      }).as("__idx") +: valueCols.map(col): _*)
-      .where(col("__idx").isNotNull)
-      // null keys: dropped up front (the pandas-groupby convention the
-      // reference inherits). Keeping them half-way was worse: the segment
-      // groupBy emitted a null-key window table but every equi-join below
-      // dropped the null-key DATA rows, reporting phantom empty windows.
-      .where(col("__key").isNotNull)
+    val (series, internal) = keyedInput(df, keyCol, idxCol, valueCols.head,
+      windows.flatMap { case (w, sts) => w +: sts }, valueCols.map(col))
     val specs = windows.map { case (win, sts) =>
       (win, sts.map(_.amount).distinct.sorted)
     }
@@ -530,25 +533,13 @@ object KeyedFeatures {
     import org.apache.spark.sql.types.{DoubleType, FloatType}
     require(unary.nonEmpty, "no features given")
     val valueCols = unary.map(_._1).distinct
-    val series = Series(valueCols.head, df, idxCol, valueCols.head)
     val gOk = df.schema(groupCol).dataType match {
       case DoubleType | FloatType =>
         col(groupCol).isNotNull && !isnan(col(groupCol))
       case _ => col(groupCol).isNotNull
     }
-    val internal = df.select(
-      col(keyCol).as("__key") +:
-        (series.domain match {
-          case Domain.Time     => unix_micros(col(idxCol).cast("timestamp")).cast("double")
-          case Domain.Sequence => col(idxCol).cast("double")
-        }).as("__idx") +:
-        when(gOk, col(groupCol)).as("__grp") +: valueCols.map(col): _*)
-      .where(col("__idx").isNotNull)
-      // null keys: dropped up front (the pandas-groupby convention the
-      // reference inherits). Keeping them half-way was worse: the segment
-      // groupBy emitted a null-key window table but every equi-join below
-      // dropped the null-key DATA rows, reporting phantom empty windows.
-      .where(col("__key").isNotNull)
+    val (series, internal) = keyedInput(df, keyCol, idxCol, valueCols.head,
+      Nil, when(gOk, col(groupCol)).as("__grp") +: valueCols.map(col))
     // change-flag against the last NON-NULL group value, so null-group rows
     // neither start runs nor break them; inclusive running sum = run id
     val wOrd = Window.partitionBy("__key").orderBy("__idx")
@@ -560,10 +551,6 @@ object KeyedFeatures {
       .withColumn("__run", sum(col("__flag"))
         .over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
       .where(col("__run") > 0)
-    val ext = series.domain match {
-      case Domain.Time     => 86400e6 // reference: :682-688 (+1 day)
-      case Domain.Sequence => 1.0
-    }
     // boundaries + group value from the GROUP rows only
     val runs = rows.where(col("__grp").isNotNull)
       .groupBy("__key", "__run").agg(
@@ -580,7 +567,7 @@ object KeyedFeatures {
     // plain equi-join on the key (NOT broadcast: one row per key is still
     // millions of rows at scale; AQE may still choose broadcast when small)
     val feats = rows.join(keyEnd, Seq("__key"))
-      .where(col("__idx") < col("__kend") + lit(ext))
+      .where(col("__idx") < col("__kend") + lit(series.domain.runEnd))
       .groupBy("__key", "__run").agg(aggs.head, aggs.tail: _*)
     runs.join(feats, Seq("__key", "__run"), "left")
       .select(col("__key").as(keyCol) +: col("__g").as(groupCol) +:

@@ -2,6 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expr.Kernels
+import graft.expr.TemporalKernelUtil.{ABS_DIFF_SUM, AUC, CENTROID_NUM, DISTANCE,
+  IDX_DOT, MEAN_ABS_DIFF, MEDIAN_ABS_DIFF, MEDIAN_DIFF, SUM_SQ_DIFF}
 
 /** A named per-window aggregation — the analog of the reference's
   * `FuncWrapper` (reference: tsflex/features/function_wrapper.py:44-143),
@@ -97,7 +100,7 @@ object FeatureFuncs {
     f(s"quantile_$q")(v => pctlSorted(v, q))
 
   /** Exact percentile via the one-sort native kernel
-    * ([[graft.expr.PercentilesK]]) instead of Spark's `percentile`
+    * ([[graft.expr.Kernels.percentiles]]) instead of Spark's `percentile`
     * aggregate: each `percentile(v, q)` call is an independent
     * OpenHashMap-buffered aggregate with its own boxed sort per window —
     * the q71 100× ablation measured iqr's two such aggregates at ~80% of
@@ -107,8 +110,7 @@ object FeatureFuncs {
     * `PercentileBase.getPercentile` (PercentileKernelsSpec differential).
     */
   private def pctlSorted(v: Column, q: Double): Column =
-    element_at(graft.expr.PercentilesK(
-      collect_list(v.cast("double")), Seq(q)), 1)
+    element_at(Kernels.percentiles(Seq(q))(collect_list(v.cast("double"))), 1)
 
   /** Multi-output function from named sub-aggregates (one-to-many, A3):
     * computes all sub-aggregates in one pass, emits one column per name.
@@ -139,10 +141,9 @@ object FeatureFuncs {
     */
   val absDiffSum: FeatureFunc = FeatureFunc("abs_diff_sum", (idx, v) => {
     // <2-sample windows short-circuit to 0 (a single sample has no
-    // successive differences); the fold is a TemporalFoldK primitive pass
+    // successive differences); the fold is a temporal_fold primitive pass
     when(count(v) <= 1, lit(0.0)).otherwise(
-      graft.expr.TemporalFoldK(sortedVals(idx, v),
-        graft.expr.TemporalFoldK.ABS_DIFF_SUM))
+      Kernels.temporalFold(ABS_DIFF_SUM)(sortedVals(idx, v)))
   }, emptyValue = Some(lit(0.0)))
 
   /** Slope of the least-squares line of value against index. */
@@ -222,15 +223,14 @@ object FeatureFuncs {
   val iqr: FeatureFunc =
     // one collected buffer, ONE sort, both quantiles interpolated in the
     // kernel (see pctlSorted — this was 80% of q71's window CPU at 100×)
-    f("iqr")(v => graft.expr.PercentileSpanK(
-      collect_list(v.cast("double")), 0.25, 0.75))
+    f("iqr")(v => Kernels.percentileSpan(0.25, 0.75)(collect_list(v.cast("double"))))
 
   /** tsfresh `number_crossing_m`: count of index-consecutive pairs strictly
     * straddling `m` (np.diff(x > m) != 0 — touching `m` is not a crossing).
     */
   def crossings(m: Double): FeatureFunc = FeatureFunc(s"crossings_$m", (idx, v) =>
     when(count(v) <= 1, lit(0L)).otherwise(
-      graft.expr.CrossingsK(sortedVals(idx, v), lit(m))),
+      Kernels.crossings(sortedVals(idx, v), lit(m))),
     emptyValue = Some(lit(0L)))
 
   /** seglearn `zero_crossings` equivalent: crossings of 0. */
@@ -241,13 +241,13 @@ object FeatureFuncs {
     * The mean is the NATIVE `avg` aggregate, evaluated once per window and
     * passed to the kernel as its scalar child (same rule as [[autocorr]]
     * and [[ratioBeyondRSigma]]); the crossing count itself is one
-    * [[graft.expr.CrossingsK]] primitive pass with Spark's NaN-greatest
+    * [[graft.expr.TemporalKernelUtil.crossings]] primitive pass with Spark's NaN-greatest
     * `>` semantics — the r16 kernels replaced this stock's Catalyst HOF
     * chains (a boxed element per fold step).
     */
   val meanCrossings: FeatureFunc = FeatureFunc("mean_crossings", (idx, v) =>
     when(count(v) <= 1, lit(0L)).otherwise(
-      graft.expr.CrossingsK(sortedVals(idx, v), avg(v))),
+      Kernels.crossings(sortedVals(idx, v), avg(v))),
     emptyValue = Some(lit(0L)))
 
   /** tsfresh `autocorrelation` at `lag`:
@@ -261,7 +261,7 @@ object FeatureFuncs {
       // mean and variance stay NATIVE aggregates (one eval per window);
       // the lagged-product fold is a primitive kernel pass
       val varp = var_pop(v)
-      val cov = graft.expr.AutocorrCovK(sortedVals(idx, v), avg(v), lag)
+      val cov = Kernels.autocorrCov(lag)(sortedVals(idx, v), avg(v))
       when(n > lit(lag) && varp > 0, cov / varp)
     })
   }
@@ -276,9 +276,9 @@ object FeatureFuncs {
       // histogram counts are order-independent: plain collect (no sort),
       // then ONE primitive kernel pass computes min/max, the per-bin
       // counts and the entropy — the previous Catalyst fold rebuilt the
-      // per-bin counter ARRAY once per element (the HistCountsK problem)
+      // per-bin counter ARRAY once per element (the hist_counts problem)
       when(count(v) > 0,
-        graft.expr.BinnedEntropyK(collect_list(v.cast("double")), bins)))
+        Kernels.binnedEntropy(bins)(collect_list(v.cast("double")))))
   }
 
   /** tsfresh `cid_ce` (complexity-invariant distance, unnormalized):
@@ -286,8 +286,7 @@ object FeatureFuncs {
     * windows shorter than 2.
     */
   val cidCe: FeatureFunc = FeatureFunc("cid_ce", (idx, v) =>
-    when(count(v) >= 2, sqrt(graft.expr.TemporalFoldK(sortedVals(idx, v),
-      graft.expr.TemporalFoldK.SUM_SQ_DIFF))))
+    when(count(v) >= 2, sqrt(Kernels.temporalFold(SUM_SQ_DIFF)(sortedVals(idx, v)))))
 
   /** tsfresh `number_peaks` with support 1: strict local maxima (greater
     * than BOTH immediate neighbors, boundaries excluded).
@@ -297,7 +296,7 @@ object FeatureFuncs {
     // greater than both immediate neighbours, boundaries excluded —
     // served by the same primitive kernel (Java NaN comparisons; NaN
     // windows are outside the oracle contract, see the module note)
-    graft.expr.NeighbourhoodPeaksK(sortedVals(idx, v), 1),
+    Kernels.neighbourhoodPeaks(1)(sortedVals(idx, v)),
     emptyValue = Some(lit(0L)))
 
   /** tsfresh `longest_strike_above_mean`: length of the longest run of
@@ -306,7 +305,7 @@ object FeatureFuncs {
     */
   val longestStrikeAboveMean: FeatureFunc =
     FeatureFunc("longest_strike_above_mean", (idx, v) =>
-      graft.expr.LongestStrikeK(sortedVals(idx, v), avg(v)),
+      Kernels.longestStrike(sortedVals(idx, v), avg(v)),
       emptyValue = Some(lit(0L)))
 
   /** tsfresh `ratio_beyond_r_sigma`: fraction of window values with
@@ -315,8 +314,8 @@ object FeatureFuncs {
   def ratioBeyondRSigma(r: Int): FeatureFunc = {
     require(r >= 1, "sigma multiple must be >= 1")
     FeatureFunc(s"beyond_${r}sigma", (idx, v) =>
-      when(count(v) > 0, graft.expr.RatioBeyondK(sortedVals(idx, v),
-        avg(v), stddev_pop(v), r.toDouble)))
+      when(count(v) > 0, Kernels.ratioBeyond(r.toDouble)(sortedVals(idx, v),
+        avg(v), stddev_pop(v))))
   }
 
   // ---- entropy tranche (the reference integration surface's antropy /
@@ -344,7 +343,7 @@ object FeatureFuncs {
     // native kernel (see the weightedPermutationEntropy note — the HOF
     // tuple/sort/fold chain is per-element-allocating and uncodegenable)
     FeatureFunc(name, (idx, v) =>
-      graft.expr.PermEntropyK(sortedVals(idx, v), order, normalize))
+      Kernels.permEntropy(order, normalize)(sortedVals(idx, v)))
   }
 
   /** Binned sample-entropy APPROXIMATION, −ln(A/B): A/B count template
@@ -359,7 +358,7 @@ object FeatureFuncs {
     *
     * Scale shape: quantize → lexicographically index-sorted templates →
     * run-fold of C(run, 2), twice (m and m+1), inside the native
-    * [[graft.expr.SampenBinned]] kernel — O(n log n) per window, one fused
+    * [[graft.expr.EntropyKernelUtil.sampenBinned]] kernel — O(n log n) per window, one fused
     * aggregate, no pairwise O(n²) loop (the reason the exact Chebyshev
     * SampEn is NOT offered as a distributed aggregate).
     */
@@ -371,8 +370,8 @@ object FeatureFuncs {
     // q90/q94 100× cost); width stays a Column so the absolute, rFactor·σ
     // and carried-width-column variants all route through unchanged
     FeatureFunc(name, (idx, v) =>
-      graft.expr.SampenBinned(sortedVals(idx, v),
-        width(idx, v).cast("double"), m))
+      Kernels.sampenBinned(m)(sortedVals(idx, v),
+        width(idx, v).cast("double")))
 
   /** Hjorth mobility and complexity (antropy `hjorth_params`, the second
     * FuncWrapper-required member of the reference integration surface —
@@ -389,11 +388,11 @@ object FeatureFuncs {
     */
   val hjorthParams: FeatureFunc = {
     FeatureFunc("hjorth", (idx, v) => {
-      // r18: the dx/ddx variances come from one primitive HjorthFoldK pass
+      // r18: the dx/ddx variances come from one primitive hjorth_fold pass
       // over the sorted window (the replaced slice+zip_with arrays and
       // their aggregate-lambda folds are kept verbatim in SortedCollectSpec
       // and pinned bit-identical)
-      val hj = graft.expr.HjorthFoldK(sortedVals(idx, v))
+      val hj = Kernels.hjorthFold(sortedVals(idx, v))
       val vx = var_pop(v) // native: order-free, O(1) reference
       val vdx = hj.getField("vdx")
       val vddx = hj.getField("vddx")
@@ -413,10 +412,10 @@ object FeatureFuncs {
     */
   val petrosianFd: FeatureFunc = FeatureFunc("petrosian_fd", (idx, v) => {
     val n = count(v).cast("double") // native: O(1) reference
-    // r18: N_Δ is one primitive PetrosianNdK pass (the replaced signum
+    // r18: N_Δ is one primitive petrosian_nd pass (the replaced signum
     // array + zip_with/aggregate fold lives on in SortedCollectSpec,
     // pinned bit-identical, Spark `=!=` NaN/−0.0 semantics included)
-    val nd = graft.expr.PetrosianNdK(sortedVals(idx, v))
+    val nd = Kernels.petrosianNd(sortedVals(idx, v))
     when(n >= 2,
       log10(n) / (log10(n) + log10(n / (n + lit(0.4) * nd))))
   })
@@ -434,8 +433,7 @@ object FeatureFuncs {
     // r18: L rides the existing ABS_DIFF_SUM primitive fold (identical
     // |Δ| left-to-right accumulation — TemporalFoldSpec pins that mode;
     // the replaced transform+aggregate chain was the same operations)
-    val L = graft.expr.TemporalFoldK(sortedVals(idx, v),
-      graft.expr.TemporalFoldK.ABS_DIFF_SUM)
+    val L = Kernels.temporalFold(ABS_DIFF_SUM)(sortedVals(idx, v))
     val x1 = min_by(v, idx)
     val d = greatest(org.apache.spark.sql.functions.max(v) - x1,
       x1 - org.apache.spark.sql.functions.min(v))
@@ -458,8 +456,8 @@ object FeatureFuncs {
                        width: (Column, Column) => Column): FeatureFunc =
     // native kernel — see the sampEnImpl note (same machinery, φ fold)
     FeatureFunc(name, (idx, v) =>
-      graft.expr.ApenBinned(sortedVals(idx, v),
-        width(idx, v).cast("double"), m))
+      Kernels.apenBinned(m)(sortedVals(idx, v),
+        width(idx, v).cast("double")))
 
   /** [[apEnImpl]] with tolerance r = rFactor · σ_pop (antropy default). */
   def approxEntropy(m: Int = 2, rFactor: Double = 0.2): FeatureFunc = {
@@ -511,14 +509,14 @@ object FeatureFuncs {
 
   /** Spectral entropy of the window (Shannon entropy of the DC-excluded
     * periodogram — the antropy `spectral_entropy` family member; see
-    * [[graft.expr.SpectralEntropy]] for semantics, bin convention and the
+    * [[graft.expr.SpectralEntropyUtil]] for semantics, bin convention and the
     * deliberate O(n²)-per-window DFT cost note). Null for windows shorter
     * than 4 samples or with zero oscillatory energy.
     */
   def spectralEntropy(normalize: Boolean = false): FeatureFunc =
     FeatureFunc(
       if (normalize) "spectral_entropy_norm" else "spectral_entropy",
-      (idx, v) => graft.expr.SpectralEntropy(sortedVals(idx, v), normalize))
+      (idx, v) => Kernels.spectralEntropy(normalize)(sortedVals(idx, v)))
 
   /** antropy `svd_entropy` (time-delay-embedding singular-value entropy,
     * bits; see [[graft.expr.EntropyKernelUtil.svdEntropy]] for semantics
@@ -530,8 +528,8 @@ object FeatureFuncs {
     require(delay >= 1, "svd_entropy delay must be >= 1")
     val name = s"svd_entropy_$order" + (if (normalize) "_norm" else "")
     FeatureFunc(name,
-      (idx, v) => graft.expr.SvdEntropy(sortedVals(idx, v), order, delay,
-        normalize))
+      (idx, v) => Kernels.svdEntropy(order, delay,
+        normalize)(sortedVals(idx, v)))
   }
 
   /** antropy-family `lziv_complexity` over the median-binarized window
@@ -540,7 +538,7 @@ object FeatureFuncs {
     */
   def lzivComplexity(normalize: Boolean = false): FeatureFunc =
     FeatureFunc(if (normalize) "lziv_norm" else "lziv",
-      (idx, v) => graft.expr.LzivComplexity(sortedVals(idx, v), normalize))
+      (idx, v) => Kernels.lzivComplexity(normalize)(sortedVals(idx, v)))
 
   /** tsfel `entropy(prob="kde")` — normalized Shannon entropy of the
     * gaussian-KDE sample probabilities (see
@@ -548,14 +546,14 @@ object FeatureFuncs {
     * tests/test_features_integration.py:247).
     */
   val entropyKde: FeatureFunc = FeatureFunc("entropy_kde",
-    (idx, v) => graft.expr.KdeEntropy(sortedVals(idx, v), gauss = false))
+    (idx, v) => Kernels.kdeEntropy(gauss = false)(sortedVals(idx, v)))
 
   /** tsfel `entropy(prob="gauss")` — same entropy over the N(mean, std²)
     * pdf at the sample points (reference surface:
     * tests/test_features_integration.py:248).
     */
   val entropyGauss: FeatureFunc = FeatureFunc("entropy_gauss",
-    (idx, v) => graft.expr.KdeEntropy(sortedVals(idx, v), gauss = true))
+    (idx, v) => Kernels.kdeEntropy(gauss = true)(sortedVals(idx, v)))
 
   /** pyentrp `multiscale_permutation_entropy`: one output per scale
     * (see [[graft.expr.EntropyKernelUtil.mspe]]).
@@ -564,7 +562,7 @@ object FeatureFuncs {
     require(order >= 2 && order <= 6, "mspe order must be in [2, 6]")
     require(maxScale >= 1 && maxScale <= 16, "mspe scale must be in [1, 16]")
     FeatureFunc(s"mspe$order",
-      (idx, v) => graft.expr.Mspe(sortedVals(idx, v), order, maxScale),
+      (idx, v) => Kernels.mspe(order, maxScale)(sortedVals(idx, v)),
       outputNames = Some((1 to maxScale).map(s => s"mspe_$s")))
   }
 
@@ -580,7 +578,7 @@ object FeatureFuncs {
     require(r > 0, "tolerance must be > 0")
     require(maxScale >= 1 && maxScale <= 16, "msen scale must be in [1, 16]")
     FeatureFunc("msen",
-      (idx, v) => graft.expr.MseExact(sortedVals(idx, v), m, r, maxScale),
+      (idx, v) => Kernels.mseExact(m, r, maxScale)(sortedVals(idx, v)),
       outputNames = Some((1 to maxScale).map(s => s"msen_$s")))
   }
 
@@ -590,7 +588,7 @@ object FeatureFuncs {
   def spectralShape(fs: Double): FeatureFunc = {
     require(fs > 0, "sampling rate must be > 0")
     FeatureFunc("spectral_shape",
-      (idx, v) => graft.expr.SpectralShape(sortedVals(idx, v), fs),
+      (idx, v) => Kernels.spectralShape(fs)(sortedVals(idx, v)),
       outputNames = Some(graft.expr.SpectralShapeUtil.names))
   }
 
@@ -616,7 +614,7 @@ object FeatureFuncs {
     FeatureFunc(s"index_mass_q$q", (idx, v) => {
       val vals = sortedVals(idx, v)
       val s = org.apache.spark.sql.functions.sum(abs(v))
-      when(s > 0, graft.expr.IndexMassK(vals, s, q))
+      when(s > 0, Kernels.indexMass(q)(vals, s))
     })
   }
 
@@ -638,8 +636,7 @@ object FeatureFuncs {
       // r17: Σt·v as a primitive left-to-right pass (bit-identical order
       // to the replaced transform+aggregate, minus its per-window boxed
       // product array)
-      val stv = graft.expr.TemporalFoldK(vals,
-        graft.expr.TemporalFoldK.IDX_DOT)
+      val stv = Kernels.temporalFold(IDX_DOT)(vals)
       val st = n * (n - 1) / 2.0
       val stt = (n - 1) * n * (lit(2.0) * n - 1) / 6.0
       val sxx = stt - st * st / n
@@ -674,13 +671,13 @@ object FeatureFuncs {
       val n = count(v).cast("double")
       val sv = org.apache.spark.sql.functions.sum(v)
       // r17: the (Σt, Σt², Σt·v) struct-fold moved to the primitive
-      // LttFoldK pass (bit-identical accumulation order; tmin stays the
+      // ltt_fold pass (bit-identical accumulation order; tmin stays the
       // native min aggregate child). The OLS finish reads the kernel's
-      // struct via getField — LttFoldK carries no lambda, so codegen
+      // struct via getField — ltt_fold carries no lambda, so codegen
       // subexpression elimination merges the references (the old HOF fold
       // was kept single-reference precisely because LAMBDA chains get no
       // CSE; a plain expression does).
-      val a = graft.expr.LttFoldK(s.getField("i"), s.getField("v"), tmin)
+      val a = Kernels.lttFold(s.getField("i"), s.getField("v"), tmin)
       val st = a.getField("st")
       val stt = a.getField("stt")
       val stv = a.getField("stv")
@@ -701,7 +698,7 @@ object FeatureFuncs {
   def welchDensityRel(nCoef: Int): FeatureFunc = {
     require(nCoef >= 1 && nCoef <= 64, "coefficient count must be in [1, 64]")
     FeatureFunc("welch_rel",
-      (idx, v) => graft.expr.WelchRel(sortedVals(idx, v), nCoef),
+      (idx, v) => Kernels.welchRel(nCoef)(sortedVals(idx, v)),
       outputNames = Some(graft.expr.WelchRelUtil.names(nCoef)))
   }
 
@@ -712,7 +709,7 @@ object FeatureFuncs {
     require(widths.nonEmpty && widths.forall(w => w >= 1 && w <= 64),
       "wavelet widths must be in [1, 64]")
     FeatureFunc("wavelet",
-      (idx, v) => graft.expr.WaveletSlice(sortedVals(idx, v), widths),
+      (idx, v) => Kernels.wavelet(widths)(sortedVals(idx, v)),
       outputNames = Some(graft.expr.WaveletUtil.names(widths)))
   }
 
@@ -724,7 +721,7 @@ object FeatureFuncs {
   def mfcc(fs: Double, numCeps: Int): FeatureFunc = {
     require(fs > 0, "sampling rate must be > 0")
     FeatureFunc("mfcc",
-      (idx, v) => graft.expr.MfccSlice(sortedVals(idx, v), fs, numCeps),
+      (idx, v) => Kernels.mfcc(fs, numCeps)(sortedVals(idx, v)),
       outputNames = Some(graft.expr.MfccUtil.names(numCeps)))
   }
 
@@ -734,7 +731,7 @@ object FeatureFuncs {
   def spectralBand(fs: Double, lo: Double, hi: Double): FeatureFunc = {
     require(fs > 0 && lo >= 0 && hi > lo, "need fs > 0 and 0 <= lo < hi")
     FeatureFunc("spectral_band",
-      (idx, v) => graft.expr.SpectralExtras(sortedVals(idx, v), fs, lo, hi),
+      (idx, v) => Kernels.spectralExtras(fs, lo, hi)(sortedVals(idx, v)),
       outputNames = Some(graft.expr.SpectralExtrasUtil.names))
   }
 
@@ -767,7 +764,7 @@ object FeatureFuncs {
     * [[graft.expr.Catch22Util]].
     */
   val catch22Tranche1: FeatureFunc = FeatureFunc("catch22",
-    (idx, v) => graft.expr.Catch22Slice(sortedVals(idx, v)),
+    (idx, v) => Kernels.catch22()(sortedVals(idx, v)),
     outputNames = Some(graft.expr.Catch22Util.names))
 
   /** The catch24 variant: the same single kernel call emitting the battery
@@ -779,7 +776,7 @@ object FeatureFuncs {
     * (HOF chains get no codegen CSE).
     */
   val catch24Battery: FeatureFunc = FeatureFunc("catch24",
-    (idx, v) => graft.expr.Catch22Slice(sortedVals(idx, v), catch24 = true),
+    (idx, v) => Kernels.catch22(catch24 = true)(sortedVals(idx, v)),
     outputNames = Some(graft.expr.Catch22Util.names24))
 
   // ---- pyentrp completion (r11 tranche 4) ---------------------------------
@@ -797,7 +794,7 @@ object FeatureFuncs {
     // native kernel (primitive sort + run count) — the Catalyst chain
     // (array_sort + struct-accumulator fold) allocated per element and
     // was one of the 100× profile's two slowest kernels (q101)
-    graft.expr.ShannonFreq(sortedVals(idx, v)))
+    Kernels.shannonFreq(sortedVals(idx, v)))
 
   /** pyentrp `weighted_permutation_entropy` (delay 1): Bandt–Pompe
     * patterns (stable argsort tie rule) weighted by each tuple's
@@ -808,7 +805,7 @@ object FeatureFuncs {
     * 0/0). Documented deviation: observed patterns whose weight sum is 0
     * contribute 0 (pyentrp propagates 0·log2(0) = nan).
     *
-    * Computed by the native [[graft.expr.Wpe]] kernel (direct-indexed
+    * Computed by the native [[graft.expr.EntropyKernelUtil.wpe]] kernel (direct-indexed
     * primitive weight table, one pass, no sort) — the r14 Catalyst-HOF
     * version (tuple → struct → array_sort → struct-accumulator fold)
     * allocated a struct per element per step and was the 100× profile's
@@ -819,7 +816,7 @@ object FeatureFuncs {
     require(order >= 2 && order <= 6, "wpe order must be in [2, 6]")
     val name = s"wpe_$order" + (if (normalize) "_norm" else "")
     FeatureFunc(name, (idx, v) =>
-      graft.expr.Wpe(sortedVals(idx, v), order, normalize))
+      Kernels.wpe(order, normalize)(sortedVals(idx, v)))
   }
 
   // ---- tsfel temporal/statistical stock completion (r11 tranche 4) --------
@@ -831,14 +828,13 @@ object FeatureFuncs {
   // never referenced inside a lambda body (the [[numberPeaks1]] trap).
 
   /** tsfel `mean_abs_diff`: mean of |Δx| over the index-sorted window —
-    * one [[graft.expr.TemporalFoldK]] primitive pass (np.mean of an empty
+    * one [[graft.expr.TemporalKernelUtil.temporalFold]] primitive pass (np.mean of an empty
     * diff → NULL for n < 2). The r16 kernels replace the former
     * transform/zip_with/aggregate HOF chains of this diff stock — a boxed
     * element per fold step, the q100 100× residual after the r15 kernels.
     */
   val meanAbsDiff: FeatureFunc = FeatureFunc("mean_abs_diff", (idx, v) =>
-    when(count(v) >= 2, graft.expr.TemporalFoldK(sortedVals(idx, v),
-      graft.expr.TemporalFoldK.MEAN_ABS_DIFF)))
+    when(count(v) >= 2, Kernels.temporalFold(MEAN_ABS_DIFF)(sortedVals(idx, v))))
 
   /** tsfel `mean_diff`: mean of Δx = (xₙ − x₁)/(n − 1) — the telescoping
     * closed form, three NATIVE aggregates, no array at all.
@@ -854,18 +850,15 @@ object FeatureFuncs {
     * null when the window has no diffs (n < 2).
     */
   val medianAbsDiff: FeatureFunc = FeatureFunc("median_abs_diff",
-    (idx, v) => when(count(v) >= 2, graft.expr.TemporalFoldK(
-      sortedVals(idx, v), graft.expr.TemporalFoldK.MEDIAN_ABS_DIFF)))
+    (idx, v) => when(count(v) >= 2, Kernels.temporalFold(MEDIAN_ABS_DIFF)(sortedVals(idx, v))))
   val medianDiff: FeatureFunc = FeatureFunc("median_diff",
-    (idx, v) => when(count(v) >= 2, graft.expr.TemporalFoldK(
-      sortedVals(idx, v), graft.expr.TemporalFoldK.MEDIAN_DIFF)))
+    (idx, v) => when(count(v) >= 2, Kernels.temporalFold(MEDIAN_DIFF)(sortedVals(idx, v))))
 
   /** tsfel `distance`: total curve length Σ √(1 + Δx²) (unit index step);
     * 0.0 for singleton windows (np.sum of an empty diff).
     */
   val curveDistance: FeatureFunc = FeatureFunc("distance", (idx, v) =>
-    when(count(v) >= 1, graft.expr.TemporalFoldK(sortedVals(idx, v),
-      graft.expr.TemporalFoldK.DISTANCE)),
+    when(count(v) >= 1, Kernels.temporalFold(DISTANCE)(sortedVals(idx, v))),
     emptyValue = None)
 
   /** tsfel `pk_pk_distance`: |max − min| — two native aggregates. */
@@ -881,8 +874,7 @@ object FeatureFuncs {
   def aucFs(fs: Double): FeatureFunc = {
     require(fs > 0, "auc sampling rate must be > 0")
     FeatureFunc(s"auc_fs$fs", (idx, v) =>
-      when(count(v) >= 1, graft.expr.TemporalFoldK(sortedVals(idx, v),
-        graft.expr.TemporalFoldK.AUC, fs)))
+      when(count(v) >= 1, Kernels.temporalFold(AUC, fs)(sortedVals(idx, v))))
   }
 
   /** tsfel `calc_centroid` at sampling rate `fs`: energy-weighted time
@@ -896,8 +888,7 @@ object FeatureFuncs {
       // window, same left-to-right order the transform/fold chain used);
       // denominator stays the NATIVE sum(v²) aggregate so the replaced
       // form's exact summation orders are both preserved
-      val num = graft.expr.TemporalFoldK(sortedVals(idx, v),
-        graft.expr.TemporalFoldK.CENTROID_NUM, fs)
+      val num = Kernels.temporalFold(CENTROID_NUM, fs)(sortedVals(idx, v))
       val den = org.apache.spark.sql.functions.sum(v * v) // native, O(1) ref
       when(count(v) >= 1, when(den > 0, num / den).otherwise(lit(0.0)))
     })
@@ -906,7 +897,7 @@ object FeatureFuncs {
   /** tsfel `neighbourhood_peaks(n)`: count of samples strictly greater
     * than ALL 2n neighbours within ±n positions (boundary samples have no
     * full neighbourhood and never count). One primitive pass over the
-    * index-sorted window inside [[graft.expr.NeighbourhoodPeaksK]].
+    * index-sorted window inside [[graft.expr.TemporalKernelUtil.neighbourhoodPeaks]].
     */
   def neighbourhoodPeaks(nn: Int): FeatureFunc = {
     require(nn >= 1 && nn <= 16, "neighbourhood radius must be in [1, 16]")
@@ -914,7 +905,7 @@ object FeatureFuncs {
     // array per position (11 slices + zip_with concat at n = 5), the
     // dominant q100 cost in the 100× profile
     FeatureFunc(s"neighbourhood_peaks_$nn", (idx, v) =>
-      graft.expr.NeighbourhoodPeaksK(sortedVals(idx, v), nn),
+      Kernels.neighbourhoodPeaks(nn)(sortedVals(idx, v)),
       emptyValue = Some(lit(0L)))
   }
 
@@ -931,7 +922,7 @@ object FeatureFuncs {
     // sort); the Catalyst fold rebuilt the per-bin counter ARRAY once per
     // element (transform inside aggregate)
     FeatureFunc(s"hist$bins", (_, v) =>
-      graft.expr.HistCountsK(collect_list(v), bins),
+      Kernels.histCounts(bins)(collect_list(v)),
       outputNames = Some(names))
   }
 

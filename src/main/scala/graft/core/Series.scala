@@ -101,7 +101,8 @@ final case class Series(name: String, df: DataFrame, idxCol: String,
       ((df eq other.df) || df.queryExecution.analyzed
         .sameResult(other.df.queryExecution.analyzed))
 
-  private lazy val idxExpr: org.apache.spark.sql.Column = {
+  /** The index as internal doubles — the `__idx` of [[internal]]. */
+  private[graft] lazy val idxExpr: org.apache.spark.sql.Column = {
     (domain, idxType, tz) match {
       case (Domain.Time, TimestampNTZType, Some(zone)) =>
         // wall time in `zone` → true epoch instant, via a native codegen'd

@@ -8,10 +8,16 @@ package graft.core
   * carry the same domain and must match the data domain (strided_rolling
   * factory dispatch, reference: segmenter/strided_rolling_factory.py:32-98).
   */
-sealed trait Domain
+sealed trait Domain {
+  /** G3 terminator: group_by_consecutive closes the last run's segment this
+    * far past its last row — +1 day (in micros) for TIME, +1 for SEQUENCE
+    * (reference: feature_collection.py:682-688).
+    */
+  def runEnd: Double
+}
 object Domain {
-  case object Time extends Domain
-  case object Sequence extends Domain
+  case object Time extends Domain { def runEnd: Double = 86400e6 }
+  case object Sequence extends Domain { def runEnd: Double = 1.0 }
 }
 
 /** A window or stride size.

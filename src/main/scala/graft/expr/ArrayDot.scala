@@ -171,48 +171,42 @@ object GraftFunctions {
         else "raise",
         if (es.lengthCompare(5) >= 0) strLit(es(4), "wall_instant_micros")
         else "raise")),
-    // ---- windowed feature kernels: first arg = the window's values in
-    // TIME order as ARRAY<DOUBLE> (collect_list over a sorted window);
-    // every config arg must be a literal ----
-    ("catch22", classOf[Catch22Slice].getName,
-      es => Catch22Slice(es(0),
-        if (es.lengthCompare(2) >= 0) boolLit(es(1), "catch22") else false)),
-    ("svd_entropy", classOf[SvdEntropy].getName,
-      es => SvdEntropy(es(0), intLit(es(1), "svd_entropy"),
-        intLit(es(2), "svd_entropy"),
-        if (es.lengthCompare(4) >= 0) boolLit(es(3), "svd_entropy")
-        else false)),
-    ("lziv_complexity", classOf[LzivComplexity].getName,
-      es => LzivComplexity(es(0),
-        if (es.lengthCompare(2) >= 0) boolLit(es(1), "lziv_complexity")
-        else false)),
-    ("multiscale_perm_entropy", classOf[Mspe].getName,
-      es => Mspe(es(0), intLit(es(1), "multiscale_perm_entropy"),
-        intLit(es(2), "multiscale_perm_entropy"))),
-    ("multiscale_entropy", classOf[MseExact].getName,
-      es => MseExact(es(0), intLit(es(1), "multiscale_entropy"),
-        dblLit(es(2), "multiscale_entropy"),
-        intLit(es(3), "multiscale_entropy"))),
-    ("mfcc", classOf[MfccSlice].getName,
-      es => MfccSlice(es(0), dblLit(es(1), "mfcc"), intLit(es(2), "mfcc"))),
-    ("spectral_entropy", classOf[SpectralEntropy].getName,
-      es => SpectralEntropy(es(0),
-        if (es.lengthCompare(2) >= 0) boolLit(es(1), "spectral_entropy")
-        else false)),
-    ("welch_density_rel", classOf[WelchRel].getName,
-      es => WelchRel(es(0), intLit(es(1), "welch_density_rel"))),
-    ("spectral_shape", classOf[SpectralShape].getName,
-      es => SpectralShape(es(0), dblLit(es(1), "spectral_shape"))),
-    ("ricker_cwt", classOf[WaveletSlice].getName,
-      es => WaveletSlice(es(0),
-        es.drop(1).map(e => intLit(e, "ricker_cwt")))),
-    ("spectral_band", classOf[SpectralExtras].getName,
-      es => SpectralExtras(es(0), dblLit(es(1), "spectral_band"),
-        dblLit(es(2), "spectral_band"), dblLit(es(3), "spectral_band"))),
-    ("entropy_kde", classOf[KdeEntropy].getName,
-      es => KdeEntropy(es(0), gauss = false)),
-    ("entropy_gauss", classOf[KdeEntropy].getName,
-      es => KdeEntropy(es(0), gauss = true)))
+    // ---- windowed feature kernels ----
+    kernel("catch22")(es => Kernels.catch22(
+      es.lengthCompare(2) >= 0 && boolLit(es(1), "catch22"))),
+    kernel("svd_entropy")(es => Kernels.svdEntropy(intLit(es(1), "svd_entropy"),
+      intLit(es(2), "svd_entropy"),
+      es.lengthCompare(4) >= 0 && boolLit(es(3), "svd_entropy"))),
+    kernel("lziv_complexity")(es => Kernels.lzivComplexity(
+      es.lengthCompare(2) >= 0 && boolLit(es(1), "lziv_complexity"))),
+    kernel("multiscale_perm_entropy")(es => Kernels.mspe(
+      intLit(es(1), "multiscale_perm_entropy"),
+      intLit(es(2), "multiscale_perm_entropy"))),
+    kernel("multiscale_entropy")(es => Kernels.mseExact(
+      intLit(es(1), "multiscale_entropy"), dblLit(es(2), "multiscale_entropy"),
+      intLit(es(3), "multiscale_entropy"))),
+    kernel("mfcc")(es =>
+      Kernels.mfcc(dblLit(es(1), "mfcc"), intLit(es(2), "mfcc"))),
+    kernel("spectral_entropy")(es => Kernels.spectralEntropy(
+      es.lengthCompare(2) >= 0 && boolLit(es(1), "spectral_entropy"))),
+    kernel("welch_density_rel")(es =>
+      Kernels.welchRel(intLit(es(1), "welch_density_rel"))),
+    kernel("spectral_shape")(es =>
+      Kernels.spectralShape(dblLit(es(1), "spectral_shape"))),
+    kernel("ricker_cwt")(es =>
+      Kernels.wavelet(es.drop(1).map(e => intLit(e, "ricker_cwt")))),
+    kernel("spectral_band")(es => Kernels.spectralExtras(
+      dblLit(es(1), "spectral_band"), dblLit(es(2), "spectral_band"),
+      dblLit(es(3), "spectral_band"))),
+    kernel("entropy_kde")(_ => Kernels.kdeEntropy(gauss = false)),
+    kernel("entropy_gauss")(_ => Kernels.kdeEntropy(gauss = true)))
+
+  /** A window-kernel entry: the first argument is the window's values in
+    * TIME order as ARRAY<DOUBLE> (collect_list over a sorted window); every
+    * config argument must be a literal. */
+  private def kernel(n: String)(k: Seq[Expression] => Kernel)
+      : (String, String, Seq[Expression] => Expression) =
+    (n, classOf[WindowKernel].getName, es => k(es).expr(es(0)))
 
   /** Register every native expression for SQL usage in an existing session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

@@ -1,10 +1,7 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
 /** catch22 kernel: the COMPLETE catch22 canonical feature battery
@@ -657,14 +654,9 @@ object Catch22Util {
     java.lang.Double.valueOf(out)
   }
 
-  def compute(arr: ArrayData): InternalRow = compute(arr, catch24 = false)
-
-  def compute(arr: ArrayData, catch24: Boolean): InternalRow = {
-    val n = arr.numElements()
-    val x = new Array[Double](n)
-    var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
-    var mu = 0.0; i = 0
+  def compute(x: Array[Double], catch24: Boolean): InternalRow = {
+    val n = x.length
+    var mu = 0.0; var i = 0
     while (i < n) { mu += x(i); i += 1 }
     if (n > 0) mu /= n
     val out = new Array[Any](if (catch24) names24.length else names.length)
@@ -916,28 +908,4 @@ object Catch22Util {
 
     new GenericInternalRow(out)
   }
-}
-
-/** Native multi-output catch22 tranche over an array<double> window (see
-  * [[Catch22Util]]). CodegenFallback: one heavy call per WINDOW
-  * (post-aggregation), not per row — codegen would buy nothing.
-  */
-case class Catch22Slice(child: Expression, catch24: Boolean = false)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType =
-    if (catch24) Catch22Util.dataType24 else Catch22Util.dataType
-  override def prettyName: String = if (catch24) "catch24" else "catch22_tranche1"
-
-  override def nullSafeEval(a: Any): Any =
-    Catch22Util.compute(a.asInstanceOf[ArrayData], catch24)
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Catch22Slice = copy(child = newChild)
-}
-
-object Catch22Slice {
-  def apply(arr: Column): Column =
-    ColumnBridge.column(Catch22Slice(ColumnBridge.expression(arr)))
-  def apply(arr: Column, catch24: Boolean): Column =
-    ColumnBridge.column(Catch22Slice(ColumnBridge.expression(arr), catch24))
 }

@@ -1,13 +1,7 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
 /** r11 tranche-4 entropy/complexity kernels completing the reference's
   * antropy + pyentrp integration surfaces (reference:
@@ -129,19 +123,16 @@ object EntropyKernelUtil {
     * log2(order). Null when the embedding is empty (n < (order−1)·delay+1)
     * or the window is all-zero.
     */
-  def svdEntropy(arr: ArrayData, order: Int, delay: Int,
+  def svdEntropy(x: Array[Double], order: Int, delay: Int,
                  normalize: Boolean): Any = {
     // a negative delay passes the m >= 1 gate with m > n and then indexes
     // x out of bounds mid-task; delay 0 makes all embedding columns
     // identical (a meaningless rank-1 result antropy rejects)
     require(order >= 1 && delay >= 1,
       s"svd_entropy needs order >= 1 and delay >= 1, got ($order, $delay)")
-    val n = arr.numElements()
-    val m = n - (order - 1) * delay
+    val m = x.length - (order - 1) * delay
     if (m < 1) return null
-    val x = new Array[Double](n)
     var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
     val g = Array.ofDim[Double](order, order)
     var j = 0
     while (j < order) {
@@ -223,19 +214,16 @@ object EntropyKernelUtil {
     * Optionally normalized to c·log2(n)/n. Null for windows shorter
     * than 2.
     */
-  def lzivComplexity(arr: ArrayData, normalize: Boolean): Any = {
-    val n = arr.numElements()
+  def lzivComplexity(x: Array[Double], normalize: Boolean): Any = {
+    val n = x.length
     if (n < 2) return null
-    val x = new Array[Double](n)
-    var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
     val sorted = x.clone()
     java.util.Arrays.sort(sorted)
     val med =
       if (n % 2 == 1) sorted(n / 2)
       else (sorted(n / 2 - 1) + sorted(n / 2)) / 2.0
     val b = new Array[Byte](n)
-    i = 0
+    var i = 0
     while (i < n) { b(i) = if (x(i) > med) 1 else 0; i += 1 }
     val c = lz76(b)
     java.lang.Double.valueOf(
@@ -293,11 +281,8 @@ object EntropyKernelUtil {
     * [[permEntropy]] per scale. One output column per scale; a scale whose
     * coarse series is shorter than `order` yields null.
     */
-  def mspe(arr: ArrayData, order: Int, maxScale: Int): InternalRow = {
-    val n = arr.numElements()
-    val x = new Array[Double](n)
-    var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
+  def mspe(x: Array[Double], order: Int, maxScale: Int): InternalRow = {
+    val n = x.length
     val out = new Array[Any](maxScale)
     var s = 1
     while (s <= maxScale) {
@@ -411,14 +396,13 @@ object EntropyKernelUtil {
     * Conventions pinned per tsfel's published formulation: n == 2 → 0.0
     * (its log2(len)==1 guard); constant window → 0.0 for gauss (its
     * std==0 guard) and null for kde (singular KDE covariance raises).
+    * kde sorts `x` in place.
     */
-  def kdeEntropy(arr: ArrayData, gauss: Boolean): Any = {
-    val n = arr.numElements()
+  def kdeEntropy(x: Array[Double], gauss: Boolean): Any = {
+    val n = x.length
     if (n < 2) return null
-    val x = new Array[Double](n)
     var i = 0
     while (i < n) {
-      x(i) = arr.getDouble(i)
       // a non-finite sample poisons every probability; without this guard
       // the pn > 0 screen below would silently return 0.0 (a confident-
       // looking entropy for garbage input) while the oracle propagates NaN
@@ -506,11 +490,8 @@ object EntropyKernelUtil {
     * convention — and oracle-robust, like the q99d keyed variant). One
     * output column per scale.
     */
-  def mseExact(arr: ArrayData, m: Int, r: Double, maxScale: Int): InternalRow = {
-    val n = arr.numElements()
-    val x = new Array[Double](n)
-    var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
+  def mseExact(x: Array[Double], m: Int, r: Double, maxScale: Int): InternalRow = {
+    val n = x.length
     val out = new Array[Any](maxScale)
     var s = 1
     while (s <= maxScale) {
@@ -542,14 +523,11 @@ object EntropyKernelUtil {
     * direct-indexed into a double[order^order] (≤ 46656 for order 6), so
     * there is no sort, no boxing, and no allocation past the two arrays.
     */
-  def wpe(arr: ArrayData, order: Int, normalize: Boolean): Any = {
-    val n = arr.numElements()
+  def wpe(x: Array[Double], order: Int, normalize: Boolean): Any = {
+    val n = x.length
     if (n < order) return null
-    val x = new Array[Double](n)
-    var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
     var codeSpace = 1
-    i = 0
+    var i = 0
     while (i < order) { codeSpace *= order; i += 1 }
     val w = new Array[Double](codeSpace)
     var tot = 0.0
@@ -600,20 +578,16 @@ object EntropyKernelUtil {
     java.lang.Double.valueOf(if (normalize) res / logFact else res)
   }
 
-  /** antropy `perm_entropy` over the index-ordered window — ArrayData
-    * shim over [[permEntropy]] with the normalize option (same null
+  /** antropy `perm_entropy` over the index-ordered window — the whole-
+    * window form of [[permEntropy]] with the normalize option (same null
     * contract as the Catalyst version it replaces: null when the window
     * has fewer than `order` samples).
     */
-  def permEntropyArr(arr: ArrayData, order: Int, normalize: Boolean): Any = {
-    val n = arr.numElements()
-    val x = new Array[Double](n)
-    var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
-    val h = permEntropy(x, n, order)
+  def permEntropyArr(x: Array[Double], order: Int, normalize: Boolean): Any = {
+    val h = permEntropy(x, x.length, order)
     if (h.isNaN) return null
     var logFact = 0.0
-    i = 2
+    var i = 2
     while (i <= order) { logFact += log2(i.toDouble); i += 1 }
     java.lang.Double.valueOf(if (normalize) h / logFact else h)
   }
@@ -663,11 +637,10 @@ object EntropyKernelUtil {
     s
   }
 
-  private def binsOf(arr: ArrayData, w: Double): Array[Long] = {
-    val n = arr.numElements()
-    val b = new Array[Long](n)
+  private def binsOf(x: Array[Double], w: Double): Array[Long] = {
+    val b = new Array[Long](x.length)
     var i = 0
-    while (i < n) { b(i) = math.floor(arr.getDouble(i) / w).toLong; i += 1 }
+    while (i < x.length) { b(i) = math.floor(x(i) / w).toLong; i += 1 }
     b
   }
 
@@ -677,9 +650,9 @@ object EntropyKernelUtil {
     * algorithm contract. Null when w ≤ 0 or the window is shorter than
     * m+1 (either φ undefined), exactly the Column version's null cases.
     */
-  def apenBinned(arr: ArrayData, w: Double, m: Int): Any = {
+  def apenBinned(x: Array[Double], w: Double, m: Int): Any = {
     if (!(w > 0)) return null
-    val bins = binsOf(arr, w)
+    val bins = binsOf(x, w)
     def phi(mm: Int): Double = {
       val nT = bins.length - mm + 1
       if (nT <= 0) return Double.NaN
@@ -697,9 +670,9 @@ object EntropyKernelUtil {
     * (Spark's ln(0) → NULL convention, which the Column version relied
     * on).
     */
-  def sampenBinned(arr: ArrayData, w: Double, m: Int): Any = {
+  def sampenBinned(x: Array[Double], w: Double, m: Int): Any = {
     if (!(w > 0)) return null
-    val bins = binsOf(arr, w)
+    val bins = binsOf(x, w)
     def pairs(mm: Int): Double =
       templateRunFold(bins, mm)(c => c.toDouble * (c - 1) / 2.0)
     val b = pairs(m)
@@ -721,17 +694,15 @@ object EntropyKernelUtil {
     * (pyentrp itself hashes floats, where every NaN IS its own value —
     * NaN windows are outside the oracle contract; we pin the Spark/Column
     * convention, see KernelDegenerateSpec.) Null for an empty window.
+    * Sorts `x` in place.
     */
-  def shannonFreq(arr: ArrayData): Any = {
-    val n = arr.numElements()
+  def shannonFreq(x: Array[Double]): Any = {
+    val n = x.length
     if (n == 0) return null
-    val x = new Array[Double](n)
-    var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
     java.util.Arrays.sort(x)
     var h = 0.0
     var run = 1
-    i = 1
+    var i = 1
     while (i <= n) {
       if (i < n && (x(i) == x(i - 1) ||
           (java.lang.Double.isNaN(x(i)) && java.lang.Double.isNaN(x(i - 1)))))
@@ -744,208 +715,4 @@ object EntropyKernelUtil {
     }
     java.lang.Double.valueOf(log2(n.toDouble) - h / n)
   }
-}
-
-/** array<double> window kernel base: the input check and nullability every
-  * unary window kernel shares. */
-private[expr] trait ArrayDoubleKernel extends UnaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${t.sql}")
-  }
-  override def nullable: Boolean = true
-}
-
-/** (array<double>, double) kernel base — an array child plus one scalar
-  * the caller computes as a NATIVE aggregate (mean, threshold, width). */
-private[expr] trait ArrayScalarKernel extends BinaryExpression
-    with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, double), got (${l.sql}, ${r.sql})")
-    }
-  override def nullable: Boolean = true
-}
-
-/** Native SVD entropy of an array<double> window (see
-  * [[EntropyKernelUtil.svdEntropy]]).
-  */
-case class SvdEntropy(child: Expression, order: Int, delay: Int,
-                      normalize: Boolean) extends ArrayDoubleKernel {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "svd_entropy"
-  override def nullSafeEval(a: Any): Any =
-    EntropyKernelUtil.svdEntropy(a.asInstanceOf[ArrayData], order, delay, normalize)
-  override protected def withNewChildInternal(newChild: Expression): SvdEntropy =
-    copy(child = newChild)
-}
-object SvdEntropy {
-  def apply(arr: Column, order: Int, delay: Int, normalize: Boolean): Column =
-    ColumnBridge.column(
-      SvdEntropy(ColumnBridge.expression(arr), order, delay, normalize))
-}
-
-/** Native tsfel KDE/gaussian probability entropy of an array<double>
-  * window (see [[EntropyKernelUtil.kdeEntropy]]).
-  */
-case class KdeEntropy(child: Expression, gauss: Boolean)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String =
-    if (gauss) "entropy_gauss" else "entropy_kde"
-  override def nullSafeEval(a: Any): Any =
-    EntropyKernelUtil.kdeEntropy(a.asInstanceOf[ArrayData], gauss)
-  override protected def withNewChildInternal(newChild: Expression): KdeEntropy =
-    copy(child = newChild)
-}
-object KdeEntropy {
-  def apply(arr: Column, gauss: Boolean): Column =
-    ColumnBridge.column(KdeEntropy(ColumnBridge.expression(arr), gauss))
-}
-
-/** Native Lempel–Ziv (LZ76) complexity of the median-binarized window
-  * (see [[EntropyKernelUtil.lzivComplexity]]).
-  */
-case class LzivComplexity(child: Expression, normalize: Boolean)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "lziv_complexity"
-  override def nullSafeEval(a: Any): Any =
-    EntropyKernelUtil.lzivComplexity(a.asInstanceOf[ArrayData], normalize)
-  override protected def withNewChildInternal(newChild: Expression): LzivComplexity =
-    copy(child = newChild)
-}
-object LzivComplexity {
-  def apply(arr: Column, normalize: Boolean): Column =
-    ColumnBridge.column(
-      LzivComplexity(ColumnBridge.expression(arr), normalize))
-}
-
-/** Native multiscale permutation entropy (struct mspe_1..mspe_S — see
-  * [[EntropyKernelUtil.mspe]]).
-  */
-case class Mspe(child: Expression, order: Int, maxScale: Int)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = StructType(
-    (1 to maxScale).map(s => StructField(s"mspe_$s", DoubleType)))
-  override def prettyName: String = "mspe"
-  override def nullSafeEval(a: Any): Any =
-    EntropyKernelUtil.mspe(a.asInstanceOf[ArrayData], order, maxScale)
-  override protected def withNewChildInternal(newChild: Expression): Mspe =
-    copy(child = newChild)
-}
-object Mspe {
-  def apply(arr: Column, order: Int, maxScale: Int): Column =
-    ColumnBridge.column(Mspe(ColumnBridge.expression(arr), order, maxScale))
-}
-
-/** Native exact-SampEn multiscale entropy (struct msen_1..msen_S — see
-  * [[EntropyKernelUtil.mseExact]]).
-  */
-case class MseExact(child: Expression, m: Int, r: Double, maxScale: Int)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = StructType(
-    (1 to maxScale).map(s => StructField(s"msen_$s", DoubleType)))
-  override def prettyName: String = "mse_exact"
-  override def nullSafeEval(a: Any): Any =
-    EntropyKernelUtil.mseExact(a.asInstanceOf[ArrayData], m, r, maxScale)
-  override protected def withNewChildInternal(newChild: Expression): MseExact =
-    copy(child = newChild)
-}
-object MseExact {
-  def apply(arr: Column, m: Int, r: Double, maxScale: Int): Column =
-    ColumnBridge.column(MseExact(ColumnBridge.expression(arr), m, r, maxScale))
-}
-
-/** Native weighted permutation entropy (see [[EntropyKernelUtil.wpe]]). */
-case class Wpe(child: Expression, order: Int, normalize: Boolean)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "wpe"
-  override def nullSafeEval(a: Any): Any =
-    EntropyKernelUtil.wpe(a.asInstanceOf[ArrayData], order, normalize)
-  override protected def withNewChildInternal(newChild: Expression): Wpe =
-    copy(child = newChild)
-}
-object Wpe {
-  def apply(arr: Column, order: Int, normalize: Boolean): Column =
-    ColumnBridge.column(Wpe(ColumnBridge.expression(arr), order, normalize))
-}
-
-/** Native permutation entropy (see [[EntropyKernelUtil.permEntropyArr]]). */
-case class PermEntropyK(child: Expression, order: Int, normalize: Boolean)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "perm_entropy"
-  override def nullSafeEval(a: Any): Any =
-    EntropyKernelUtil.permEntropyArr(a.asInstanceOf[ArrayData], order, normalize)
-  override protected def withNewChildInternal(newChild: Expression): PermEntropyK =
-    copy(child = newChild)
-}
-object PermEntropyK {
-  def apply(arr: Column, order: Int, normalize: Boolean): Column =
-    ColumnBridge.column(
-      PermEntropyK(ColumnBridge.expression(arr), order, normalize))
-}
-
-/** Native value-frequency Shannon entropy (see
-  * [[EntropyKernelUtil.shannonFreq]]).
-  */
-case class ShannonFreq(child: Expression) extends ArrayDoubleKernel {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "shannon_freq"
-  override def nullSafeEval(a: Any): Any =
-    EntropyKernelUtil.shannonFreq(a.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(newChild: Expression): ShannonFreq =
-    copy(child = newChild)
-}
-object ShannonFreq {
-  def apply(arr: Column): Column =
-    ColumnBridge.column(ShannonFreq(ColumnBridge.expression(arr)))
-}
-
-/** Native binned approximate entropy (see
-  * [[EntropyKernelUtil.apenBinned]]); `right` is the quantization width
-  * (any per-window scalar: an absolute tolerance, rFactor·σ, a carried
-  * width column).
-  */
-case class ApenBinned(left: Expression, right: Expression, m: Int)
-  extends ArrayScalarKernel {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "apen_binned"
-  override def nullSafeEval(a: Any, w: Any): Any =
-    EntropyKernelUtil.apenBinned(a.asInstanceOf[ArrayData],
-      w.asInstanceOf[Double], m)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ApenBinned =
-    copy(left = newLeft, right = newRight)
-}
-object ApenBinned {
-  def apply(arr: Column, w: Column, m: Int): Column =
-    ColumnBridge.column(ApenBinned(ColumnBridge.expression(arr),
-      ColumnBridge.expression(w), m))
-}
-
-/** Native binned sample entropy (see
-  * [[EntropyKernelUtil.sampenBinned]]); width as [[ApenBinned]].
-  */
-case class SampenBinned(left: Expression, right: Expression, m: Int)
-  extends ArrayScalarKernel {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sampen_binned"
-  override def nullSafeEval(a: Any, w: Any): Any =
-    EntropyKernelUtil.sampenBinned(a.asInstanceOf[ArrayData],
-      w.asInstanceOf[Double], m)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SampenBinned =
-    copy(left = newLeft, right = newRight)
-}
-object SampenBinned {
-  def apply(arr: Column, w: Column, m: Int): Column =
-    ColumnBridge.column(SampenBinned(ColumnBridge.expression(arr),
-      ColumnBridge.expression(w), m))
 }

@@ -1,10 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
 /** tsfel `mfcc` (the last widely-used member of the reference's tsfel
   * advanced integration surface — reference:
@@ -81,19 +77,19 @@ object MfccUtil {
     fb
   }
 
-  def compute(arr: ArrayData, fbank: Array[Array[Double]],
+  def compute(x: Array[Double], fbank: Array[Array[Double]],
               numCeps: Int): Any = {
-    val n = arr.numElements()
+    val n = x.length
     if (n < 2) return null
     val take = math.min(n, Nfft)
     val re = new Array[Double](Nfft)
     val im = new Array[Double](Nfft)
     // pre-emphasis is local (yᵢ needs xᵢ₋₁ only), so emphasizing just the
     // kept prefix equals tsfel's emphasize-then-truncate
-    re(0) = arr.getDouble(0)
+    re(0) = x(0)
     var i = 1
     while (i < take) {
-      re(i) = arr.getDouble(i) - PreEmphasis * arr.getDouble(i - 1)
+      re(i) = x(i) - PreEmphasis * x(i - 1)
       i += 1
     }
     Fft.radix2(re, im)
@@ -139,32 +135,4 @@ object MfccUtil {
     }
     new GenericInternalRow(out)
   }
-}
-
-/** Native mfcc kernel (see [[MfccUtil]]). `CodegenFallback` like the other
-  * heavy window kernels: one interpreted call per window keeps the
-  * generated-class footprint of wide battery queries small.
-  */
-case class MfccSlice(child: Expression, fs: Double, numCeps: Int)
-  extends ArrayDoubleKernel {
-
-  require(numCeps >= 1 && numCeps <= MfccUtil.Nfilt - 1,
-    "num_ceps must be in [1, nfilt-1]")
-
-  // per-instance, built once per task after deserialization
-  @transient private lazy val fbank = MfccUtil.filterbank(fs)
-  override def dataType: DataType = StructType(
-    MfccUtil.names(numCeps).map(StructField(_, DoubleType)))
-  override def prettyName: String = "mfcc"
-
-  override def nullSafeEval(a: Any): Any =
-    MfccUtil.compute(a.asInstanceOf[ArrayData], fbank, numCeps)
-
-  override protected def withNewChildInternal(
-      newChild: Expression): MfccSlice = copy(child = newChild)
-}
-
-object MfccSlice {
-  def apply(arr: Column, fs: Double, numCeps: Int): Column =
-    ColumnBridge.column(MfccSlice(ColumnBridge.expression(arr), fs, numCeps))
 }

@@ -1,11 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types._
-
 /** Native exact percentiles over a collected window: ONE primitive
   * double-array sort serves every requested quantile, replacing N
   * independent `percentile(v, q)` aggregates (each an OpenHashMap buffer
@@ -26,24 +20,13 @@ import org.apache.spark.sql.types._
   */
 object PercentileKernelUtil {
 
-  /** Sorts a copy of `arr` and interpolates every `qs` entry. Null
-    * elements are skipped exactly like the replaced `Percentile`
-    * aggregate's update does (the `collect_list` feeds never contain
-    * them, but `ArrayDoubleKernel` accepts `containsNull=true` inputs —
-    * without the guard a foreign caller would read them as 0.0).
-    * Returns null when no non-null element remains.
+  /** Sorts `v` in place and interpolates every `qs` entry. Returns null
+    * for an empty window — null elements never get here: the
+    * [[WindowKernel]] conversion skips them, exactly like the replaced
+    * `Percentile` aggregate's update does.
     */
-  def percentiles(arr: ArrayData, qs: Array[Double]): Array[Double] = {
-    val n = arr.numElements()
-    var v = new Array[Double](n)
-    var m = 0
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) { v(m) = arr.getDouble(i); m += 1 }
-      i += 1
-    }
-    if (m == 0) return null
-    if (m != n) v = java.util.Arrays.copyOf(v, m)
+  def percentiles(v: Array[Double], qs: Array[Double]): Array[Double] = {
+    if (v.length == 0) return null
     java.util.Arrays.sort(v)
     val out = new Array[Double](qs.length)
     var j = 0
@@ -68,56 +51,4 @@ object PercentileKernelUtil {
       else (hi - pos) * lv + (pos - lo) * hv
     }
   }
-}
-
-/** `array<double>` of the exact `qs` percentiles of the window (null for
-  * an empty window) — see [[PercentileKernelUtil]].
-  */
-case class PercentilesK(child: Expression, qs: Seq[Double])
-  extends ArrayDoubleKernel {
-  require(qs.nonEmpty, "need at least one percentile")
-  qs.foreach(q => require(q >= 0.0 && q <= 1.0, s"percentile $q outside [0, 1]"))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "percentiles_sorted"
-  private lazy val qArr = qs.toArray
-  override def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    if (arr.numElements() == 0) null
-    else {
-      val p = PercentileKernelUtil.percentiles(arr, qArr)
-      if (p == null) null else new GenericArrayData(p)
-    }
-  }
-  override protected def withNewChildInternal(
-      newChild: Expression): PercentilesK = copy(child = newChild)
-}
-object PercentilesK {
-  def apply(arr: Column, qs: Seq[Double]): Column =
-    ColumnBridge.column(PercentilesK(ColumnBridge.expression(arr), qs))
-}
-
-/** `pctl(qHi) − pctl(qLo)` in one sort (the IQR shape); null for an empty
-  * window — see [[PercentileKernelUtil]].
-  */
-case class PercentileSpanK(child: Expression, qLo: Double, qHi: Double)
-  extends ArrayDoubleKernel {
-  Seq(qLo, qHi).foreach(q =>
-    require(q >= 0.0 && q <= 1.0, s"percentile $q outside [0, 1]"))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "percentile_span"
-  override def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    if (arr.numElements() == 0) null
-    else {
-      val p = PercentileKernelUtil.percentiles(arr, Array(qLo, qHi))
-      if (p == null) null else java.lang.Double.valueOf(p(1) - p(0))
-    }
-  }
-  override protected def withNewChildInternal(
-      newChild: Expression): PercentileSpanK = copy(child = newChild)
-}
-object PercentileSpanK {
-  def apply(arr: Column, qLo: Double, qHi: Double): Column =
-    ColumnBridge.column(
-      PercentileSpanK(ColumnBridge.expression(arr), qLo, qHi))
 }

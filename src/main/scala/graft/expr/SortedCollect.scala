@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -28,7 +27,7 @@ import org.apache.spark.sql.types._
   *   3. `array_sort`/`transform` carry lambda variables, which Catalyst's
   *      subexpression elimination refuses — so a battery of k descriptors
   *      over one series re-collected and re-sorted the SAME window k times
-  *      (the LttFoldK scaladoc records the same lambda-CSE cliff).
+  *      (FeatureFuncs.linearTrendTimewise records the same lambda-CSE cliff).
   *
   * [[CollectSortedVals]] is a TypedImperativeAggregate over (idx, value):
   * the buffer is two growing PRIMITIVE arrays (raw index bits + raw
@@ -305,105 +304,4 @@ object CollectSortedVals {
     ColumnBridge.column(CollectSortedVals(
       ColumnBridge.expression(idx), ColumnBridge.expression(v))
       .toAggregateExpression())
-}
-
-/** One-pass Hjorth variance pair over the index-sorted window (reference:
-  * the antropy `hjorth_params` member of the integration surface,
-  * tests/test_features_integration.py:375-380): var_pop of the first and
-  * second differences in ONE primitive pass — the replaced Column form
-  * materialized the dx and ddx arrays (slice + zip_with, one boxed element
-  * per step) and folded each through an `aggregate` lambda. Accumulation
-  * order and the (n, Σ, Σ²) finish are the replaced chains' exactly
-  * (differential-pinned in SortedCollectSpec): dx_j = x[j+1] − x[j] summed
-  * left-to-right into (s, s²) interleaved per element; ddx likewise over
-  * the dx values; finish (Σd² − (Σd)²/n)/n. `vdx` is null for windows
-  * shorter than 2, `vddx` shorter than 3 — the empty-array aggregate's
-  * null finish. var_pop(x) itself stays the caller's native order-free
-  * aggregate, as before.
-  */
-case class HjorthFoldK(child: Expression)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = StructType(Seq(
-    StructField("vdx", DoubleType), StructField("vddx", DoubleType)))
-  override def prettyName: String = "hjorth_fold"
-  override def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var n1 = 0L; var s1 = 0.0; var q1 = 0.0
-    var n2 = 0L; var s2 = 0.0; var q2 = 0.0
-    var prev = 0.0
-    var prevDx = 0.0
-    var i = 0
-    while (i < n) {
-      val x = arr.getDouble(i)
-      if (i >= 1) {
-        val dx = x - prev
-        n1 += 1; s1 += dx; q1 += dx * dx
-        if (i >= 2) {
-          val dd = dx - prevDx
-          n2 += 1; s2 += dd; q2 += dd * dd
-        }
-        prevDx = dx
-      }
-      prev = x
-      i += 1
-    }
-    val vdx: Any = if (n1 > 0) {
-      val d = n1.toDouble
-      java.lang.Double.valueOf((q1 - s1 * s1 / d) / d)
-    } else null
-    val vddx: Any = if (n2 > 0) {
-      val d = n2.toDouble
-      java.lang.Double.valueOf((q2 - s2 * s2 / d) / d)
-    } else null
-    new GenericInternalRow(Array[Any](vdx, vddx))
-  }
-  override protected def withNewChildInternal(newChild: Expression): HjorthFoldK =
-    copy(child = newChild)
-}
-
-object HjorthFoldK {
-  def apply(sorted: Column): Column =
-    ColumnBridge.column(HjorthFoldK(ColumnBridge.expression(sorted)))
-}
-
-/** Sign-change count of the first differences over the index-sorted window
-  * (reference: the antropy `petrosian_fd` N_Δ term of the integration
-  * surface's fractal sweep). Replaces the signum-transform array plus the
-  * zip_with/aggregate fold: one pass tracking the previous difference's
-  * signum, counting pairs whose signums differ under Spark SQL `=!=`
-  * semantics (−0.0 equals 0.0; NaN equals NaN — so a NaN-signum pair
-  * contributes 0, exactly as `when(a =!= b, 1.0)` evaluated). The count
-  * accumulates as the same left-to-right double sum of 1.0s; windows with
-  * fewer than two differences return 0.0 (the empty fold's base).
-  */
-case class PetrosianNdK(child: Expression)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "petrosian_nd"
-  override def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n < 3) return 0.0
-    var nd = 0.0
-    var prev = arr.getDouble(0)
-    var prevSg = 0.0
-    var i = 1
-    while (i < n) {
-      val x = arr.getDouble(i)
-      val sg = math.signum(x - prev)
-      if (i >= 2 && !(sg == prevSg || (sg != sg && prevSg != prevSg))) nd += 1.0
-      prevSg = sg
-      prev = x
-      i += 1
-    }
-    nd
-  }
-  override protected def withNewChildInternal(newChild: Expression): PetrosianNdK =
-    copy(child = newChild)
-}
-
-object PetrosianNdK {
-  def apply(sorted: Column): Column =
-    ColumnBridge.column(PetrosianNdK(ColumnBridge.expression(sorted)))
 }

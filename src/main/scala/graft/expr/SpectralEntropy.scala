@@ -1,11 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
-
 /** Runtime kernel: Shannon entropy (nats) of the DC-excluded periodogram of
   * an index-ordered window. For frequency bins k = 1..⌊n/2⌋,
   * psd_k = |Σ_t x_t·e^{−2πikt/n}|²; the feature is −Σ p_k ln p_k over
@@ -24,13 +18,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * samples or with zero oscillatory energy (constant windows).
   */
 object SpectralEntropyUtil {
-  def entropy(arr: ArrayData, normalize: Boolean): Any = {
-    val n = arr.numElements()
+  def entropy(x: Array[Double], normalize: Boolean): Any = {
+    val n = x.length
     if (n < 4) return null
-    val x = new Array[Double](n)
     var i = 0
     var sxx = 0.0
-    while (i < n) { x(i) = arr.getDouble(i); sxx += x(i) * x(i); i += 1 }
+    while (i < n) { sxx += x(i) * x(i); i += 1 }
     val nb = n / 2
     // O(n log n) Bluestein FFT above [[Fft.directThreshold]] samples, the
     // trig-table direct DFT below — identical X_k mathematics either way
@@ -54,26 +47,4 @@ object SpectralEntropyUtil {
     }
     if (normalize) h / math.log(nb.toDouble) else h
   }
-}
-
-/** Native spectral entropy of an array<double> window (see
-  * [[SpectralEntropyUtil]]). CodegenFallback: the kernel is one heavy call
-  * per WINDOW (post-aggregation), not per row — codegen would buy nothing.
-  */
-case class SpectralEntropy(child: Expression, normalize: Boolean)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "spectral_entropy"
-
-  override def nullSafeEval(a: Any): Any =
-    SpectralEntropyUtil.entropy(a.asInstanceOf[ArrayData], normalize)
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SpectralEntropy = copy(child = newChild)
-}
-
-object SpectralEntropy {
-  def apply(arr: Column, normalize: Boolean): Column =
-    ColumnBridge.column(
-      SpectralEntropy(ColumnBridge.expression(arr), normalize))
 }

@@ -1,10 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
 /** tsfel spectral-shape battery (r11 tranche 4 — the spectral members of
@@ -45,13 +41,12 @@ object SpectralShapeUtil {
   val dataType: StructType =
     StructType(names.map(StructField(_, DoubleType)))
 
-  def compute(arr: ArrayData, fs: Double): Any = {
-    val n = arr.numElements()
+  def compute(x: Array[Double], fs: Double): Any = {
+    val n = x.length
     if (n < 4) return null
-    val x = new Array[Double](n)
     var i = 0
     var sxx = 0.0
-    while (i < n) { x(i) = arr.getDouble(i); sxx += x(i) * x(i); i += 1 }
+    while (i < n) { sxx += x(i) * x(i); i += 1 }
     val psd = Fft.halfPsd(x)
     val bigK = psd.length
     var tot = 0.0
@@ -160,12 +155,9 @@ object WelchRelUtil {
       (c, s)
     })
 
-  def compute(arr: ArrayData, nCoef: Int): Any = {
-    val n = arr.numElements()
+  def compute(x: Array[Double], nCoef: Int): Any = {
+    val n = x.length
     if (n < 4) return null
-    val x = new Array[Double](n)
-    var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
     val m = math.min(256, n)
     val step = m - m / 2
     val nseg = (n - m) / step + 1
@@ -228,43 +220,4 @@ object WelchRelUtil {
     }
     new GenericInternalRow(out)
   }
-}
-
-/** Native relative Welch density (see [[WelchRelUtil]]). */
-case class WelchRel(child: Expression, nCoef: Int)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = StructType(
-    WelchRelUtil.names(nCoef).map(StructField(_, DoubleType)))
-  override def prettyName: String = "welch_rel"
-
-  override def nullSafeEval(a: Any): Any =
-    WelchRelUtil.compute(a.asInstanceOf[ArrayData], nCoef)
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WelchRel = copy(child = newChild)
-}
-
-object WelchRel {
-  def apply(arr: Column, nCoef: Int): Column =
-    ColumnBridge.column(WelchRel(ColumnBridge.expression(arr), nCoef))
-}
-
-/** Native tsfel spectral-shape battery over an array<double> window (see
-  * [[SpectralShapeUtil]]). CodegenFallback: one heavy call per WINDOW.
-  */
-case class SpectralShape(child: Expression, fs: Double)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = SpectralShapeUtil.dataType
-  override def prettyName: String = "spectral_shape"
-
-  override def nullSafeEval(a: Any): Any =
-    SpectralShapeUtil.compute(a.asInstanceOf[ArrayData], fs)
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SpectralShape = copy(child = newChild)
-}
-
-object SpectralShape {
-  def apply(arr: Column, fs: Double): Column =
-    ColumnBridge.column(SpectralShape(ColumnBridge.expression(arr), fs))
 }

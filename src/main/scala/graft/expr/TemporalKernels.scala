@@ -1,13 +1,7 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
 /** Native kernels for the two tsfel temporal members whose Catalyst
   * formulations were per-element-allocating (the q100 100× profile):
@@ -21,18 +15,26 @@ import org.apache.spark.sql.types._
   */
 object TemporalKernelUtil {
 
+  // [[temporalFold]] modes
+  val MEAN_ABS_DIFF = 0
+  val MEDIAN_ABS_DIFF = 1
+  val MEDIAN_DIFF = 2
+  val DISTANCE = 3
+  val AUC = 4
+  val CENTROID_NUM = 5
+  val ABS_DIFF_SUM = 6
+  val SUM_SQ_DIFF = 7
+  val IDX_DOT = 8
+
   /** tsfel `neighbourhood_peaks(n)`: count of samples strictly greater
     * than ALL 2n neighbours within ±n positions; boundary samples (no
     * full neighbourhood) never count; windows shorter than 2n+1 give 0.
     */
-  def neighbourhoodPeaks(arr: ArrayData, nn: Int): Long = {
-    val n = arr.numElements()
+  def neighbourhoodPeaks(x: Array[Double], nn: Int): Long = {
+    val n = x.length
     if (n < 2 * nn + 1) return 0L
-    val x = new Array[Double](n)
-    var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
     var cnt = 0L
-    i = nn
+    var i = nn
     while (i < n - nn) {
       var ok = true
       var j = i - nn
@@ -55,16 +57,14 @@ object TemporalKernelUtil {
     * min/max here (NaN comparisons are false); an all-NaN window is
     * therefore all zeros, like an empty one.
     */
-  def histCounts(arr: ArrayData, bins: Int): InternalRowLike = {
-    val n = arr.numElements()
+  def histCounts(x: Array[Double], bins: Int): InternalRow = {
+    val n = x.length
     val counts = new Array[Long](bins)
     if (n > 0) {
-      val x = new Array[Double](n)
       var i = 0
       var mn = Double.PositiveInfinity
       var mx = Double.NegativeInfinity
       while (i < n) {
-        x(i) = arr.getDouble(i)
         if (x(i) < mn) mn = x(i)
         if (x(i) > mx) mx = x(i)
         i += 1
@@ -87,14 +87,42 @@ object TemporalKernelUtil {
     while (b < bins) { out(b) = counts(b); b += 1 }
     new GenericInternalRow(out)
   }
-  /** One-pass diff/trapezoid folds — see [[TemporalFoldK]] for the mode
-    * contract. Returns java.lang.Double or null.
+
+  /** One-pass primitive folds over the index-sorted window — the r16 native
+    * twins of the remaining tsfel diff/trapezoid Catalyst HOF chains in
+    * FeatureFuncs (`transform`/`zip_with`/`aggregate` allocate a boxed
+    * element per step, and `array_sort` over a boxed diff array paid an
+    * interpreted comparator per compare — the q100 100× profile's residual
+    * after the r15 kernels). Each mode reproduces the replaced Column
+    * chain's IEEE operations in the same order (differential-pinned in
+    * TemporalFoldSpec). Returns java.lang.Double or null.
+    *
+    *  - MEAN_ABS_DIFF: Σ|Δ| left-to-right / (n−1); null for n < 2.
+    *  - MEDIAN_ABS_DIFF / MEDIAN_DIFF: np.median of (|Δ| / Δ) — diffs with
+    *    −0.0 normalized to 0.0, then sorted as a primitive array (Arrays.sort
+    *    places NaN last like Spark's array_sort; the zero normalization is
+    *    needed because Arrays.sort orders −0.0 strictly before 0.0 while
+    *    array_sort treats them as equal with stable order — normalized, the
+    *    median is numerically identical to the replaced chain's and its zero
+    *    sign is deterministically +0.0, r16 advisory); middle element (odd)
+    *    or mean of the two middle elements (even); null when the window has
+    *    no diffs (n < 2).
+    *  - DISTANCE: Σ √(1 + Δ²) left-to-right; 0.0 when there are no diffs.
+    *  - AUC(fs): Σ |xᵢ + xᵢ₊₁| left-to-right, × (0.5 / fs) — the same
+    *    constant the Column form multiplied once at the end; 0.0 when there
+    *    are no pairs.
+    *  - CENTROID_NUM(fs): Σ i·xᵢ² (0-based position, left-to-right) / fs —
+    *    the NUMERATOR only: the energy denominator stays the native
+    *    sum(v²) aggregate outside the kernel, so the replaced form's exact
+    *    summation orders are both preserved.
+    *  - ABS_DIFF_SUM: Σ|Δ| left-to-right; 0.0 when there are no diffs.
+    *  - SUM_SQ_DIFF: Σ Δ² left-to-right (tsfresh cid_ce's radicand — the
+    *    caller applies the sqrt); 0.0 when there are no diffs.
+    *  - IDX_DOT: Σ position·value left-to-right.
     */
-  def temporalFold(arr: ArrayData, mode: Int, fs: Double): Any = {
-    val n = arr.numElements()
-    val x = new Array[Double](n)
+  def temporalFold(x: Array[Double], mode: Int, fs: Double): Any = {
+    val n = x.length
     var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
     mode match {
       case 0 => // MEAN_ABS_DIFF
         if (n < 2) return null
@@ -174,13 +202,13 @@ object TemporalKernelUtil {
     * hair above the final prefix sum) → null, the fold's ans-stays-null
     * branch. The caller keeps its `when(s > 0, …)` outer guard.
     */
-  def indexMass(arr: ArrayData, s: Double, q: Double): Any = {
-    val n = arr.numElements()
+  def indexMass(x: Array[Double], s: Double, q: Double): Any = {
+    val n = x.length
     val thr = q * s
     var cum = 0.0
     var i = 0
     while (i < n) {
-      cum += math.abs(arr.getDouble(i))
+      cum += math.abs(x(i))
       // the hit test is SPARK's `>=` (NaN greatest, NaN == NaN), not
       // Java's: a NaN-poisoned total makes thr NaN, and the replaced fold
       // still hits at the first NaN prefix sum (cum NaN >= thr NaN) — the
@@ -202,21 +230,21 @@ object TemporalKernelUtil {
     * [[CollectSortedVals]] result — with t = (i − tmin)/3 600 000 000 (µs →
     * hours), accumulated left-to-right in exactly the replaced
     * struct-fold's order — bit-identical sums; the OLS finish stays in the
-    * caller's Column form. A null index reads 0.0, as the replaced fold's
-    * zeroed struct slot did.
+    * caller's Column form. The two arrays pair up position by position
+    * over the shorter one's length (the series input prep drops null
+    * indexes, so the sorted collect's two arrays have equal lengths).
     */
-  def lttFold(idxs: ArrayData, vals: ArrayData, tmin: Double): InternalRow = {
-    val n = vals.numElements()
+  def lttFold(idxs: Array[Double], vals: Array[Double], tmin: Double): InternalRow = {
+    val n = math.min(idxs.length, vals.length)
     var st = 0.0
     var stt = 0.0
     var stv = 0.0
     var i = 0
     while (i < n) {
-      val ix = if (idxs.isNullAt(i)) 0.0 else idxs.getDouble(i)
-      val t = (ix - tmin) / 3600000000.0
+      val t = (idxs(i) - tmin) / 3600000000.0
       st += t
       stt += t * t
-      stv += t * vals.getDouble(i)
+      stv += t * vals(i)
       i += 1
     }
     new GenericInternalRow(Array[Any](st, stt, stv))
@@ -238,14 +266,14 @@ object TemporalKernelUtil {
     * index-sorted window strictly straddling `thr` (touching is not a
     * crossing). 0 for windows shorter than 2.
     */
-  def crossings(arr: ArrayData, thr: Double): Long = {
-    val n = arr.numElements()
+  def crossings(x: Array[Double], thr: Double): Long = {
+    val n = x.length
     if (n <= 1) return 0L
     var c = 0L
-    var prev = gtSpark(arr.getDouble(0), thr)
+    var prev = gtSpark(x(0), thr)
     var i = 1
     while (i < n) {
-      val cur = gtSpark(arr.getDouble(i), thr)
+      val cur = gtSpark(x(i), thr)
       if (cur != prev) c += 1
       prev = cur
       i += 1
@@ -259,13 +287,13 @@ object TemporalKernelUtil {
     * slices divided by a zero count (the caller's n > lag guard discards
     * it either way).
     */
-  def autocorrCov(arr: ArrayData, mu: Double, lag: Int): Double = {
-    val n = arr.numElements()
+  def autocorrCov(x: Array[Double], mu: Double, lag: Int): Double = {
+    val n = x.length
     val m = math.max(n - lag, 0)
     var s = 0.0
     var i = 0
     while (i < m) {
-      s += (arr.getDouble(i) - mu) * (arr.getDouble(i + lag) - mu)
+      s += (x(i) - mu) * (x(i + lag) - mu)
       i += 1
     }
     s / m.toDouble
@@ -278,23 +306,17 @@ object TemporalKernelUtil {
     * bin 1, giving entropy 0 — matching the replaced Column chain's
     * `when(mx > mn, …).otherwise(0)` bin rule and floor(NaN)→0 cast.
     */
-  def binnedEntropy(arr: ArrayData, bins: Int): Double = {
-    val n = arr.numElements()
+  def binnedEntropy(x: Array[Double], bins: Int): Double = {
+    val n = x.length
     if (n == 0) return 0.0
-    val x = new Array[Double](n)
-    var i = 0
     // Spark's min/max aggregates use the same NaN-greatest ordering:
     // max picks NaN when any sample is NaN, min only when all are
     var mn = x(0)
     var mx = x(0)
-    i = 0
+    var i = 1
     while (i < n) {
-      x(i) = arr.getDouble(i)
-      if (i == 0) { mn = x(i); mx = x(i) }
-      else {
-        if (gtSpark(mn, x(i))) mn = x(i)
-        if (gtSpark(x(i), mx)) mx = x(i)
-      }
+      if (gtSpark(mn, x(i))) mn = x(i)
+      if (gtSpark(x(i), mx)) mx = x(i)
       i += 1
     }
     val counts = new Array[Long](bins)
@@ -327,13 +349,13 @@ object TemporalKernelUtil {
   /** tsfresh `longest_strike_above_mean` core: longest run of consecutive
     * index-sorted values strictly above `mu` (the caller's native avg).
     */
-  def longestStrike(arr: ArrayData, mu: Double): Long = {
-    val n = arr.numElements()
+  def longestStrike(x: Array[Double], mu: Double): Long = {
+    val n = x.length
     var best = 0L
     var cur = 0L
     var i = 0
     while (i < n) {
-      cur = if (gtSpark(arr.getDouble(i), mu)) cur + 1 else 0L
+      cur = if (gtSpark(x(i), mu)) cur + 1 else 0L
       if (cur > best) best = cur
       i += 1
     }
@@ -346,270 +368,81 @@ object TemporalKernelUtil {
     * NaN samples count as beyond (|NaN − μ| = NaN sorts above every
     * finite bound under Spark's ordering).
     */
-  def ratioBeyond(arr: ArrayData, mu: Double, sd: Double, r: Double): Double = {
-    val n = arr.numElements()
+  def ratioBeyond(x: Array[Double], mu: Double, sd: Double, r: Double): Double = {
+    val n = x.length
     val bound = r * sd
     var c = 0L
     var i = 0
     while (i < n) {
-      if (gtSpark(math.abs(arr.getDouble(i) - mu), bound)) c += 1
+      if (gtSpark(math.abs(x(i) - mu), bound)) c += 1
       i += 1
     }
     c.toDouble / n.toDouble
   }
 
-  type InternalRowLike = org.apache.spark.sql.catalyst.InternalRow
-}
-
-/** Native neighbourhood-peak count (see
-  * [[TemporalKernelUtil.neighbourhoodPeaks]]). Never null: short/empty
-  * windows count 0, matching the Column fold over an empty tuple array.
-  */
-case class NeighbourhoodPeaksK(child: Expression, nn: Int)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "neighbourhood_peaks"
-  override def nullSafeEval(a: Any): Any =
-    TemporalKernelUtil.neighbourhoodPeaks(a.asInstanceOf[ArrayData], nn)
-  override protected def withNewChildInternal(
-      newChild: Expression): NeighbourhoodPeaksK = copy(child = newChild)
-}
-object NeighbourhoodPeaksK {
-  def apply(arr: Column, nn: Int): Column =
-    ColumnBridge.column(NeighbourhoodPeaksK(ColumnBridge.expression(arr), nn))
-}
-
-/** Native histogram counts (see [[TemporalKernelUtil.histCounts]]) —
-  * struct hist1..histB of longs; empty windows are all zeros.
-  */
-case class HistCountsK(child: Expression, bins: Int)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = StructType(
-    (1 to bins).map(b => StructField(s"hist$b", LongType)))
-  override def prettyName: String = "hist_counts"
-  override def nullSafeEval(a: Any): Any =
-    TemporalKernelUtil.histCounts(a.asInstanceOf[ArrayData], bins)
-  override protected def withNewChildInternal(
-      newChild: Expression): HistCountsK = copy(child = newChild)
-}
-object HistCountsK {
-  def apply(arr: Column, bins: Int): Column =
-    ColumnBridge.column(HistCountsK(ColumnBridge.expression(arr), bins))
-}
-
-/** One-pass primitive folds over the index-sorted window — the r16 native
-  * twins of the remaining tsfel diff/trapezoid Catalyst HOF chains in
-  * FeatureFuncs (`transform`/`zip_with`/`aggregate` allocate a boxed
-  * element per step, and `array_sort` over a boxed diff array paid an
-  * interpreted comparator per compare — the q100 100× profile's residual
-  * after the r15 kernels). Each mode reproduces the replaced Column
-  * chain's IEEE operations in the same order (differential-pinned in
-  * TemporalFoldSpec):
-  *
-  *  - MEAN_ABS_DIFF: Σ|Δ| left-to-right / (n−1); null for n < 2.
-  *  - MEDIAN_ABS_DIFF / MEDIAN_DIFF: np.median of (|Δ| / Δ) — diffs with
-  *    −0.0 normalized to 0.0, then sorted as a primitive array (Arrays.sort
-  *    places NaN last like Spark's array_sort; the zero normalization is
-  *    needed because Arrays.sort orders −0.0 strictly before 0.0 while
-  *    array_sort treats them as equal with stable order — normalized, the
-  *    median is numerically identical to the replaced chain's and its zero
-  *    sign is deterministically +0.0, r16 advisory); middle element (odd)
-  *    or mean of the two middle elements (even); null when the window has
-  *    no diffs (n < 2).
-  *  - DISTANCE: Σ √(1 + Δ²) left-to-right; 0.0 when there are no diffs.
-  *  - AUC(fs): Σ |xᵢ + xᵢ₊₁| left-to-right, × (0.5 / fs) — the same
-  *    constant the Column form multiplied once at the end; 0.0 when there
-  *    are no pairs.
-  *  - CENTROID_NUM(fs): Σ i·xᵢ² (0-based position, left-to-right) / fs —
-  *    the NUMERATOR only: the energy denominator stays the native
-  *    sum(v²) aggregate outside the kernel, so the replaced form's exact
-  *    summation orders are both preserved.
-  *  - ABS_DIFF_SUM: Σ|Δ| left-to-right; 0.0 when there are no diffs.
-  *  - SUM_SQ_DIFF: Σ Δ² left-to-right (tsfresh cid_ce's radicand — the
-  *    caller applies the sqrt); 0.0 when there are no diffs.
-  */
-object TemporalFoldK {
-  val MEAN_ABS_DIFF = 0
-  val MEDIAN_ABS_DIFF = 1
-  val MEDIAN_DIFF = 2
-  val DISTANCE = 3
-  val AUC = 4
-  val CENTROID_NUM = 5
-  val ABS_DIFF_SUM = 6
-  val SUM_SQ_DIFF = 7
-  val IDX_DOT = 8
-
-  def apply(arr: Column, mode: Int, fs: Double = 1.0): Column =
-    ColumnBridge.column(TemporalFoldK(ColumnBridge.expression(arr), mode, fs))
-}
-
-case class TemporalFoldK(child: Expression, mode: Int, fs: Double)
-  extends ArrayDoubleKernel {
-  require(mode >= 0 && mode <= 8, s"unknown temporal-fold mode $mode")
-  require(fs > 0, "sampling rate must be > 0")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "temporal_fold"
-  override def nullSafeEval(a: Any): Any =
-    TemporalKernelUtil.temporalFold(a.asInstanceOf[ArrayData], mode, fs)
-  override protected def withNewChildInternal(
-      newChild: Expression): TemporalFoldK = copy(child = newChild)
-}
-
-/** Threshold-crossing count (see [[TemporalKernelUtil.crossings]]) —
-  * serves both tsfresh `number_crossing_m` (literal threshold) and
-  * seglearn `mean_crossings` (native avg as the scalar child). */
-case class CrossingsK(left: Expression, right: Expression)
-  extends ArrayScalarKernel {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "crossings"
-  override def nullSafeEval(a: Any, thr: Any): Any =
-    TemporalKernelUtil.crossings(a.asInstanceOf[ArrayData],
-      thr.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CrossingsK =
-    copy(left = newLeft, right = newRight)
-}
-object CrossingsK {
-  def apply(arr: Column, thr: Column): Column =
-    ColumnBridge.column(CrossingsK(ColumnBridge.expression(arr),
-      ColumnBridge.expression(thr)))
-}
-
-/** Autocorrelation numerator (see [[TemporalKernelUtil.autocorrCov]]);
-  * the caller divides by its native var_pop under the n > lag guard. */
-case class AutocorrCovK(left: Expression, right: Expression, lag: Int)
-  extends ArrayScalarKernel {
-  require(lag >= 1, "lag must be >= 1")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "autocorr_cov"
-  override def nullSafeEval(a: Any, mu: Any): Any =
-    java.lang.Double.valueOf(TemporalKernelUtil.autocorrCov(
-      a.asInstanceOf[ArrayData], mu.asInstanceOf[Double], lag))
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AutocorrCovK =
-    copy(left = newLeft, right = newRight)
-}
-object AutocorrCovK {
-  def apply(arr: Column, mu: Column, lag: Int): Column =
-    ColumnBridge.column(AutocorrCovK(ColumnBridge.expression(arr),
-      ColumnBridge.expression(mu), lag))
-}
-
-/** tsfresh binned entropy (see [[TemporalKernelUtil.binnedEntropy]]). */
-case class BinnedEntropyK(child: Expression, bins: Int)
-  extends ArrayDoubleKernel {
-  require(bins >= 1, "binned_entropy needs >= 1 bin")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "binned_entropy"
-  override def nullSafeEval(a: Any): Any =
-    java.lang.Double.valueOf(TemporalKernelUtil.binnedEntropy(
-      a.asInstanceOf[ArrayData], bins))
-  override protected def withNewChildInternal(
-      newChild: Expression): BinnedEntropyK = copy(child = newChild)
-}
-object BinnedEntropyK {
-  def apply(arr: Column, bins: Int): Column =
-    ColumnBridge.column(BinnedEntropyK(ColumnBridge.expression(arr), bins))
-}
-
-/** Longest strictly-above-scalar run (see
-  * [[TemporalKernelUtil.longestStrike]]). */
-case class LongestStrikeK(left: Expression, right: Expression)
-  extends ArrayScalarKernel {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "longest_strike"
-  override def nullSafeEval(a: Any, mu: Any): Any =
-    TemporalKernelUtil.longestStrike(a.asInstanceOf[ArrayData],
-      mu.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LongestStrikeK =
-    copy(left = newLeft, right = newRight)
-}
-object LongestStrikeK {
-  def apply(arr: Column, mu: Column): Column =
-    ColumnBridge.column(LongestStrikeK(ColumnBridge.expression(arr),
-      ColumnBridge.expression(mu)))
-}
-
-/** |x − μ| > r·σ fraction (see [[TemporalKernelUtil.ratioBeyond]]);
-  * children: (array, μ, σ) with μ/σ the caller's native aggregates. */
-case class RatioBeyondK(first: Expression, second: Expression,
-                        third: Expression, r: Double)
-  extends TernaryExpression with CodegenFallback {
-  require(r >= 1, "sigma multiple must be >= 1")
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType, DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, double, double), " +
-          s"got (${a.sql}, ${b.sql}, ${c.sql})")
+  /** One-pass Hjorth variance pair over the index-sorted window (reference:
+    * the antropy `hjorth_params` member of the integration surface,
+    * tests/test_features_integration.py:375-380): var_pop of the first and
+    * second differences in ONE primitive pass — the replaced Column form
+    * materialized the dx and ddx arrays (slice + zip_with, one boxed element
+    * per step) and folded each through an `aggregate` lambda. Accumulation
+    * order and the (n, Σ, Σ²) finish are the replaced chains' exactly
+    * (differential-pinned in SortedCollectSpec): dx_j = x[j+1] − x[j] summed
+    * left-to-right into (s, s²) interleaved per element; ddx likewise over
+    * the dx values; finish (Σd² − (Σd)²/n)/n. `vdx` is null for windows
+    * shorter than 2, `vddx` shorter than 3 — the empty-array aggregate's
+    * null finish. var_pop(x) itself stays the caller's native order-free
+    * aggregate, as before.
+    */
+  def hjorthFold(x: Array[Double]): InternalRow = {
+    val n = x.length
+    var n1 = 0L; var s1 = 0.0; var q1 = 0.0
+    var n2 = 0L; var s2 = 0.0; var q2 = 0.0
+    var prevDx = 0.0
+    var i = 1
+    while (i < n) {
+      val dx = x(i) - x(i - 1)
+      n1 += 1; s1 += dx; q1 += dx * dx
+      if (i >= 2) {
+        val dd = dx - prevDx
+        n2 += 1; s2 += dd; q2 += dd * dd
+      }
+      prevDx = dx
+      i += 1
     }
-  override def nullable: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "ratio_beyond_sigma"
-  override def nullSafeEval(a: Any, mu: Any, sd: Any): Any =
-    java.lang.Double.valueOf(TemporalKernelUtil.ratioBeyond(
-      a.asInstanceOf[ArrayData], mu.asInstanceOf[Double],
-      sd.asInstanceOf[Double], r))
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): RatioBeyondK =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-object RatioBeyondK {
-  def apply(arr: Column, mu: Column, sd: Column, r: Double): Column =
-    ColumnBridge.column(RatioBeyondK(ColumnBridge.expression(arr),
-      ColumnBridge.expression(mu), ColumnBridge.expression(sd), r))
-}
+    val vdx: Any = if (n1 > 0) {
+      val d = n1.toDouble
+      java.lang.Double.valueOf((q1 - s1 * s1 / d) / d)
+    } else null
+    val vddx: Any = if (n2 > 0) {
+      val d = n2.toDouble
+      java.lang.Double.valueOf((q2 - s2 * s2 / d) / d)
+    } else null
+    new GenericInternalRow(Array[Any](vdx, vddx))
+  }
 
-/** Prefix-mass quantile position (see [[TemporalKernelUtil.indexMass]]);
-  * the scalar child is the caller's native sum(abs(v)) aggregate. */
-case class IndexMassK(left: Expression, right: Expression, q: Double)
-  extends ArrayScalarKernel {
-  require(q > 0 && q < 1, "mass quantile must be in (0, 1)")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "index_mass_quantile"
-  override def nullSafeEval(a: Any, s: Any): Any =
-    TemporalKernelUtil.indexMass(a.asInstanceOf[ArrayData],
-      s.asInstanceOf[Double], q)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): IndexMassK =
-    copy(left = newLeft, right = newRight)
-}
-object IndexMassK {
-  def apply(arr: Column, s: Column, q: Double): Column =
-    ColumnBridge.column(IndexMassK(ColumnBridge.expression(arr),
-      ColumnBridge.expression(s), q))
-}
-
-/** linear_trend_timewise's (Σt, Σt², Σt·v) fold over the index-sorted
-  * index and value arrays (see [[TemporalKernelUtil.lttFold]]); tmin is the
-  * caller's native min(idx) aggregate. */
-case class LttFoldK(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (i, v, t) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, array<double>, double), " +
-          s"got (${i.sql}, ${v.sql}, ${t.sql})")
+  /** Sign-change count of the first differences over the index-sorted window
+    * (reference: the antropy `petrosian_fd` N_Δ term of the integration
+    * surface's fractal sweep). Replaces the signum-transform array plus the
+    * zip_with/aggregate fold: one pass tracking the previous difference's
+    * signum, counting pairs whose signums differ under Spark SQL `=!=`
+    * semantics (−0.0 equals 0.0; NaN equals NaN — so a NaN-signum pair
+    * contributes 0, exactly as `when(a =!= b, 1.0)` evaluated). The count
+    * accumulates as the same left-to-right double sum of 1.0s; windows with
+    * fewer than two differences return 0.0 (the empty fold's base).
+    */
+  def petrosianNd(x: Array[Double]): Double = {
+    val n = x.length
+    if (n < 3) return 0.0
+    var nd = 0.0
+    var prevSg = 0.0
+    var i = 1
+    while (i < n) {
+      val sg = math.signum(x(i) - x(i - 1))
+      if (i >= 2 && !(sg == prevSg || (sg != sg && prevSg != prevSg))) nd += 1.0
+      prevSg = sg
+      i += 1
     }
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("st", DoubleType), StructField("stt", DoubleType),
-    StructField("stv", DoubleType)))
-  override def prettyName: String = "ltt_fold"
-  override def nullSafeEval(i: Any, v: Any, tmin: Any): Any =
-    TemporalKernelUtil.lttFold(i.asInstanceOf[ArrayData],
-      v.asInstanceOf[ArrayData], tmin.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): LttFoldK =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-object LttFoldK {
-  def apply(idxs: Column, vals: Column, tmin: Column): Column =
-    ColumnBridge.column(LttFoldK(ColumnBridge.expression(idxs),
-      ColumnBridge.expression(vals), ColumnBridge.expression(tmin)))
+    nd
+  }
 }

@@ -1,9 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
 /** tsfel wavelet battery (r11 tranche 5 — the CWT members of the
@@ -37,12 +34,10 @@ object WaveletUtil {
     Seq("wavelet_entropy") ++
       widths.flatMap(w => Seq(s"wam_$w", s"wsd_$w", s"wen_$w"))
 
-  def compute(arr: ArrayData, widths: Seq[Int]): Any = {
-    val n = arr.numElements()
+  def compute(x: Array[Double], widths: Seq[Int]): Any = {
+    val n = x.length
     if (n < 2) return null
-    val x = new Array[Double](n)
     var i = 0
-    while (i < n) { x(i) = arr.getDouble(i); i += 1 }
     val out = new Array[Any](1 + 3 * widths.length)
     val energy = new Array[Double](widths.length)
     var wi = 0
@@ -94,25 +89,6 @@ object WaveletUtil {
   }
 }
 
-/** Native Ricker-CWT wavelet battery (see [[WaveletUtil]]). */
-case class WaveletSlice(child: Expression, widths: Seq[Int])
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = StructType(
-    WaveletUtil.names(widths).map(StructField(_, DoubleType)))
-  override def prettyName: String = "wavelet"
-
-  override def nullSafeEval(a: Any): Any =
-    WaveletUtil.compute(a.asInstanceOf[ArrayData], widths)
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WaveletSlice = copy(child = newChild)
-}
-
-object WaveletSlice {
-  def apply(arr: Column, widths: Seq[Int]): Column =
-    ColumnBridge.column(WaveletSlice(ColumnBridge.expression(arr), widths))
-}
-
 /** Two more tsfel spectral members on the shared periodogram path:
   * `human_range_energy` generalized to a parametric band-energy ratio
   * (Σ psd over f ∈ [lo, hi] / Σ psd — tsfel's fixed 0.6–2.5 Hz band is a
@@ -127,13 +103,12 @@ object SpectralExtrasUtil {
   val names: Seq[String] = Seq("band_energy", "spec_dist_rel")
   val dataType: StructType = StructType(names.map(StructField(_, DoubleType)))
 
-  def compute(arr: ArrayData, fs: Double, lo: Double, hi: Double): Any = {
-    val n = arr.numElements()
+  def compute(x: Array[Double], fs: Double, lo: Double, hi: Double): Any = {
+    val n = x.length
     if (n < 4) return null
-    val x = new Array[Double](n)
     var i = 0
     var sxx = 0.0
-    while (i < n) { x(i) = arr.getDouble(i); sxx += x(i) * x(i); i += 1 }
+    while (i < n) { sxx += x(i) * x(i); i += 1 }
     val psd = Fft.halfPsd(x)
     val bigK = psd.length
     var tot = 0.0
@@ -169,26 +144,4 @@ object SpectralExtrasUtil {
     } else out(1) = null
     new GenericInternalRow(out)
   }
-}
-
-/** Native band-energy ratio + normalized spectral distance (see
-  * [[SpectralExtrasUtil]]).
-  */
-case class SpectralExtras(child: Expression, fs: Double, lo: Double,
-                          hi: Double)
-  extends ArrayDoubleKernel {
-  override def dataType: DataType = SpectralExtrasUtil.dataType
-  override def prettyName: String = "spectral_extras"
-
-  override def nullSafeEval(a: Any): Any =
-    SpectralExtrasUtil.compute(a.asInstanceOf[ArrayData], fs, lo, hi)
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SpectralExtras = copy(child = newChild)
-}
-
-object SpectralExtras {
-  def apply(arr: Column, fs: Double, lo: Double, hi: Double): Column =
-    ColumnBridge.column(
-      SpectralExtras(ColumnBridge.expression(arr), fs, lo, hi))
 }

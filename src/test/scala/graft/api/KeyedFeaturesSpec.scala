@@ -217,4 +217,34 @@ class KeyedFeaturesSpec extends SparkSpec {
     val r = out.collect()(0)
     assert(r.getDouble(2) == 1.0 && r.getDouble(3) == 5.0)
   }
+
+  test("keyed paths reject windows of the wrong domain and sample-count windows") {
+    import spark.implicits._
+    val num = Seq(("a", 0.0, 1.0), ("a", 1.0, 2.0)).toDF("k", "idx", "v")
+    val ts = Seq(("a", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0))
+      .toDF("k", "idx", "v")
+    def rejected(build: => Any, what: String): Unit = {
+      val e = intercept[IllegalArgumentException](build)
+      assert(e.getMessage.contains(what), e.getMessage)
+    }
+    val domain = "window/stride domain must match series domain"
+    // a time window over a numeric index would run as 8.64e10 index units
+    rejected(KeyedFeatures.calculate(num, "k", "idx", "v",
+      Win.time("1D"), Seq(Win.time("6h")), Seq(len), "v"), domain)
+    // a numeric stride under a time window over a time index
+    rejected(KeyedFeatures.calculateWide(ts, "k", "idx",
+      Win.time("1D"), Seq(Win.seq(2L)), Seq("v" -> len)), domain)
+    rejected(KeyedFeatures.calculateWideMulti(num, "k", "idx",
+      Seq(Win.seq(2L) -> Seq(Win.seq(1L)), Win.time("1h") -> Seq(Win.time("1h"))),
+      Seq("v" -> len)), domain)
+    // a sample-count window would run as 500 index units
+    rejected(KeyedFeatures.calculate(ts, "k", "idx", "v",
+      SampleWin(500), Seq(SampleWin(100)), Seq(len), "v"),
+      "sample-count windows are not supported")
+    // the well-typed calls still build
+    KeyedFeatures.calculate(num, "k", "idx", "v", Win.seq(2L), Seq(Win.seq(1L)),
+      Seq(len), "v")
+    KeyedFeatures.calculate(ts, "k", "idx", "v", Win.time("1D"),
+      Seq(Win.time("6h")), Seq(len), "v")
+  }
 }

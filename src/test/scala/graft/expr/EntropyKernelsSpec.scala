@@ -105,8 +105,7 @@ class EntropyKernelsSpec extends AnyFunSuite {
   }
 
   test("svd entropy: degenerate windows give 0 or null") {
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    def arr(xs: Double*) = ArrayData.toArrayData(xs.toArray)
+    def arr(xs: Double*) = xs.toArray
     // constant window: rank-1 embedding, single nonzero singular value
     assert(svdEntropy(arr(1, 1, 1, 1, 1), 3, 1, false) == 0.0)
     // alternating +-1: rank-1 again
@@ -118,14 +117,13 @@ class EntropyKernelsSpec extends AnyFunSuite {
     // normalized entropy of an order-3 spectrum is in [0, 1]
     val rnd = new scala.util.Random(3)
     val x = Array.fill(50)(rnd.nextGaussian())
-    val h = svdEntropy(ArrayData.toArrayData(x), 3, 1, true)
+    val h = svdEntropy(x, 3, 1, true)
       .asInstanceOf[Double]
     assert(h > 0.0 && h <= 1.0)
   }
 
   test("kde/gauss entropy: numpy-generated vectors, guards, scale invariance") {
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    def arr(xs: Double*) = ArrayData.toArrayData(xs.toArray)
+    def arr(xs: Double*) = xs.toArray
     def d(a: Any) = a.asInstanceOf[java.lang.Double].doubleValue()
     // vectors generated by an independent numpy model of the documented
     // convention (Silverman bandwidth on sample std incl. self term; gauss
@@ -133,8 +131,7 @@ class EntropyKernelsSpec extends AnyFunSuite {
     val v1 = arr(1.0, 2.0, 4.0, 7.0, 11.0, 11.5, 3.25, -2.0)
     assert(math.abs(d(kdeEntropy(v1, gauss = false)) - 0.9860896266115526) < 1e-12)
     assert(math.abs(d(kdeEntropy(v1, gauss = true)) - 0.9577072025650665) < 1e-12)
-    val v4 = ArrayData.toArrayData(
-      (0 until 25).map(i => math.sin(i * 0.9) + 0.2 * i).toArray)
+    val v4 = (0 until 25).map(i => math.sin(i * 0.9) + 0.2 * i).toArray
     assert(math.abs(d(kdeEntropy(v4, gauss = false)) - 0.9896941356462368) < 1e-12)
     assert(math.abs(d(kdeEntropy(v4, gauss = true)) - 0.9720302026858585) < 1e-12)
     // guards: constant window -> null (kde: singular covariance) / 0 (gauss);
@@ -149,18 +146,17 @@ class EntropyKernelsSpec extends AnyFunSuite {
     assert(kdeEntropy(arr(1.0, Double.NaN, 3.0), gauss = false) == null)
     assert(kdeEntropy(arr(1.0, Double.PositiveInfinity, 3.0), gauss = true) == null)
     // scale/shift invariance (what makes tsfel's max-abs rescale a no-op)
-    val v1s = ArrayData.toArrayData(
-      Array(1.0, 2.0, 4.0, 7.0, 11.0, 11.5, 3.25, -2.0).map(x => x * 137.0 - 40.0))
+    val v1s =
+      Array(1.0, 2.0, 4.0, 7.0, 11.0, 11.5, 3.25, -2.0).map(x => x * 137.0 - 40.0)
     assert(math.abs(d(kdeEntropy(v1s, gauss = false)) -
       d(kdeEntropy(v1, gauss = false))) < 1e-9)
   }
 
   test("svd entropy is scale-invariant down to tiny amplitudes (relative Jacobi tol)") {
-    import org.apache.spark.sql.catalyst.util.ArrayData
     val rnd = new scala.util.Random(11)
     val base = Array.fill(60)(rnd.nextGaussian())
     def h(scale: Double, order: Int): Double =
-      svdEntropy(ArrayData.toArrayData(base.map(_ * scale)), order, 1, false)
+      svdEntropy(base.map(_ * scale), order, 1, false)
         .asInstanceOf[Double]
     for (order <- Seq(2, 3, 4)) {
       val h1 = h(1.0, order)
@@ -178,9 +174,7 @@ class EntropyKernelsSpec extends AnyFunSuite {
     assert(math.abs(h - 2.0) < 1e-12)
     // coarse-grain at scale 2 of (1,3, 5,1, 2,2, 4,0) -> (2,3,2,2):
     // tuples (2,3,2),(3,2,2): patterns argsort -> distinct -> H = 1 bit
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    val row = mspe(ArrayData.toArrayData(
-      Array(1, 3, 5, 1, 2, 2, 4, 0.0)), 3, 2)
+    val row = mspe(Array(1, 3, 5, 1, 2, 2, 4, 0.0), 3, 2)
     assert(math.abs(row.getDouble(1) - 1.0) < 1e-12)
   }
 }

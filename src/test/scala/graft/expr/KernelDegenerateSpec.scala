@@ -1,11 +1,10 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Degenerate-input parity rows for the seven r15 native kernels (Wpe,
-  * PermEntropyK, ShannonFreq, ApenBinned, SampenBinned — EntropyKernels;
-  * NeighbourhoodPeaksK, HistCountsK — TemporalKernels). The Column
+/** Degenerate-input parity rows for the seven r15 native kernels (wpe,
+  * perm_entropy, shannon_freq, apen_binned, sampen_binned — EntropyKernels;
+  * neighbourhood_peaks, hist_counts — TemporalKernels). The Column
   * formulations they replaced are deleted, so kernel-vs-Column
   * differentials can no longer run; these hand-computed NaN / Inf /
   * empty / single-element / constant-window rows are the remaining guard
@@ -29,7 +28,7 @@ class KernelDegenerateSpec extends AnyFunSuite {
 
   private val nan = Double.NaN
   private val inf = Double.PositiveInfinity
-  private def ad(xs: Double*): ArrayData = new GenericArrayData(xs.toArray)
+  private def ad(xs: Double*): Array[Double] = xs.toArray
   private def d(a: Any): Double = a.asInstanceOf[java.lang.Double].doubleValue()
   private def close(a: Any, expect: Double, tol: Double = 1e-12): Unit = {
     assert(a != null, s"expected ~$expect, got null")
@@ -173,7 +172,7 @@ class KernelDegenerateSpec extends AnyFunSuite {
 
   // ---- histCounts (tsfel hist, equal-width bins) --------------------------
 
-  private def hist(a: ArrayData, bins: Int): Seq[Long] = {
+  private def hist(a: Array[Double], bins: Int): Seq[Long] = {
     val row = histCounts(a, bins)
     (0 until bins).map(row.getLong)
   }

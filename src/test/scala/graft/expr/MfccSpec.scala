@@ -2,7 +2,6 @@ package graft.expr
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** tsfel mfcc kernel (r12): hand-oracled against an INDEPENDENT numpy
   * model of tsfel's published algorithm (pre-emphasis → rfft(·, 512)
@@ -16,7 +15,7 @@ class MfccSpec extends AnyFunSuite {
   private val fbank = MfccUtil.filterbank(0.04)
 
   private def run(x: Array[Double]): Array[Double] = {
-    val row = MfccUtil.compute(ArrayData.toArrayData(x), fbank, 6)
+    val row = MfccUtil.compute(x, fbank, 6)
       .asInstanceOf[InternalRow]
     Array.tabulate(6)(row.getDouble)
   }
@@ -47,8 +46,8 @@ class MfccSpec extends AnyFunSuite {
   }
 
   test("short window fence: n < 2 yields null") {
-    assert(MfccUtil.compute(ArrayData.toArrayData(Array(1.5)), fbank, 6) == null)
-    assert(MfccUtil.compute(ArrayData.toArrayData(Array.empty[Double]), fbank, 6) == null)
+    assert(MfccUtil.compute(Array(1.5), fbank, 6) == null)
+    assert(MfccUtil.compute(Array.empty[Double], fbank, 6) == null)
   }
 
   test("filterbank shape invariants (fs=0.04): 40 rows, unit peaks, " +

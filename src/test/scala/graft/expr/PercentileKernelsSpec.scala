@@ -5,7 +5,7 @@ import graft.SparkSpec
 
 /** Differential spec for the r18 percentile kernels.
   *
-  * [[PercentilesK]] / [[PercentileSpanK]] must reproduce the REPLACED
+  * [[Kernels.percentiles]] / [[Kernels.percentileSpan]] must reproduce the REPLACED
   * `percentile(v, q)` aggregate bit-for-bit through a real grouped
   * aggregation: the kernel's sort + interpolation is pinned to
   * `PercentileBase.getPercentile` ((n−1)·q position, (hi−pos)·lo +
@@ -44,7 +44,7 @@ class PercentileKernelsSpec extends SparkSpec {
 
     val oldAggs = QS.zipWithIndex.map { case (q, i) =>
       percentile(col("v"), lit(q)).as(s"o$i") }
-    val newAgg = PercentilesK(collect_list(col("v").cast("double")), QS).as("p")
+    val newAgg = Kernels.percentiles(QS)(collect_list(col("v").cast("double"))).as("p")
     val out = df.groupBy("g")
       .agg(newAgg, oldAggs: _*)
       .collect()
@@ -71,7 +71,7 @@ class PercentileKernelsSpec extends SparkSpec {
              else r.nextGaussian() * 10)
     val df = rows.toDF("g", "v")
     val out = df.groupBy("g")
-      .agg(PercentileSpanK(collect_list(col("v").cast("double")), 0.25, 0.75)
+      .agg(Kernels.percentileSpan(0.25, 0.75)(collect_list(col("v").cast("double")))
              .as("nw"),
         (percentile(col("v"), lit(0.75)) - percentile(col("v"), lit(0.25)))
           .as("old"))
@@ -90,8 +90,8 @@ class PercentileKernelsSpec extends SparkSpec {
     val df = Seq((1, null: java.lang.Double), (1, null: java.lang.Double))
       .toDF("g", "v")
     val row = df.groupBy("g").agg(
-      PercentilesK(collect_list(col("v").cast("double")), Seq(0.5)).as("p"),
-      PercentileSpanK(collect_list(col("v").cast("double")), 0.25, 0.75)
+      Kernels.percentiles(Seq(0.5))(collect_list(col("v").cast("double"))).as("p"),
+      Kernels.percentileSpan(0.25, 0.75)(collect_list(col("v").cast("double")))
         .as("s"),
       percentile(col("v"), lit(0.5)).as("o")).collect().head
     assert(row.isNullAt(1) && row.isNullAt(2) && row.isNullAt(3))
@@ -108,8 +108,8 @@ class PercentileKernelsSpec extends SparkSpec {
       (2, Seq[java.lang.Double](null, null))
     ).toDF("g", "a")
     val out = df.select(col("g"),
-      PercentilesK(col("a").cast("array<double>"), Seq(0.0, 0.5, 1.0)).as("p"),
-      PercentileSpanK(col("a").cast("array<double>"), 0.0, 1.0).as("s"))
+      Kernels.percentiles(Seq(0.0, 0.5, 1.0))(col("a").cast("array<double>")).as("p"),
+      Kernels.percentileSpan(0.0, 1.0)(col("a").cast("array<double>")).as("s"))
       .collect().sortBy(_.getInt(0))
     val p1 = out(0).getSeq[Double](1)
     assert(p1 == Seq(1.0, 2.0, 3.0), s"got $p1")

@@ -11,8 +11,8 @@ import graft.SparkSpec
   * bit-for-bit through a real grouped aggregation — duplicate and null
   * indexes, −0.0/0.0 ties, NaN carriers and all — and its index field the
   * same chain's `_.i` (the sorted index the `fromPairs` hatch and
-  * linear_trend_timewise used to buffer separately). [[HjorthFoldK]] and
-  * [[PetrosianNdK]] must reproduce their replaced slice+zip_with+aggregate
+  * linear_trend_timewise used to buffer separately). [[TemporalKernelUtil.hjorthFold]] and
+  * [[TemporalKernelUtil.petrosianNd]] must reproduce their replaced slice+zip_with+aggregate
   * chains (kept here verbatim) on the KernelDegenerateSpec battery, and the
   * katz path's ABS_DIFF_SUM swap is pinned against the replaced
   * transform+fold form.
@@ -153,7 +153,7 @@ class SortedCollectSpec extends SparkSpec {
     val m2 = greatest(col("n") - 2L, lit(0L)).cast("int")
     val dx = arrDiffs(col("w"), m1)
     val ddx = arrDiffs(dx, m2)
-    val hj = HjorthFoldK(col("w"))
+    val hj = Kernels.hjorthFold(col("w"))
     val rows = df.select(col("w"),
       hj.getField("vdx").as("k1"), arrVarPop(dx).as("o1"),
       hj.getField("vddx").as("k2"), arrVarPop(ddx).as("o2")).collect()
@@ -177,7 +177,7 @@ class SortedCollectSpec extends SparkSpec {
       zip_with(slice(sg, lit(2), m2), slice(sg, lit(1), m2),
         (a, b) => when(a =!= b, 1.0).otherwise(0.0)),
       lit(0.0), (acc, x) => acc + x)
-    val rows = df.select(col("w"), PetrosianNdK(col("w")).as("k"), old.as("o"))
+    val rows = df.select(col("w"), Kernels.petrosianNd(col("w")).as("k"), old.as("o"))
       .collect()
     rows.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(1)) ==
@@ -193,7 +193,7 @@ class SortedCollectSpec extends SparkSpec {
     val old = aggregate(transform(arrDiffs(col("w"), m1), x => abs(x)),
       lit(0.0), (acc, x) => acc + x)
     val rows = df.select(col("w"),
-      TemporalFoldK(col("w"), TemporalFoldK.ABS_DIFF_SUM).as("k"), old.as("o"))
+      Kernels.temporalFold(TemporalKernelUtil.ABS_DIFF_SUM)(col("w")).as("k"), old.as("o"))
       .collect()
     rows.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(1)) ==
@@ -207,9 +207,9 @@ class SortedCollectSpec extends SparkSpec {
     val df = Seq(
       Seq.empty[Double], Seq(5.0), Seq(1.0, 3.0), Seq(1.0, 2.0, 4.0))
       .toDF("w")
-    val hj = HjorthFoldK(col("w"))
+    val hj = Kernels.hjorthFold(col("w"))
     val got = df.select(hj.getField("vdx"), hj.getField("vddx"),
-      PetrosianNdK(col("w"))).collect()
+      Kernels.petrosianNd(col("w"))).collect()
     // n=0, n=1: no diffs at all
     assert(got(0).isNullAt(0) && got(0).isNullAt(1) && got(0).getDouble(2) == 0.0)
     assert(got(1).isNullAt(0) && got(1).isNullAt(1) && got(1).getDouble(2) == 0.0)

@@ -4,13 +4,14 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Differential spec for [[TemporalFoldK]]: each mode must reproduce the
+/** Differential spec for [[TemporalKernelUtil.temporalFold]]: each mode must reproduce the
   * REPLACED Catalyst HOF chain bit-for-bit on random windows (the chains
   * are kept here verbatim), plus hand-computed degenerate rows (empty /
   * single / constant / NaN / Inf) in the KernelDegenerateSpec tradition.
   */
 class TemporalFoldSpec extends SparkSpec {
-  import TemporalFoldK._
+  import TemporalKernelUtil.{ABS_DIFF_SUM, AUC, CENTROID_NUM, DISTANCE,
+    IDX_DOT, MEAN_ABS_DIFF, MEDIAN_ABS_DIFF, MEDIAN_DIFF, SUM_SQ_DIFF}
 
   // ---- the replaced Column forms, verbatim (over a ready values array) ----
 
@@ -78,20 +79,20 @@ class TemporalFoldSpec extends SparkSpec {
     val vals = col("w")
     val fs = 0.04
     val cases: Seq[(String, Column, Column)] = Seq(
-      ("mean_abs_diff", TemporalFoldK(vals, MEAN_ABS_DIFF),
+      ("mean_abs_diff", Kernels.temporalFold(MEAN_ABS_DIFF)(vals),
         oldMeanAbsDiff(vals, col("n"))),
-      ("median_abs_diff", TemporalFoldK(vals, MEDIAN_ABS_DIFF),
+      ("median_abs_diff", Kernels.temporalFold(MEDIAN_ABS_DIFF)(vals),
         oldMedian(transform(arrDiffs(vals, (col("n") - 1).cast("int")),
           x => abs(x)), (col("n") - 1).cast("int"))),
-      ("median_diff", TemporalFoldK(vals, MEDIAN_DIFF),
+      ("median_diff", Kernels.temporalFold(MEDIAN_DIFF)(vals),
         oldMedian(arrDiffs(vals, (col("n") - 1).cast("int")),
           (col("n") - 1).cast("int"))),
-      ("distance", TemporalFoldK(vals, DISTANCE),
+      ("distance", Kernels.temporalFold(DISTANCE)(vals),
         oldDistance(vals, col("n"))),
-      ("auc", TemporalFoldK(vals, AUC, fs), oldAuc(vals, col("n"), fs)),
-      ("centroid_num", TemporalFoldK(vals, CENTROID_NUM, fs),
+      ("auc", Kernels.temporalFold(AUC, fs)(vals), oldAuc(vals, col("n"), fs)),
+      ("centroid_num", Kernels.temporalFold(CENTROID_NUM, fs)(vals),
         oldCentroidNum(vals, fs)),
-      ("abs_diff_sum", TemporalFoldK(vals, ABS_DIFF_SUM),
+      ("abs_diff_sum", Kernels.temporalFold(ABS_DIFF_SUM)(vals),
         oldAbsDiffSum(vals, col("n"))))
     for ((name, kernel, old) <- cases) {
       val rows = df.select(col("w"), kernel.as("k"), old.as("o")).collect()
@@ -179,9 +180,9 @@ class TemporalFoldSpec extends SparkSpec {
     val j = df.join(stats, Seq("id"))
     val vals = col("w")
     val cases: Seq[(String, Column, Column)] = Seq(
-      ("crossings(3.5)", CrossingsK(vals, lit(3.5)),
+      ("crossings(3.5)", Kernels.crossings(vals, lit(3.5)),
         oldCrossings(vals, col("n"), lit(3.5))),
-      ("mean_crossings", CrossingsK(vals, col("mu")),
+      ("mean_crossings", Kernels.crossings(vals, col("mu")),
         oldCrossings(vals, col("n"), col("mu"))),
       // autocorr lag 1 only here: every window has n ≥ 2, so the replaced
       // form's 0.0 / 0 divisor never evaluates. At lag 3 the OLD chain
@@ -190,15 +191,15 @@ class TemporalFoldSpec extends SparkSpec {
       // CaseWhen guards the cov/varp division, not the fold's internal
       // one); the kernel's Java 0.0/0 = NaN fixes it — pinned below on
       // the n > 3 subset and in the degenerate rows.
-      ("autocorr_cov(1)", AutocorrCovK(vals, col("mu"), 1),
+      ("autocorr_cov(1)", Kernels.autocorrCov(1)(vals, col("mu")),
         oldAutocorrCov(vals, col("n"), col("mu"), 1)),
-      ("binned_entropy(5)", BinnedEntropyK(vals, 5),
+      ("binned_entropy(5)", Kernels.binnedEntropy(5)(vals),
         oldBinnedEntropy(vals, col("n"), col("mn"), col("mx"), 5)),
-      ("sum_sq_diff", TemporalFoldK(vals, SUM_SQ_DIFF),
+      ("sum_sq_diff", Kernels.temporalFold(SUM_SQ_DIFF)(vals),
         oldSumSqDiff(vals, col("n"))),
-      ("longest_strike", LongestStrikeK(vals, col("mu")),
+      ("longest_strike", Kernels.longestStrike(vals, col("mu")),
         oldLongestStrike(vals, col("mu"))),
-      ("ratio_beyond(1)", RatioBeyondK(vals, col("mu"), col("sd"), 1.0),
+      ("ratio_beyond(1)", Kernels.ratioBeyond(1.0)(vals, col("mu"), col("sd")),
         oldRatioBeyond(vals, col("n"), col("mu"), col("sd"), 1)))
     for ((name, kernel, old) <- cases) {
       val rows = try j.select(col("w"), kernel.cast("double").as("k"),
@@ -223,7 +224,7 @@ class TemporalFoldSpec extends SparkSpec {
       .groupBy("id").agg(avg(col("x")).as("mu"))
     val j = df.join(stats, Seq("id"))
     val rows = j.select(col("w"),
-      AutocorrCovK(col("w"), col("mu"), 3).as("k"),
+      Kernels.autocorrCov(3)(col("w"), col("mu")).as("k"),
       oldAutocorrCov(col("w"), col("n"), col("mu"), 3).as("o")).collect()
     rows.foreach { r =>
       assert(bits(java.lang.Double.valueOf(r.getDouble(1))) ==
@@ -234,7 +235,7 @@ class TemporalFoldSpec extends SparkSpec {
     // threw DIVIDE_BY_ZERO under ANSI — the wrapper's n > lag guard
     // discards the value either way
     val short = Seq(Seq(1.0, 2.0)).toDF("w")
-      .select(AutocorrCovK(col("w"), lit(1.5), 3).as("k")).head()
+      .select(Kernels.autocorrCov(3)(col("w"), lit(1.5)).as("k")).head()
     assert(java.lang.Double.isNaN(short.getDouble(0)))
   }
 
@@ -257,15 +258,14 @@ class TemporalFoldSpec extends SparkSpec {
       zip_with(gtPrev, gtNext,
         (a, b) => when(a === 1 && b === 1, 1L).otherwise(0L)),
       lit(0L), (acc, x) => acc + x)).otherwise(lit(0L))
-    val rows = df.select(NeighbourhoodPeaksK(vals, 1).as("k"), old.as("o"))
+    val rows = df.select(Kernels.neighbourhoodPeaks(1)(vals).as("k"), old.as("o"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
   test("degenerate windows: hand-computed expectations") {
-    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-    def ad(xs: Double*): ArrayData = new GenericArrayData(xs.toArray)
-    def f(a: ArrayData, mode: Int, fs: Double = 1.0): Any =
+    def ad(xs: Double*): Array[Double] = xs.toArray
+    def f(a: Array[Double], mode: Int, fs: Double = 1.0): Any =
       TemporalKernelUtil.temporalFold(a, mode, fs)
     // no diffs -> null for mean/median modes, 0.0 for the sum modes
     for (a <- Seq(ad(), ad(7.0))) {
@@ -353,12 +353,12 @@ class TemporalFoldSpec extends SparkSpec {
     val oldLtt = oldLttFold(pairs, tmin)
 
     val rows = df.select(
-      TemporalFoldK(vals, IDX_DOT).as("kd"), oldIdxDot.as("od"),
+      Kernels.temporalFold(IDX_DOT)(vals).as("kd"), oldIdxDot.as("od"),
       // the member guards both forms with when(s > 0, …) — compare as used
-      when(s > 0, IndexMassK(vals, s, 0.15)).as("k15"), oldMass(0.15).as("o15"),
-      when(s > 0, IndexMassK(vals, s, 0.5)).as("k50"), oldMass(0.5).as("o50"),
-      when(s > 0, IndexMassK(vals, s, 0.75)).as("k75"), oldMass(0.75).as("o75"),
-      LttFoldK(transform(pairs, p => p.getField("i")), vals, tmin).as("kl"),
+      when(s > 0, Kernels.indexMass(0.15)(vals, s)).as("k15"), oldMass(0.15).as("o15"),
+      when(s > 0, Kernels.indexMass(0.5)(vals, s)).as("k50"), oldMass(0.5).as("o50"),
+      when(s > 0, Kernels.indexMass(0.75)(vals, s)).as("k75"), oldMass(0.75).as("o75"),
+      Kernels.lttFold(transform(pairs, p => p.getField("i")), vals, tmin).as("kl"),
       oldLtt.as("ol"),
       vals.as("w")).collect()
     def d(r: org.apache.spark.sql.Row, i: Int): java.lang.Double =
@@ -392,7 +392,7 @@ class TemporalFoldSpec extends SparkSpec {
       when(col("v").isNotNull, struct(col("i").as("i"), col("v").as("v")))))
     val tmin = min(col("i"))
     val out = df.groupBy("g").agg(
-      LttFoldK(s.getField("i"), s.getField("v"), tmin).as("k"),
+      Kernels.lttFold(s.getField("i"), s.getField("v"), tmin).as("k"),
       oldLttFold(pairs, tmin).as("o")).collect()
     assert(out.length == 9)
     out.foreach { row =>

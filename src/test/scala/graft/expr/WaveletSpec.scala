@@ -1,7 +1,6 @@
 package graft.expr
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Ricker-CWT wavelet battery + spectral extras (r11 tranche 5):
   * differential against a naive convolution reimplementation, plus
@@ -35,7 +34,7 @@ class WaveletSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(5)
     val x = Array.fill(60)(rnd.nextGaussian() * 10 + 3)
     val widths = Seq(1, 2, 3)
-    val row = WaveletUtil.compute(ArrayData.toArrayData(x), widths)
+    val row = WaveletUtil.compute(x, widths)
       .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
     val energies = widths.zipWithIndex.map { case (w, wi) =>
       val y = convSame(x, ricker(math.min(10 * w, x.length), w))
@@ -57,17 +56,17 @@ class WaveletSpec extends AnyFunSuite {
   }
 
   test("wavelet: short window is null") {
-    assert(WaveletUtil.compute(ArrayData.toArrayData(Array(1.0)), Seq(1, 2)) == null)
+    assert(WaveletUtil.compute(Array(1.0), Seq(1, 2)) == null)
   }
 
   test("band energy concentrates on the driving bin") {
     val n = 64
     val x = Array.tabulate(n)(t => math.sin(2 * math.Pi * 4 * t / n))
     // fs = 64 -> f_k = k; tone at k = 4
-    val inBand = SpectralExtrasUtil.compute(ArrayData.toArrayData(x), 64, 3, 5)
+    val inBand = SpectralExtrasUtil.compute(x, 64, 3, 5)
       .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
     assert(inBand.getDouble(0) > 0.999)
-    val outBand = SpectralExtrasUtil.compute(ArrayData.toArrayData(x), 64, 10, 20)
+    val outBand = SpectralExtrasUtil.compute(x, 64, 10, 20)
       .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
     assert(outBand.getDouble(0) < 1e-3)
     // single-bin magnitude concentration at i = 3 of K = 32:
@@ -77,8 +76,8 @@ class WaveletSpec extends AnyFunSuite {
 
   test("spectral extras: zero-energy and short windows are null") {
     assert(SpectralExtrasUtil.compute(
-      ArrayData.toArrayData(Array(5.0, 5, 5, 5, 5)), 1, 0, 1) == null)
+      Array(5.0, 5, 5, 5, 5), 1, 0, 1) == null)
     assert(SpectralExtrasUtil.compute(
-      ArrayData.toArrayData(Array(1.0, 2, 3)), 1, 0, 1) == null)
+      Array(1.0, 2, 3), 1, 0, 1) == null)
   }
 }
