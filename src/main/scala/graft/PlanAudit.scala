@@ -65,7 +65,7 @@ object PlanAudit {
     "q54_dup_clusters", "q65_dedup_keep_one", "q72_keyed_multiwin",
     "q73_corpus_prep_fuzzy", "q76_simhash_near", "q79_wav_decode",
     "q82_asof_join", "q85_pack_per_split", "q89_multi_quantiles",
-    "q99d_mse", "q110_entropy_kde")
+    "q99a_catch22_dist", "q99d_mse", "q105_tsfresh_comb", "q110_entropy_kde")
 
   /** The NARROW-AMPLIFIER stage predicate (NarrowAmplifierSpec's gate):
     * few tasks, multi-MB shuffle write, >16× record amplification,

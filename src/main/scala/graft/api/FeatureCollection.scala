@@ -289,7 +289,10 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
             "sample-count windows require a TIME-indexed series")
           // distributed positional index (no single-partition row_number);
           // pinned once — the count below, the assignment branch AND the
-          // anchor-stitch idxMap join all read it (three scans otherwise)
+          // anchor-stitch idxMap join all read it (three scans otherwise).
+          // The pin is not free at build time: under AQE it runs the
+          // position scan's shuffle stages here (core/Pinned.scala), and
+          // the count is one more job
           val pos = Pinned.checkpoint(
             Scan.position(series.internal, "__idx", "__posl")
               .withColumn("__pos", col("__posl").cast("double")).drop("__posl"))
@@ -369,7 +372,20 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       }
       val aggCols = ds.map(d =>
         d.aggOver(col("__idx"), valueCols).as(nameOf(d)))
-      val agged = assignedG.groupBy("__seg_id").agg(aggCols.head, aggCols.tail: _*)
+      val exploded = assignedG.groupBy("__seg_id").agg(aggCols.head, aggCols.tail: _*)
+      // A single-series bucket whose aggregate reads the sorted buffer is
+      // evaluated block-sliced (BlockBucket): one sorted buffer per block
+      // of consecutive windows instead of one per window. A windowKeep
+      // bucket keeps the explode, whose prune drops unkept windows' rows
+      // before any buffer, and reads its leaves off each window's buffer
+      // as the block path does. `Gates.fuse` off keeps the plain explode,
+      // the differential twin (BlockBucketSpec)
+      val agged =
+        if (Gates.fuse && seriesSeq.lengthCompare(1) == 0)
+          BlockBucket.of(exploded, plan).fold(exploded) { b =>
+            if (windowKeep.isEmpty) b.frame(rows) else b.perWindow(assignedG)
+          }
+        else exploded
 
       // W7: segments with zero rows still emit a row (left join, never inner).
       var joined = segsG.join(agged, Seq("__seg_id"), "left")

@@ -19,6 +19,13 @@ import org.apache.spark.sql.DataFrame
   * [[release]] between logical jobs — `Bench` and `Verify` do, after each
   * query's result is materialized.
   *
+  * '''Lazy defers only the pinned stage.''' `localCheckpoint(eager = false)`
+  * still calls `executedPlan.execute()` to build the RDD it pins. Under AQE
+  * that runs every shuffle stage below the pin while the frame is BUILT —
+  * build-time jobs on the calling thread; only the pinned stage itself and
+  * its block storage wait for the first action. (Measured: q08's two pins
+  * run 8 build-time jobs even with its `pos.count()` removed.)
+  *
   * [[release]] is deliberately conservative on the two hazards of a naive
   * global sweep:
   *
@@ -51,8 +58,9 @@ object Pinned {
   private val PruneAt = 256
 
   /** The checkpointed RDDs embedded in a frame's analyzed plan. A LAZY
-    * localCheckpoint still creates the RDD object up front (only
-    * materialization is deferred), so the handle is available immediately.
+    * localCheckpoint creates the RDD object up front (its own stage is
+    * deferred; the stages below it are not — see the class note), so the
+    * handle is available immediately.
     */
   private def rddsOf(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collect {

@@ -1,0 +1,354 @@
+package graft.expr
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BinaryExpression, BindReferences, EmptyRow, Expression, Generator, GenericInternalRow, JoinedRow, MutableProjection, SpecificInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types._
+
+/** Block-sliced windows: the window arithmetic of a regular strided grid
+  * read off ONE sorted buffer per block of consecutive windows, instead of
+  * one buffer per window (reference semantics: the strided windows of
+  * tsflex/features/segmenter/strided_rolling.py; the shared buffer across
+  * overlapping windows follows PAPERS.md's ICDE 2022 "Constructing Compact
+  * Time Series Index for Efficient Window Query Processing").
+  *
+  * A window is identified by its start `s0 + k·st`, the double the explode
+  * path (`Segmenter.assign`) uses as `__seg_id`; its BLOCK is
+  * `floor((start − s0) / len)`. Computing the block from the start double
+  * itself means two strides that produce the same start put it in the same
+  * block, where the duplicate is merged (the explode path's
+  * `array_distinct`).
+  *
+  * The row at index t lies in the windows k ∈ [kmin(t), kmax(t)] — the
+  * floor arithmetic of `Segmenter.assign`, written once here for both ends
+  * of the block path: [[blockRange]] sends the row to the blocks of those
+  * windows ([[BlockAssign]]), and inside a block's index-sorted buffer a
+  * window is the contiguous run of rows whose range contains its k
+  * ([[slices]]). Both bounds are monotone in the index, so each end of the
+  * run is one binary search, and membership is the explode path's exactly.
+  */
+object BlockSliceUtil {
+
+  private def floorL(d: Double): Long = math.floor(d).toLong
+
+  /** First window counter of stride `st` holding index t (unclamped). */
+  private def kmin(t: Double, s0: Double, w: Double, st: Double): Long =
+    floorL((t - s0 - w) / st) + 1L
+
+  /** Last window counter of stride `st` holding index t (unclamped). */
+  private def kmax(t: Double, s0: Double, st: Double): Long = floorL((t - s0) / st)
+
+  /** Start of window k: the `__seg_id` double. */
+  private def startOf(s0: Double, k: Long, st: Double): Double = s0 + k.toDouble * st
+
+  /** The block of window k. */
+  private def blockOf(s0: Double, k: Long, st: Double, len: Double): Long =
+    floorL((startOf(s0, k, st) - s0) / len)
+
+  /** Most blocks one grid is cut into: half of Spark's default
+    * `ObjectHashAggregate` sort fallback threshold (128 keys per task), so a
+    * map task holding rows of every block still aggregates in its hash map.
+    */
+  private val MaxBlocks = 64L
+
+  /** Index length of one block: B strides of the finest stride, with B
+    *   - at least 4·⌈w/s⌉ where the grid allows, so the windows holding a
+    *     row (whose starts span w) touch at most two blocks and the row
+    *     fan-out stays near 1 + 1/4 instead of w/s;
+    *   - at most 1/`shufflePartitions` of the grid, so a short grid still
+    *     spreads over every partition, but never under ⌈w/s⌉;
+    *   - at least 1/[[MaxBlocks]] of the grid, whatever the partitions.
+    */
+  def blockLength(window: Double, strides: Seq[Double], nbs: Seq[Long],
+                  shufflePartitions: Int): Double = {
+    val fine = strides.indices.minBy(strides)
+    val (st, nb) = (strides(fine), nbs(fine))
+    def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
+    val perRow = math.max(1L, math.ceil(window / st).toLong)
+    val spread = math.min(4 * perRow, ceilDiv(nb, math.max(shufflePartitions, 1).toLong))
+    math.max(ceilDiv(nb, MaxBlocks), math.max(perRow, spread)).toDouble * st
+  }
+
+  /** The blocks holding a window that contains index t: [lo, hi], empty
+    * (lo > hi) when no window of any stride does. With a block at least
+    * as long as the window that is one or two blocks.
+    */
+  def blockRange(t: Double, s0: Double, w: Double, sts: Array[Double],
+                 nbs: Array[Long], len: Double): (Long, Long) = {
+    var lo = Long.MaxValue
+    var hi = Long.MinValue
+    var i = 0
+    while (i < sts.length) {
+      val st = sts(i)
+      val k0 = math.max(0L, kmin(t, s0, w, st))
+      val k1 = math.min(nbs(i) - 1, kmax(t, s0, st))
+      if (k1 >= k0) {
+        lo = math.min(lo, blockOf(s0, k0, st, len))
+        hi = math.max(hi, blockOf(s0, k1, st, len))
+      }
+      i += 1
+    }
+    (lo, hi)
+  }
+
+  /** First k in [0, nb) whose window's block is `b` or later; nb if none. */
+  private def firstK(b: Long, s0: Double, st: Double, nb: Long, len: Double): Long = {
+    var lo = 0L
+    var hi = nb
+    while (lo < hi) {
+      val m = (lo + hi) >>> 1
+      if (blockOf(s0, m, st, len) >= b) hi = m else lo = m + 1
+    }
+    lo
+  }
+
+  /** First position in `idx[0, n)` whose kmax reaches k. */
+  private def fromOf(idx: Array[Double], n: Int, s0: Double, st: Double, k: Long): Int = {
+    var lo = 0
+    var hi = n
+    while (lo < hi) {
+      val m = (lo + hi) >>> 1
+      if (kmax(idx(m), s0, st) >= k) hi = m else lo = m + 1
+    }
+    lo
+  }
+
+  /** First position in `idx[0, n)` whose kmin passes k. */
+  private def untilOf(idx: Array[Double], n: Int, s0: Double, w: Double,
+                      st: Double, k: Long): Int = {
+    var lo = 0
+    var hi = n
+    while (lo < hi) {
+      val m = (lo + hi) >>> 1
+      if (kmin(idx(m), s0, w, st) > k) hi = m else lo = m + 1
+    }
+    lo
+  }
+
+  /** The non-empty windows of block `b` over its sorted index `idx`:
+    * (start, from, until) in start order. Starts that several strides share
+    * are merged into one window spanning every stride's run (the
+    * explode path's per-row union of start sets).
+    */
+  def slices(b: Long, idx: Array[Double], s0: Double, w: Double,
+             sts: Array[Double], nbs: Array[Long],
+             len: Double): Array[(Double, Int, Int)] = {
+    val n = idx.length
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Double, Int, Int)]
+    var i = 0
+    while (i < sts.length) {
+      val st = sts(i)
+      var k = firstK(b, s0, st, nbs(i), len)
+      val kEnd = firstK(b + 1, s0, st, nbs(i), len)
+      while (k < kEnd) {
+        out += ((startOf(s0, k, st), fromOf(idx, n, s0, st, k),
+          untilOf(idx, n, s0, w, st, k)))
+        k += 1
+      }
+      i += 1
+    }
+    val merged =
+      if (sts.length == 1) out
+      else {
+        val m = scala.collection.mutable.ArrayBuffer.empty[(Double, Int, Int)]
+        out.sortBy(_._1).foreach { case s @ (start, from, until) =>
+          if (m.nonEmpty && m.last._1 == start) {
+            val (s1, f1, u1) = m.last
+            m(m.length - 1) = (s1, math.min(f1, from), math.max(u1, until))
+          } else m += s
+        }
+        m
+      }
+    merged.filter { case (_, from, until) => from < until }.toArray
+  }
+}
+
+/** Block assignment: one row `__blk` per block holding a window that
+  * contains the row at index `child` ([[BlockSliceUtil.blockRange]]); none
+  * for a null index or a row outside the grid.
+  */
+case class BlockAssign(child: Expression, s0: Double, window: Double,
+                       strides: Seq[Double], nbs: Seq[Long], blockLen: Double)
+    extends Generator with UnaryLike[Expression] with CodegenFallback {
+
+  @transient private lazy val stsArr: Array[Double] = strides.toArray
+  @transient private lazy val nbsArr: Array[Long] = nbs.toArray
+
+  override def elementSchema: StructType =
+    StructType(Seq(StructField("__blk", LongType, nullable = false)))
+
+  override def supportCodegen: Boolean = false
+  override def prettyName: String = "block_assign"
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val t = child.eval(input)
+    if (t == null) return Iterator.empty
+    val (lo, hi) = BlockSliceUtil.blockRange(t.asInstanceOf[Double], s0, window,
+      stsArr, nbsArr, blockLen)
+    if (lo > hi) Iterator.empty
+    else Iterator.tabulate((hi - lo + 1).toInt)(d => InternalRow(lo + d))
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BlockAssign =
+    copy(child = newChild)
+}
+
+object BlockAssign {
+  def apply(idx: Column, s0: Double, window: Double, strides: Seq[Double],
+            nbs: Seq[Long], blockLen: Double): Column =
+    ColumnBridge.column(BlockAssign(ColumnBridge.expression(idx), s0, window,
+      strides, nbs, blockLen))
+}
+
+/** One row per non-empty window of a block: `(__seg_id, __ai, __av)`, the
+  * window's start and its slice of the block buffer — a
+  * `CollectSortedVals(keepNulls = true)` result, so `__av` holds null where
+  * a row's value is null. Children: the block id and the buffer struct.
+  */
+case class BlockSlices(left: Expression, right: Expression, s0: Double,
+                       window: Double, strides: Seq[Double], nbs: Seq[Long],
+                       blockLen: Double)
+    extends Generator with BinaryLike[Expression] with CodegenFallback {
+
+  @transient private lazy val stsArr: Array[Double] = strides.toArray
+  @transient private lazy val nbsArr: Array[Long] = nbs.toArray
+
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("__seg_id", DoubleType, nullable = false),
+    StructField("__ai", ArrayType(DoubleType, containsNull = true), nullable = false),
+    StructField("__av", ArrayType(DoubleType, containsNull = true), nullable = false)))
+
+  override def supportCodegen: Boolean = false
+  override def prettyName: String = "block_slices"
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val blk = left.eval(input)
+    val buf = right.eval(input).asInstanceOf[InternalRow]
+    if (blk == null || buf == null) return Iterator.empty
+    val vArr = buf.getArray(0)
+    val iArr = buf.getArray(1)
+    val idx = iArr.toDoubleArray()
+    val vs = vArr.toDoubleArray()
+    var anyNull = false
+    var j = 0
+    while (!anyNull && j < vs.length) { anyNull = vArr.isNullAt(j); j += 1 }
+    BlockSliceUtil.slices(blk.asInstanceOf[Long], idx, s0, window, stsArr,
+      nbsArr, blockLen).iterator.map { case (start, from, until) =>
+      val av = UnsafeArrayData.fromPrimitiveArray(
+        java.util.Arrays.copyOfRange(vs, from, until))
+      if (anyNull) {
+        var p = from
+        while (p < until) { if (vArr.isNullAt(p)) av.setNullAt(p - from); p += 1 }
+      }
+      new GenericInternalRow(Array[Any](start, UnsafeArrayData.fromPrimitiveArray(
+        java.util.Arrays.copyOfRange(idx, from, until)), av))
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): BlockSlices =
+    copy(left = newLeft, right = newRight)
+}
+
+object BlockSlices {
+  def apply(blk: Column, buf: Column, s0: Double, window: Double,
+            strides: Seq[Double], nbs: Seq[Long], blockLen: Double): Column =
+    ColumnBridge.column(BlockSlices(ColumnBridge.expression(blk),
+      ColumnBridge.expression(buf), s0, window, strides, nbs, blockLen))
+}
+
+/** A window's `CollectSortedVals` result read off its slice: the non-null
+  * values of `av` and the index at the same positions. With no null value
+  * in the slice (the common case) the arrays pass through uncopied.
+  */
+case class SortedSlice(left: Expression, right: Expression)
+    extends BinaryExpression with CodegenFallback {
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("v", ArrayType(DoubleType, containsNull = false), nullable = false),
+    StructField("i", left.dataType, nullable = false)))
+  override def nullable: Boolean = false
+  override def prettyName: String = "sorted_slice"
+
+  override def nullSafeEval(ai: Any, av: Any): Any = {
+    val is = ai.asInstanceOf[ArrayData]
+    val vs = av.asInstanceOf[ArrayData]
+    val n = vs.numElements()
+    var kept = 0
+    var j = 0
+    while (j < n) { if (!vs.isNullAt(j)) kept += 1; j += 1 }
+    if (kept == n) new GenericInternalRow(Array[Any](vs, is))
+    else {
+      // compact the bulk copies in place over the null-valued positions
+      val v = vs.toDoubleArray()
+      val i = is.toDoubleArray()
+      var m = 0
+      j = 0
+      while (j < n) {
+        if (!vs.isNullAt(j)) { v(m) = v(j); i(m) = i(j); m += 1 }
+        j += 1
+      }
+      new GenericInternalRow(Array[Any](
+        UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(v, kept)),
+        UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(i, kept))))
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedSlice =
+    copy(left = newLeft, right = newRight)
+}
+
+/** A declarative aggregate (`count`, `sum`, `min`, `max`, `avg`) over one
+  * window, folded over its slice: Spark's own initial, update and evaluate
+  * expressions for `fn`, with `fn`'s inputs `idx` and `v` bound to each
+  * slice row in index order. Only the summation ORDER differs from the
+  * grouped aggregate (rows arrive sorted instead of in partition order).
+  *
+  * `fn` and its input attributes are parameters, not children: they are
+  * resolved against the explode-path plan and bound here to the fold's own
+  * two-column row.
+  */
+case class SliceFold(fn: DeclarativeAggregate, idx: Attribute, v: Attribute,
+                     left: Expression, right: Expression)
+    extends BinaryExpression with CodegenFallback {
+
+  override def dataType: DataType = fn.dataType
+  override def nullable: Boolean = fn.nullable
+  override def prettyName: String = "slice_fold"
+  override def toString: String = s"$prettyName($fn, $left, $right)"
+
+  @transient private lazy val buffer =
+    new SpecificInternalRow(fn.aggBufferAttributes.map(_.dataType))
+  @transient private lazy val row = new SpecificInternalRow(Seq(DoubleType, DoubleType))
+  @transient private lazy val joined = new JoinedRow(buffer, row)
+  @transient private lazy val init =
+    MutableProjection.create(fn.initialValues).target(buffer)
+  @transient private lazy val update = MutableProjection.create(
+    fn.updateExpressions, fn.aggBufferAttributes ++ Seq(idx, v)).target(buffer)
+  @transient private lazy val result =
+    BindReferences.bindReference(fn.evaluateExpression, fn.aggBufferAttributes)
+
+  override def nullSafeEval(ai: Any, av: Any): Any = {
+    val is = ai.asInstanceOf[ArrayData]
+    val vs = av.asInstanceOf[ArrayData]
+    init(EmptyRow)
+    var j = 0
+    while (j < vs.numElements()) {
+      row.setDouble(0, is.getDouble(j))
+      if (vs.isNullAt(j)) row.setNullAt(1) else row.setDouble(1, vs.getDouble(j))
+      update(joined)
+      j += 1
+    }
+    result.eval(buffer)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SliceFold =
+    copy(left = newLeft, right = newRight)
+}

@@ -55,6 +55,15 @@ import org.apache.spark.sql.types._
   * holds a null; `i` holds null at a null index's position, and otherwise
   * the index's exact input bits (−0.0 and NaN included — the buffer keeps
   * raw bits, not the normalizing sort keys), ≡ the replaced chain's `_.i`.
+  * An integral index equal to `Long.MinValue` would share the null
+  * sentinel's key, so it is rejected with an error instead of sorting
+  * ambiguously.
+  *
+  * `keepNulls` (the block buffer of `graft.api.BlockBucket`) also keeps
+  * null-VALUED rows, at the position their (index, 0.0) key sorts to, and
+  * `v` then holds null there: a block's window slices need every row's
+  * index, and filtering the nulls back out of a slice leaves exactly the
+  * order the default mode would have produced for it.
   */
 object SortKernelUtil {
 
@@ -119,6 +128,7 @@ final class SortedValsBuffer(initial: Int = 16) {
   var ri: Array[Long] = new Array[Long](initial)
   var vs: Array[Double] = new Array[Double](initial)
   var nullIdx: java.util.BitSet = null
+  var nullV: java.util.BitSet = null
 
   def add(r: Long, v: Double): Unit = {
     if (n == ri.length) grow(n << 1)
@@ -136,6 +146,15 @@ final class SortedValsBuffer(initial: Int = 16) {
 
   def isNullIdx(j: Int): Boolean = nullIdx != null && nullIdx.get(j)
 
+  /** A null value keeps raw value 0.0 (its sort tie-break key). */
+  def addNullV(r: Long): Unit = {
+    if (nullV == null) nullV = new java.util.BitSet()
+    nullV.set(n)
+    add(r, 0.0)
+  }
+
+  def isNullV(j: Int): Boolean = nullV != null && nullV.get(j)
+
   def appendAll(o: SortedValsBuffer): Unit = {
     val want = n + o.n
     if (want > ri.length) {
@@ -145,11 +164,8 @@ final class SortedValsBuffer(initial: Int = 16) {
     }
     System.arraycopy(o.ri, 0, ri, n, o.n)
     System.arraycopy(o.vs, 0, vs, n, o.n)
-    if (o.nullIdx != null) {
-      if (nullIdx == null) nullIdx = new java.util.BitSet()
-      var j = o.nullIdx.nextSetBit(0)
-      while (j >= 0) { nullIdx.set(n + j); j = o.nullIdx.nextSetBit(j + 1) }
-    }
+    nullIdx = SortedValsBuffer.shifted(nullIdx, o.nullIdx, n)
+    nullV = SortedValsBuffer.shifted(nullV, o.nullV, n)
     n = want
   }
 
@@ -159,15 +175,51 @@ final class SortedValsBuffer(initial: Int = 16) {
   }
 }
 
+object SortedValsBuffer {
+  /** `into` with every bit of `from` set at `offset` past its position. */
+  private def shifted(into: java.util.BitSet, from: java.util.BitSet,
+                      offset: Int): java.util.BitSet =
+    if (from == null) into
+    else {
+      val out = if (into == null) new java.util.BitSet() else into
+      var j = from.nextSetBit(0)
+      while (j >= 0) { out.set(offset + j); j = from.nextSetBit(j + 1) }
+      out
+    }
+
+  private[expr] def putBits(bb: ByteBuffer, bits: java.util.BitSet): Unit = {
+    bb.putInt(if (bits == null) 0 else bits.cardinality())
+    if (bits != null) {
+      var j = bits.nextSetBit(0)
+      while (j >= 0) { bb.putInt(j); j = bits.nextSetBit(j + 1) }
+    }
+  }
+
+  private[expr] def getBits(bb: ByteBuffer, n: Int): java.util.BitSet = {
+    val k = bb.getInt()
+    if (k == 0) null
+    else {
+      val bits = new java.util.BitSet(n)
+      var i = 0
+      while (i < k) { bits.set(bb.getInt()); i += 1 }
+      bits
+    }
+  }
+
+  private[expr] def bitsBytes(bits: java.util.BitSet): Int =
+    4 + (if (bits == null) 0 else bits.cardinality() * 4)
+}
+
 /** See the module note. `dataType` is `struct<v, i>`: the index-sorted
   * values and, in the same order, the index itself (the replaced chains'
   * `_.v` and `_.i`). Non-nullable like the collect_list chain it replaces
-  * (zero rows give empty arrays, and null values are never collected); `i`
-  * holds null where the index was null.
+  * (zero rows give empty arrays, and null values are never collected
+  * unless `keepNulls`); `i` holds null where the index was null.
   */
 case class CollectSortedVals(
     left: Expression,
     right: Expression,
+    keepNulls: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[SortedValsBuffer] with BinaryLike[Expression] {
@@ -180,7 +232,7 @@ case class CollectSortedVals(
         s"$prettyName requires (double|bigint|int, double), got (${l.sql}, ${r.sql})")
     }
   override def dataType: DataType = StructType(Seq(
-    StructField("v", ArrayType(DoubleType, containsNull = false), nullable = false),
+    StructField("v", ArrayType(DoubleType, containsNull = keepNulls), nullable = false),
     StructField("i", ArrayType(left.dataType, containsNull = true), nullable = false)))
   override def nullable: Boolean = false
   override def prettyName: String = "collect_sorted_vals"
@@ -192,12 +244,18 @@ case class CollectSortedVals(
   // the `i` output reproduces the input bit for bit. The sort key is
   // derived at eval: integral indexes key as their own value (signed long
   // order IS numeric order, exact at any magnitude — no double round-trip),
-  // doubles through sortableBits. The null sentinel key collides only with
-  // a literal Long.MinValue index, where the v tie-break still yields a
-  // deterministic order.
+  // doubles through sortableBits. Long.MinValue is the null sentinel's key,
+  // so a bigint index holding it is rejected rather than sorted among the
+  // null indexes.
   @transient private lazy val rawOf: Any => Long = left.dataType match {
     case DoubleType => i => java.lang.Double.doubleToRawLongBits(i.asInstanceOf[Double])
-    case LongType => i => i.asInstanceOf[Long]
+    case LongType => i => {
+      val l = i.asInstanceOf[Long]
+      if (l == java.lang.Long.MIN_VALUE) throw new IllegalArgumentException(
+        s"$prettyName: index value Long.MinValue ($l) is reserved for the " +
+          "null-index sort key; shift the index or cast it to double")
+      l
+    }
     case IntegerType => i => i.asInstanceOf[Int].toLong
   }
 
@@ -207,6 +265,9 @@ case class CollectSortedVals(
       val i = left.eval(input)
       if (i == null) buf.addNullIdx(v.asInstanceOf[Double])
       else buf.add(rawOf(i), v.asInstanceOf[Double])
+    } else if (keepNulls) {
+      val i = left.eval(input)
+      if (i != null) buf.addNullV(rawOf(i))
     }
     buf
   }
@@ -253,22 +314,24 @@ case class CollectSortedVals(
       i = 0
       while (i < n) { if (buf.isNullIdx(perm(i))) idx.setNullAt(i); i += 1 }
     }
-    new GenericInternalRow(Array[Any](UnsafeArrayData.fromPrimitiveArray(vals), idx))
+    val v = UnsafeArrayData.fromPrimitiveArray(vals)
+    if (buf.nullV != null) {
+      i = 0
+      while (i < n) { if (buf.isNullV(perm(i))) v.setNullAt(i); i += 1 }
+    }
+    new GenericInternalRow(Array[Any](v, idx))
   }
 
   override def serialize(buf: SortedValsBuffer): Array[Byte] = {
-    val nNull = if (buf.nullIdx == null) 0 else buf.nullIdx.cardinality()
-    val bb = ByteBuffer.allocate(8 + buf.n * 16 + nNull * 4)
+    val bb = ByteBuffer.allocate(4 + buf.n * 16 +
+      SortedValsBuffer.bitsBytes(buf.nullIdx) + SortedValsBuffer.bitsBytes(buf.nullV))
     bb.putInt(buf.n)
     var i = 0
     while (i < buf.n) { bb.putLong(buf.ri(i)); i += 1 }
     i = 0
     while (i < buf.n) { bb.putDouble(buf.vs(i)); i += 1 }
-    bb.putInt(nNull)
-    if (nNull > 0) {
-      var j = buf.nullIdx.nextSetBit(0)
-      while (j >= 0) { bb.putInt(j); j = buf.nullIdx.nextSetBit(j + 1) }
-    }
+    SortedValsBuffer.putBits(bb, buf.nullIdx)
+    SortedValsBuffer.putBits(bb, buf.nullV)
     bb.array()
   }
 
@@ -281,12 +344,8 @@ case class CollectSortedVals(
     i = 0
     while (i < n) { buf.vs(i) = bb.getDouble(); i += 1 }
     buf.n = n
-    val nNull = bb.getInt()
-    if (nNull > 0) {
-      buf.nullIdx = new java.util.BitSet(n)
-      i = 0
-      while (i < nNull) { buf.nullIdx.set(bb.getInt()); i += 1 }
-    }
+    buf.nullIdx = SortedValsBuffer.getBits(bb, n)
+    buf.nullV = SortedValsBuffer.getBits(bb, n)
     buf
   }
 
@@ -300,8 +359,10 @@ case class CollectSortedVals(
 }
 
 object CollectSortedVals {
-  def apply(idx: Column, v: Column): Column =
+  def apply(idx: Column, v: Column): Column = apply(idx, v, keepNulls = false)
+
+  def apply(idx: Column, v: Column, keepNulls: Boolean): Column =
     ColumnBridge.column(CollectSortedVals(
-      ColumnBridge.expression(idx), ColumnBridge.expression(v))
+      ColumnBridge.expression(idx), ColumnBridge.expression(v), keepNulls)
       .toAggregateExpression())
 }

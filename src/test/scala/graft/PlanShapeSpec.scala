@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.expressions.ArraySort
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
 import org.apache.spark.sql.catalyst.plans.logical.Window
+import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 
 /** Pins the physical-plan SHAPE (shuffle-exchange count + join-strategy
@@ -182,6 +183,24 @@ class PlanShapeSpec extends SparkSpec {
       "reused_exchange" -> 0, "broadcast_hash_join" -> 1,
       "sort_merge_join" -> 0, "shuffled_hash_join" -> 0,
       "broadcast_nested_loop_join" -> 0, "cartesian_product" -> 0),
+    // q99a/q105 (the block-sliced bucket path, BlockBucket): the counts
+    // are the ones the per-window explode plan had — the aggregate's hash
+    // exchange, the orderBy range exchange and the W7 left join's
+    // broadcast. What moved is what the exchange carries: one sorted
+    // buffer per BLOCK of consecutive windows (keyed `__blk`, each row in
+    // one or two blocks) instead of one per window (each row in w/s = 4),
+    // with the windows sliced out after it by a `block_slices` Generate —
+    // pinned by the sorted-collect test below.
+    "q99a_catch22_dist" -> Map(
+      "shuffle_exchange" -> 2, "broadcast_exchange" -> 1,
+      "reused_exchange" -> 0, "broadcast_hash_join" -> 1,
+      "sort_merge_join" -> 0, "shuffled_hash_join" -> 0,
+      "broadcast_nested_loop_join" -> 0, "cartesian_product" -> 0),
+    "q105_tsfresh_comb" -> Map(
+      "shuffle_exchange" -> 2, "broadcast_exchange" -> 1,
+      "reused_exchange" -> 0, "broadcast_hash_join" -> 1,
+      "sort_merge_join" -> 0, "shuffled_hash_join" -> 0,
+      "broadcast_nested_loop_join" -> 0, "cartesian_product" -> 0),
     "q110_entropy_kde" -> Map(
       "shuffle_exchange" -> 2, "broadcast_exchange" -> 2,
       "reused_exchange" -> 0, "broadcast_hash_join" -> 2,
@@ -222,6 +241,11 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(perAgg.contains(1) && perAgg.forall(_ <= 1),
       s"sorted-collect aggregates per aggregate node: $perAgg")
+    // the buffer is per block, and the windows are its slices
+    val slices = plan.collectWithSubqueries { case g: GenerateExec =>
+      g.generator.isInstanceOf[graft.expr.BlockSlices]
+    }
+    assert(slices.count(identity) == 1, s"block_slices generators: $slices")
     val banned = plan.collectWithSubqueries { case node =>
       node.expressions.flatMap(_.collect {
         case e: CollectList => e.prettyName

@@ -110,10 +110,10 @@ class SortedCollectSpec extends SparkSpec {
     val rows = scala.collection.mutable.ArrayBuffer[(Int, java.lang.Long, java.lang.Double)]()
     for (g <- 0 until 4; _ <- 0 until 300)
       rows += ((g, java.lang.Long.valueOf(r.nextInt(50).toLong * 1000000007L), r.nextDouble()))
-    rows += ((4, Long.MinValue, 1.0)); rows += ((4, Long.MaxValue, 3.0))
+    // the extremes a bigint index may hold (Long.MinValue itself is the
+    // null sentinel's key and is rejected — see the next test)
+    rows += ((4, Long.MinValue + 1, 1.0)); rows += ((4, Long.MaxValue, 3.0))
     rows += ((4, 5L, null)) // null v: dropped
-    // null indexes (kept apart from a literal Long.MinValue index, whose
-    // sort key is the null sentinel — the module note's one collision)
     rows += ((5, null, 2.0)); rows += ((5, 7L, 1.0)); rows += ((5, null, 0.5))
     val df = rows.toSeq.toDF("g", "i", "v").repartition(3)
     val out = df.groupBy("g").agg(
@@ -129,6 +129,20 @@ class SortedCollectSpec extends SparkSpec {
       assert(row.getSeq[java.lang.Long](3) == row.getSeq[java.lang.Long](4),
         s"g=${row.getInt(0)} i")
     }
+  }
+
+  test("CollectSortedVals rejects a bigint Long.MinValue index, the null sentinel's key") {
+    import spark.implicits._
+    // sorted as the sentinel, (Long.MinValue, 1.0) and (null, 2.0) would tie
+    // on the index and order by value, [1.0, 2.0] — where array_sort puts
+    // the null index first
+    val df = Seq[(java.lang.Long, Double)]((Long.MinValue, 1.0), (null, 2.0))
+      .toDF("i", "v")
+    val e = intercept[Exception](
+      df.agg(CollectSortedVals(col("i"), col("v")).as("k")).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains("Long.MinValue"), msgs)
   }
 
   // windows for the scalar kernels: random + the degenerate battery
