@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core._
+import graft.expr.NarrowKernels
 import graft.segment.{Bounds, Segmenter}
 
 /** Common surface of unary and tuple-series feature descriptors — the
@@ -52,6 +53,7 @@ final case class FeatureDescriptor(
     strides: Option[Seq[Win]] = None) extends AnyFeatureDescriptor {
   require(window.forall(w => strides.forall(_.forall(_.domain == w.domain))),
     "window and strides must share the same domain (reference: feature.py:142-151)")
+  Win.requirePositive(window, strides)
 
   def seriesNames: Seq[String] = Seq(seriesName)
   def funcName: String = function.name
@@ -78,6 +80,7 @@ final case class NaryFeatureDescriptor(
       s"${seriesNames.length}: ${seriesNames.mkString("|")}")
   require(window.forall(w => strides.forall(_.forall(_.domain == w.domain))),
     "window and strides must share the same domain (reference: feature.py:142-151)")
+  Win.requirePositive(window, strides)
 
   def funcName: String = function.name
   def funcOutputNames: Option[Seq[String]] = function.outputNames
@@ -230,10 +233,12 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       "windowKeep is not supported with manual segments")
     require(segmentStartIdxs.isEmpty && segmentEndIdxs.isEmpty || strideOverride.isEmpty,
       "cannot pass both segment indexes and a stride (M4)")
+    Win.requirePositive(None, strideOverride)
     val byName = data.map(s => s.name -> s).toMap
     val used = requiredSeries.map(n => byName.getOrElse(n,
       throw new IllegalArgumentException(s"series $n not in data")))
     requireSameTz(used)
+    used.headOption.foreach(s => NarrowKernels.install(s.df.sparkSession))
     val manualSegs = segmentStartIdxs.isDefined || segmentEndIdxs.isDefined
 
     // One bucket per (series tuple, window, effective strides): shared

@@ -127,6 +127,7 @@ object KeyedFeatures {
   private def keyedInput(df: DataFrame, keyCol: String, idxCol: String,
                          firstVal: String, wins: Seq[Win],
                          cols: Seq[Column]): (Series, DataFrame) = {
+    graft.expr.NarrowKernels.install(df.sparkSession)
     val series = Series(firstVal, df, idxCol, firstVal)
     wins.foreach { w =>
       require(!w.isInstanceOf[SampleWin],

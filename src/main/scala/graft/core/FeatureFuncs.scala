@@ -762,6 +762,12 @@ object FeatureFuncs {
     * (reference: tsflex/features/integrations.py:282-337). Member
     * semantics, raw-input convention, and per-window cost notes live on
     * [[graft.expr.Catch22Util]].
+    *
+    * Members evaluate on demand: a query that reads only some output
+    * columns gets a kernel narrowed to those members
+    * ([[graft.expr.NarrowKernels]]), and the intermediates members share
+    * (the ACF, the periodogram) are lazy, built only for a member that
+    * needs them. The unread members are never computed.
     */
   val catch22Tranche1: FeatureFunc = FeatureFunc("catch22",
     (idx, v) => Kernels.catch22()(sortedVals(idx, v)),
@@ -773,7 +779,8 @@ object FeatureFuncs {
     * shape (tests/test_features_integration.py:341-357). Computed inside
     * the one kernel pass, NOT composed from separate aggregates: a
     * composed struct would reference the sorted-window chain 24 times
-    * (HOF chains get no codegen CSE).
+    * (HOF chains get no codegen CSE). Like [[catch22Tranche1]], it computes
+    * only the members a query reads, shared intermediates lazily.
     */
   val catch24Battery: FeatureFunc = FeatureFunc("catch24",
     (idx, v) => Kernels.catch22(catch24 = true)(sortedVals(idx, v)),

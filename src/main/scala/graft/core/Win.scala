@@ -99,6 +99,15 @@ object Win {
 
   def time(micros: Long): TimeWin = TimeWin(micros)
 
+  /** Rejects a window or stride that is not > 0, naming the value: a zero
+    * stride would divide the window count by zero, and a non-positive
+    * window holds no rows. */
+  def requirePositive(window: Option[Win], strides: Option[Seq[Win]]): Unit = {
+    window.foreach(w => require(w.amount > 0, s"window must be > 0, got $w"))
+    strides.foreach(_.foreach(s =>
+      require(s.amount > 0, s"stride must be > 0, got $s")))
+  }
+
   /** Compact timedelta rendering for output column names.
     *
     * Same behavior as the reference's `timedelta_to_str`

@@ -3,6 +3,7 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import scala.collection.immutable.BitSet
 
 /** catch22 kernel: the COMPLETE catch22 canonical feature battery
   * (Lubba et al. 2019, "catch22: CAnonical Time-series
@@ -43,6 +44,14 @@ import org.apache.spark.sql.types._
   * Like the DFT kernel, this is a deliberate per-WINDOW cost bounded by
   * window length — the 100 TB axis is window count, which parallelizes
   * embarrassingly.
+  *
+  * Members evaluate on demand: [[compute]] takes the set of members to
+  * compute and leaves the others null, and the intermediates several
+  * members share (the ACF, the periodogram) are lazy, built only when a
+  * member that needs them is asked for. The whole battery is the
+  * all-members set ([[members]]); a query reading a few members gets a
+  * kernel narrowed to them ([[NarrowKernels]]), so it never pays for the
+  * spectral, fluctuation-analysis or periodicity members it drops.
   */
 object Catch22Util {
 
@@ -104,6 +113,12 @@ object Catch22Util {
 
   val dataType24: StructType =
     StructType(names24.map(n => StructField(n, DoubleType, nullable = true)))
+
+  private val all22 = BitSet(names.indices: _*)
+  private val all24 = BitSet(names24.indices: _*)
+
+  /** Every member ordinal of the battery: the mask of the whole kernel. */
+  def members(catch24: Boolean): BitSet = if (catch24) all24 else all22
 
   /** Lazily-extended ACF: values are computed on first demand per lag and
     * memoized, so crossing searches pay O(n·k) for stopping lag k instead
@@ -654,33 +669,40 @@ object Catch22Util {
     java.lang.Double.valueOf(out)
   }
 
-  def compute(x: Array[Double], catch24: Boolean): InternalRow = {
+  /** The battery over one index-ordered window: the members in `need`
+    * (ordinals into [[names]] / [[names24]]), every other field null. A
+    * member's value is the same bits whichever other members are computed
+    * with it.
+    */
+  def compute(x: Array[Double], catch24: Boolean, need: BitSet): InternalRow = {
     val n = x.length
-    var mu = 0.0; var i = 0
-    while (i < n) { mu += x(i); i += 1 }
-    if (n > 0) mu /= n
+    val mu = {
+      var s = 0.0; var i = 0
+      while (i < n) { s += x(i); i += 1 }
+      if (n > 0) s / n else 0.0
+    }
     val out = new Array[Any](if (catch24) names24.length else names.length)
 
-    out(0) = histMode(x, 5)
-    out(1) = histMode(x, 10)
+    if (need(0)) out(0) = histMode(x, 5)
+    if (need(1)) out(1) = histMode(x, 10)
 
     // SB_BinaryStats_mean_longstretch1: binarize by the mean (1 = strictly
     // above), longest run of 1s. Empty window → null; no value above → 0.
-    out(2) = if (n == 0) null
+    if (need(2)) out(2) = if (n == 0) null
       else java.lang.Double.valueOf(longestRun(0, n, t => x(t) > mu).toDouble)
 
     // SB_BinaryStats_diff_longstretch0: binarize successive diffs (0 =
     // strict decrease), longest run of 0s = longest run of decreases.
-    out(3) = if (n < 2) null
+    if (need(3)) out(3) = if (n < 2) null
       else java.lang.Double.valueOf(
         longestRun(0, n - 1, t => x(t + 1) - x(t) < 0).toDouble)
 
-    val acf = new Acf(x)
+    lazy val acf = new Acf(x)
 
     // CO_f1ecac: first 1/e crossing of the ACF, linearly interpolated
     // between the straddling lags (C: out = i + (thresh − ac_i)/(ac_{i+1} −
     // ac_i) at the first i with ac_{i+1} < 1/e); n if no crossing.
-    out(4) = if (n < 3 || !acf.defined) null else {
+    if (need(4)) out(4) = if (n < 3 || !acf.defined) null else {
       val thresh = 1.0 / math.E
       var res = n.toDouble
       var j = 0
@@ -695,7 +717,7 @@ object Catch22Util {
 
     // CO_FirstMin_ac: lag of the first local ACF minimum (ac(i) below both
     // neighbors, 1 ≤ i ≤ n−2); n if none.
-    out(5) = if (n < 3 || !acf.defined) null else {
+    if (need(5)) out(5) = if (n < 3 || !acf.defined) null else {
       var res = n.toDouble
       var j = 1
       var done = false
@@ -707,7 +729,7 @@ object Catch22Util {
     }
 
     // CO_trev_1_num: mean cubed successive difference.
-    out(6) = if (n < 2) null else {
+    if (need(6)) out(6) = if (n < 2) null else {
       var s = 0.0; var t = 0
       while (t < n - 1) { val d = x(t + 1) - x(t); s += d * d * d; t += 1 }
       java.lang.Double.valueOf(s / (n - 1))
@@ -715,7 +737,7 @@ object Catch22Util {
 
     // MD_hrv_classic_pnn40: fraction of successive diffs with |Δ| > 0.04
     // (the C kernel scales |Δ|·1000 against the 40 ms HRV threshold).
-    out(7) = if (n < 2) null else {
+    if (need(7)) out(7) = if (n < 2) null else {
       var k = 0; var t = 0
       while (t < n - 1) { if (math.abs(x(t + 1) - x(t)) > 0.04) k += 1; t += 1 }
       java.lang.Double.valueOf(k.toDouble / (n - 1))
@@ -723,7 +745,7 @@ object Catch22Util {
 
     // FC_LocalSimple_mean3_stderr: sample std (ddof=1) of the residuals of
     // a trailing-mean-3 forecast: r_i = x_{i+3} − mean(x_i, x_{i+1}, x_{i+2}).
-    out(8) = if (n < 5) null else {
+    if (need(8)) out(8) = if (n < 5) null else {
       // two-pass variance: the one-pass (ss - s*s/m) form cancels
       // catastrophically when the residuals are (near-)constant — e.g. a
       // perfectly linear window, whose mean3 residuals are all 2b — and
@@ -744,7 +766,7 @@ object Catch22Util {
 
     // FC_LocalSimple_mean1_tauresrat: first-zero ACF lag of the mean-1
     // forecast residuals (= successive diffs) over that of the window.
-    out(9) = if (n < 3) null else {
+    if (need(9)) out(9) = if (n < 3) null else {
       val res = new Array[Double](n - 1)
       var t = 0
       while (t < n - 1) { res(t) = x(t + 1) - x(t); t += 1 }
@@ -756,11 +778,12 @@ object Catch22Util {
 
     // Shared rect-window periodogram of the de-meaned window, bins
     // k = 1..⌊n/2⌋ (DC bin is zero by construction); FFT/DFT split via
-    // [[Fft.halfPsd]]. Consumed by the centroid and area_5_1 members.
+    // [[Fft.halfPsd]]. Consumed by the centroid and area_5_1 members, and
+    // built only when one of them is computed.
     // `specOk` is the relative zero-energy guard, same convention as
     // SpectralEntropyUtil.
     val nb = n / 2
-    val (spec, specTotal, specOk) =
+    lazy val (spec, specTotal, specOk) =
       if (n < 4) (new Array[Double](0), 0.0, false)
       else {
         val d = new Array[Double](n)
@@ -776,7 +799,7 @@ object Catch22Util {
 
     // SP_Summaries_welch_rect_centroid: first w_k = 2πk/n whose cumulative
     // power strictly exceeds half the total.
-    out(10) = if (!specOk) null else {
+    if (need(10)) out(10) = if (!specOk) null else {
       val half = specTotal / 2.0
       var cs = 0.0
       var kk = 0
@@ -795,7 +818,7 @@ object Catch22Util {
     // over the WHOLE window's [min, max] (the DN_HistogramMode grid);
     // AMI = Σ p_ij ln(p_ij / (p_i·p_j)) in nats, marginals taken over the
     // paired samples. Null for n < 3 or a constant window.
-    out(11) = if (n < 3) null else {
+    if (need(11)) out(11) = if (n < 3) null else {
       var mn = x(0); var mx = x(0); var i2 = 1
       while (i2 < n) { if (x(i2) < mn) mn = x(i2); if (x(i2) > mx) mx = x(i2); i2 += 1 }
       if (mx <= mn) null else {
@@ -829,7 +852,7 @@ object Catch22Util {
     // the first local minimum's lag (A below both neighbors, 2 ≤ τ ≤ L−1),
     // L if none — the ACF-based estimator over the biased global-mean ACF,
     // like the other CO members.
-    out(12) = if (n < 3 || !acf.defined) null else {
+    if (need(12)) out(12) = if (n < 3 || !acf.defined) null else {
       val L = math.min(40, n - 1)
       def ami(tau: Int): Double = {
         val r = acf(tau)
@@ -849,7 +872,7 @@ object Catch22Util {
     // spectrum as a FRACTION of total power (the raw C member is the same
     // sum under Welch scale factors, which cancel under normalization —
     // documented deviation, mirrored by the oracle). Bin count max(1, nb/5).
-    out(13) = if (!specOk) null else {
+    if (need(13)) out(13) = if (!specOk) null else {
       val kc = math.max(1, nb / 5)
       var s5 = 0.0
       var kk = 0
@@ -862,7 +885,7 @@ object Catch22Util {
     // quantile_cont convention; letter = 0 for v ≤ q⅓, 1 for v ≤ q⅔,
     // else 2), then the Shannon entropy (nats) of the 2-letter motif
     // distribution over the n−1 index-consecutive pairs.
-    out(14) = if (n < 2) null else {
+    if (need(14)) out(14) = if (n < 2) null else {
       val sorted = java.util.Arrays.copyOf(x, n)
       java.util.Arrays.sort(sorted)
       // shared continuous-quantile rule: transitionMatrix3 (the other
@@ -888,18 +911,18 @@ object Catch22Util {
     }
 
     // ---- tranche 3 ------------------------------------------------------
-    out(15) = outlierInclude(x, 1.0)
-    out(16) = outlierInclude(x, -1.0)
-    out(17) = transitionMatrix3(x, acf)
-    out(18) = embed2DistExpFit(x, acf)
-    out(19) = fluctAnal(x, lag = 2, dfa = true)
-    out(20) = fluctAnal(x, lag = 1, dfa = false)
-    out(21) = periodicityWang(x)
+    if (need(15)) out(15) = outlierInclude(x, 1.0)
+    if (need(16)) out(16) = outlierInclude(x, -1.0)
+    if (need(17)) out(17) = transitionMatrix3(x, acf)
+    if (need(18)) out(18) = embed2DistExpFit(x, acf)
+    if (need(19)) out(19) = fluctAnal(x, lag = 2, dfa = true)
+    if (need(20)) out(20) = fluctAnal(x, lag = 1, dfa = false)
+    if (need(21)) out(21) = periodicityWang(x)
 
     if (catch24) {
       // DN_Mean / DN_Spread_Std (sample std, n−1): pycatch22's two extras
-      out(22) = if (n == 0) null else java.lang.Double.valueOf(mu)
-      out(23) = if (n < 2) null else {
+      if (need(22)) out(22) = if (n == 0) null else java.lang.Double.valueOf(mu)
+      if (need(23)) out(23) = if (n < 2) null else {
         var ss = 0.0; var t = 0
         while (t < n) { val d = x(t) - mu; ss += d * d; t += 1 }
         java.lang.Double.valueOf(math.sqrt(ss / (n - 1)))

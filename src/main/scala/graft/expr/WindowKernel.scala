@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+import scala.collection.immutable.BitSet
 
 /** One array<double> window kernel: a name, its parameters, its signature
   * (`arrays` array<double> inputs, then `scalars` double inputs), its
@@ -20,16 +21,29 @@ import org.apache.spark.sql.types._
   * closure `body` holds, so Catalyst still dedups repeated kernel calls
   * and `toString` never prints a lambda. `body` owns the arrays it gets
   * (fresh copies per call), so it may sort them in place.
+  *
+  * A struct-typed kernel whose members cost independently may also carry
+  * `narrowTo`: given the member ordinals a query reads, the same kernel
+  * computing only those, every other member null (struct type unchanged).
+  * [[NarrowKernels]] applies it; a narrowed kernel names its members in
+  * `params`, so two different narrowings never compare equal.
   */
 final case class Kernel(name: String, params: Seq[Any], arrays: Int,
                         scalars: Int, dataType: DataType)(
-    val body: (Array[Array[Double]], Array[Double]) => Any) {
+    val body: (Array[Array[Double]], Array[Double]) => Any,
+    narrowTo: Option[BitSet => Kernel] = None) {
 
   /** The kernel applied to its inputs: arrays first, then scalars. */
   def apply(args: Column*): Column =
     ColumnBridge.column(expr(args.map(ColumnBridge.expression): _*))
 
   def expr(args: Expression*): Expression = WindowKernel(this, args)
+
+  def narrowable: Boolean = narrowTo.isDefined
+
+  /** The kernel computing only the struct members `read`; itself when it
+    * does not narrow. */
+  def narrow(read: BitSet): Kernel = narrowTo.fold(this)(_(read))
 }
 
 object Kernel {
@@ -104,6 +118,8 @@ case class WindowKernel(kernel: Kernel, children: Seq[Expression])
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): WindowKernel =
     copy(children = newChildren)
+
+  def narrow(read: BitSet): WindowKernel = copy(kernel = kernel.narrow(read))
 }
 
 object WindowKernel {
@@ -276,10 +292,16 @@ object Kernels {
 
   // ---- batteries and spectra ----
 
+  /** The whole battery; it narrows to the members a query reads. */
   def catch22(catch24: Boolean = false): Kernel =
-    unary(if (catch24) "catch24" else "catch22_tranche1")(
+    catch22Of(catch24, Catch22Util.members(catch24))
+
+  private def catch22Of(catch24: Boolean, need: BitSet): Kernel =
+    Kernel(if (catch24) "catch24" else "catch22_tranche1",
+      if (need == Catch22Util.members(catch24)) Nil else Seq(need), 1, 0,
       if (catch24) Catch22Util.dataType24 else Catch22Util.dataType)(
-      Catch22Util.compute(_, catch24))
+      (xs, _) => Catch22Util.compute(xs(0), catch24, need),
+      Some(read => catch22Of(catch24, need & read)))
 
   def spectralEntropy(normalize: Boolean): Kernel =
     unary("spectral_entropy", normalize)(DoubleType)(

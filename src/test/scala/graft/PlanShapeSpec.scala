@@ -1,10 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.ArraySort
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
-import org.apache.spark.sql.catalyst.plans.logical.Window
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
 import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.functions._
+import graft.core.Gates
+import graft.expr.{Catch22Util, Kernels, NarrowKernels, WindowKernel}
+import scala.collection.immutable.BitSet
 
 /** Pins the physical-plan SHAPE (shuffle-exchange count + join-strategy
   * choice, via [[PlanAudit]]) of the most expensive bench queries — the
@@ -24,6 +29,10 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
   * with an empty partitionSpec, the condition behind Spark's "No Partition
   * Defined for Window operation" warning): cumulative scans stay
   * range-partitioned through `graft.core.Scan`.
+  *
+  * The catch22 plans also pin kernel narrowing (`graft.expr.NarrowKernels`):
+  * which members each kernel computes, and that the rows stay the same
+  * with the rule excluded.
   *
   * Notes on the pinned values:
   *  - the broadcast_nested_loop_join=1 in q12/q73/q82 is the documented
@@ -254,6 +263,91 @@ class PlanShapeSpec extends SparkSpec {
     }.flatten
     assert(banned.isEmpty, s"found ${banned.distinct.mkString(", ")}")
   }
+
+  // ---- kernel narrowing (graft.expr.NarrowKernels) ----
+  // A multi-output kernel read for a few members is narrowed to them in the
+  // optimized plan, on the block path and on the explode twin; a whole read
+  // keeps the whole kernel; plans without a narrowable kernel are untouched;
+  // and every catch22 query returns the same rows with the rule excluded.
+
+  private def kernels(p: LogicalPlan): Seq[WindowKernel] =
+    p.flatMap(_.expressions.flatMap(_.collect { case k: WindowKernel => k }))
+
+  private def query(name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
+
+  /** `body` with the rule left out of the optimizer. */
+  private def withoutRule[T](body: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", NarrowKernels.ruleName)
+    try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
+  private val q99aMembers = BitSet(0, 1, 2, 3, 6, 7, 8)
+
+  test("q99a's catch22 is narrowed to exactly the 7 members it reads") {
+    val ks = kernels(query("q99a_catch22_dist").queryExecution.optimizedPlan)
+    assert(ks.map(_.kernel) == Seq(Kernels.catch22().narrow(q99aMembers)), ks)
+    assert(q99aMembers.toSeq.map(Catch22Util.names) == Seq("DN_HistogramMode_5",
+      "DN_HistogramMode_10", "SB_BinaryStats_mean_longstretch1",
+      "SB_BinaryStats_diff_longstretch0", "CO_trev_1_num",
+      "MD_hrv_classic_pnn40", "FC_LocalSimple_mean3_stderr"))
+  }
+
+  test("q99a's explode twin narrows catch22 too") {
+    val plan = Gates.scoped(fuse = false) {
+      query("q99a_catch22_dist").queryExecution.optimizedPlan
+    }
+    assert(kernels(plan).map(_.kernel) == Seq(Kernels.catch22().narrow(q99aMembers)))
+  }
+
+  test("kernel narrowing leaves a plan without a narrowable kernel as it is (q105)") {
+    val plan = withoutRule(query("q105_tsfresh_comb").queryExecution.optimizedPlan)
+    assert(NarrowKernels(plan) eq plan)
+  }
+
+  test("field reads narrow a kernel; a consumer of the whole struct keeps it whole") {
+    NarrowKernels.install(spark)
+    val arr = spark.range(3).select(
+      array((0 until 12).map(i => sin(col("id") + i)): _*).as("x"))
+    val a = arr.select(Kernels.catch22()(col("x")).as("a"))
+    def kernelOf(df: DataFrame) = kernels(df.queryExecution.optimizedPlan).map(_.kernel)
+    // two fields read through one alias: narrowed
+    assert(kernelOf(a.select(col("a.CO_f1ecac"), col("a.CO_trev_1_num"))) ==
+      Seq(Kernels.catch22().narrow(BitSet(4, 6))))
+    // the struct itself next to a field, or serialized whole: the whole kernel
+    assert(kernelOf(a.select(col("a"), col("a.CO_f1ecac"))) == Seq(Kernels.catch22()))
+    assert(kernelOf(a.select(to_json(col("a")))) == Seq(Kernels.catch22()))
+    val whole = a.select(col("a"), col("a.CO_f1ecac").as("f")).collect()
+    assert(whole.forall(r => !r.isNullAt(1) &&
+      r.getStruct(0).getDouble(4) == r.getDouble(1)))
+  }
+
+  test("kernel narrowing is idempotent and installs once") {
+    val plan = withoutRule(query("q99a_catch22_dist").queryExecution.optimizedPlan)
+    assert(kernels(plan).map(_.kernel) == Seq(Kernels.catch22()))
+    val once = NarrowKernels(plan)
+    assert(once != plan && NarrowKernels(once) == once)
+    NarrowKernels.install(spark)
+    NarrowKernels.install(spark)
+    assert(spark.experimental.extraOptimizations.count(_ eq NarrowKernels) == 1)
+  }
+
+  // q99i reads one member: Spark collapses that read to catch22(x).f with
+  // no alias, which the rule leaves whole
+  for ((name, narrows) <- Seq("q99a_catch22_dist" -> true, "q99b_catch22_acf" -> true,
+      "q99f_catch22_t2" -> true, "q99g_catch22_t3" -> true, "q99h_catch22_fluct" -> true,
+      "q99i_catch22_pwang" -> false, "q109_catch24" -> true))
+    test(s"$name returns the same rows with kernel narrowing excluded") {
+      val narrowed = query(name)
+      val ks = kernels(narrowed.queryExecution.optimizedPlan)
+      assert(ks.nonEmpty && ks.forall(_.kernel.params.nonEmpty == narrows), ks)
+      val got = narrowed.collect().toSeq
+      val want = withoutRule {
+        val df = query(name)
+        assert(kernels(df.queryExecution.optimizedPlan).forall(_.kernel.params.isEmpty))
+        df.collect().toSeq
+      }
+      assert(got.nonEmpty && got == want)
+    }
 
   test("the expectation table covers exactly the shared pinned-plan set") {
     // PlanAudit.PinnedPlans is the single source the amplifier spec and

@@ -128,6 +128,25 @@ class FeatureCollectionSpec extends SparkSpec {
     }
   }
 
+  test("a window or stride <= 0 fails loudly, naming the value") {
+    def err(body: => Any): String = intercept[IllegalArgumentException](body).getMessage
+    val w3 = Some(Win.seq(3L))
+    assert(err(FeatureDescriptor(len, "dummy", w3, Some(Seq(Win.seq(1L), Win.seq(0L)))))
+      .contains("stride must be > 0, got SeqWin(0.0,0)"))
+    assert(err(FeatureDescriptor(len, "dummy", Some(Win.seq(-2L)), Some(Seq(Win.seq(1L)))))
+      .contains("window must be > 0, got SeqWin(-2.0,-2)"))
+    assert(err(FeatureDescriptor(len, "dummy", Some(Win.time("1h")), Some(Seq(Win.time("0h")))))
+      .contains("stride must be > 0, got TimeWin(0)"))
+    assert(err(NaryFeatureDescriptor(NaryFuncs.corr2, Seq("a", "b"), w3,
+      Some(Seq(Win.seq(0L))))).contains("stride must be > 0"))
+    // the calculate-level override: a zero stride used to return an empty frame
+    val fc = FeatureCollection(FeatureDescriptor(len, "dummy", w3, Some(Seq(Win.seq(1L)))))
+    assert(err(fc.calculate(Seq(tinySeries), strideOverride = Some(Seq(Win.seq(0L)))))
+      .contains("stride must be > 0, got SeqWin(0.0,0)"))
+    assert(err(fc.calculate(Seq(tinySeries), strideOverride = Some(Seq(Win.seq(-1.5)))))
+      .contains("stride must be > 0, got SeqWin(-1.5,-1.5)"))
+  }
+
   test("G1 group_by_all matches SQL GROUP BY") {
     import spark.implicits._
     val df = Seq((0L, 1.0, "a"), (1L, 2.0, "b"), (2L, 3.0, "a"), (3L, 4.0, "b"))

@@ -448,7 +448,7 @@ class Catch22Spec extends SparkSpec {
       Option(v).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
     var compared = 0
     for (x <- windows) {
-      val got = Catch22Util.compute(x, catch24 = true)
+      val got = Catch22Util.compute(x, catch24 = true, Catch22Util.members(catch24 = true))
       assert(got.numFields == 24)
       val want = Map(
         "DN_OutlierInclude_p_001_mdrmd" -> Replaced.outlierInclude(x, 1.0),
@@ -463,7 +463,7 @@ class Catch22Spec extends SparkSpec {
       // the other 20 members run code this rewrite leaves alone (their FFT
       // twiddle tables are pinned by FftSpec); a second evaluation — every
       // table size now cached — must reproduce all 24 fields' bits
-      val again = Catch22Util.compute(x, catch24 = true)
+      val again = Catch22Util.compute(x, catch24 = true, Catch22Util.members(catch24 = true))
       for (f <- 0 until 24)
         assert(rawBits(again, f) == rawBits(got, f),
           s"${Catch22Util.names24(f)} not reproducible at n=${x.length}")
