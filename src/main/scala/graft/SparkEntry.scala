@@ -29,9 +29,11 @@ object SparkEntry {
     *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark 4 infers
     *    TIMESTAMP_NTZ (`spark.sql.parquet.inferTimestampNTZ.enabled`
     *    defaults true); downstream `unix_micros` and interval arithmetic
-    *    require the LTZ TIMESTAMP type, so cast it up front. With the
-    *    session zone pinned to UTC the wall clock maps to the same epoch
-    *    micros DuckDB's naive read yields — oracle-identical.
+    *    require the LTZ TIMESTAMP type, so the file is read with `ts`
+    *    declared TIMESTAMP and the reader returns the stored micros as
+    *    instants, no per-row cast. The wall clock maps to the same epoch
+    *    micros DuckDB's naive read yields, as UTC whatever the session
+    *    zone — oracle-identical.
     */
   private def events(s: SparkSession, dir: String): DataFrame =
     graft.core.TsCompat.readEvents(s, s"$dir/events.parquet")

@@ -121,15 +121,16 @@ object KeyedFeatures {
     * table but every equi-join below dropped the null-key DATA rows,
     * reporting phantom empty windows. Every window and stride must share
     * the index's domain — a "1D" window over a numeric index would
-    * otherwise run as 8.64e10 index units — and sample-count windows have
-    * no keyed form.
+    * otherwise run as 8.64e10 index units — sample-count windows have
+    * no keyed form, and every window and stride must be > 0.
     */
   private def keyedInput(df: DataFrame, keyCol: String, idxCol: String,
-                         firstVal: String, wins: Seq[Win],
+                         firstVal: String, windows: Seq[(Win, Seq[Win])],
                          cols: Seq[Column]): (Series, DataFrame) = {
     graft.expr.NarrowKernels.install(df.sparkSession)
+    windows.foreach { case (w, sts) => Win.requirePositive(Some(w), Some(sts)) }
     val series = Series(firstVal, df, idxCol, firstVal)
-    wins.foreach { w =>
+    windows.flatMap { case (w, sts) => w +: sts }.foreach { w =>
       require(!w.isInstanceOf[SampleWin],
         s"sample-count windows are not supported by keyed features: $w")
       require(w.domain == series.domain,
@@ -205,7 +206,7 @@ object KeyedFeatures {
     val valueCols = (unary.map(_._1) ++ nary.flatMap(_._1)).distinct
     val firstVal = valueCols.head
     val (series, internal) = keyedInput(df, keyCol, idxCol, firstVal,
-      window +: strides, valueCols.map(col))
+      Seq(window -> strides), valueCols.map(col))
 
     val w = window.amount
     val sts = strides.map(_.amount).distinct.sorted
@@ -342,7 +343,7 @@ object KeyedFeatures {
     requireNaryArity(nary)
     val valueCols = (unary.map(_._1) ++ nary.flatMap(_._1)).distinct
     val (series, internal) = keyedInput(df, keyCol, idxCol, valueCols.head,
-      windows.flatMap { case (w, sts) => w +: sts }, valueCols.map(col))
+      windows, valueCols.map(col))
     val specs = windows.map { case (win, sts) =>
       (win, sts.map(_.amount).distinct.sorted)
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BinaryExpression, BindReferences, EmptyRow, Expression, Generator, GenericInternalRow, JoinedRow, MutableProjection, SpecificInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -313,26 +313,35 @@ case class SortedSlice(left: Expression, right: Expression)
   * `fn` and its input attributes are parameters, not children: they are
   * resolved against the explode-path plan and bound here to the fold's own
   * two-column row.
+  *
+  * The fold is compiled into the stage ([[doGenCode]]): `fn`'s expressions
+  * are generated against local buffer variables, bound through
+  * `ctx.currentVars` the way `HashAggregateExec` binds its buffer, and one
+  * loop walks the slice. `nullSafeEval` is the interpreted `eval` Spark
+  * falls back to; both fold in index order, so they agree bit for bit.
   */
 case class SliceFold(fn: DeclarativeAggregate, idx: Attribute, v: Attribute,
                      left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression {
 
   override def dataType: DataType = fn.dataType
   override def nullable: Boolean = fn.nullable
   override def prettyName: String = "slice_fold"
   override def toString: String = s"$prettyName($fn, $left, $right)"
 
+  private def bufAttrs = fn.aggBufferAttributes
+  private def rowAttrs = bufAttrs ++ Seq(idx, v)
+
   @transient private lazy val buffer =
-    new SpecificInternalRow(fn.aggBufferAttributes.map(_.dataType))
+    new SpecificInternalRow(bufAttrs.map(_.dataType))
   @transient private lazy val row = new SpecificInternalRow(Seq(DoubleType, DoubleType))
   @transient private lazy val joined = new JoinedRow(buffer, row)
   @transient private lazy val init =
     MutableProjection.create(fn.initialValues).target(buffer)
-  @transient private lazy val update = MutableProjection.create(
-    fn.updateExpressions, fn.aggBufferAttributes ++ Seq(idx, v)).target(buffer)
+  @transient private lazy val update =
+    MutableProjection.create(fn.updateExpressions, rowAttrs).target(buffer)
   @transient private lazy val result =
-    BindReferences.bindReference(fn.evaluateExpression, fn.aggBufferAttributes)
+    BindReferences.bindReference(fn.evaluateExpression, bufAttrs)
 
   override def nullSafeEval(ai: Any, av: Any): Any = {
     val is = ai.asInstanceOf[ArrayData]
@@ -347,6 +356,48 @@ case class SliceFold(fn: DeclarativeAggregate, idx: Attribute, v: Attribute,
     }
     result.eval(buffer)
   }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (ai, av) => {
+      def local(prefix: String, dt: DataType): ExprCode =
+        ExprCode(JavaCode.isNullVariable(ctx.freshName(s"${prefix}IsNull")),
+          JavaCode.variable(ctx.freshName(s"${prefix}Value"), dt))
+      def declare(to: ExprCode, from: ExprCode, dt: DataType): String =
+        s"boolean ${to.isNull} = ${from.isNull}; " +
+          s"${CodeGenerator.javaType(dt)} ${to.value} = ${from.value};"
+      val types = bufAttrs.map(_.dataType)
+      val buf = types.map(local("buf", _))
+      val (idxIn, vIn) =
+        (JavaCode.variable(ctx.freshName("idx"), DoubleType), local("v", DoubleType))
+      val (outerVars, outerRow) = (ctx.currentVars, ctx.INPUT_ROW)
+      ctx.INPUT_ROW = null
+      ctx.currentVars = null
+      val inits = fn.initialValues.map(_.genCode(ctx))
+      ctx.currentVars = buf ++ Seq(ExprCode(FalseLiteral, idxIn), vIn)
+      val updates =
+        BindReferences.bindReferences(fn.updateExpressions, rowAttrs).map(_.genCode(ctx))
+      ctx.currentVars = buf
+      val res = BindReferences.bindReference(fn.evaluateExpression, bufAttrs).genCode(ctx)
+      ctx.currentVars = outerVars
+      ctx.INPUT_ROW = outerRow
+      // every update is read into its own variable before any buffer slot
+      // is written: an update may read a slot another one writes
+      val next = types.map(local("next", _))
+      val (j, n) = (ctx.freshName("j"), ctx.freshName("n"))
+      (inits.map(_.code.toString) ++
+        buf.zip(inits).zip(types).map { case ((b, i), dt) => declare(b, i, dt) } ++
+        Seq(s"int $n = $av.numElements();",
+          s"for (int $j = 0; $j < $n; $j++) {",
+          s"double $idxIn = $ai.getDouble($j);",
+          s"boolean ${vIn.isNull} = $av.isNullAt($j);",
+          s"double ${vIn.value} = ${vIn.isNull} ? 0.0 : $av.getDouble($j);") ++
+        updates.map(_.code.toString) ++
+        next.zip(updates).zip(types).map { case ((x, u), dt) => declare(x, u, dt) } ++
+        buf.zip(next).map { case (b, x) => s"${b.isNull} = ${x.isNull}; ${b.value} = ${x.value};" } ++
+        Seq("}", res.code.toString) ++
+        (if (nullable) Seq(s"${ev.isNull} = ${res.isNull};") else Nil) ++
+        Seq(s"${ev.value} = ${res.value};")).mkString("\n")
+    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SliceFold =

@@ -247,4 +247,26 @@ class KeyedFeaturesSpec extends SparkSpec {
     KeyedFeatures.calculate(ts, "k", "idx", "v", Win.time("1D"),
       Seq(Win.time("6h")), Seq(len), "v")
   }
+
+  test("keyed paths reject windows and strides that are not > 0") {
+    import spark.implicits._
+    val ts = Seq(("a", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
+      ("a", java.sql.Timestamp.valueOf("2024-01-03 00:00:00"), 2.0)).toDF("k", "idx", "v")
+    def rejected(build: => Any, what: String): Unit = {
+      val e = intercept[IllegalArgumentException](build)
+      assert(e.getMessage.contains(what), e.getMessage)
+    }
+    val day = Win.time("1D")
+    // a zero window used to return one all-null row per window under
+    // `v__mean__w=`, a negative one under `v__mean__w=NEG1D`
+    rejected(KeyedFeatures.calculate(ts, "k", "idx", "v", TimeWin(0),
+      Seq(Win.time("6h")), Seq(mean), "v"), "window must be > 0, got TimeWin(0)")
+    rejected(KeyedFeatures.calculate(ts, "k", "idx", "v", Win.time(-day.micros),
+      Seq(Win.time("6h")), Seq(mean), "v"), "window must be > 0")
+    rejected(KeyedFeatures.calculateWide(ts, "k", "idx", day, Seq(TimeWin(0)),
+      Seq("v" -> mean)), "stride must be > 0, got TimeWin(0)")
+    rejected(KeyedFeatures.calculateWideMulti(ts, "k", "idx",
+      Seq(day -> Seq(Win.time("6h")), TimeWin(0) -> Seq(Win.time("6h"))),
+      Seq("v" -> mean)), "window must be > 0, got TimeWin(0)")
+  }
 }
