@@ -168,7 +168,7 @@ object SparkEntry {
     s"t${lz76LcpSteps.size - 1}.m${lz76LcpSteps.size - 1}"
 
   /** DuckDB CTE producing segments (ws, we) over `src` rows with the W1
-    * formula; mirrors Segmenter.regular + nbSegments exactly.
+    * formula; mirrors Segmenter.regular + AssignKernelUtil.nbOf exactly.
     */
   private def segCte(W: Long, S: Long, includeFinal: Boolean = false,
                      where: String = "", src: String = "events"): String = {

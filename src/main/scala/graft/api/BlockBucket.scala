@@ -45,8 +45,8 @@ private[api] final class BlockBucket private (
     * (`__idx`, `__v`), block-sliced.
     */
   def frame(rows: DataFrame): DataFrame = {
-    val (s0, w, specs) = plan.regular.get
-    val (sts, nbs) = (specs.map(_.stride), specs.map(_.nb))
+    val g = plan.regular.get
+    val (s0, w, sts, nbs) = (g.bounds.start, g.window, g.strides, g.nbs)
     val len = BlockSliceUtil.blockLength(w, sts, nbs,
       rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     val blocks = rows.select(col("__idx"), col("__v"),
@@ -104,7 +104,7 @@ private[api] object BlockBucket {
     */
   def of(exploded: DataFrame, plan: Segmenter.SegmentPlan): Option[BlockBucket] =
     (exploded.queryExecution.analyzed, plan.regular) match {
-      case (a: Aggregate, Some((_, _, specs))) if specs.forall(_.stride > 0) =>
+      case (a: Aggregate, Some(g)) if g.strides.forall(_ > 0) =>
         val in = a.child.output
         def double(name: String) =
           in.find(_.name == name).filter(_.dataType == DoubleType)

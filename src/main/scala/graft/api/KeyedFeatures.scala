@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core._
+import graft.segment.Segmenter.{koffOf, pick, startOf}
 
 /** Per-key strided-rolling feature extraction — the shape a 100 TB workload
   * actually has: millions of INDEPENDENT series (one per user / device /
@@ -11,11 +12,11 @@ import graft.core._
   * here the key is a first-class partitioning column:
   *
   *   1. per-key bounds: one partial-aggregated `groupBy(key)` pass;
-  *   2. per-key segment table: `sequence`+`explode` OVER THE BOUNDS ROWS
-  *      (nb segments derived per key; one tiny round-robin exchange
+  *   2. per-key segment table: a `SegmentsPacked` explode OVER THE BOUNDS
+  *      ROWS (nb segments derived per key; one tiny round-robin exchange
   *      re-widens the bounds first — see [[spreadBounds]]);
-  *   3. window→row assignment: the same arithmetic k-range explode as the
-  *      single-series engine, with the key's own start offset joined in;
+  *   3. window→row assignment: the single-series engine's `AssignPacked`
+  *      explode, with the key's own bounds joined in;
   *   4. ONE fused `groupBy(key, segment).agg(...)`, left-joined back onto
   *      the per-key segment table so empty windows survive (W7).
   *
@@ -27,8 +28,8 @@ object KeyedFeatures {
   /** Re-spread the per-key bounds table at pinned width before the segment
     * explode. The bounds aggregate OUTPUT is tiny (two doubles per key), so
     * AQE coalesces its exchange to a couple of partitions — and then the
-    * `sequence`+`explode` segment generation amplifies each key row into
-    * its full window list INSIDE those few tasks (measured on the 100×
+    * segment-grid explode amplifies each key row into its full window list
+    * INSIDE those few tasks (measured on the 100×
     * corpus: q72's two bounds-consumer stages ran 2-way parallel, 80 s of
     * the query's 154 s; the smoke listener missed it because its trigger
     * is single-task stages with big INPUT, not few-task stages with big
@@ -48,25 +49,17 @@ object KeyedFeatures {
     b.repartition(b.sparkSession.conf.get("spark.sql.shuffle.partitions")
       .toIntOption.getOrElse(b.sparkSession.sparkContext.defaultParallelism))
 
-  // ---- packed (spec, k) decode — the segment/assignment fan-outs are
-  // native kernels emitting `specIdx << 56 | k` longs (AssignKernels.scala:
-  // one primitive array per row instead of per-spec boxed struct arrays +
-  // array_distinct, and no segment-table distinct() shuffle); the spec's
-  // static (w, st) come back via a literal when-chain, so the decoded
-  // (w, koff, seg_start) doubles are computed by the exact same IEEE ops
-  // as the replaced Column forms ------------------------------------------
-
-  private def unpackIdx(p: Column): Column =
-    shiftrightunsigned(p, graft.expr.AssignKernelUtil.KBits).cast("int")
-  private def unpackK(p: Column): Column =
-    p.bitwiseAND(lit(graft.expr.AssignKernelUtil.KMask)).cast("double")
-  /** vals(i) as a literal when-chain (≤255 static specs — no array lookup,
-    * stays in whole-stage codegen as comparisons + constants). */
-  private def pick(i: Column, vals: Seq[Double]): Column =
-    if (vals.distinct.lengthCompare(1) == 0) lit(vals.head)
-    else vals.zipWithIndex.tail.foldLeft(when(i === 0, lit(vals.head))) {
-      case (acc, (v, j)) => acc.when(i === j, lit(v))
-    }
+  /** Per-key bounds `(__key, __s0, __e0)`. A NaN or infinite bound raises
+    * in-plan on that key's bounds row: one check per key, not per row. */
+  private def keyBounds(internal: DataFrame): DataFrame = {
+    def finite(c: String): Column = when(isnan(col(c) - col(c)), // NaN or ±Inf
+        raise_error(concat(lit("key '"), col("__key").cast("string"),
+          lit("' has a non-finite index bound — cannot segment NaN or infinite indexes"))))
+      .otherwise(col(c)).as(c)
+    internal.groupBy("__key")
+      .agg(min(col("__idx")).as("__s0"), max(col("__idx")).as("__e0"))
+      .select(col("__key"), finite("__s0"), finite("__e0"))
+  }
 
   // ---- fused decomposable aggregate (r19) ---------------------------------
   //
@@ -212,8 +205,7 @@ object KeyedFeatures {
     val sts = strides.map(_.amount).distinct.sorted
 
     // 1. per-key bounds
-    val bounds = internal.groupBy("__key")
-      .agg(min(col("__idx")).as("__s0"), max(col("__idx")).as("__e0"))
+    val bounds = keyBounds(internal)
     // spread ONLY the explode consumer — the withStart equi-join below has
     // no amplification, so it keeps the un-widened bounds (fewer static
     // exchanges; see spreadBounds)
@@ -225,28 +217,21 @@ object KeyedFeatures {
     val segments = boundsWide.select(col("__key"), col("__s0"),
         explode(graft.expr.SegmentsPacked(col("__s0"), col("__e0"),
           wsFlat, sts, includeFinalWindow, dedupOnKoff = false)).as("__p"))
-      .select(col("__key"),
-        (col("__s0") + unpackK(col("__p")) * pick(unpackIdx(col("__p")), sts))
-          .as("__seg_start"))
+      .select(col("__key"), startOf(col("__p"), col("__s0"), sts).as("__seg_start"))
       .select(col("__key"), col("__seg_start"),
         (col("__seg_start") + lit(w)).as("__seg_end"))
 
-    // 3. arithmetic assignment with the key's own bounds — the same packed
-    // kernel shape (k ranges [kmin, min(kmax, nb-1)] instead of [0, nb)).
-    // The in-kernel grid clamp (e0 rides along) replaces the
-    // join-with-segments filter the plan used to carry: starts past the
-    // key's own grid are never emitted, so the fused aggregate below runs
+    // 3. arithmetic assignment with the key's own bounds. The kernel clamps
+    // to the key's grid (e0 rides along), so the fused aggregate below runs
     // DIRECTLY on the explode — map-side partial aggregation collapses the
-    // fan-out before its one exchange, where the join shape shuffled and
-    // sorted every (row × window) pair at full width first.
+    // fan-out before its one exchange.
     val withStart = internal.join(bounds, Seq("__key"))
     val assigned = withStart.select(
       col("__key") +: col("__idx") +: col("__s0") +: valueCols.map(col) :+
         explode(graft.expr.AssignPacked(col("__idx"), col("__s0"),
           col("__e0"), wsFlat, sts, includeFinalWindow)).as("__p"): _*)
       .select(col("__key") +:
-        (col("__s0") + unpackK(col("__p")) * pick(unpackIdx(col("__p")), sts))
-          .as("__seg_start") +:
+        startOf(col("__p"), col("__s0"), sts).as("__seg_start") +:
         col("__idx") +: valueCols.map(col): _*)
 
     val anchorRaw = graft.segment.Segmenter.anchor(windowIdx)
@@ -349,8 +334,7 @@ object KeyedFeatures {
     }
 
     // 1. per-key bounds — ONE pass shared by every window
-    val bounds = internal.groupBy("__key")
-      .agg(min(col("__idx")).as("__s0"), max(col("__idx")).as("__e0"))
+    val bounds = keyBounds(internal)
     // spread ONLY the explode consumer (see the single-window path)
     val boundsWide = spreadBounds(bounds)
 
@@ -360,36 +344,25 @@ object KeyedFeatures {
     // shuffle of the previous formulation
     val specW = specs.flatMap { case (win, ss) => ss.map(_ => win.amount) }
     val specSt = specs.flatMap { case (_, ss) => ss }
-    val segments = {
-      val si = unpackIdx(col("__p"))
-      val koff = unpackK(col("__p")) * pick(si, specSt)
-      boundsWide.select(col("__key"), col("__s0"),
-          explode(graft.expr.SegmentsPacked(col("__s0"), col("__e0"),
-            specW, specSt, includeFinalWindow, dedupOnKoff = true)).as("__p"))
-        .select(col("__key"), pick(si, specW).as("__w"), col("__s0"),
-          koff.as("__koff"), (col("__s0") + koff).as("__seg_start"))
-    }
+    val segments = boundsWide.select(col("__key"), col("__s0"),
+        explode(graft.expr.SegmentsPacked(col("__s0"), col("__e0"),
+          specW, specSt, includeFinalWindow, dedupOnKoff = true)).as("__p"))
+      .select(col("__key"), pick(col("__p"), specW).as("__w"), col("__s0"),
+        koffOf(col("__p"), specSt).as("__koff"),
+        startOf(col("__p"), col("__s0"), specSt).as("__seg_start"))
 
-    // 3. one assignment explode over packed (window, seg_start) pairs —
-    // grid-clamped in-kernel (e0 rides along), so the out-of-grid starts
-    // the plan used to discard with a join against the segment table are
-    // never emitted and the fused aggregate below runs directly on the
-    // explode with map-side partial aggregation (see calculateWide's
-    // step-3 note).
+    // 3. one assignment explode over packed (window, seg_start) pairs,
+    // grid-clamped in-kernel (see calculateWide's step-3 note).
     val fuseOk = Gates.fuse && nary.isEmpty && windowKeep.isEmpty &&
       unary.nonEmpty && unary.forall { case (_, f) => maskable(f) }
     val withStart = internal.join(bounds, Seq("__key"))
-    lazy val assigned = {
-      val si = unpackIdx(col("__p"))
-      withStart.select(
-        col("__key") +: col("__idx") +: col("__s0") +: valueCols.map(col) :+
-          explode(graft.expr.AssignPacked(col("__idx"), col("__s0"),
-            col("__e0"), specW, specSt, includeFinalWindow)).as("__p"): _*)
-        .select(col("__key") +: pick(si, specW).as("__w") +:
-          (col("__s0") + unpackK(col("__p")) * pick(si, specSt))
-            .as("__seg_start") +:
-          col("__idx") +: valueCols.map(col): _*)
-    }
+    val packed = explode(graft.expr.AssignPacked(col("__idx"), col("__s0"),
+      col("__e0"), specW, specSt, includeFinalWindow)).as("__p")
+    lazy val assigned = withStart.select(
+        col("__key") +: col("__idx") +: col("__s0") +: valueCols.map(col) :+ packed: _*)
+      .select(col("__key") +: pick(col("__p"), specW).as("__w") +:
+        startOf(col("__p"), col("__s0"), specSt).as("__seg_start") +:
+        col("__idx") +: valueCols.map(col): _*)
 
     // anchors from DIFFERENT windows must land on one row when they are
     // mathematically equal, so the pivot groups on the key-relative offset
@@ -410,14 +383,10 @@ object KeyedFeatures {
     // existence fillers. Same group set, same anchorOff doubles, same
     // output names/order; plan shape 4 exchange-bearing stages → 1.
     if (fuseOk) {
-      val si = unpackIdx(col("__p"))
       val exploded = withStart.select(
-          col("__key") +: col("__s0") +:
-          explode(graft.expr.AssignPacked(col("__idx"), col("__s0"),
-            col("__e0"), specW, specSt, includeFinalWindow)).as("__p") +:
-          valueCols.map(col): _*)
-        .select(col("__key") +: pick(si, specW).as("__w") +:
-          (unpackK(col("__p")) * pick(si, specSt)).as("__koff") +:
+          col("__key") +: col("__s0") +: packed +: valueCols.map(col): _*)
+        .select(col("__key") +: pick(col("__p"), specW).as("__w") +:
+          koffOf(col("__p"), specSt).as("__koff") +:
           col("__s0") +: valueCols.map(col): _*)
       val filler = segments.select(
         col("__key") +: col("__w") +: col("__koff") +: col("__s0") +:

@@ -7,31 +7,29 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Native kernels for the keyed-rolling W5 arithmetic — the two per-row /
-  * per-key fan-outs of `KeyedFeatures` (reference semantics:
-  * tsflex/features/segmenter/strided_rolling.py's window/stride start
-  * arithmetic, applied per entity):
+/** The window-grid arithmetic of the strided-rolling segmenter (reference
+  * semantics: tsflex/features/segmenter/strided_rolling.py's window/stride
+  * start arithmetic), written once — [[kmin]], [[kmax]], [[nbOf]] — and the
+  * two native kernels every regular segmentation runs on (`Segmenter.assign`,
+  * both keyed fan-outs of `KeyedFeatures`; `BlockSliceUtil` reads the same
+  * helpers):
   *
   *   - ASSIGNMENT: every data row joins the (window, stride) segments that
   *     contain it — k in [kmin, min(kmax, nb-1)] per spec (strided_rolling's
   *     half-open [start, start+window) membership solved for the segment
-  *     counter k, clamped to the key's own grid so no join is needed to
-  *     discard out-of-grid starts);
+  *     counter k, clamped to the grid so no join is needed to discard
+  *     out-of-grid starts);
   *   - SEGMENTS: every key emits its own segment grid — k in [0, nb) per
   *     spec.
   *
-  * The replaced Column forms built one BOXED array per row per spec
-  * (`transform(sequence(kmin, kmax), k => struct(w, s0 + k·st))`), then
-  * `array_distinct(concat(...))` over the boxed structs — the same
-  * per-element-allocation signature the entropy kernels killed — and the
-  * segment grid deduped with a full `.distinct()` SHUFFLE of the segment
-  * table. Both kernels emit ONE primitive long array per row:
-  * `specIdx << 56 | k`, deduped in-loop on the exact double pair the old
-  * forms deduped on, so the downstream decode
-  * (`shiftrightunsigned`/`bitwiseAND` + a literal when-chain over the ≤255
-  * static specs) reproduces bit-identical (w, koff, seg_start) doubles in
-  * whole-stage codegen. Differential-tested against the replaced Column
-  * forms in AssignKernelsSpec.
+  * Both kernels emit ONE primitive long array per row, `specIdx << 56 | k`,
+  * deduped in-loop on the exact (w, s0 + k·st) double pair, so the decode
+  * (`Segmenter.startOf`: a shift, a mask and a literal when-chain over the
+  * ≤255 static specs) reproduces bit-identical (w, koff, seg_start) doubles
+  * in whole-stage codegen. The Column forms they replaced — one boxed
+  * `transform(sequence(kmin, kmax), ...)` array per row per spec plus
+  * `array_distinct(concat(...))`, an interpreted lambda per row — are the
+  * differential reference in AssignKernelsSpec.
   *
   * Floor semantics match Spark's `floor(double)→long` (`Math.floor(d)` then
   * a saturating long cast: NaN→0, ±Inf→Long.Min/Max), so NaN indexes emit
@@ -44,7 +42,17 @@ object AssignKernelUtil {
   val KBits = 56
   val KMask: Long = (1L << KBits) - 1
 
-  private def floorL(d: Double): Long = math.floor(d).toLong
+  def floorL(d: Double): Long = math.floor(d).toLong
+
+  /** First window counter of stride `st` holding index t (unclamped). */
+  def kmin(t: Double, s0: Double, w: Double, st: Double): Long =
+    floorL((t - s0 - w) / st) + 1L
+
+  /** Last window counter of stride `st` holding index t (unclamped). */
+  def kmax(t: Double, s0: Double, st: Double): Long = floorL((t - s0) / st)
+
+  /** Start of window k: `s0 + k·st`, the `__seg_id` double. */
+  def startOf(s0: Double, k: Long, st: Double): Double = s0 + k.toDouble * st
 
   /** Emission-count threshold above which the in-loop dedup switches from
     * the linear scan over prior entries (O(m²) across a row's fan-out — the
@@ -87,16 +95,48 @@ object AssignKernelUtil {
     }
   }
 
+  /** One row's packed (spec, k) pairs, at most `cap` of them. With `dedup`
+    * a pair whose (w, d) doubles `==` an earlier pair's is dropped — only an
+    * equal-w entry can collide, as in the replaced struct(w, s) equality. */
+  private final class Packer(cap: Int, dedup: Boolean) {
+    private val packed = new Array[Long](cap)
+    private val hashed = if (dedup && cap > LinearDedupMax) new PairSet(cap) else null
+    private val linear = dedup && hashed == null
+    private val wArr = if (linear) new Array[Double](cap) else null
+    private val dArr = if (linear) new Array[Double](cap) else null
+    private var m = 0
+
+    def add(spec: Int, k: Long, w: Double, d: Double): Unit = {
+      var dup = false
+      if (hashed != null) {
+        // NaN bypasses the set: `==` equates NaN to nothing, so a NaN
+        // coordinate is always emitted and never inserted (the probe's
+        // bit key would otherwise unify NaNs the scan kept distinct)
+        if (w == w && d == d) dup = !hashed.add(w, d)
+      } else if (linear) {
+        var j = 0
+        while (!dup && j < m) { dup = wArr(j) == w && dArr(j) == d; j += 1 }
+      }
+      if (!dup) {
+        if (linear) { wArr(m) = w; dArr(m) = d }
+        packed(m) = (spec.toLong << KBits) | k
+        m += 1
+      }
+    }
+
+    def result: ArrayData = UnsafeArrayData.fromPrimitiveArray(
+      if (m == cap) packed else java.util.Arrays.copyOf(packed, m))
+  }
+
   private def checkK(k: Long): Long = {
     if (k > KMask) throw new IllegalStateException(
       s"segment counter $k exceeds 2^$KBits — stride too fine for the span")
     k
   }
 
-  /** Packed (spec, k) pairs of the segments CONTAINING index `t` for a key
-    * whose range is [s0, e0]: k in [kmin, min(kmax, nb-1)] per spec, kmin =
-    * max(0, floor((t-s0-w)/st)+1), kmax = floor((t-s0)/st), nb the key's own
-    * grid size ([[segments]]' per-spec bound, includeFinal included). The
+  /** Packed (spec, k) pairs of the segments CONTAINING index `t` for a grid
+    * over [s0, e0] (a key's own range, or a series' bounds): k in
+    * [max(0, kmin), min(kmax, nb-1)] per spec ([[kmin]], [[kmax]], [[nbOf]]). The
     * GRID CLAMP is what lets the callers drop their
     * assignment-join-segments filter: the replaced plan emitted unclamped
     * pairs and inner-joined the segment table to discard starts past the
@@ -122,59 +162,25 @@ object AssignKernelUtil {
     var total = 0L
     var i = 0
     while (i < n) {
-      val kmin = math.max(0L, floorL((t - s0 - ws(i)) / sts(i)) + 1L)
-      val kmax = math.min(floorL((t - s0) / sts(i)),
+      val k0 = math.max(0L, kmin(t, s0, ws(i), sts(i)))
+      val k1 = math.min(kmax(t, s0, sts(i)),
         nbOf(s0, e0, ws(i), sts(i), includeFinal) - 1L)
-      if (kmax >= kmin) total += checkK(kmax) - kmin + 1L
+      if (k1 >= k0) total += checkK(k1) - k0 + 1L
       i += 1
     }
     if (total > (Int.MaxValue - 8).toLong) throw new IllegalStateException(
       s"assignment fan-out $total pairs for one row — window/stride ratio " +
         "too large")
-    val cap = total.toInt
-    val packed = new Array[Long](cap)
-    val dedup = n > 1
-    val hashed = if (dedup && cap > LinearDedupMax) new PairSet(cap) else null
-    val linear = dedup && hashed == null
-    val wArr = if (linear) new Array[Double](cap) else null
-    val sArr = if (linear) new Array[Double](cap) else null
-    var m = 0
+    val out = new Packer(total.toInt, dedup = n > 1)
     i = 0
     while (i < n) {
       val w = ws(i); val st = sts(i)
-      var k = math.max(0L, floorL((t - s0 - w) / st) + 1L)
-      val kmax = math.min(floorL((t - s0) / st),
-        nbOf(s0, e0, w, st, includeFinal) - 1L)
-      while (k <= kmax) {
-        var dup = false
-        var s = 0.0
-        if (dedup) {
-          s = s0 + k * st
-          if (hashed != null) {
-            // NaN bypasses the set: `==` equates NaN to nothing, so a NaN
-            // coordinate is always emitted and never inserted (the probe's
-            // bit key would otherwise unify NaNs the scan kept distinct)
-            if (w == w && s == s) dup = !hashed.add(w, s)
-          } else {
-            var j = 0
-            while (!dup && j < m) {
-              // only an equal-w entry can collide in struct(w, s) equality
-              if (wArr(j) == w && sArr(j) == s) dup = true
-              j += 1
-            }
-          }
-        }
-        if (!dup) {
-          if (linear) { wArr(m) = w; sArr(m) = s }
-          packed(m) = (i.toLong << KBits) | k
-          m += 1
-        }
-        k += 1
-      }
+      var k = math.max(0L, kmin(t, s0, w, st))
+      val k1 = math.min(kmax(t, s0, st), nbOf(s0, e0, w, st, includeFinal) - 1L)
+      while (k <= k1) { out.add(i, k, w, startOf(s0, k, st)); k += 1 }
       i += 1
     }
-    UnsafeArrayData.fromPrimitiveArray(
-      if (m == cap) packed else java.util.Arrays.copyOf(packed, m))
+    out.result
   }
 
   /** Packed (spec, k) pairs of a key's own segment grid: k in [0, nb) per
@@ -200,50 +206,26 @@ object AssignKernelUtil {
     }
     if (total > (Int.MaxValue - 8).toLong) throw new IllegalStateException(
       s"segment grid $total rows for one key — stride too fine for the span")
-    val cap = total.toInt
-    val packed = new Array[Long](cap)
-    val dedup = dedupOnKoff || n > 1
-    val hashed = if (dedup && cap > LinearDedupMax) new PairSet(cap) else null
-    val linear = dedup && hashed == null
-    val wArr = if (linear) new Array[Double](cap) else null
-    val dArr = if (linear) new Array[Double](cap) else null
-    var m = 0
+    val out = new Packer(total.toInt, dedup = dedupOnKoff || n > 1)
     i = 0
     while (i < n) {
       val w = ws(i); val st = sts(i)
       val nb = nbOf(s0, e0, w, st, includeFinal)
       var k = 0L
       while (k < nb) {
-        var dup = false
-        var d = 0.0
-        if (dedup) {
-          d = if (dedupOnKoff) k * st else s0 + k * st
-          if (hashed != null) {
-            // NaN bypass — same contract as [[assign]]'s probe
-            if (w == w && d == d) dup = !hashed.add(w, d)
-          } else {
-            var j = 0
-            while (!dup && j < m) {
-              if (wArr(j) == w && dArr(j) == d) dup = true
-              j += 1
-            }
-          }
-        }
-        if (!dup) {
-          if (linear) { wArr(m) = w; dArr(m) = d }
-          packed(m) = (i.toLong << KBits) | k
-          m += 1
-        }
+        out.add(i, k, w, if (dedupOnKoff) k * st else startOf(s0, k, st))
         k += 1
       }
       i += 1
     }
-    UnsafeArrayData.fromPrimitiveArray(
-      if (m == cap) packed else java.util.Arrays.copyOf(packed, m))
+    out.result
   }
 
-  private def nbOf(s0: Double, e0: Double, w: Double, st: Double,
-                   includeFinal: Boolean): Long = {
+  /** W1: the number of windows of stride `st` over [s0, e0] — max(0,
+    * floor((e0-s0-w)/st)+1), +1 when `includeFinal` and the next start is
+    * still ≤ e0 (include_final_window's tail). */
+  def nbOf(s0: Double, e0: Double, w: Double, st: Double,
+           includeFinal: Boolean): Long = {
     // floorL saturates at Long.MaxValue for astronomically fine strides —
     // the naive +1 then WRAPS negative and max(…, 0) turns the overflow
     // into a silently EMPTY grid, skipping the 2^56 checkK guard both here

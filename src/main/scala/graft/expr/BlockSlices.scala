@@ -21,30 +21,20 @@ import org.apache.spark.sql.types._
   * path (`Segmenter.assign`) uses as `__seg_id`; its BLOCK is
   * `floor((start − s0) / len)`. Computing the block from the start double
   * itself means two strides that produce the same start put it in the same
-  * block, where the duplicate is merged (the explode path's
-  * `array_distinct`).
+  * block, where the duplicate is merged (the explode path's multi-stride
+  * dedup).
   *
   * The row at index t lies in the windows k ∈ [kmin(t), kmax(t)] — the
-  * floor arithmetic of `Segmenter.assign`, written once here for both ends
-  * of the block path: [[blockRange]] sends the row to the blocks of those
-  * windows ([[BlockAssign]]), and inside a block's index-sorted buffer a
-  * window is the contiguous run of rows whose range contains its k
-  * ([[slices]]). Both bounds are monotone in the index, so each end of the
-  * run is one binary search, and membership is the explode path's exactly.
+  * grid arithmetic of `AssignKernelUtil`, the kernel behind
+  * `Segmenter.assign`, read here for both ends of the block path:
+  * [[blockRange]] sends the row to the blocks of those windows
+  * ([[BlockAssign]]), and inside a block's index-sorted buffer a window is
+  * the contiguous run of rows whose range contains its k ([[slices]]). Both
+  * bounds are monotone in the index, so each end of the run is one binary
+  * search, and membership is the explode path's exactly.
   */
 object BlockSliceUtil {
-
-  private def floorL(d: Double): Long = math.floor(d).toLong
-
-  /** First window counter of stride `st` holding index t (unclamped). */
-  private def kmin(t: Double, s0: Double, w: Double, st: Double): Long =
-    floorL((t - s0 - w) / st) + 1L
-
-  /** Last window counter of stride `st` holding index t (unclamped). */
-  private def kmax(t: Double, s0: Double, st: Double): Long = floorL((t - s0) / st)
-
-  /** Start of window k: the `__seg_id` double. */
-  private def startOf(s0: Double, k: Long, st: Double): Double = s0 + k.toDouble * st
+  import AssignKernelUtil.{floorL, kmax, kmin, startOf}
 
   /** The block of window k. */
   private def blockOf(s0: Double, k: Long, st: Double, len: Double): Long =

@@ -3,6 +3,7 @@ package graft.segment
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
+import graft.expr.{AssignKernelUtil, AssignPacked}
 
 /** Bounds of the data range to segment (P2/P3). */
 final case class Bounds(start: Double, end: Double)
@@ -20,25 +21,34 @@ final case class Bounds(start: Double, end: Double)
   *   (half-open, searchsorted-'left' on both sides — W5).
   *
   * Scale design: for regular strides, window→row assignment is ARITHMETIC —
-  * each row computes its own overlapping segment-start set via
-  * `sequence(kmin, kmax)` + `explode` (pure whole-stage-codegen math, no
-  * join, no shuffle before the final partial-aggregated `groupBy`). The
-  * segment table itself is built lazily with `spark.range` (never
-  * driver-materialized) and only joined — broadcast — to restore
-  * empty-window rows (W7). Irregular/manual segments fall back to a
-  * broadcast range join.
+  * each row computes its own overlapping segment-start set with the
+  * `AssignPacked` kernel (`graft.expr.AssignKernelUtil`, the same kernel
+  * the keyed paths run): one primitive array of packed (stride, k) longs
+  * per row, exploded and decoded to `s0 + k·st` by [[startOf]] — pure
+  * whole-stage-codegen math, no join, no shuffle before the final
+  * partial-aggregated `groupBy`. The segment table itself is built lazily
+  * with `spark.range` (never driver-materialized) and only joined —
+  * broadcast — to restore empty-window rows (W7). Irregular/manual
+  * segments fall back to a broadcast range join.
   */
 object Segmenter {
 
-  /** One regular stride's generation parameters. */
-  final case class StrideSpec(stride: Double, nb: Long)
+  /** A regular grid: windows of length `window` starting at
+    * `bounds.start + k·st` for every stride st (distinct, ascending),
+    * k ∈ [0, nb). */
+  final case class Grid(bounds: Bounds, window: Double, strides: Seq[Double],
+                        includeFinal: Boolean) {
+    /** Window count per stride ([[AssignKernelUtil.nbOf]]). */
+    def nbs: Seq[Long] = strides.map(
+      AssignKernelUtil.nbOf(bounds.start, bounds.end, window, _, includeFinal))
+  }
 
   /** A planned segmentation: lazily-built segment table + (for regular
-    * strides) the arithmetic-assignment spec.
+    * strides) the grid the arithmetic assignment runs on.
     */
   final case class SegmentPlan(
       segments: DataFrame, // __seg_id, __seg_start, __seg_end (Double)
-      regular: Option[(Double, Double, Seq[StrideSpec])], // (start0, window, strides)
+      regular: Option[Grid],
       winRender: String)
 
   /** P3 bound methods (reference: tsflex/features/utils.py:77-99):
@@ -64,6 +74,11 @@ object Segmenter {
             s"series '${s.name}' has no non-null indexed rows — cannot " +
               "derive segmentation bounds")
           val v = (r.getDouble(0), r.getDouble(1))
+          // Spark's max ranks NaN highest; a NaN or infinite bound would
+          // segment a wrong (or a Long.MaxValue-window) grid
+          require(v._1.isFinite && v._2.isFinite,
+            s"series '${s.name}' has a non-finite index bound " +
+              s"[${v._1}, ${v._2}] — cannot segment NaN or infinite indexes")
           reps += ((s, v))
           v
       }
@@ -76,14 +91,6 @@ object Segmenter {
     }
   }
 
-  /** W1: number of segments for one stride. */
-  def nbSegments(b: Bounds, window: Double, stride: Double,
-                 includeFinalWindow: Boolean): Long = {
-    var nb = math.max(math.floor((b.end - b.start - window) / stride).toLong + 1, 0L)
-    if (includeFinalWindow && b.start + stride * nb <= b.end) nb += 1
-    nb
-  }
-
   /** W1–W3: regular segment plan for one window and one-or-more strides.
     * Multi-stride = set union of per-stride starts, deduped and sorted (W2,
     * reference: strided_rolling.py:264-274).
@@ -92,18 +99,18 @@ object Segmenter {
               strides: Seq[Double], includeFinalWindow: Boolean,
               winRender: String): SegmentPlan = {
     require(strides.nonEmpty, "at least one stride required")
-    val specs = strides.distinct.sorted.map(s =>
-      StrideSpec(s, nbSegments(b, window, s, includeFinalWindow)))
-    val perStride = specs.map { sp =>
-      spark.range(sp.nb)
-        .select((lit(b.start) + col("id").cast("double") * lit(sp.stride)).as("__seg_start"))
+    require(b.start.isFinite && b.end.isFinite, s"segmentation bounds must be finite: $b")
+    val grid = Grid(b, window, strides.distinct.sorted, includeFinalWindow)
+    val perStride = grid.strides.zip(grid.nbs).map { case (st, nb) =>
+      spark.range(nb)
+        .select((lit(b.start) + col("id").cast("double") * lit(st)).as("__seg_start"))
     }
     var segs = perStride.reduce(_.unionAll(_))
-    if (specs.length > 1) segs = segs.distinct()
+    if (grid.strides.length > 1) segs = segs.distinct()
     val segments = segs
       .select(col("__seg_start"), (col("__seg_start") + lit(window)).as("__seg_end"))
       .withColumn("__seg_id", col("__seg_start"))
-    SegmentPlan(segments, Some((b.start, window, specs)), winRender)
+    SegmentPlan(segments, Some(grid), winRender)
   }
 
   /** W4: manual segments from user-supplied start and/or end arrays
@@ -113,12 +120,15 @@ object Segmenter {
   def manual(spark: SparkSession, starts: Option[Seq[Double]],
              ends: Option[Seq[Double]], window: Option[Double],
              winRender: String = "manual"): SegmentPlan = {
+    def width(given: String): Double = window.getOrElse(
+      throw new IllegalArgumentException(
+        s"$given-only segments need a window to derive the other side"))
     val (s, e) = (starts, ends) match {
       case (Some(s0), Some(e0)) =>
         require(s0.length == e0.length, "segment start/end length mismatch")
         (s0, e0)
-      case (Some(s0), None) => (s0, s0.map(_ + window.get))
-      case (None, Some(e0)) => (e0.map(_ - window.get), e0)
+      case (Some(s0), None) => (s0, s0.map(_ + width("starts")))
+      case (None, Some(e0)) => (e0.map(_ - width("ends")), e0)
       case _ => throw new IllegalArgumentException("need starts and/or ends")
     }
     require(s.zip(e).forall { case (a, b) => a <= b }, "segment start > end")
@@ -132,30 +142,24 @@ object Segmenter {
   /** W5: assign rows to segments. Returns the input frame with one output
     * row per (row, containing segment) pair, tagged `__seg_id`.
     *
-    * Regular path: arithmetic explode — for stride st, row t overlaps
-    * starts with k ∈ [floor((t-s0-w)/st)+1, floor((t-s0)/st)] ∩ [0, nb).
-    * Multi-stride: per-row union of the per-stride start sets
-    * (`array_distinct`), mirroring the reference's global `np.unique`.
+    * Regular path: arithmetic explode of the `AssignPacked` kernel — for
+    * stride st, row t overlaps starts with
+    * k ∈ [floor((t-s0-w)/st)+1, floor((t-s0)/st)] ∩ [0, nb)
+    * ([[AssignKernelUtil.assign]]), decoded to `s0 + k·st` by [[startOf]].
+    * Multi-stride: the kernel dedups each row's starts in-loop, mirroring
+    * the reference's global `np.unique`.
     *
     * Manual path: broadcast range join (segment tables are small relative
     * to data; for huge manual tables swap in a range-join strategy).
     */
   def assign(rows: DataFrame, plan: SegmentPlan): DataFrame = plan.regular match {
-    case Some((s0, w, specs)) =>
-      val t = col("__idx")
-      val arrays: Seq[Column] = specs.map { sp =>
-        val kmin = greatest(lit(0L),
-          (floor((t - lit(s0) - lit(w)) / lit(sp.stride)) + lit(1)).cast("long"))
-        val kmax = least(lit(sp.nb - 1),
-          floor((t - lit(s0)) / lit(sp.stride)).cast("long"))
-        when(kmax >= kmin,
-          transform(sequence(kmin, kmax),
-            k => lit(s0) + k.cast("double") * lit(sp.stride)))
-          .otherwise(array().cast("array<double>"))
-      }
-      val all = if (arrays.length == 1) arrays.head
-                else array_distinct(concat(arrays: _*))
-      rows.select(col("*"), explode(all).as("__seg_id"))
+    case Some(g) =>
+      val s0 = lit(g.bounds.start)
+      rows.select(col("*"), explode(AssignPacked(col("__idx"), s0,
+          lit(g.bounds.end), g.strides.map(_ => g.window), g.strides,
+          g.includeFinal)).as("__p"))
+        .withColumn("__seg_id", startOf(col("__p"), s0, g.strides))
+        .drop("__p")
     case None =>
       val segs = plan.segments
       rows.join(broadcast(segs),
@@ -163,6 +167,31 @@ object Segmenter {
         "inner")
         .select(rows.columns.toIndexedSeq.map(col) :+ col("__seg_id"): _*)
   }
+
+  // ---- packed (spec, k) decode: the AssignPacked/SegmentsPacked kernels
+  // emit `specIdx << 56 | k` longs (graft.expr.AssignKernelUtil); a spec's
+  // static (w, st) come back through a literal when-chain, so a decoded
+  // start is the same IEEE ops `s0 + k·st` the kernels dedup on ----------
+
+  /** vals(spec of the packed pair `p`) as a literal when-chain (≤255 static
+    * specs — no array lookup, stays in whole-stage codegen as comparisons +
+    * constants). */
+  def pick(p: Column, vals: Seq[Double]): Column =
+    if (vals.distinct.lengthCompare(1) == 0) lit(vals.head)
+    else {
+      val i = shiftrightunsigned(p, AssignKernelUtil.KBits).cast("int")
+      vals.zipWithIndex.tail.foldLeft(when(i === 0, lit(vals.head))) {
+        case (acc, (v, j)) => acc.when(i === j, lit(v))
+      }
+    }
+
+  /** k·st of the packed pair `p` over the specs' strides `sts`: its
+    * window's offset from the grid start. */
+  def koffOf(p: Column, sts: Seq[Double]): Column =
+    p.bitwiseAND(lit(AssignKernelUtil.KMask)).cast("double") * pick(p, sts)
+
+  /** Start `s0 + k·st` of the packed pair `p`'s window. */
+  def startOf(p: Column, s0: Column, sts: Seq[Double]): Column = s0 + koffOf(p, sts)
 
   /** W8 sparsity check (reference: strided_rolling.py:230-239): per series,
     * the per-segment sample counts' peak-to-peak (max - min, empty segments

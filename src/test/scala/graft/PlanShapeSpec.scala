@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.ArraySort
+import org.apache.spark.sql.catalyst.expressions.{ArraySort, ArrayTransform, LambdaFunction}
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
 import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
 import graft.core.Gates
-import graft.expr.{Catch22Util, Kernels, NarrowKernels, WindowKernel}
+import graft.expr.{AssignPacked, Catch22Util, Kernels, NarrowKernels, WindowKernel}
 import scala.collection.immutable.BitSet
 
 /** Pins the physical-plan SHAPE (shuffle-exchange count + join-strategy
@@ -262,6 +262,22 @@ class PlanShapeSpec extends SparkSpec {
       })
     }.flatten
     assert(banned.isEmpty, s"found ${banned.distinct.mkString(", ")}")
+  }
+
+  test("q01 assigns rows to windows with one assign_packed kernel and no lambda") {
+    // the single-series explode runs the keyed paths' native kernel;
+    // `transform` over `sequence` evaluated an interpreted lambda per row
+    val plan = query("q01_roll_mean").queryExecution.optimizedPlan
+    val exprs = plan.collectWithSubqueries { case node =>
+      node.expressions.flatMap(_.collect { case e => e })
+    }.flatten
+    assert(exprs.count(_.isInstanceOf[AssignPacked]) == 1,
+      exprs.collect { case e: AssignPacked => e })
+    val lambdas = exprs.collect {
+      case e: ArrayTransform => e.prettyName
+      case e: LambdaFunction => e.prettyName
+    }
+    assert(lambdas.isEmpty, s"found ${lambdas.distinct.mkString(", ")}")
   }
 
   // ---- kernel narrowing (graft.expr.NarrowKernels) ----

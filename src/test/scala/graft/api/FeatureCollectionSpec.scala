@@ -199,6 +199,32 @@ class FeatureCollectionSpec extends SparkSpec {
     assert(rows == Seq((3L, 3L), (5L, 3L)))
   }
 
+  test("W4 starts-only or ends-only manual segments without a window fail with a named error") {
+    val fc = FeatureCollection(FeatureDescriptor(len, "dummy", None, None))
+    val s = intercept[IllegalArgumentException](fc.calculate(Seq(tinySeries),
+      segmentStartIdxs = Some(Seq(0.0, 2.0))))
+    assert(s.getMessage.contains("starts-only segments need a window"), s.getMessage)
+    val e = intercept[IllegalArgumentException](fc.calculate(Seq(tinySeries),
+      segmentEndIdxs = Some(Seq(3.0))))
+    assert(e.getMessage.contains("ends-only segments need a window"), e.getMessage)
+  }
+
+  test("a NaN or infinite index value fails loudly instead of changing the grid") {
+    import spark.implicits._
+    val fc = FeatureCollection(FeatureDescriptor(len, "v",
+      Some(Win.seq(10L)), Some(Seq(Win.seq(5L)))))
+    def series(extra: Seq[Double]) = Series("v",
+      ((0 until 100).map(_.toDouble) ++ extra).map((_, 1.0)).toDF("idx", "v"),
+      "idx", "v")
+    // bounds [0, 99] → floor((99 - 10) / 5) + 1 = 18 windows
+    assert(fc.calculate(Seq(series(Nil))).count() == 18)
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity)) {
+      val e = intercept[IllegalArgumentException](fc.calculate(Seq(series(Seq(bad)))))
+      assert(e.getMessage.contains("series 'v' has a non-finite index bound"),
+        e.getMessage)
+    }
+  }
+
   test("W9 sample windows: middle and end anchors map to existing samples") {
     import spark.implicits._
     // 10 samples at irregular timestamps (micros); window=4 samples, stride=2

@@ -30,6 +30,28 @@ class KeyedFeaturesSpec extends SparkSpec {
     assert(out.collect()(1).isNullAt(meanCol)) // empty window → null mean
   }
 
+  test("a NaN or infinite index on one key fails loudly, naming the key") {
+    import spark.implicits._
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    def rows(extra: Seq[Double]) = ((0 until 100).map(i => ("a", i.toDouble)) ++
+      extra.map(("b", _)) :+ (("b", 0.0))).toDF("k", "idx").withColumn("v", lit(1.0))
+    def windows(df: org.apache.spark.sql.DataFrame) =
+      KeyedFeatures.calculate(df, "k", "idx", "v", Win.seq(10L),
+        Seq(Win.seq(5L)), Seq(len), "v").collect().count(_.getString(0) == "a")
+    assert(windows(rows(Nil)) == 18)
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      val e = intercept[Exception](windows(rows(Seq(bad))))
+      assert(msgs(e).exists(_.contains("key 'b' has a non-finite index bound")),
+        s"$bad: ${msgs(e)}")
+    }
+    // the multi-window path shares the bounds pass
+    val e = intercept[Exception](KeyedFeatures.calculateWideMulti(rows(Seq(Double.NaN)),
+      "k", "idx", Seq(Win.seq(10L) -> Seq(Win.seq(5L)), Win.seq(20L) -> Seq(Win.seq(5L))),
+      Seq("v" -> len)).count())
+    assert(msgs(e).exists(_.contains("key 'b' has a non-finite index bound")), msgs(e))
+  }
+
   test("wide frame: unary + n-ary fuse into one aggregate, W10 tuple names") {
     import spark.implicits._
     // y = 2x per key → corr 1 wherever a window has >= 2 distinct points

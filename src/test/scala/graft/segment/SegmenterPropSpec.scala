@@ -59,4 +59,39 @@ class SegmenterPropSpec extends SparkSpec {
       assert(got == exp)
     }
   }
+
+  test("W5: multi-stride, fractional-stride and final-window assignment equals the definition") {
+    // dyadic strides and indexes keep every start, quotient and comparison
+    // exact, so the arithmetic and the interval test cannot differ by a
+    // rounding at a window edge
+    import spark.implicits._
+    val fracs = Seq(0.25, 0.5, 0.75, 1.5, 2.5, 3.75)
+    val rnd = new scala.util.Random(7)
+    def frac(): Double = fracs(rnd.nextInt(fracs.length)) * (1 + rnd.nextInt(4))
+    samples(30).zipWithIndex.foreach { case ((s0, span, w, st), i) =>
+      val sts = i % 3 match {
+        case 0 => Seq(st.toDouble, (1 + (i * 7) % 30).toDouble)
+        case 1 => Seq(frac())
+        case _ => Seq(frac(), frac(), st.toDouble)
+      }
+      val n = 5 + (i * 3) % 36
+      val idxs = (0 until n).map(j => s0 + math.floor(j * span * 8.0 / n) / 8)
+      for (fin <- Seq(false, true)) {
+        val plan = Segmenter.regular(spark, Bounds(s0, s0 + span), w.toDouble,
+          sts, fin, "t")
+        // sorted sequences, not sets: a pair emitted twice is a difference
+        val got = Segmenter.assign(idxs.toDF("__idx"), plan)
+          .select("__idx", "__seg_id").collect()
+          .map(r => (r.getDouble(0), r.getDouble(1))).toSeq.sorted
+        val segs = plan.segments.collect()
+          .map(r => (r.getAs[Double]("__seg_id"), r.getAs[Double]("__seg_start"),
+            r.getAs[Double]("__seg_end")))
+        val exp = (for {
+          t <- idxs
+          (id, ws, we) <- segs if t >= ws && t < we
+        } yield (t, id)).sorted
+        assert(got == exp, s"s0=$s0 span=$span w=$w strides=$sts final=$fin")
+      }
+    }
+  }
 }

@@ -1,5 +1,7 @@
 package graft.segment
 
+import java.io.File
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
 /** Segment-generation goldens ported from the reference
@@ -70,6 +72,32 @@ class SegmenterSpec extends SparkSpec {
 
   test("W6 anchors") {
     intercept[IllegalArgumentException](Segmenter.anchor("nope"))
+  }
+
+  test("a -Inf index bound, or an infinite grid bound, fails loudly") {
+    // NaN and +Inf index values: FeatureCollectionSpec, through calculate
+    import spark.implicits._
+    import graft.core.Series
+    val s = Series("v", ((0 until 10).map(_.toDouble) :+ Double.NegativeInfinity)
+      .map((_, 1.0)).toDF("idx", "v"), "idx", "v")
+    val e = intercept[IllegalArgumentException](Segmenter.bounds(Seq(s)))
+    assert(e.getMessage.contains("series 'v' has a non-finite index bound"), e.getMessage)
+    intercept[IllegalArgumentException](
+      Segmenter.regular(spark, Bounds(0, Double.PositiveInfinity), 3, Seq(1), false, "t"))
+  }
+
+  test("one window-grid arithmetic: segment/ keeps no Column-DSL copy of it") {
+    // which windows hold a row, and how many a grid has, live in
+    // graft.expr.AssignKernelUtil; the segmenter explodes its kernel
+    val root = new File("src/main/scala/graft/segment")
+    assert(root.isDirectory, s"source root not found from ${new File(".").getAbsolutePath}")
+    val banned = Seq("nbSegments", "sequence(", "transform(", "array_distinct")
+    val offenders = for {
+      f <- root.listFiles().toSeq if f.getName.endsWith(".scala")
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if banned.exists(line.contains)
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("P3 bound methods") {
