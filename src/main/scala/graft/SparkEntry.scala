@@ -168,7 +168,8 @@ object SparkEntry {
     s"t${lz76LcpSteps.size - 1}.m${lz76LcpSteps.size - 1}"
 
   /** DuckDB CTE producing segments (ws, we) over `src` rows with the W1
-    * formula; mirrors Segmenter.regular + AssignKernelUtil.nbOf exactly.
+    * formula: bounds from min/max over `src` (`Segmenter.bounds`), window
+    * count `AssignKernelUtil.nbOf`, starts s + k·S (`Segmenter.regular`).
     */
   private def segCte(W: Long, S: Long, includeFinal: Boolean = false,
                      where: String = "", src: String = "events"): String = {

@@ -48,7 +48,7 @@ private[api] final class BlockBucket private (
     val g = plan.regular.get
     val (s0, w, sts, nbs) = (g.bounds.start, g.window, g.strides, g.nbs)
     val len = BlockSliceUtil.blockLength(w, sts, nbs,
-      rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+      Segmenter.shufflePartitions(rows.sparkSession))
     val blocks = rows.select(col("__idx"), col("__v"),
         BlockAssign(col("__idx"), s0, w, sts, nbs, len).as("__blk"))
       .groupBy("__blk")

@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.segment.Segmenter.{koffOf, pick, startOf}
+import graft.segment.Segmenter.{koffOf, pick, shufflePartitions, startOf}
 
 /** Per-key strided-rolling feature extraction — the shape a 100 TB workload
   * actually has: millions of INDEPENDENT series (one per user / device /
@@ -44,10 +44,7 @@ object KeyedFeatures {
     * bounds rows.
     */
   private def spreadBounds(b: DataFrame): DataFrame =
-    // toIntOption: sessions may set a non-numeric value here (e.g. "auto"
-    // on AQE-managed platforms); fall back to the cluster default then
-    b.repartition(b.sparkSession.conf.get("spark.sql.shuffle.partitions")
-      .toIntOption.getOrElse(b.sparkSession.sparkContext.defaultParallelism))
+    b.repartition(shufflePartitions(b.sparkSession))
 
   /** Per-key bounds `(__key, __s0, __e0)`. A NaN or infinite bound raises
     * in-plan on that key's bounds row: one check per key, not per row. */

@@ -26,6 +26,9 @@ object Resample {
     require(!mm.isNullAt(0),
       s"series '${s.name}' has no non-null indexed rows — cannot resample")
     val (lo, hi) = (mm.getDouble(0), mm.getDouble(1))
+    // Spark's max ranks NaN highest: a NaN or infinite span sizes no grid
+    require(lo.isFinite && hi.isFinite, s"series '${s.name}' has a non-finite " +
+      s"index bound [$lo, $hi] — cannot resample NaN or infinite indexes")
     // relative epsilon: (0.3 - 0.0) / 0.1 = 2.9999999999999996 in doubles —
     // a bare floor would silently drop the final grid point that the doc
     // ("inclusive of the last step at or before max") promises.

@@ -33,6 +33,12 @@ final case class Bounds(start: Double, end: Double)
   */
 object Segmenter {
 
+  /** `spark.sql.shuffle.partitions`, read in one place (the block length,
+    * the keyed bounds spread). Spark rejects a non-int value both on
+    * `conf.set` and at session start, so there is no fallback to take. */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
+
   /** A regular grid: windows of length `window` starting at
     * `bounds.start + k·st` for every stride st (distinct, ascending),
     * k ∈ [0, nb). */

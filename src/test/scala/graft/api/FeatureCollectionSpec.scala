@@ -225,6 +225,26 @@ class FeatureCollectionSpec extends SparkSpec {
     }
   }
 
+  test("a bad second source fails loudly and names itself") {
+    import spark.implicits._
+    val fc = FeatureCollection(
+      FeatureDescriptor(len, "a", Some(Win.seq(10L)), Some(Seq(Win.seq(5L)))),
+      FeatureDescriptor(len, "b", Some(Win.seq(10L)), Some(Seq(Win.seq(5L)))))
+    val a = Series("a", (0 until 100).map(i => (i.toDouble, 1.0)).toDF("idx", "a"),
+      "idx", "a")
+    def b(idx: Seq[Double]) = Series("b", idx.map((_, 1.0)).toDF("idx", "b"), "idx", "b")
+    assert(fc.calculate(Seq(a, b(Seq(0.0, 50.0))), boundMethod = "inner").count() == 9)
+    // an empty second source must not vanish from the inner combine
+    val empty = intercept[IllegalArgumentException](
+      fc.calculate(Seq(a, b(Nil)), boundMethod = "inner"))
+    assert(empty.getMessage.contains("series 'b' has no non-null indexed rows"),
+      empty.getMessage)
+    val nan = intercept[IllegalArgumentException](
+      fc.calculate(Seq(a, b(Seq(0.0, 50.0, Double.NaN))), boundMethod = "inner"))
+    assert(nan.getMessage.contains("series 'b' has a non-finite index bound"),
+      nan.getMessage)
+  }
+
   test("W9 sample windows: middle and end anchors map to existing samples") {
     import spark.implicits._
     // 10 samples at irregular timestamps (micros); window=4 samples, stride=2
@@ -295,9 +315,9 @@ class FeatureCollectionSpec extends SparkSpec {
     assert(out.collect().map(_.getDouble(1)).toSeq == Seq(1.0, 1.0))
   }
 
-  test("A1 typed Aggregator escape hatch: index-sorted window via udaf") {
+  test("A1 escape hatch: an order-sensitive function sees sorted values") {
     // last - first of the index-SORTED values: order-sensitive on purpose
-    val delta = WindowAgg.sortedWindowFunc("delta",
+    val delta = FeatureFuncs.fromArray("delta",
       a => if (a.isEmpty) 0.0 else a.last - a.head)
     val fc = FeatureCollection(FeatureDescriptor(delta, "dummy",
       Some(Win.seq(3L)), Some(Seq(Win.seq(1L)))))
@@ -310,9 +330,9 @@ class FeatureCollectionSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1.0, Some(1.0)), (2.0, None: Option[Double]), (3.0, Some(3.0)))
       .toDF("i", "v")
-    val f = WindowAgg.sortedWindowFunc("mymin", xs => xs.min)
-    // with the old primitive-Double input encoder the null row became a
-    // phantom (2.0, 0.0) sample and min returned 0.0
+    val f = FeatureFuncs.fromArray("mymin", xs => xs.min)
+    // a null value decoded as 0.0 would be a phantom (2.0, 0.0) sample and
+    // min would return 0.0
     assert(df.agg(f.agg(org.apache.spark.sql.functions.col("i"),
       org.apache.spark.sql.functions.col("v"))).head().getDouble(0) == 1.0)
   }

@@ -35,4 +35,16 @@ class ResampleSpec extends SparkSpec {
       Resample.asofGrid(Series("v", empty, "i", "v"), 1.0))
     assert(e2.getMessage.contains("no non-null"))
   }
+
+  test("a NaN or infinite index bound raises instead of shrinking the grid") {
+    import spark.implicits._
+    def series(extra: Seq[Double]) = Series("v",
+      ((0 until 10).map(_.toDouble) ++ extra).map((_, 1.0)).toDF("i", "v"), "i", "v")
+    assert(Resample.asofGrid(series(Nil), 1.0).count() == 10)
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      val e = intercept[IllegalArgumentException](Resample.asofGrid(series(Seq(bad)), 1.0))
+      assert(e.getMessage.contains("series 'v' has a non-finite index bound"),
+        s"$bad: ${e.getMessage}")
+    }
+  }
 }
