@@ -1832,7 +1832,7 @@ object SparkEntry {
     }))
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    graft.core.TsCompat.readParquet(s, s"$dir/documents.parquet")
 
   /** DuckDB CTE fragments shared by the dedup oracles. */
   private val shingleCte =

@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, explode}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.DoubleType
-import graft.expr.{BlockAssign, BlockSliceUtil, BlockSlices, CollectSortedVals, SliceFold, SortedSlice}
+import graft.core.Gates
+import graft.expr.{BlockIds, BlockSliceUtil, BlockSlices, CollectSortedVals, SliceFold, SortedSlice}
 import graft.segment.Segmenter
 
 /** Block-sliced evaluation of one single-series `calculate` bucket on a
@@ -18,11 +19,11 @@ import graft.segment.Segmenter
   * window on its own; with more window keys per map task than
   * `ObjectHashAggregate` keeps in its hash map, the partial aggregate also
   * falls back to sorting. Here each row goes to the one or two BLOCKS of
-  * consecutive windows that hold it (`graft.expr.BlockAssign`), each block
-  * builds ONE sorted buffer, and every window is a contiguous slice of its
-  * block's buffer (`graft.expr.BlockSlices`) with the explode path's exact
-  * membership. A windowKeep bucket keeps one buffer per window
-  * ([[perWindow]]) under the same leaf rewrite.
+  * consecutive windows that hold it (`graft.expr.BlockIds`, exploded in
+  * generated code), each block builds ONE sorted buffer, and every window
+  * is a contiguous slice of its block's buffer (`graft.expr.BlockSlices`)
+  * with the explode path's exact membership. A windowKeep bucket keeps one
+  * buffer per window ([[perWindow]]) under the same leaf rewrite.
   *
   * The bucket's aggregate is written once, for the explode path; this
   * rewrites its analyzed form. Every aggregate leaf becomes a per-window
@@ -42,7 +43,10 @@ private[api] final class BlockBucket private (
 
   /** The bucket's aggregated frame — `__seg_id` plus one column per
     * output, one row per non-empty window — off the series rows
-    * (`__idx`, `__v`), block-sliced.
+    * (`__idx`, `__v`), block-sliced. At most Σ nb rows, a bound the
+    * driver holds, so the frame is hinted `broadcast` for the W7 join when
+    * that many rows fit ([[Gates.hintBounded]]): the join then shuffles
+    * neither the segment table nor the frame.
     */
   def frame(rows: DataFrame): DataFrame = {
     val g = plan.regular.get
@@ -50,10 +54,12 @@ private[api] final class BlockBucket private (
     val len = BlockSliceUtil.blockLength(w, sts, nbs,
       Segmenter.shufflePartitions(rows.sparkSession))
     val blocks = rows.select(col("__idx"), col("__v"),
-        BlockAssign(col("__idx"), s0, w, sts, nbs, len).as("__blk"))
+        explode(BlockIds(col("__idx"), s0, w, sts, nbs, len)).as("__blk"))
       .groupBy("__blk")
       .agg(CollectSortedVals(col("__idx"), col("__v"), keepNulls = true).as("__buf"))
-    over(blocks.select(BlockSlices(col("__blk"), col("__buf"), s0, w, sts, nbs, len)))
+    Gates.hintBounded(
+      over(blocks.select(BlockSlices(col("__blk"), col("__buf"), s0, w, sts, nbs, len))),
+      nbs.map(BigInt(_)).sum)
   }
 
   /** The same frame off the explode path's window rows `assigned`

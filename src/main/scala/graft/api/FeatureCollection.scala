@@ -393,6 +393,8 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
         else exploded
 
       // W7: segments with zero rows still emit a row (left join, never inner).
+      // A block-sliced `agged` comes hinted broadcast when its window bound
+      // fits (BlockBucket.frame), so neither side shuffles for this join
       var joined = segsG.join(agged, Seq("__seg_id"), "left")
       ds.foreach { d =>
         d.emptyValue.foreach { ev =>

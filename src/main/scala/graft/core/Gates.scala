@@ -9,13 +9,16 @@ import org.apache.spark.sql.functions.broadcast
   *
   * Every gate is decided while a DataFrame is BUILT, on the calling thread,
   * from a row count the engine pays for anyway (the counted side is pinned
-  * for its other consumers):
+  * for its other consumers) or a row bound it already holds:
   *
   *   - '''broadcast''' — a pinned join side is hinted `broadcast` only while
   *     its count is at or under [[BroadcastRows]]; above it the join
   *     shuffles, so a high-cardinality side costs a shuffle instead of a
   *     driver/executor OOM (`Scan`'s keyed stitch, the windowKeep prune,
-  *     the dedup verify/gram joins);
+  *     the dedup verify/gram joins). A side whose row count is bounded on
+  *     the driver is hinted with no count when that many rows of its width
+  *     fit the same bytes (the block-sliced bucket at the W7 join: at most
+  *     one row per window of its grid);
   *   - '''bracket prune''' — `Scan.keyedSpanBrackets` runs its segment prune
   *     only above [[PruneMinRows]] ranked rows;
   *   - '''driver collect''' — `Components.connectedComponents` solves edge
@@ -77,6 +80,16 @@ object Gates {
     */
   private[graft] def hint(pinned: DataFrame): DataFrame => DataFrame =
     if (broadcastable(pinned.count())) broadcast(_) else identity
+
+  /** `side` hinted `broadcast` when `maxRows` rows of its schema's
+    * default width fit the bytes [[BroadcastRows]] stands for (16-byte
+    * (long, long) rows), else as it is: the broadcast gate for a side whose
+    * row count is bounded on the driver, so deciding it costs no job.
+    */
+  private[graft] def hintBounded(side: DataFrame, maxRows: BigInt): DataFrame =
+    if (maxRows * side.schema.defaultSize <= BigInt(current.value.broadcastRows) * 16)
+      broadcast(side)
+    else side
 
   /** True when a bracket prune over `rankedRows` rows is worth deciding. */
   private[graft] def prunes(rankedRows: Long): Boolean =

@@ -2,10 +2,10 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BinaryExpression, BindReferences, EmptyRow, Expression, Generator, GenericInternalRow, JoinedRow, MutableProjection, SpecificInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BinaryExpression, BindReferences, EmptyRow, Expression, Generator, GenericInternalRow, JoinedRow, MutableProjection, SpecificInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode, FalseLiteral, JavaCode}
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -27,8 +27,8 @@ import org.apache.spark.sql.types._
   * The row at index t lies in the windows k ∈ [kmin(t), kmax(t)] — the
   * grid arithmetic of `AssignKernelUtil`, the kernel behind
   * `Segmenter.assign`, read here for both ends of the block path:
-  * [[blockRange]] sends the row to the blocks of those windows
-  * ([[BlockAssign]]), and inside a block's index-sorted buffer a window is
+  * [[blockIds]] sends the row to the blocks of those windows
+  * ([[BlockIds]]), and inside a block's index-sorted buffer a window is
   * the contiguous run of rows whose range contains its k ([[slices]]). Both
   * bounds are monotone in the index, so each end of the run is one binary
   * search, and membership is the explode path's exactly.
@@ -64,12 +64,12 @@ object BlockSliceUtil {
     math.max(ceilDiv(nb, MaxBlocks), math.max(perRow, spread)).toDouble * st
   }
 
-  /** The blocks holding a window that contains index t: [lo, hi], empty
-    * (lo > hi) when no window of any stride does. With a block at least
-    * as long as the window that is one or two blocks.
+  /** The blocks holding a window that contains index t, ascending: none
+    * when no window of any stride does; with a block at least as long as
+    * the window, one or two.
     */
-  def blockRange(t: Double, s0: Double, w: Double, sts: Array[Double],
-                 nbs: Array[Long], len: Double): (Long, Long) = {
+  def blockIds(t: Double, s0: Double, w: Double, sts: Array[Double],
+               nbs: Array[Long], len: Double): ArrayData = {
     var lo = Long.MaxValue
     var hi = Long.MinValue
     var i = 0
@@ -83,7 +83,10 @@ object BlockSliceUtil {
       }
       i += 1
     }
-    (lo, hi)
+    val ids = new Array[Long](if (lo > hi) 0 else (hi - lo + 1).toInt)
+    i = 0
+    while (i < ids.length) { ids(i) = lo + i; i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(ids)
   }
 
   /** First k in [0, nb) whose window's block is `b` or later; nb if none. */
@@ -158,40 +161,41 @@ object BlockSliceUtil {
   }
 }
 
-/** Block assignment: one row `__blk` per block holding a window that
-  * contains the row at index `child` ([[BlockSliceUtil.blockRange]]); none
-  * for a null index or a row outside the grid.
+/** Block assignment: the ids of the blocks holding a window that contains
+  * the row at index `child` ([[BlockSliceUtil.blockIds]]) as a primitive
+  * long array, for `explode` — empty for a row outside the grid, null for
+  * a null index. Compiled into the stage like `AssignPacked`, so the scan,
+  * the projection and the explode run as one generated loop.
   */
-case class BlockAssign(child: Expression, s0: Double, window: Double,
-                       strides: Seq[Double], nbs: Seq[Long], blockLen: Double)
-    extends Generator with UnaryLike[Expression] with CodegenFallback {
+case class BlockIds(child: Expression, s0: Double, window: Double,
+                    strides: Seq[Double], nbs: Seq[Long], blockLen: Double)
+    extends UnaryExpression {
 
   @transient private lazy val stsArr: Array[Double] = strides.toArray
   @transient private lazy val nbsArr: Array[Long] = nbs.toArray
 
-  override def elementSchema: StructType =
-    StructType(Seq(StructField("__blk", LongType, nullable = false)))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "block_ids"
 
-  override def supportCodegen: Boolean = false
-  override def prettyName: String = "block_assign"
+  override def nullSafeEval(t: Any): Any =
+    BlockSliceUtil.blockIds(t.asInstanceOf[Double], s0, window, stsArr, nbsArr, blockLen)
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val t = child.eval(input)
-    if (t == null) return Iterator.empty
-    val (lo, hi) = BlockSliceUtil.blockRange(t.asInstanceOf[Double], s0, window,
-      stsArr, nbsArr, blockLen)
-    if (lo > hi) Iterator.empty
-    else Iterator.tabulate((hi - lo + 1).toInt)(d => InternalRow(lo + d))
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t => {
+      val sts = ctx.addReferenceObj("blockSts", stsArr, "double[]")
+      val nbs = ctx.addReferenceObj("blockNbs", nbsArr, "long[]")
+      s"${ev.value} = graft.expr.BlockSliceUtil.blockIds($t, ${s0}D, ${window}D, " +
+        s"$sts, $nbs, ${blockLen}D);"
+    })
 
-  override protected def withNewChildInternal(newChild: Expression): BlockAssign =
+  override protected def withNewChildInternal(newChild: Expression): BlockIds =
     copy(child = newChild)
 }
 
-object BlockAssign {
+object BlockIds {
   def apply(idx: Column, s0: Double, window: Double, strides: Seq[Double],
             nbs: Seq[Long], blockLen: Double): Column =
-    ColumnBridge.column(BlockAssign(ColumnBridge.expression(idx), s0, window,
+    ColumnBridge.column(BlockIds(ColumnBridge.expression(idx), s0, window,
       strides, nbs, blockLen))
 }
 

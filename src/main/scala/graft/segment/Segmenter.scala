@@ -2,6 +2,8 @@ package graft.segment
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import graft.core._
 import graft.expr.{AssignKernelUtil, AssignPacked}
 
@@ -27,9 +29,12 @@ final case class Bounds(start: Double, end: Double)
   * per row, exploded and decoded to `s0 + k·st` by [[startOf]] — pure
   * whole-stage-codegen math, no join, no shuffle before the final
   * partial-aggregated `groupBy`. The segment table itself is built lazily
-  * with `spark.range` (never driver-materialized) and only joined —
-  * broadcast — to restore empty-window rows (W7). Irregular/manual
-  * segments fall back to a broadcast range join.
+  * with `spark.range` (never driver-materialized) and only joined to
+  * restore empty-window rows (W7) — broadcast on the block-sliced bucket
+  * path at any scale, the window-bounded frame hinted by
+  * `Gates.hintBounded`. Irregular/manual segments fall back to a
+  * broadcast range join. The series bounds are the one eager job:
+  * [[bounds]] runs one shuffle-free job per distinct source.
   */
 object Segmenter {
 
@@ -63,8 +68,8 @@ object Segmenter {
     */
   def bounds(series: Seq[Series], method: String = "inner"): Bounds = {
     // r19: series of the same source (Series.sameSource) have identical
-    // index bounds — one driver agg per distinct source, not per series.
-    // These aggs run EAGERLY at plan-build time, so an n-tuple feature
+    // index bounds — one driver job per distinct source, not per series.
+    // These jobs run EAGERLY at plan-build time, so an n-tuple feature
     // over one frame paid n full input scans before the query even
     // started (q51's three-series wcorr: 3 scans → 1).
     val reps = scala.collection.mutable.ArrayBuffer.empty[(Series, (Double, Double))]
@@ -72,16 +77,15 @@ object Segmenter {
       reps.find { case (rep, _) => rep.sameSource(s) } match {
         case Some((_, v)) => v
         case None =>
-          val r = s.internal.agg(min(col("__idx")), max(col("__idx"))).head()
-          // an all-null (or empty) series aggregates to null min/max; name
-          // the series instead of letting Row.getDouble NPE deep inside
-          // calculate
-          require(!r.isNullAt(0),
+          // an all-null (or empty) series has no bounds; name the series
+          // instead of failing deep inside calculate
+          val r = idxRange(s)
+          require(r.isDefined,
             s"series '${s.name}' has no non-null indexed rows — cannot " +
               "derive segmentation bounds")
-          val v = (r.getDouble(0), r.getDouble(1))
-          // Spark's max ranks NaN highest; a NaN or infinite bound would
-          // segment a wrong (or a Long.MaxValue-window) grid
+          val v = r.get
+          // max ranks NaN highest; a NaN or infinite bound would segment a
+          // wrong (or a Long.MaxValue-window) grid
           require(v._1.isFinite && v._2.isFinite,
             s"series '${s.name}' has a non-finite index bound " +
               s"[${v._1}, ${v._2}] — cannot segment NaN or infinite indexes")
@@ -96,6 +100,40 @@ object Segmenter {
       case m => throw new IllegalArgumentException(s"invalid bound method $m")
     }
   }
+
+  /** (min, max) of `s`'s `__idx`, None when it has no row: Spark's
+    * `agg(min, max)` in ONE job with no shuffle (the aggregate runs a
+    * partial map stage and a final stage, two jobs under AQE). Each
+    * partition folds its own pair on the executors off the internal rows;
+    * the driver combines them in partition order. Both folds compare like
+    * Spark's `min`/`max` (`SQLOrderingUtil.compareDoubles`: -0.0 equals
+    * 0.0, so the first one seen stays; NaN ranks highest) and take a value
+    * only when it is strictly past the one held.
+    */
+  private def idxRange(s: Series): Option[(Double, Double)] =
+    s.internal.select(col("__idx")).queryExecution.toRdd
+      .mapPartitions(foldRange).collect()
+      .reduceOption((a, b) => (lower(a._1, b._1), upper(a._2, b._2)))
+
+  /** (min, max) of a partition's `__idx` rows (none null), none if empty. */
+  private def foldRange(rows: Iterator[InternalRow]): Iterator[(Double, Double)] =
+    if (!rows.hasNext) Iterator.empty
+    else {
+      var lo = rows.next().getDouble(0)
+      var hi = lo
+      while (rows.hasNext) {
+        val t = rows.next().getDouble(0)
+        lo = lower(lo, t)
+        hi = upper(hi, t)
+      }
+      Iterator((lo, hi))
+    }
+
+  private def lower(held: Double, t: Double): Double =
+    if (compareDoubles(t, held) < 0) t else held
+
+  private def upper(held: Double, t: Double): Double =
+    if (compareDoubles(t, held) > 0) t else held
 
   /** W1–W3: regular segment plan for one window and one-or-more strides.
     * Multi-stride = set union of per-stride starts, deduped and sorted (W2,

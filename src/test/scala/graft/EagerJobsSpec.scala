@@ -5,13 +5,26 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Pins the Spark jobs a query's builder runs BEFORE any action — the
   * eager driver jobs of plan build — per module, as a budget: a change that
-  * adds one fails here. Today they are the events parquet open (one schema
-  * job, `graft.core.TsCompat`), the series bounds (`Segmenter.bounds`: one
-  * `min`/`max` job pair per distinct source) and, for sample-count windows,
-  * the pin of the positional index (`graft.core.Pinned`: under AQE it runs
-  * the position scan's stages at build) and its `count()` (`graft.api`).
-  * Moving the bounds into the plan lowers the `segment` and
-  * `api` counts.
+  * adds one fails here. Today they are the series bounds
+  * (`Segmenter.bounds`: one shuffle-free min/max job per distinct source)
+  * and, for sample-count windows, the pin of the positional index
+  * (`graft.core.Pinned`: under AQE it runs the position scan's stages at
+  * build) and its `count()` (`graft.api`). Opening a Parquet table runs
+  * none: `TsCompat.readParquet` reads the first file's footer on the
+  * driver and declares the schema.
+  *
+  * Table history: every row lost its `core` schema job when the opens
+  * became job-free (q01, q13, q08: one each; q88's documents open too),
+  * and each bounds source went from an aggregate's job pair (partial map
+  * stage + final stage under AQE) to one job (q01 2 → 1, q13 4 → 2).
+  *
+  * The q99a whole-call count adds the five execute jobs of the
+  * block-sliced path to its one build job. It holds with Spark's
+  * size-based broadcast switched off: the block frame is hinted broadcast
+  * from its window bound, so the W7 join never shuffles its two sides (a
+  * sort-merge join, or AQE's late broadcast after both exchanges ran, adds
+  * jobs here). Before the job-free open and the one-job bounds the call
+  * ran 8 jobs at this scale.
   *
   * Jobs are attributed like the benchmark's trace: by the first
   * `graft.<module>.` frame of the job's call site, or of its SQL
@@ -25,10 +38,12 @@ class EagerJobsSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private val expected: Map[String, Map[String, Int]] = Map(
-    "q01_roll_mean" -> Map("core" -> 1, "segment" -> 2),
-    // two filtered sources (click, purchase): one bounds job pair each
-    "q13_two_series_bounds" -> Map("core" -> 1, "segment" -> 4),
-    "q08_sample_windows" -> Map("core" -> 8, "api" -> 2))
+    "q01_roll_mean" -> Map("segment" -> 1),
+    // two filtered sources (click, purchase): one bounds job each
+    "q13_two_series_bounds" -> Map("segment" -> 2),
+    "q08_sample_windows" -> Map("core" -> 7, "api" -> 2),
+    "q99a_catch22_dist" -> Map("segment" -> 1),
+    "q88_strip_keep_first" -> Map("core" -> 3))
 
   private val Frame = """(?m)^graft\.([a-z]+)\.""".r
   private def moduleOf(site: String): String =
@@ -64,14 +79,32 @@ class EagerJobsSpec extends SparkSpec {
     assert(PlanAudit.drainListenerBus(spark, () => started.size.toLong),
       "listener bus failed to drain")
 
-  /** The modules of the jobs `SparkEntry.queries(q)` starts while it builds. */
-  private def buildJobs(q: String): Seq[String] = {
+  /** The modules of the jobs `body` starts. */
+  private def jobsOf(body: => Any): Seq[String] = {
     listener
     drain()
     started.clear()
-    SparkEntry.queries(q)(spark, dir)
+    body
     drain()
     started.toArray(Array.empty[String]).toSeq
+  }
+
+  /** The modules of the jobs `SparkEntry.queries(q)` starts while it builds. */
+  private def buildJobs(q: String): Seq[String] = jobsOf(SparkEntry.queries(q)(spark, dir))
+
+  /** Every job `SparkEntry.queries(q)` starts from build through forcing
+    * its rows (the benchmark's action: one pass over `toRdd`). */
+  private def callJobs(q: String): Int =
+    jobsOf(SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count()).size
+
+  test("q99a runs 6 jobs from build through execute, with or without size-based broadcasts") {
+    assert(callJobs("q99a_catch22_dist") == 6)
+    // Spark's own size-based broadcast off, as where the block frame's
+    // static size estimate is over the threshold (the 10x corpus): the W7
+    // join still broadcasts instead of shuffling both sides
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try assert(callJobs("q99a_catch22_dist") == 6)
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   for ((q, n) <- expected.toSeq.sortBy(_._1))

@@ -1,14 +1,15 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{ArraySort, ArrayTransform, LambdaFunction}
+import org.apache.spark.sql.catalyst.expressions.{ArraySort, ArrayTransform, Explode, LambdaFunction}
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
-import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, Window}
+import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
 import graft.core.Gates
-import graft.expr.{AssignPacked, Catch22Util, Kernels, NarrowKernels, WindowKernel}
+import graft.expr.{AssignPacked, BlockIds, BlockSlices, Catch22Util, Kernels, NarrowKernels, WindowKernel}
 import scala.collection.immutable.BitSet
 
 /** Pins the physical-plan SHAPE (shuffle-exchange count + join-strategy
@@ -199,7 +200,10 @@ class PlanShapeSpec extends SparkSpec {
     // buffer per BLOCK of consecutive windows (keyed `__blk`, each row in
     // one or two blocks) instead of one per window (each row in w/s = 4),
     // with the windows sliced out after it by a `block_slices` Generate —
-    // pinned by the sorted-collect test below.
+    // pinned by the sorted-collect test below. The W7 broadcast is now a
+    // hint on the block frame (Gates.hintBounded from Σ nb), so it holds
+    // at any scale, not only where the static size estimate is small;
+    // the counts at this scale do not move (the block-path test below).
     "q99a_catch22_dist" -> Map(
       "shuffle_exchange" -> 2, "broadcast_exchange" -> 1,
       "reused_exchange" -> 0, "broadcast_hash_join" -> 1,
@@ -263,6 +267,43 @@ class PlanShapeSpec extends SparkSpec {
     }.flatten
     assert(banned.isEmpty, s"found ${banned.distinct.mkString(", ")}")
   }
+
+  /** The nodes of `p`'s whole-stage-codegen stage: `p` and its
+    * descendants down to the stage's inputs. */
+  private def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: InputAdapter => Nil
+    case _ => p +: p.children.flatMap(inStage)
+  }
+
+  for (name <- Seq("q99a_catch22_dist", "q105_tsfresh_comb"))
+    test(s"$name explodes block ids in generated code and broadcasts its block frame at the W7 join") {
+      // the static plan with adaptive execution off: whole-stage codegen is
+      // planned up front instead of per query stage
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val df = try {
+        val d = query(name)
+        d.queryExecution.executedPlan
+        d
+      } finally spark.conf.unset("spark.sql.adaptive.enabled")
+      val plan = df.queryExecution.executedPlan
+      val gens = plan.collect { case g: GenerateExec => g.generator }
+      // two Generates: the block-id explode and the window slicing; no
+      // interpreted block_assign
+      assert(gens.map(_.prettyName).sorted == Seq("block_slices", "explode"), gens)
+      assert(gens.collect { case e: Explode => e.child }.forall(_.isInstanceOf[BlockIds]))
+      val staged = plan.collect { case w: WholeStageCodegenExec =>
+        inStage(w.child).collect {
+          case g: GenerateExec if g.generator.isInstanceOf[Explode] => g
+        }
+      }.flatten
+      assert(staged.length == 1, s"block-id explodes inside a codegen stage: $staged")
+      assert(gens.exists(_.isInstanceOf[BlockSlices]))
+      // the aggregated side of the empty-window left join carries the hint
+      val w7 = df.queryExecution.optimizedPlan.collect {
+        case j: Join if j.joinType == LeftOuter => j.hint.rightHint.flatMap(_.strategy)
+      }
+      assert(w7 == Seq(Some(BROADCAST)), s"W7 join right-side strategies: $w7")
+    }
 
   test("q01 assigns rows to windows with one assign_packed kernel and no lambda") {
     // the single-series explode runs the keyed paths' native kernel;

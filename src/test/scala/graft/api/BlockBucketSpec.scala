@@ -171,12 +171,12 @@ class BlockBucketSpec extends SparkSpec {
     val nb = Array(6L)
     // rows 0–3 lie only in block 0's windows, 4–5 in both blocks, 6–7 in
     // block 1's; rows outside the grid in none
-    assert(idx.toSeq.map(BlockSliceUtil.blockRange(_, 0.0, 3.0, Array(1.0), nb, 4.0)) ==
-      Seq.fill(4)((0L, 0L)) ++ Seq.fill(2)((0L, 1L)) ++ Seq.fill(2)((1L, 1L)))
-    for (t <- Seq(-1.0, 100.0)) {
-      val (lo, hi) = BlockSliceUtil.blockRange(t, 0.0, 3.0, Array(1.0), nb, 4.0)
-      assert(lo > hi, s"row at $t assigned to blocks $lo..$hi")
-    }
+    def ids(t: Double): Seq[Long] =
+      BlockSliceUtil.blockIds(t, 0.0, 3.0, Array(1.0), nb, 4.0).toLongArray().toSeq
+    assert(idx.toSeq.map(ids) ==
+      Seq.fill(4)(Seq(0L)) ++ Seq.fill(2)(Seq(0L, 1L)) ++ Seq.fill(2)(Seq(1L)))
+    for (t <- Seq(-1.0, 100.0))
+      assert(ids(t).isEmpty, s"row at $t assigned to blocks ${ids(t)}")
     val b0 = BlockSliceUtil.slices(0, idx.take(6), 0.0, 3.0, Array(1.0), nb, 4.0)
     assert(b0.toSeq == Seq((0.0, 0, 3), (1.0, 1, 4), (2.0, 2, 5), (3.0, 3, 6)))
     // block 1's buffer holds only the rows its windows need
@@ -188,8 +188,8 @@ class BlockBucketSpec extends SparkSpec {
     for (nb <- Seq(1L, 7L, 1196L, 100000L); p <- Seq(1, 4, 200, 5000);
          (w, st) <- Seq((4.0, 1.0), (80.0, 20.0), (2.5, 0.7))) {
       val len = BlockSliceUtil.blockLength(w, Seq(st), Seq(nb), p)
-      val blocks = BlockSliceUtil.blockRange(st * (nb - 1), 0.0, w, Array(st),
-        Array(nb), len)._2 + 1
+      val blocks = BlockSliceUtil.blockIds(st * (nb - 1), 0.0, w, Array(st),
+        Array(nb), len).toLongArray().last + 1
       assert(blocks <= 64 && len >= w, s"nb $nb, $p partitions, w/s $w/$st: $blocks blocks of $len")
     }
   }

@@ -36,6 +36,23 @@ class GatesSpec extends SparkSpec {
     }
   }
 
+  test("a row-bounded side broadcasts while its rows fit the bytes of the row limit") {
+    def bounded(df: org.apache.spark.sql.DataFrame, rows: Long): Boolean =
+      Gates.hintBounded(df, rows).queryExecution.analyzed.collectFirst {
+        case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+      }.getOrElse(false)
+    // (long, long) rows are the unit of the limit; a (long, long, long,
+    // long) row counts twice
+    val narrow = spark.range(1).selectExpr("id", "id AS id2")
+    val wide = spark.range(1).selectExpr("id", "id AS a", "id AS b", "id AS c")
+    Gates.scoped(broadcastRows = 6L) {
+      assert(bounded(narrow, 6L) && !bounded(narrow, 7L))
+      assert(bounded(wide, 3L) && !bounded(wide, 4L))
+    }
+    // no overflow at a grid count past Long.MaxValue / 16
+    assert(bounded(narrow, Gates.BroadcastRows) && !bounded(narrow, Long.MaxValue))
+  }
+
   private def atDefaults(): Boolean =
     Gates.fuse && Gates.broadcastable(Gates.BroadcastRows) &&
       !Gates.broadcastable(Gates.BroadcastRows + 1) &&

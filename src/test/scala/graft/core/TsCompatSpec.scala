@@ -1,16 +1,27 @@
 package graft.core
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.SparkSpec
+import graft.{PlanAudit, SparkSpec}
 
 /** `TsCompat.readEvents` on an events file with a naive TIMESTAMP(MICROS)
   * `ts` (the encoding of the generated `events.parquet`): `ts` comes back as
   * instants straight from the Parquet reader, with no cast in the plan,
   * equal to the naive wall clock read as UTC whatever the session zone.
+  *
+  * `TsCompat.readParquet`, the open every table goes through, runs no Spark
+  * job and returns what `s.read.parquet` returns: on that file, on an INT64
+  * TIMESTAMP(NANOS) file and on a directory of part files with marker and
+  * checksum siblings.
   */
 class TsCompatSpec extends SparkSpec {
 
@@ -62,5 +73,75 @@ class TsCompatSpec extends SparkSpec {
   test("two reads of one path are the same source") {
     def series = Series("value", TsCompat.readEvents(spark, path), "ts", "value")
     assert(series.sameSource(series))
+  }
+
+  /** 1,000 rows with `ts` INT64 TIMESTAMP(NANOS), written by parquet-hadoop
+    * (Spark writes no nanosecond timestamps); ts = i·1,234,567 ns. */
+  private lazy val nanosPath: String = {
+    val file = Files.createTempDirectory("tscompat-nanos").resolve("events.parquet").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "optional int64 ts (TIMESTAMP(NANOS,false)); optional double value; }")
+    val w = ExampleParquetWriter.builder(new Path(file)).withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try (0 until 1000).foreach { i =>
+      w.write(rows.newGroup().append("event_id", i.toLong)
+        .append("ts", i * 1234567L).append("value", i * 0.25))
+    } finally w.close()
+    file
+  }
+
+  /** Part files of one write, next to `_SUCCESS` and `.crc` files. */
+  private lazy val partsPath: String = {
+    val dir = Files.createTempDirectory("tscompat-parts").resolve("t").toString
+    spark.range(300).select(col("id"), (col("id") % 7).cast("string").as("s"))
+      .repartition(3).write.parquet(dir)
+    dir
+  }
+
+  /** `body`'s value and the Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    assert(PlanAudit.drainListenerBus(spark, () => 0L))
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      assert(PlanAudit.drainListenerBus(spark, () => n.get.toLong))
+      (out, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("the part-file input has marker and checksum siblings") {
+    val names = new java.io.File(partsPath).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.count(n => n.startsWith("part-") && n.endsWith(".parquet")) == 3, names)
+  }
+
+  for ((name, at) <- Seq[(String, () => String)]("naive micros" -> (() => path),
+      "TIMESTAMP(NANOS)" -> (() => nanosPath), "part-file directory" -> (() => partsPath)))
+    test(s"readParquet on the $name input: no Spark job, the schema and rows of s.read.parquet") {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val (opened, jobs) = jobsOf(TsCompat.readParquet(spark, at()))
+      assert(jobs == 0, s"$jobs Spark job(s) to open ${at()}")
+      val (inferred, inferJobs) = jobsOf(spark.read.parquet(at()))
+      assert(inferJobs >= 1, "the listener saw no schema-inference job")
+      assert(opened.schema == inferred.schema)
+      assert(sameRows(opened, inferred))
+    }
+
+  test("readEvents opens with no Spark job and floors TIMESTAMP(NANOS) to micros") {
+    for (p <- Seq(path, nanosPath))
+      assert(jobsOf(TsCompat.readEvents(spark, p))._2 == 0, p)
+    val ev = TsCompat.readEvents(spark, nanosPath)
+    assert(ev.schema("ts").dataType == TimestampType)
+    val micros = ev.orderBy("event_id").select(unix_micros(col("ts")))
+      .collect().map(_.getLong(0)).toSeq
+    assert(micros == (0 until 1000).map(i => i * 1234567L / 1000))
   }
 }
