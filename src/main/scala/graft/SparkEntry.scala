@@ -191,7 +191,7 @@ object SparkEntry {
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- smoke: plain scan + hash agg (S1) -------------------------------
     "q00_tpch_q1" -> ((s, dir) => {
-      s.read.parquet(s"$dir/lineitem.parquet")
+      TsCompat.readParquet(s, s"$dir/lineitem.parquet")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(expr("round(sum(l_quantity), 6)").as("sum_qty"),
           expr("round(sum(l_extendedprice * (1 - l_discount)), 6)").as("revenue"),
@@ -505,14 +505,14 @@ object SparkEntry {
 
     // ---- similarity search: brute-force cosine top-k ----------------------
     "q24_ann_cosine" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = TsCompat.readParquet(s, s"$dir/embeddings.parquet")
       Ann.cosineTopK(e.where(col("vec_id") =!= 0), "vec_id", "embedding",
         e.where(col("vec_id") === 0), 10)
     }),
 
     // ---- similarity search: hyperplane-LSH buckets ------------------------
     "q25_ann_lsh" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = TsCompat.readParquet(s, s"$dir/embeddings.parquet")
       Ann.lshBuckets(e, "vec_id", "embedding", 8, 64).orderBy("vec_id")
     }),
 
@@ -578,7 +578,7 @@ object SparkEntry {
 
     // ---- embeddings: per-label centroids (vector aggregate) ----------------
     "q31_embed_centroid" -> ((s, dir) => {
-      Ann.centroids(s.read.parquet(s"$dir/embeddings.parquet"), "label", "embedding")
+      Ann.centroids(TsCompat.readParquet(s, s"$dir/embeddings.parquet"), "label", "embedding")
         .select(col("label"), col("dim").cast("long").as("dim"),
           round(col("centroid"), 6).as("centroid"), col("n"))
         .orderBy("label", "dim")
@@ -596,7 +596,7 @@ object SparkEntry {
       // in the DuckDB twin in this same commit. Verifies strictly more
       // content than the sorted emission's hash did while removing the
       // contracted global sort.
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = TsCompat.readParquet(s, s"$dir/embeddings.parquet")
       Dedup.embedNearDups(e, "vec_id", "embedding", 4, 64, 0.35)
         .groupBy(round(col("cosine"), 1).as("cos_band"))
         .agg(count(lit(1)).as("n_pairs"),
@@ -1511,7 +1511,7 @@ object SparkEntry {
     // ---- multi-metric grouped quantiles: ONE composite-key rank pass ------
     "q89_multi_quantiles" -> ((s, dir) => {
       graft.scale.GroupedStats.exactQuantilesMulti(
-        s.read.parquet(s"$dir/lineitem.parquet")
+        TsCompat.readParquet(s, s"$dir/lineitem.parquet")
           .select(col("l_suppkey"), col("l_quantity"), col("l_extendedprice")),
         "l_suppkey", Seq("l_quantity", "l_extendedprice"),
         Seq("med" -> 0.5, "p95" -> 0.95))
@@ -1730,7 +1730,7 @@ object SparkEntry {
 
     // ---- W1 sequence domain: rolling agg over a numeric index ------------
     "q43_seq_rolling" -> ((s, dir) => {
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+      val orders = TsCompat.readParquet(s, s"$dir/orders.parquet")
       val series = Series("price", orders, "o_orderkey", "o_totalprice")
       val fc = FeatureCollection(FeatureDescriptor(mean, "price",
         Some(Win.seq(1000L)), Some(Seq(Win.seq(500L)))))
@@ -1817,7 +1817,7 @@ object SparkEntry {
     // (deterministic seeds/ties make even the iterative fit oracle-checkable:
     // the oracle unrolls the 3 Lloyd iterations as CTEs)
     "q53_ivf_kmeans" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = TsCompat.readParquet(s, s"$dir/embeddings.parquet")
       val base = e.where(col("vec_id") =!= 0)
       val codebook = Ann.kmeansCells(base, "vec_id", "embedding", 8, 3)
       Ann.ivfTopK(base, "vec_id", "embedding", "label",
@@ -1826,7 +1826,7 @@ object SparkEntry {
 
     // ---- similarity search: IVF (coarse cells + probe) --------------------
     "q39_ivf_ann" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = TsCompat.readParquet(s, s"$dir/embeddings.parquet")
       Ann.ivfTopK(e.where(col("vec_id") =!= 0), "vec_id", "embedding", "label",
         e.where(col("vec_id") === 0), 10, 2)
     }))

@@ -264,9 +264,8 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       if (bothManual) Win.outputName(d.seriesNames, d.funcName, "manual")
       else d.outputName
 
-    // lazy: bounds cost one eager min/max SCAN PER SERIES — manual-segment
-    // and pure sample-window plans never read them, and at scale a wasted
-    // full scan per series is real money
+    // lazy: manual-segment and pure sample-window plans never read the
+    // bounds, which cost one eager scan per source
     lazy val b: Bounds = Segmenter.bounds(used, boundMethod)
 
     val bucketFrames = buckets.toSeq.map { case ((sNames, win, strides), ds) =>
@@ -292,16 +291,13 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
         if (isSample) {
           require(series.domain == Domain.Time,
             "sample-count windows require a TIME-indexed series")
-          // distributed positional index (no single-partition row_number);
-          // pinned once — the count below, the assignment branch AND the
-          // anchor-stitch idxMap join all read it (three scans otherwise).
-          // The pin is not free at build time: under AQE it runs the
-          // position scan's shuffle stages here (core/Pinned.scala), and
-          // the count is one more job
-          val pos = Pinned.checkpoint(
-            Scan.position(series.internal, "__idx", "__posl")
-              .withColumn("__pos", col("__posl").cast("double")).drop("__posl"))
-          val n = pos.count()
+          // distributed positional index (no single-partition row_number),
+          // read by the assignment branch and the anchor-stitch idxMap join:
+          // Scan.position's range pin keeps `__pid` stable across both. n
+          // is the index summary's row count (one shuffle-free job)
+          val n = Segmenter.summary(series).fold(0L)(_.n)
+          val pos = Scan.position(series.internal, "__idx", "__posl")
+            .withColumn("__pos", col("__posl").cast("double")).drop("__posl")
           (pos.select(col("__pos").as("__idx"), col("__v"), col("__pos"),
             col("__idx").as("__orig_idx")),
             Bounds(0.0, (n - 1).toDouble), true)
@@ -716,10 +712,12 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
           s"multiple window/stride datatypes present: ${dtypes.mkString(", ")}"))
       else Nil)
 
+    // read once for every check, over every used series as in calculate
+    lazy val b = Segmenter.bounds(used, boundMethod)
+
     // manual segments vs data bounds — the arrays are driver-side already
     val manualOob = rows(
       if ((segmentStartIdxs.isDefined || segmentEndIdxs.isDefined) && used.nonEmpty) {
-        val b = Segmenter.bounds(used, boundMethod)
         val oob = (segmentStartIdxs.getOrElse(Nil) ++ segmentEndIdxs.getOrElse(Nil))
           .filter(x => x < b.start || x > b.end)
         if (oob.nonEmpty)
@@ -773,7 +771,7 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
         .map { case (win, strides) =>
           val series = used.filter(_.domain == win.domain)
           if (series.isEmpty) empty
-          else Segmenter.sparsity(series, Segmenter.bounds(series, boundMethod),
+          else Segmenter.sparsity(series, b,
             win.amount, strides.map(_.amount), includeFinalWindow)
             .where(col("ptp") > 0)
             .select(lit("sparsity").as("check"), col("series").as("subject"),

@@ -23,8 +23,8 @@ import org.apache.spark.sql.DataFrame
   * still calls `executedPlan.execute()` to build the RDD it pins. Under AQE
   * that runs every shuffle stage below the pin while the frame is BUILT —
   * build-time jobs on the calling thread; only the pinned stage itself and
-  * its block storage wait for the first action. (Measured: q08's two pins
-  * run 8 build-time jobs even with its `pos.count()` removed.)
+  * its block storage wait for the first action. (Measured: q08's range
+  * pin runs 2 build-time jobs; a second pin over its positions ran 5 more.)
   *
   * [[release]] is deliberately conservative on the two hazards of a naive
   * global sweep:

@@ -3,6 +3,7 @@ package graft.proc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{Scan, Series}
+import graft.segment.{Bounds, Segmenter}
 
 /** Regular-grid resampling with as-of (last-known) values — the tsflex
   * processing recipes do this with pandas `resample`/`reindex`; here the
@@ -22,13 +23,8 @@ object Resample {
       "(step = 0 would launch a ~Long.MaxValue-row grid)")
     val spark = s.df.sparkSession
     val internal = s.internal
-    val mm = internal.agg(min(col("__idx")), max(col("__idx"))).head()
-    require(!mm.isNullAt(0),
-      s"series '${s.name}' has no non-null indexed rows — cannot resample")
-    val (lo, hi) = (mm.getDouble(0), mm.getDouble(1))
-    // Spark's max ranks NaN highest: a NaN or infinite span sizes no grid
-    require(lo.isFinite && hi.isFinite, s"series '${s.name}' has a non-finite " +
-      s"index bound [$lo, $hi] — cannot resample NaN or infinite indexes")
+    // checked: an empty series or a NaN or infinite span sizes no grid
+    val Bounds(lo, hi) = Segmenter.bounds(Seq(s))
     // relative epsilon: (0.3 - 0.0) / 0.1 = 2.9999999999999996 in doubles —
     // a bare floor would silently drop the final grid point that the doc
     // ("inclusive of the last step at or before max") promises.

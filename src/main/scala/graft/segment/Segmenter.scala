@@ -10,6 +10,9 @@ import graft.expr.{AssignKernelUtil, AssignPacked}
 /** Bounds of the data range to segment (P2/P3). */
 final case class Bounds(start: Double, end: Double)
 
+/** (min, max) of a series' `__idx` and its row count. */
+final case class IndexSummary(start: Double, end: Double, n: Long)
+
 /** The strided-rolling segmenter — tsflex's core table-valued operator
   * (reference: tsflex/features/segmenter/strided_rolling.py), re-expressed
   * Spark-first.
@@ -33,8 +36,8 @@ final case class Bounds(start: Double, end: Double)
   * restore empty-window rows (W7) — broadcast on the block-sliced bucket
   * path at any scale, the window-bounded frame hinted by
   * `Gates.hintBounded`. Irregular/manual segments fall back to a
-  * broadcast range join. The series bounds are the one eager job:
-  * [[bounds]] runs one shuffle-free job per distinct source.
+  * broadcast range join. The one eager job is the series' index
+  * [[summary]], (min, max, n) in one shuffle-free job per distinct source.
   */
 object Segmenter {
 
@@ -74,23 +77,21 @@ object Segmenter {
     // started (q51's three-series wcorr: 3 scans → 1).
     val reps = scala.collection.mutable.ArrayBuffer.empty[(Series, (Double, Double))]
     val mm = series.map { s =>
-      reps.find { case (rep, _) => rep.sameSource(s) } match {
-        case Some((_, v)) => v
-        case None =>
-          // an all-null (or empty) series has no bounds; name the series
-          // instead of failing deep inside calculate
-          val r = idxRange(s)
-          require(r.isDefined,
-            s"series '${s.name}' has no non-null indexed rows — cannot " +
-              "derive segmentation bounds")
-          val v = r.get
-          // max ranks NaN highest; a NaN or infinite bound would segment a
-          // wrong (or a Long.MaxValue-window) grid
-          require(v._1.isFinite && v._2.isFinite,
-            s"series '${s.name}' has a non-finite index bound " +
-              s"[${v._1}, ${v._2}] — cannot segment NaN or infinite indexes")
-          reps += ((s, v))
-          v
+      reps.collectFirst { case (rep, v) if rep.sameSource(s) => v }.getOrElse {
+        // an all-null (or empty) series has no bounds; name the series
+        // instead of failing deep inside calculate
+        val r = summary(s)
+        require(r.isDefined,
+          s"series '${s.name}' has no non-null indexed rows — cannot " +
+            "derive segmentation bounds")
+        val v = (r.get.start, r.get.end)
+        // max ranks NaN highest; a NaN or infinite bound would segment a
+        // wrong (or a Long.MaxValue-window) grid
+        require(v._1.isFinite && v._2.isFinite,
+          s"series '${s.name}' has a non-finite index bound " +
+            s"[${v._1}, ${v._2}] — cannot segment NaN or infinite indexes")
+        reps += ((s, v))
+        v
       }
     }
     method match {
@@ -101,32 +102,35 @@ object Segmenter {
     }
   }
 
-  /** (min, max) of `s`'s `__idx`, None when it has no row: Spark's
-    * `agg(min, max)` in ONE job with no shuffle (the aggregate runs a
-    * partial map stage and a final stage, two jobs under AQE). Each
-    * partition folds its own pair on the executors off the internal rows;
-    * the driver combines them in partition order. Both folds compare like
-    * Spark's `min`/`max` (`SQLOrderingUtil.compareDoubles`: -0.0 equals
-    * 0.0, so the first one seen stays; NaN ranks highest) and take a value
-    * only when it is strictly past the one held.
+  /** (min, max) of `s`'s `__idx` and its row count, None when it has no
+    * row: Spark's `agg(min, max, count)` in ONE job with no shuffle (the
+    * aggregate runs a partial map stage and a final stage, two jobs under
+    * AQE). Each partition folds its own summary on the executors off the
+    * internal rows; the driver combines them in partition order. Both
+    * range folds compare like Spark's `min`/`max`
+    * (`SQLOrderingUtil.compareDoubles`: -0.0 equals 0.0, so the first one
+    * seen stays; NaN ranks highest) and take a value only when it is
+    * strictly past the one held.
     */
-  private def idxRange(s: Series): Option[(Double, Double)] =
+  def summary(s: Series): Option[IndexSummary] =
     s.internal.select(col("__idx")).queryExecution.toRdd
-      .mapPartitions(foldRange).collect()
-      .reduceOption((a, b) => (lower(a._1, b._1), upper(a._2, b._2)))
+      .mapPartitions(foldSummary).collect()
+      .reduceOption((a, b) => IndexSummary(lower(a.start, b.start), upper(a.end, b.end), a.n + b.n))
 
-  /** (min, max) of a partition's `__idx` rows (none null), none if empty. */
-  private def foldRange(rows: Iterator[InternalRow]): Iterator[(Double, Double)] =
+  /** The summary of a partition's `__idx` rows (none null), none if empty. */
+  private def foldSummary(rows: Iterator[InternalRow]): Iterator[IndexSummary] =
     if (!rows.hasNext) Iterator.empty
     else {
       var lo = rows.next().getDouble(0)
       var hi = lo
+      var n = 1L
       while (rows.hasNext) {
         val t = rows.next().getDouble(0)
         lo = lower(lo, t)
         hi = upper(hi, t)
+        n += 1
       }
-      Iterator((lo, hi))
+      Iterator(IndexSummary(lo, hi, n))
     }
 
   private def lower(held: Double, t: Double): Double =

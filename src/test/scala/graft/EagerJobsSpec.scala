@@ -5,18 +5,25 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Pins the Spark jobs a query's builder runs BEFORE any action — the
   * eager driver jobs of plan build — per module, as a budget: a change that
-  * adds one fails here. Today they are the series bounds
-  * (`Segmenter.bounds`: one shuffle-free min/max job per distinct source)
-  * and, for sample-count windows, the pin of the positional index
-  * (`graft.core.Pinned`: under AQE it runs the position scan's stages at
-  * build) and its `count()` (`graft.api`). Opening a Parquet table runs
-  * none: `TsCompat.readParquet` reads the first file's footer on the
+  * adds one fails here. Today they are the series' index summary
+  * (`Segmenter.summary`: one shuffle-free (min, max, n) job per distinct
+  * source, for the bounds, a sample-count grid's size and a resample
+  * grid's span) and, for sample-count windows and resampling, the range
+  * pin of a `Scan` (`graft.core.Pinned`: under AQE it runs the range
+  * exchange's sampling and map stages at build). Opening a Parquet table
+  * runs none: `TsCompat.readParquet` reads the first file's footer on the
   * driver and declares the schema.
   *
   * Table history: every row lost its `core` schema job when the opens
   * became job-free (q01, q13, q08: one each; q88's documents open too),
   * and each bounds source went from an aggregate's job pair (partial map
   * stage + final stage under AQE) to one job (q01 2 → 1, q13 4 → 2).
+  * q08 went from `core 7 + api 2` to `core 2 + segment 1` when its
+  * positional frame lost its second pin (5 jobs: the pin re-ran the
+  * position scan's shuffle stages at build) and its `count()` (2 jobs)
+  * for the index summary's n. q47 runs its fill-forward range pin
+  * (`core 2`) and, since `Resample` reads its span off the index summary
+  * instead of an `agg(min, max)` (`proc 2`), `segment 1`.
   *
   * The q99a whole-call count adds the five execute jobs of the
   * block-sliced path to its one build job. It holds with Spark's
@@ -41,7 +48,8 @@ class EagerJobsSpec extends SparkSpec {
     "q01_roll_mean" -> Map("segment" -> 1),
     // two filtered sources (click, purchase): one bounds job each
     "q13_two_series_bounds" -> Map("segment" -> 2),
-    "q08_sample_windows" -> Map("core" -> 7, "api" -> 2),
+    "q08_sample_windows" -> Map("core" -> 2, "segment" -> 1),
+    "q47_resample" -> Map("segment" -> 1, "core" -> 2),
     "q99a_catch22_dist" -> Map("segment" -> 1),
     "q88_strip_keep_first" -> Map("core" -> 3))
 

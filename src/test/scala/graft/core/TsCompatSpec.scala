@@ -20,8 +20,9 @@ import graft.{PlanAudit, SparkSpec}
   *
   * `TsCompat.readParquet`, the open every table goes through, runs no Spark
   * job and returns what `s.read.parquet` returns: on that file, on an INT64
-  * TIMESTAMP(NANOS) file and on a directory of part files with marker and
-  * checksum siblings.
+  * TIMESTAMP(NANOS) file, on a directory of part files with marker and
+  * checksum siblings, and on the generated lineitem, embeddings (an array
+  * column) and orders tables the queries open.
   */
 class TsCompatSpec extends SparkSpec {
 
@@ -124,7 +125,9 @@ class TsCompatSpec extends SparkSpec {
   }
 
   for ((name, at) <- Seq[(String, () => String)]("naive micros" -> (() => path),
-      "TIMESTAMP(NANOS)" -> (() => nanosPath), "part-file directory" -> (() => partsPath)))
+      "TIMESTAMP(NANOS)" -> (() => nanosPath), "part-file directory" -> (() => partsPath)) ++
+      Seq("lineitem", "embeddings", "orders").map(t =>
+        s"sf0.001 $t" -> (() => s"/root/testdata/sf0.001/$t.parquet")))
     test(s"readParquet on the $name input: no Spark job, the schema and rows of s.read.parquet") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val (opened, jobs) = jobsOf(TsCompat.readParquet(spark, at()))

@@ -9,9 +9,10 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.{PlanAudit, SparkSpec}
 import graft.core.Series
 
-/** Property tests for `Segmenter.bounds`: its one-job per-partition fold
-  * returns what Spark's `agg(min, max)` returns, bit for bit, fails the
-  * same way on series it cannot segment, and runs one Spark job per
+/** Property tests for `Segmenter.summary` and the bounds read off it: its
+  * one-job per-partition fold returns what Spark's `agg(min, max)` returns,
+  * bit for bit, and the row count `count()` returns; the bounds fail the
+  * same way on series they cannot segment, and run one Spark job per
   * distinct source.
   */
 class BoundsPropSpec extends SparkSpec {
@@ -41,7 +42,7 @@ class BoundsPropSpec extends SparkSpec {
     (b.start, b.end)
   }
 
-  test("the fold equals agg(min, max) bit for bit: nulls, duplicates, negatives, more partitions than rows") {
+  test("the fold equals agg(min, max) bit for bit and count(): nulls, duplicates, negatives, more partitions than rows") {
     val rnd = new scala.util.Random(42)
     (1 to 30).foreach { i =>
       val n = 1 + rnd.nextInt(40)
@@ -61,7 +62,14 @@ class BoundsPropSpec extends SparkSpec {
       val s = series(frame(rnd.shuffle(idx), parts))
       assert(bits(folded(s)) == bits(aggregated(s)),
         s"case $i: ${folded(s)} vs ${aggregated(s)} over $parts partitions")
+      val rows = Segmenter.summary(s).map(_.n)
+      assert(rows.contains(s.internal.count()), s"case $i: n $rows over $parts partitions")
     }
+  }
+
+  test("an empty or all-null series has no summary") {
+    for (idx <- Seq(Nil, Seq(None, None, None)); parts <- Seq(1, 4))
+      assert(Segmenter.summary(series(frame(idx, parts))).isEmpty, s"$idx over $parts")
   }
 
   test("signed zeros compare equal and the first one seen is kept, as in agg") {
