@@ -42,9 +42,13 @@ class BoundsPropSpec extends SparkSpec {
     (b.start, b.end)
   }
 
-  test("the fold equals agg(min, max) bit for bit and count(): nulls, duplicates, negatives, more partitions than rows") {
+  /** 30 seeded random series: nulls, duplicates, negatives, and every third
+    * one over more partitions than rows. Each comes with its case number and
+    * partition count.
+    */
+  private def randomSeries(): Seq[(Int, Series, Int)] = {
     val rnd = new scala.util.Random(42)
-    (1 to 30).foreach { i =>
+    (1 to 30).map { i =>
       val n = 1 + rnd.nextInt(40)
       val scale = math.pow(10, rnd.nextInt(7) - 2)
       val drawn = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -59,9 +63,19 @@ class BoundsPropSpec extends SparkSpec {
         }
       } :+ Some((rnd.nextDouble() - 0.7) * scale)
       val parts = if (i % 3 == 0) idx.length + 1 + rnd.nextInt(5) else 1 + rnd.nextInt(4)
-      val s = series(frame(rnd.shuffle(idx), parts))
+      (i, series(frame(rnd.shuffle(idx), parts)), parts)
+    }
+  }
+
+  test("the fold equals agg(min, max) bit for bit: nulls, duplicates, negatives, more partitions than rows") {
+    randomSeries().foreach { case (i, s, parts) =>
       assert(bits(folded(s)) == bits(aggregated(s)),
         s"case $i: ${folded(s)} vs ${aggregated(s)} over $parts partitions")
+    }
+  }
+
+  test("the fold's n equals count(): nulls, duplicates, negatives, more partitions than rows") {
+    randomSeries().foreach { case (i, s, parts) =>
       val rows = Segmenter.summary(s).map(_.n)
       assert(rows.contains(s.internal.count()), s"case $i: n $rows over $parts partitions")
     }
