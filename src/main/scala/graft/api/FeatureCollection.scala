@@ -293,8 +293,9 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
             "sample-count windows require a TIME-indexed series")
           // distributed positional index (no single-partition row_number),
           // read by the assignment branch and the anchor-stitch idxMap join:
-          // Scan.position's range pin keeps `__pid` stable across both. n
-          // is the index summary's row count (one shuffle-free job)
+          // both read the positions Scan.position numbers inside its one
+          // range pin, so neither recomputes them. n is the index summary's
+          // row count (one shuffle-free job)
           val n = Segmenter.summary(series).fold(0L)(_.n)
           val pos = Scan.position(series.internal, "__idx", "__posl")
             .withColumn("__pos", col("__posl").cast("double")).drop("__posl")
@@ -712,12 +713,16 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
           s"multiple window/stride datatypes present: ${dtypes.mkString(", ")}"))
       else Nil)
 
-    // read once for every check, over every used series as in calculate
-    lazy val b = Segmenter.bounds(used, boundMethod)
+    // read lazily, once per source: each sparsity bucket sizes its grid
+    // from its own domain's bounds; the manual-segment check combines them
+    // into the bounds calculate segments with
+    lazy val bOf: Map[Domain, Bounds] = used.groupBy(_.domain)
+      .map { case (d, ss) => d -> Segmenter.bounds(ss, boundMethod) }
 
     // manual segments vs data bounds — the arrays are driver-side already
     val manualOob = rows(
       if ((segmentStartIdxs.isDefined || segmentEndIdxs.isDefined) && used.nonEmpty) {
+        val b = Segmenter.combine(bOf.values.toSeq, boundMethod)
         val oob = (segmentStartIdxs.getOrElse(Nil) ++ segmentEndIdxs.getOrElse(Nil))
           .filter(x => x < b.start || x > b.end)
         if (oob.nonEmpty)
@@ -771,7 +776,7 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
         .map { case (win, strides) =>
           val series = used.filter(_.domain == win.domain)
           if (series.isEmpty) empty
-          else Segmenter.sparsity(series, b,
+          else Segmenter.sparsity(series, bOf(win.domain),
             win.amount, strides.map(_.amount), includeFinalWindow)
             .where(col("ptp") > 0)
             .select(lit("sparsity").as("check"), col("series").as("subject"),

@@ -153,19 +153,27 @@ object Scan {
   }
 
   /** 0-based position of each row in `orderCol` order (distributed
-    * row_number). Ties are broken by partition-local order, matching the
-    * global window's behavior for unique keys.
+    * row_number). The range-partitioned frame is sorted within its
+    * partitions and numbered before it is pinned, so every consumer of the
+    * result reads the same positions off one pin: no exchange, sort or
+    * window runs per consumer. `monotonically_increasing_id` puts the
+    * partition id in the upper 31 bits and the record number within the
+    * partition (here: the sorted order) in the lower 33. Ties are broken by
+    * partition-local order, matching the global window's behavior for
+    * unique keys.
     */
   def position(df: DataFrame, orderCol: String, outCol: String): DataFrame = {
-    val p = ranged(df, Seq(orderCol))
-    val w = Window.partitionBy("__pid").orderBy(orderCol)
-    val local = p.withColumn("__loc", row_number().over(w).cast("long"))
+    pinnedOrder(df)
+    val p = Pinned.checkpoint(df.drop("__pid")
+      .repartitionByRange(col(orderCol)).sortWithinPartitions(orderCol)
+      .withColumn("__mid", monotonically_increasing_id()))
+      .withColumn("__pid", shiftrightunsigned(col("__mid"), 33))
     val perPid = p.groupBy("__pid").agg(count(lit(1)).as("__tot"))
     val offsets = overPrev(perPid,
       Seq(coalesce(sum(col("b___tot")), lit(0L)).as("__off")))
-    local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(outCol, col("__loc") + col("__off") - 1)
-      .drop("__loc", "__off", "__pid")
+    p.join(broadcast(offsets), Seq("__pid"))
+      .withColumn(outCol, (col("__mid") bitwiseAND ((1L << 33) - 1)) + col("__off"))
+      .drop("__mid", "__off", "__pid")
   }
 
   /** 1-based rank of each row WITHIN its `keyCols` group in `orderCol`

@@ -75,8 +75,8 @@ object Segmenter {
     // These jobs run EAGERLY at plan-build time, so an n-tuple feature
     // over one frame paid n full input scans before the query even
     // started (q51's three-series wcorr: 3 scans → 1).
-    val reps = scala.collection.mutable.ArrayBuffer.empty[(Series, (Double, Double))]
-    val mm = series.map { s =>
+    val reps = scala.collection.mutable.ArrayBuffer.empty[(Series, Bounds)]
+    combine(series.map { s =>
       reps.collectFirst { case (rep, v) if rep.sameSource(s) => v }.getOrElse {
         // an all-null (or empty) series has no bounds; name the series
         // instead of failing deep inside calculate
@@ -84,22 +84,24 @@ object Segmenter {
         require(r.isDefined,
           s"series '${s.name}' has no non-null indexed rows — cannot " +
             "derive segmentation bounds")
-        val v = (r.get.start, r.get.end)
+        val v = Bounds(r.get.start, r.get.end)
         // max ranks NaN highest; a NaN or infinite bound would segment a
         // wrong (or a Long.MaxValue-window) grid
-        require(v._1.isFinite && v._2.isFinite,
+        require(v.start.isFinite && v.end.isFinite,
           s"series '${s.name}' has a non-finite index bound " +
-            s"[${v._1}, ${v._2}] — cannot segment NaN or infinite indexes")
+            s"[${v.start}, ${v.end}] — cannot segment NaN or infinite indexes")
         reps += ((s, v))
         v
       }
-    }
-    method match {
-      case "inner"       => Bounds(mm.map(_._1).max, mm.map(_._2).min)
-      case "inner-outer" => Bounds(mm.map(_._1).max, mm.map(_._2).max)
-      case "outer"       => Bounds(mm.map(_._1).min, mm.map(_._2).max)
-      case m => throw new IllegalArgumentException(s"invalid bound method $m")
-    }
+    }, method)
+  }
+
+  /** Per-series (or per-group) bounds folded by a P3 bound method. */
+  def combine(bs: Seq[Bounds], method: String): Bounds = method match {
+    case "inner"       => Bounds(bs.map(_.start).max, bs.map(_.end).min)
+    case "inner-outer" => Bounds(bs.map(_.start).max, bs.map(_.end).max)
+    case "outer"       => Bounds(bs.map(_.start).min, bs.map(_.end).max)
+    case m => throw new IllegalArgumentException(s"invalid bound method $m")
   }
 
   /** (min, max) of `s`'s `__idx` and its row count, None when it has no

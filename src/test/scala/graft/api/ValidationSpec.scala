@@ -123,4 +123,24 @@ class ValidationSpec extends SparkSpec {
     val found = checks(rep)
     assert(found.contains("segments_outside_data_bounds") && found.contains("sparsity"), found)
   }
+
+  test("each sparsity bucket is sized from its own domain's bounds") {
+    import spark.implicits._
+    val fc = FeatureCollection(
+      FeatureDescriptor(mean, "v", Some(Win.seq(5L)), Some(Seq(Win.seq(5L)))),
+      FeatureDescriptor(mean, "t", Some(Win.time("1h")), Some(Seq(Win.time("1h")))))
+    // a gap at 6 and 7 makes the sequence series sparse; the time series
+    // holds two samples in every hour (dense), at index values ~1.7e15 us
+    val seqSeries = Series("v", seqData(11).where(!col("idx").isin(6.0, 7.0)), "idx", "v")
+    val timeSeries = Series("t", (0 until 8)
+      .map(i => (new java.sql.Timestamp(1704067200000L + i * 1800000L), i * 1.0))
+      .toDF("ts", "t"), "ts", "t")
+    def sparse(r: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+      r.where(col("check") === "sparsity").collect()
+        .map(x => (x.getString(1), x.getString(2))).toSeq
+    val alone = sparse(FeatureCollection(fc.descriptors.head).validate(Seq(seqSeries)))
+    assert(alone.map(_._1) == Seq("v"), alone)
+    for (m <- Seq("inner", "outer"))
+      assert(sparse(fc.validate(Seq(seqSeries, timeSeries), boundMethod = m)) == alone, m)
+  }
 }

@@ -81,6 +81,18 @@ class ScanSpec extends SparkSpec {
     assert(got == exp)
   }
 
+  test("position is numbered inside its pin: two readers sort and rank nothing") {
+    val pos = Scan.position(data, "idx", "pos")
+    // the sample-window shape: one reader keeps the values, one only the map
+    val both = pos.select("pos", "v").join(pos.select("pos", "idx"), "pos")
+    assert(both.count() == 2000)
+    val plan = both.queryExecution.optimizedPlan
+    assert(plan.collect { case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
+      .isEmpty, plan)
+    assert(plan.collect { case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s }
+      .isEmpty, plan)
+  }
+
   test("lagFlagScan equals global lag->flag->cumsum (value runs)") {
     import spark.implicits._
     // few distinct values → long runs that CROSS partition boundaries
