@@ -292,15 +292,12 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
           require(series.domain == Domain.Time,
             "sample-count windows require a TIME-indexed series")
           // distributed positional index (no single-partition row_number),
-          // read by the assignment branch and the anchor-stitch idxMap join:
-          // both read the positions Scan.position numbers inside its one
-          // range pin, so neither recomputes them. n is the index summary's
-          // row count (one shuffle-free job)
+          // numbered inside Scan.position's range pin, which the assignment
+          // branch and the anchor-stitch idxMap join both read. n is the
+          // index summary's row count (one shuffle-free job)
           val n = Segmenter.summary(series).fold(0L)(_.n)
-          val pos = Scan.position(series.internal, "__idx", "__posl")
-            .withColumn("__pos", col("__posl").cast("double")).drop("__posl")
-          (pos.select(col("__pos").as("__idx"), col("__v"), col("__pos"),
-            col("__idx").as("__orig_idx")),
+          (Scan.position(series.internal, "__idx", "__posl").select(
+            col("__posl").cast("double").as("__idx"), col("__v"), col("__idx").as("__orig_idx")),
             Bounds(0.0, (n - 1).toDouble), true)
         } else (series.internal, b, false)
 
@@ -409,7 +406,7 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
           // (reference: strided_rolling.py:627-698).
           val anchorPos = least(greatest(floor(anchorRaw).cast("double"),
             lit(bounds.start)), lit(bounds.end))
-          val idxMap = rows.select(col("__pos"), col("__orig_idx"))
+          val idxMap = rows.select(col("__idx").as("__pos"), col("__orig_idx"))
           joined = joined.join(idxMap, anchorPos === col("__pos"), "left")
           series.restoreIdx(col("__orig_idx"))
         } else series.restoreIdx(anchorRaw)
@@ -713,9 +710,8 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
           s"multiple window/stride datatypes present: ${dtypes.mkString(", ")}"))
       else Nil)
 
-    // read lazily, once per source: each sparsity bucket sizes its grid
-    // from its own domain's bounds; the manual-segment check combines them
-    // into the bounds calculate segments with
+    // lazy, once per source: a sparsity bucket's grid spans its domain;
+    // the manual-segment check combines them as calculate's bounds do
     lazy val bOf: Map[Domain, Bounds] = used.groupBy(_.domain)
       .map { case (d, ss) => d -> Segmenter.bounds(ss, boundMethod) }
 

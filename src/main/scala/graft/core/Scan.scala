@@ -153,14 +153,11 @@ object Scan {
   }
 
   /** 0-based position of each row in `orderCol` order (distributed
-    * row_number). The range-partitioned frame is sorted within its
-    * partitions and numbered before it is pinned, so every consumer of the
-    * result reads the same positions off one pin: no exchange, sort or
-    * window runs per consumer. `monotonically_increasing_id` puts the
-    * partition id in the upper 31 bits and the record number within the
-    * partition (here: the sorted order) in the lower 33. Ties are broken by
-    * partition-local order, matching the global window's behavior for
-    * unique keys.
+    * row_number), numbered inside the range pin: every reader reads the
+    * same positions and none runs an exchange, sort or window.
+    * `monotonically_increasing_id` keeps the partition id in its upper 31
+    * bits, the record number in the sorted partition in the lower 33. Ties
+    * are broken by partition-local order.
     */
   def position(df: DataFrame, orderCol: String, outCol: String): DataFrame = {
     pinnedOrder(df)

@@ -65,10 +65,6 @@ object Segmenter {
       regular: Option[Grid],
       winRender: String)
 
-  /** P3 bound methods (reference: tsflex/features/utils.py:77-99):
-    * inner = (max of starts, min of ends); inner-outer = (max, max);
-    * outer = (min, max).
-    */
   def bounds(series: Seq[Series], method: String = "inner"): Bounds = {
     // r19: series of the same source (Series.sameSource) have identical
     // index bounds — one driver job per distinct source, not per series.
@@ -96,7 +92,10 @@ object Segmenter {
     }, method)
   }
 
-  /** Per-series (or per-group) bounds folded by a P3 bound method. */
+  /** P3 bound methods (reference: tsflex/features/utils.py:77-99):
+    * inner = (max of starts, min of ends); inner-outer = (max, max);
+    * outer = (min, max).
+    */
   def combine(bs: Seq[Bounds], method: String): Bounds = method match {
     case "inner"       => Bounds(bs.map(_.start).max, bs.map(_.end).min)
     case "inner-outer" => Bounds(bs.map(_.start).max, bs.map(_.end).max)
