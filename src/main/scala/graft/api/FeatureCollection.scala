@@ -456,8 +456,9 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
         // (exact in doubles up to 2^53) so they always align; SEQUENCE
         // anchors with FRACTIONAL strides can differ by 1 ulp between
         // buckets and split a logical row — use integer-valued sequence
-        // strides, or KeyedFeatures.calculateWideMulti, whose pivot groups
-        // on exact integer offsets k*stride.
+        // windows and strides. KeyedFeatures.calculateWideMulti's pivot
+        // groups on k*stride offsets and merges anchors exactly only for
+        // integer-valued windows and strides too, not for fractional ones.
         bucketFrames.reduce((a, c) => a.join(c, Seq(idxName), "full_outer"))
     val featCols = merged.columns.filterNot(_ == idxName).sorted
     // ordering is the caller's concern (every sink re-sorts anyway) — not

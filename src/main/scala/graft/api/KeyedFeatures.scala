@@ -9,16 +9,12 @@ import graft.segment.Segmenter.{koffOf, pick, shufflePartitions, startOf}
   * actually has: millions of INDEPENDENT series (one per user / device /
   * session), each segmented relative to ITS OWN bounds, extracted in one
   * shot. The reference covers this only by looping `calculate` over series;
-  * here the key is a first-class partitioning column:
+  * here the key is a first-class partitioning column.
   *
-  *   1. per-key bounds: one partial-aggregated `groupBy(key)` pass;
-  *   2. per-key segment table: a `SegmentsPacked` explode OVER THE BOUNDS
-  *      ROWS (nb segments derived per key; one tiny round-robin exchange
-  *      re-widens the bounds first — see [[spreadBounds]]);
-  *   3. window→row assignment: the single-series engine's `AssignPacked`
-  *      explode, with the key's own bounds joined in;
-  *   4. ONE fused `groupBy(key, segment).agg(...)`, left-joined back onto
-  *      the per-key segment table so empty windows survive (W7).
+  * ONE keyed window pipeline, [[calculateWideMulti]], serves every window
+  * count. [[calculateWide]] is its one-window case and [[calculate]] is
+  * single-series sugar over that, as a tsflex single-window descriptor is
+  * one bucket of the general multi-window collection.
   *
   * Everything shuffles ON THE KEY — adding keys scales out instead of up,
   * and no stage ever sees a single global ordering.
@@ -37,11 +33,11 @@ object KeyedFeatures {
     * the optimizer keeps: `repartition(n, $"__key")` is ELIMINATED as
     * redundant (the agg exchange already hash-partitions by key — and then
     * AQE coalesces that exchange anyway), while REPARTITION_BY_NUM
-    * round-robin is neither removable nor AQE-coalescible. Downstream
-    * consumers (the segments distinct / the assignment join) re-shuffle on
+    * round-robin is neither removable nor AQE-coalescible. The grid's
+    * consumers (the W7 join, or the fused aggregate's union) re-shuffle on
     * their own keys regardless, so bounds partitioning carries no reuse
     * value — only its WIDTH matters. The exchange moves only the tiny
-    * bounds rows.
+    * bounds rows; the assignment join keeps the un-widened bounds.
     */
   private def spreadBounds(b: DataFrame): DataFrame =
     b.repartition(shufflePartitions(b.sparkSession))
@@ -60,7 +56,7 @@ object KeyedFeatures {
 
   // ---- fused decomposable aggregate (r19) ---------------------------------
   //
-  // The multi-window plan's generic shape is four exchange-bearing stages:
+  // The several-window plan's generic shape is four exchange-bearing stages:
   // the per-(key, w, seg_start) fused aggregate, the segments⋈aggregate
   // LEFT JOIN restoring empty windows (two full exchanges + sort-merge
   // sorts of the widest intermediates in the query — q72 at 100×: 985 MB
@@ -87,7 +83,9 @@ object KeyedFeatures {
   // The five registry funcs len/mean/sum/min/max are maskable (count/avg/
   // sum/min/max all skip nulls and ignore the index argument); anything
   // else — index-aware kernels, collect-based stocks, robust wrappers —
-  // falls back to the generic aggregate+join+pivot path. Float caveat:
+  // falls back to the generic aggregate+join+pivot path. One window never
+  // fuses: its generic plan has no pivot to collapse, and its anchors stay
+  // the single-series engine's. Float caveat:
   // sum/mean accumulate the same row multiset in a different order than
   // the per-window aggregate did (Spark's partial aggregation is already
   // order-nondeterministic); Q72RollupSpec pins the differential (the
@@ -141,7 +139,7 @@ object KeyedFeatures {
           cols.mkString("|"))
     }
 
-  /** Single-series sugar over [[calculateWide]].
+  /** Single-series sugar over [[calculateWide]] (one window).
     *
     * @param funcs   features to fuse into the single per-segment aggregate
     * @param windowIdx "begin" | "middle" | "end" output anchor (W6)
@@ -170,6 +168,8 @@ object KeyedFeatures {
     * aggregates skip — exactly the index-intersection semantics of the
     * long-format path for the built-in NaryFuncs.
     *
+    * [[calculateWideMulti]]'s one-window case; no pipeline of its own.
+    *
     * @param unary (seriesColumn, func) features; output `col__f__w=...`
     * @param nary  (seriesColumns, func) tuple features; output
     *              `a|b|c__f__w=...` (W10 naming, same as the main path)
@@ -190,122 +190,41 @@ object KeyedFeatures {
                     nary: Seq[(Seq[String], NaryFunc)] = Nil,
                     windowIdx: String = "end",
                     includeFinalWindow: Boolean = false,
-                    windowKeep: Option[(Column, Column) => Column] = None): DataFrame = {
-    require(unary.nonEmpty || nary.nonEmpty, "no features given")
-    requireNaryArity(nary)
-    val valueCols = (unary.map(_._1) ++ nary.flatMap(_._1)).distinct
-    val firstVal = valueCols.head
-    val (series, internal) = keyedInput(df, keyCol, idxCol, firstVal,
-      Seq(window -> strides), valueCols.map(col))
+                    windowKeep: Option[(Column, Column) => Column] = None): DataFrame =
+    calculateWideMulti(df, keyCol, idxCol, Seq(window -> strides), unary, nary,
+      windowIdx, includeFinalWindow, windowKeep)
 
-    val w = window.amount
-    val sts = strides.map(_.amount).distinct.sorted
-
-    // 1. per-key bounds
-    val bounds = keyBounds(internal)
-    // spread ONLY the explode consumer — the withStart equi-join below has
-    // no amplification, so it keeps the un-widened bounds (fewer static
-    // exchanges; see spreadBounds)
-    val boundsWide = spreadBounds(bounds)
-
-    // 2. per-key segment table (never driver-materialized) — one packed
-    // kernel explode; in-kernel dedup replaces the multi-stride distinct()
-    val wsFlat = Seq.fill(sts.length)(w)
-    val segments = boundsWide.select(col("__key"), col("__s0"),
-        explode(graft.expr.SegmentsPacked(col("__s0"), col("__e0"),
-          wsFlat, sts, includeFinalWindow, dedupOnKoff = false)).as("__p"))
-      .select(col("__key"), startOf(col("__p"), col("__s0"), sts).as("__seg_start"))
-      .select(col("__key"), col("__seg_start"),
-        (col("__seg_start") + lit(w)).as("__seg_end"))
-
-    // 3. arithmetic assignment with the key's own bounds. The kernel clamps
-    // to the key's grid (e0 rides along), so the fused aggregate below runs
-    // DIRECTLY on the explode — map-side partial aggregation collapses the
-    // fan-out before its one exchange.
-    val withStart = internal.join(bounds, Seq("__key"))
-    val assigned = withStart.select(
-      col("__key") +: col("__idx") +: col("__s0") +: valueCols.map(col) :+
-        explode(graft.expr.AssignPacked(col("__idx"), col("__s0"),
-          col("__e0"), wsFlat, sts, includeFinalWindow)).as("__p"): _*)
-      .select(col("__key") +:
-        startOf(col("__p"), col("__s0"), sts).as("__seg_start") +:
-        col("__idx") +: valueCols.map(col): _*)
-
-    val anchorRaw = graft.segment.Segmenter.anchor(windowIdx)
-
-    // Keyed window-level sampling gate — the single-series windowKeep's
-    // twin (FeatureCollection.windowKeepPrune) per (key, window start): the
-    // explode is pruned BEFORE the fused aggregate, so keyed super-linear
-    // members never see unkept windows
-    val (assignedG, segmentsG) = windowKeep match {
-      case Some(keep) =>
-        FeatureCollection.windowKeepPrune(assigned, segments,
-          Seq("__key", "__seg_start"), col(firstVal),
-          series.restoreIdx(anchorRaw), keep)
-      case None => (assigned, segments)
-    }
-
-    // 4. one fused aggregate; empty windows restored by the left join
-    val winR = window.render
-    case class Feat(name: String, empty: Option[Column],
-                    outputNames: Option[Seq[String]], seriesNames: Seq[String],
-                    agg: Column)
-    val feats =
-      unary.map { case (c, f) =>
-        Feat(Win.outputName(Seq(c), f.name, winR), f.emptyValue, f.outputNames,
-          Seq(c), f.agg(col("__idx"), col(c)))
-      } ++ nary.map { case (cs, f) =>
-        Feat(Win.outputName(cs, f.name, winR), f.emptyValue, f.outputNames,
-          cs, f.agg(col("__idx"), cs.map(col)))
-      }
-    require(feats.map(_.name).distinct.length == feats.length,
-      "duplicate output names: " +
-        feats.map(_.name).diff(feats.map(_.name).distinct).mkString(", "))
-    val aggs = feats.map(f => f.agg.as(f.name))
-    val agged = assignedG.groupBy("__key", "__seg_start").agg(aggs.head, aggs.tail: _*)
-    var joined = segmentsG.join(agged, Seq("__key", "__seg_start"), "left")
-    feats.foreach { f =>
-      f.empty.foreach { ev =>
-        joined = joined.withColumn(f.name, coalesce(col(s"`${f.name}`"), ev))
-      }
-    }
-    // multi-output functions return a struct — expand each declared output
-    // into its own W10-named column (same rule as the main path)
-    def expand(f: Feat): Seq[Column] = f.outputNames match {
-      case Some(os) => os.map(o => col(s"`${f.name}`").getField(o)
-        .as(Win.outputName(f.seriesNames, o, winR)))
-      case None => Seq(col(s"`${f.name}`"))
-    }
-    joined.select(col("__key").as(keyCol) +:
-      series.restoreIdx(anchorRaw).as(idxCol) +:
-      feats.flatMap(expand): _*)
-  }
-
-  /** MULTI-WINDOW keyed extraction: several (window, strides) buckets over
-    * the same wide frame in ONE pass — the keyed analog of the single-series
-    * path's M1 bucketing ({1h, 6h, 1d} per entity is the standard
-    * per-entity feature shape; looping [[calculateWide]] would re-shuffle
-    * and re-scan the input once per window).
+  /** Keyed extraction over one or several (window, strides) buckets of the
+    * same wide frame in ONE pass — the keyed analog of the single-series
+    * path's M1 bucketing ({1h, 6h, 1d} per entity; one call per window
+    * would re-shuffle and re-scan the input once per window):
     *
-    * Plan shape: the per-key bounds pass is shared; each (window, stride)
-    * contributes its segment rows TAGGED with the window length, every value
-    * column rides a single assignment explode producing (window, seg_start)
-    * pairs, and ONE `groupBy(key, window, seg_start)` computes every
-    * feature for every window. Windows then pivot into per-window feature
-    * columns grouped on (key, anchor) — the keyed analog of S4's full-outer
-    * anchor merge: anchors shared by several windows land on one row, W7
-    * empty-window rows survive per window, and a window with no segment at
-    * an anchor is null there. Two shuffles total (aggregate + pivot),
-    * independent of the window count.
+    *   1. per-key bounds, one `groupBy(key)` shared by every window;
+    *   2. the per-key segment grid, ONE `SegmentsPacked` explode over the
+    *      bounds rows ([[spreadBounds]] re-widens them first);
+    *   3. ONE `AssignPacked` explode of (window, seg_start) pairs, with the
+    *      key's own bounds joined in. Both kernels dedup by one rule
+    *      (`AssignKernelUtil`), so grid and assignment agree on every start;
+    *   4. ONE `groupBy(key, window, seg_start)` aggregate, left-joined back
+    *      onto the grid so empty windows survive (W7).
+    *
+    * One window ends there, anchored by `Segmenter.anchor` over
+    * (start, start + w): bit-identical to the single-series engine. Several
+    * windows pivot into per-window columns on (key, anchor), the keyed
+    * analog of S4's full-outer anchor merge: anchors shared by several
+    * windows land on one row, and a window with no segment at an anchor is
+    * null there. The pivot groups on the offset k·st (+ w), which merges
+    * equal anchors exactly for integer-valued windows and strides (every
+    * TIME window); fractional ones can differ by an ulp and stay apart.
+    * Several windows of maskable features fuse steps 4–5 ([[maskable]]).
     *
     * Output naming: `series__func__w=<window.render>` per window (W10).
     *
-    * windowKeep semantics HERE (differs from the single-window row rule,
-    * necessarily): the gate keeps/drops (key, window, anchor) CELLS. A
-    * window dropped at an anchor where another window is kept nulls out
-    * its columns on the shared pivot row; an anchor where EVERY window is
-    * dropped emits no row. (A post-filter cannot express the cell shape —
-    * the single-bucket row-identity claim is scoped to [[calculateWide]].)
+    * windowKeep with several windows keeps/drops (key, window, anchor)
+    * CELLS: a window dropped where another is kept nulls its columns on
+    * the shared row; an anchor where every window is dropped emits no row.
+    * (A post-filter cannot express that; the row-identity claim holds for
+    * one window.)
     */
   def calculateWideMulti(df: DataFrame, keyCol: String, idxCol: String,
                          windows: Seq[(Win, Seq[Win])],
@@ -317,10 +236,6 @@ object KeyedFeatures {
     require(windows.nonEmpty, "no windows given")
     require(windows.map(_._1.amount).distinct.length == windows.length,
       "duplicate windows")
-    if (windows.lengthCompare(1) == 0)
-      return calculateWide(df, keyCol, idxCol, windows.head._1,
-        windows.head._2, unary, nary, windowIdx, includeFinalWindow,
-        windowKeep)
     require(unary.nonEmpty || nary.nonEmpty, "no features given")
     requireNaryArity(nary)
     val valueCols = (unary.map(_._1) ++ nary.flatMap(_._1)).distinct
@@ -329,28 +244,28 @@ object KeyedFeatures {
     val specs = windows.map { case (win, sts) =>
       (win, sts.map(_.amount).distinct.sorted)
     }
+    val pivot = specs.lengthCompare(1) > 0
 
-    // 1. per-key bounds — ONE pass shared by every window
+    // 1. per-key bounds; only the grid explode reads them re-widened
     val bounds = keyBounds(internal)
-    // spread ONLY the explode consumer (see the single-window path)
     val boundsWide = spreadBounds(bounds)
 
-    // 2. per-key segment grid across every (window, stride) spec — one
-    // packed kernel explode tagged with the window length; in-kernel
-    // (w, koff) dedup replaces the per-spec union + full-table distinct()
-    // shuffle of the previous formulation
+    // 2. per-key segment grid (never driver-materialized)
     val specW = specs.flatMap { case (win, ss) => ss.map(_ => win.amount) }
     val specSt = specs.flatMap { case (_, ss) => ss }
     val segments = boundsWide.select(col("__key"), col("__s0"),
         explode(graft.expr.SegmentsPacked(col("__s0"), col("__e0"),
-          specW, specSt, includeFinalWindow, dedupOnKoff = true)).as("__p"))
+          specW, specSt, includeFinalWindow)).as("__p"))
       .select(col("__key"), pick(col("__p"), specW).as("__w"), col("__s0"),
         koffOf(col("__p"), specSt).as("__koff"),
         startOf(col("__p"), col("__s0"), specSt).as("__seg_start"))
+      .withColumn("__seg_end", col("__seg_start") + col("__w"))
 
-    // 3. one assignment explode over packed (window, seg_start) pairs,
-    // grid-clamped in-kernel (see calculateWide's step-3 note).
-    val fuseOk = Gates.fuse && nary.isEmpty && windowKeep.isEmpty &&
+    // 3. arithmetic assignment with the key's own bounds. The kernel clamps
+    // to the key's grid (e0 rides along), so the aggregate below runs
+    // DIRECTLY on the explode — map-side partial aggregation collapses the
+    // fan-out before its one exchange.
+    val fuseOk = pivot && Gates.fuse && nary.isEmpty && windowKeep.isEmpty &&
       unary.nonEmpty && unary.forall { case (_, f) => maskable(f) }
     val withStart = internal.join(bounds, Seq("__key"))
     val packed = explode(graft.expr.AssignPacked(col("__idx"), col("__s0"),
@@ -361,16 +276,15 @@ object KeyedFeatures {
         startOf(col("__p"), col("__s0"), specSt).as("__seg_start") +:
         col("__idx") +: valueCols.map(col): _*)
 
-    // anchors from DIFFERENT windows must land on one row when they are
-    // mathematically equal, so the pivot groups on the key-relative offset
-    // k·st (+ w) — exact integer-valued double arithmetic, no float-summed
-    // `s0 + …` whose 1-ulp wobble would split the row. `s0` is added back
-    // once, after the merge.
+    // the pivot groups on the key-relative offset k·st (+ w), not on a
+    // float-summed `s0 + …` whose 1-ulp wobble would split a row that
+    // integer-valued windows and strides share; `s0` is added back once,
+    // after the merge. One window anchors as the single-series engine does.
+    val oneAnchor = graft.segment.Segmenter.anchor(windowIdx)
     val anchorOff = windowIdx match {
       case "end"    => col("__koff") + col("__w")
       case "middle" => col("__koff") + col("__w") / 2
-      case "begin"  => col("__koff")
-      case x => throw new IllegalArgumentException(s"bad windowIdx $x")
+      case _        => col("__koff")
     }
 
     // FUSED maskable-aggregate path (r19, the `maskable` scaladoc): the
@@ -417,14 +331,17 @@ object KeyedFeatures {
           fusedNames.map(n => col(s"`$n`")): _*)
     }
 
-    // keyed windowKeep gate per (key, window, start) — see calculateWide;
-    // here the anchor handed to the predicate is s0 + anchorOff, the exact
-    // value the pivot output restores
+    // Keyed window-level sampling gate — the single-series windowKeep's
+    // twin (FeatureCollection.windowKeepPrune) per (key, window, start):
+    // the explode is pruned BEFORE the aggregate, so keyed super-linear
+    // members never see unkept windows. The anchor handed to the predicate
+    // is the exact value the output restores.
+    val anchor = if (pivot) col("__s0") + anchorOff else oneAnchor
+    val segKeys = Seq("__key", "__w", "__seg_start")
     val (assignedG, segmentsG) = windowKeep match {
       case Some(keep) =>
-        FeatureCollection.windowKeepPrune(assigned, segments,
-          Seq("__key", "__w", "__seg_start"), col(valueCols.head),
-          series.restoreIdx(col("__s0") + anchorOff), keep)
+        FeatureCollection.windowKeepPrune(assigned, segments, segKeys,
+          col(valueCols.head), series.restoreIdx(anchor), keep)
       case None => (assigned, segments)
     }
 
@@ -442,38 +359,41 @@ object KeyedFeatures {
       }
     val aggs = feats.map(f => f.agg.as(f.base))
     var agged = segmentsG.join(
-      assignedG.groupBy("__key", "__w", "__seg_start")
-        .agg(aggs.head, aggs.tail: _*),
-      Seq("__key", "__w", "__seg_start"), "left")
+      assignedG.groupBy(segKeys.map(col): _*).agg(aggs.head, aggs.tail: _*),
+      segKeys, "left")
     feats.foreach { f =>
       f.empty.foreach { ev =>
         agged = agged.withColumn(f.base, coalesce(col(f.base), ev))
       }
     }
 
-    // 5. pivot windows into columns on the shared (key, anchor) row —
-    // exactly one aggregated row per (key, window, anchor), so max() just
-    // selects it
+    // multi-output functions return a struct — each declared output gets
+    // its own W10-named column (same rule as the main path)
     def funcNames(f: Feat, winR: String): Seq[(Column, String)] = f.outputNames match {
       case Some(os) => os.map(o => (col(f.base).getField(o),
         Win.outputName(f.seriesNames, o, winR)))
       case None => Seq((col(f.base), Win.outputName(f.seriesNames, f.fname, winR)))
     }
-    val pivotAggs = for {
-      (win, _) <- specs
-      f <- feats
-      (src, outName) <- funcNames(f, win.render)
-    } yield max(when(col("__w") === lit(win.amount), src)).as(outName)
-    val outNames = for {
-      (win, _) <- specs; f <- feats; (_, n) <- funcNames(f, win.render)
-    } yield n
+    val outs = for {
+      (win, _) <- specs; f <- feats; (src, n) <- funcNames(f, win.render)
+    } yield (win.amount, src, n)
+    val outNames = outs.map(_._3)
     require(outNames.distinct.length == outNames.length,
       "duplicate output names: " +
         outNames.diff(outNames.distinct).mkString(", "))
+    if (!pivot)
+      return agged.select(col("__key").as(keyCol) +:
+        series.restoreIdx(anchor).as(idxCol) +:
+        outs.map { case (_, src, n) => src.as(n) }: _*)
+
+    // 5. pivot windows into columns on the shared (key, anchor) row —
+    // exactly one aggregated row per (key, window, anchor), so max() just
+    // selects it
+    val pivotAggs = min(col("__s0")).as("__s0") +: outs.map { case (w, src, n) =>
+      max(when(col("__w") === lit(w), src)).as(n) }
     agged.withColumn("__aoff", anchorOff)
       .groupBy("__key", "__aoff")
-      .agg((min(col("__s0")).as("__s0") +: pivotAggs).head,
-        ((min(col("__s0")).as("__s0") +: pivotAggs).tail): _*)
+      .agg(pivotAggs.head, pivotAggs.tail: _*)
       .select(col("__key").as(keyCol) +:
         series.restoreIdx(col("__s0") + col("__aoff")).as(idxCol) +:
         outNames.map(n => col(s"`$n`")): _*)

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 /** The window-grid arithmetic of the strided-rolling segmenter (reference
   * semantics: tsflex/features/segmenter/strided_rolling.py's window/stride
   * start arithmetic), written once — [[kmin]], [[kmax]], [[nbOf]] — and the
-  * two native kernels every regular segmentation runs on (`Segmenter.assign`,
-  * both keyed fan-outs of `KeyedFeatures`; `BlockSliceUtil` reads the same
-  * helpers):
+  * two native kernels every regular segmentation runs on (`Segmenter.assign`
+  * and the keyed pipeline of `KeyedFeatures`; `BlockSliceUtil` reads the
+  * same helpers):
   *
   *   - ASSIGNMENT: every data row joins the (window, stride) segments that
   *     contain it — k in [kmin, min(kmax, nb-1)] per spec (strided_rolling's
@@ -23,7 +23,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *     spec.
   *
   * Both kernels emit ONE primitive long array per row, `specIdx << 56 | k`,
-  * deduped in-loop on the exact (w, s0 + k·st) double pair, so the decode
+  * and share ONE dedup rule: with more than one spec, a pair whose exact
+  * (w, s0 + k·st) doubles equal an earlier pair's is dropped (first spec
+  * wins); a single spec is never deduped. So the grid and the assignment
+  * cannot disagree on which window starts exist. The decode
   * (`Segmenter.startOf`: a shift, a mask and a literal when-chain over the
   * ≤255 static specs) reproduces bit-identical (w, koff, seg_start) doubles
   * in whole-stage codegen. The Column forms they replaced — one boxed
@@ -154,6 +157,12 @@ object AssignKernelUtil {
     * dedup survivor that the grid filter would have discarded implies an
     * in-grid loser with the SAME (w, s) doubles, which the clamped kernel
     * then emits instead (and both decode to those shared doubles).
+    *
+    * Each pair is emitted as the grid's survivor for its start: at a
+    * fractional start two strides share (1 + 3 × 0.1 == 1 + 1 × 0.3), a
+    * row inside the later spec's window but, by one rounding, outside the
+    * earlier one's is re-encoded as the earlier (spec, k), as [[segments]]
+    * keeps it — so both kernels carry one k·st offset per window.
     */
   def assign(t: Double, s0: Double, e0: Double,
              ws: Array[Double], sts: Array[Double],
@@ -177,26 +186,49 @@ object AssignKernelUtil {
       val w = ws(i); val st = sts(i)
       var k = math.max(0L, kmin(t, s0, w, st))
       val k1 = math.min(kmax(t, s0, st), nbOf(s0, e0, w, st, includeFinal) - 1L)
-      while (k <= k1) { out.add(i, k, w, startOf(s0, k, st)); k += 1 }
+      while (k <= k1) {
+        val d = startOf(s0, k, st)
+        var si = i; var sk = k
+        var j = 0
+        while (si == i && j < i) {
+          if (ws(j) == w) {
+            val kj = gridK(d, s0, e0, w, sts(j), includeFinal)
+            if (kj >= 0) { si = j; sk = kj }
+          }
+          j += 1
+        }
+        out.add(si, sk, w, d)
+        k += 1
+      }
       i += 1
     }
     out.result
+  }
+
+  /** The k of stride `st`'s grid whose start `s0 + k·st` is exactly `d`,
+    * or -1. The quotient is within one of it for any k under 2^52. */
+  private def gridK(d: Double, s0: Double, e0: Double, w: Double, st: Double,
+                    includeFinal: Boolean): Long = {
+    val nb = nbOf(s0, e0, w, st, includeFinal)
+    val r = math.rint((d - s0) / st).toLong
+    var c = r - 1L
+    while (c <= r + 1L) {
+      if (c >= 0L && c < nb && startOf(s0, c, st) == d) return c
+      c += 1L
+    }
+    -1L
   }
 
   /** Packed (spec, k) pairs of a key's own segment grid: k in [0, nb) per
     * spec, nb = max(0, floor((e0-s0-w)/st)+1) (+1 when `includeFinal` and
     * the next start is still ≤ e0 — W1's include_final_window tail).
     *
-    * Dedup convention mirrors the replaced plans exactly:
-    *   - `dedupOnKoff` (the multi-window path, which row-`distinct()`ed on
-    *     (w, koff = k·st)): always dedup, key (w, k·st);
-    *   - otherwise (the single-window path, which `distinct()`ed the
-    *     (key, seg_start) rows only when it had several strides): dedup on
-    *     s0 + k·st, and only when there is more than one spec.
+    * Deduped exactly like [[assign]]: with more than one spec, on the
+    * (w, s0 + k·st) doubles, first spec wins.
     */
   def segments(s0: Double, e0: Double,
                ws: Array[Double], sts: Array[Double],
-               includeFinal: Boolean, dedupOnKoff: Boolean): ArrayData = {
+               includeFinal: Boolean): ArrayData = {
     val n = ws.length
     var total = 0L
     var i = 0
@@ -206,14 +238,14 @@ object AssignKernelUtil {
     }
     if (total > (Int.MaxValue - 8).toLong) throw new IllegalStateException(
       s"segment grid $total rows for one key — stride too fine for the span")
-    val out = new Packer(total.toInt, dedup = dedupOnKoff || n > 1)
+    val out = new Packer(total.toInt, dedup = n > 1)
     i = 0
     while (i < n) {
       val w = ws(i); val st = sts(i)
       val nb = nbOf(s0, e0, w, st, includeFinal)
       var k = 0L
       while (k < nb) {
-        out.add(i, k, w, if (dedupOnKoff) k * st else startOf(s0, k, st))
+        out.add(i, k, w, startOf(s0, k, st))
         k += 1
       }
       i += 1
@@ -285,18 +317,18 @@ object AssignPacked {
   * [[AssignKernelUtil.segments]]. Children: (s0, e0) doubles. */
 case class SegmentsPacked(left: Expression, right: Expression,
                           ws: Seq[Double], sts: Seq[Double],
-                          includeFinal: Boolean, dedupOnKoff: Boolean)
+                          includeFinal: Boolean)
   extends BinaryExpression with PackedPairKernel {
   override def prettyName: String = "segments_packed"
   override def nullSafeEval(s0: Any, e0: Any): Any =
     AssignKernelUtil.segments(s0.asInstanceOf[Double], e0.asInstanceOf[Double],
-      wsArr, stsArr, includeFinal, dedupOnKoff)
+      wsArr, stsArr, includeFinal)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (s0, e0) => {
       val wsRef = ctx.addReferenceObj("segWs", wsArr, "double[]")
       val stsRef = ctx.addReferenceObj("segSts", stsArr, "double[]")
       s"${ev.value} = graft.expr.AssignKernelUtil.segments($s0, $e0, " +
-        s"$wsRef, $stsRef, $includeFinal, $dedupOnKoff);"
+        s"$wsRef, $stsRef, $includeFinal);"
     })
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SegmentsPacked =
@@ -304,7 +336,7 @@ case class SegmentsPacked(left: Expression, right: Expression,
 }
 object SegmentsPacked {
   def apply(s0: Column, e0: Column, ws: Seq[Double], sts: Seq[Double],
-            includeFinal: Boolean, dedupOnKoff: Boolean): Column =
+            includeFinal: Boolean): Column =
     ColumnBridge.column(SegmentsPacked(ColumnBridge.expression(s0),
-      ColumnBridge.expression(e0), ws, sts, includeFinal, dedupOnKoff))
+      ColumnBridge.expression(e0), ws, sts, includeFinal))
 }

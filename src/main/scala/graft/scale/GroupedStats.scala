@@ -20,81 +20,22 @@ object GroupedStats {
   /** Exact per-key quantiles with linear interpolation (numpy /
     * `quantile_cont` semantics): for each key and q, the value at fractional
     * rank `1 + (n-1)q`. Returns one row per key: (keyCol, q_<label>...).
-    * Null values are excluded (SQL aggregate convention).
+    * Null values are excluded (SQL aggregate convention); keys whose values
+    * are ALL null still surface with null quantiles.
     *
-    * Scale shape: one `keyedRank` pass (range exchange + local windows +
-    * summary stitch — no per-key task), then a map-side filter keeping the
-    * two bracketing ranks per quantile and one groupBy(key) aggregate over
-    * ≤ 2·|quantiles| rows per key. Keys whose values are ALL null still
-    * surface (with null quantiles, the SQL GROUP BY convention) via a
-    * left join from the distinct-key set — a map-side-combining hash
-    * aggregate, not a sort.
+    * The one-column case of [[exactQuantilesMulti]], whose
+    * `q_<valCol>_<label>` columns are renamed to `q_<label>`.
     */
   def exactQuantiles(df: DataFrame, keyCol: String, valCol: String,
-                     quantiles: Seq[(String, Double)]): DataFrame = {
-    require(quantiles.nonEmpty, "need at least one quantile")
-    require(quantiles.map(_._1).distinct.length == quantiles.length,
-      "quantile labels must be unique (they become output column names)")
-    quantiles.foreach { case (_, q) =>
-      require(q >= 0.0 && q <= 1.0, s"quantile $q outside [0, 1]") }
-    // the histogram/span path introduces these internally — fail loudly on
-    // a caller collision instead of an opaque ambiguous-attribute error
-    val gsReserved1 = Seq("__gs_w", "__slo", "__shi", "__n")
-    // histogram pre-collapse + weighted bracket ranking (r18): repeated
-    // values are collapsed to ONE row carrying their count by a map-side-
-    // combining hash aggregate BEFORE the rank machinery's range exchange
-    // + pid-pin checkpoint + window sort — those now run over the distinct
-    // (key, value) set (the measured q89 residual at 100×). A rank
-    // t is covered by the unique histogram row whose span (__slo, __shi]
-    // contains it, so the bracket selection/interpolation below is
-    // value-identical to ranking every raw row (SpanBracketsSpec
-    // differential; worst case — all values distinct — the histogram is
-    // one extra linear map-combined pass).
-    gsReserved1.foreach(c => require(keyCol != c && valCol != c,
-      s"$c is reserved by exactQuantiles"))
-    val hist = df.select(col(keyCol), col(valCol))
-      .where(col(valCol).isNotNull)
-      .groupBy(col(keyCol), col(valCol)).agg(count(lit(1)).as("__gs_w"))
-    val ranked = graft.core.Scan.keyedSpanBrackets(
-      hist, Seq(keyCol), valCol, "__gs_w", "__slo", "__shi", "__n",
-      quantiles.map(_._2))
-    val v = col(valCol).cast("double")
-    def covers(r: Column): Column = col("__slo") < r && r <= col("__shi")
-    val aggs = quantiles.flatMap { case (label, q) =>
-      val pos = lit(1.0) + (col("__n") - 1.0) * lit(q) // fractional rank
-      val lo = floor(pos); val hi = ceil(pos); val frac = pos - lo
-      val vLo = max(when(covers(lo), v))
-      val vHi = max(when(covers(hi), v))
-      // frac is a pure function of n (constant within the key); fold it
-      // into both terms so the whole quantile is one expression
-      Seq((vLo * (lit(1.0) - max(when(covers(lo), frac))) +
-           vHi * max(when(covers(hi), frac)))
-        .as(s"q_$label"))
-    }
-    // keep only rows whose span covers SOME requested bracket rank — the
-    // aggregate then touches ≤ 2·|quantiles| rows per key, not the whole key
-    val needed = quantiles.map { case (_, q) =>
-      val pos = lit(1.0) + (col("__n") - 1.0) * lit(q)
-      covers(floor(pos)) || covers(ceil(pos))
-    }.reduce(_ || _)
-    val quantsByKey =
-      ranked.where(needed).groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
-    // re-attach keys that had only null values (dropped by the isNotNull
-    // gate above) so the result shape matches a SQL GROUP BY. The join must
-    // be null-safe (<=>), not a using-join: a using-join resolves to
-    // EqualTo, so a NULL key would never match its own aggregated row and
-    // a NULL key holding non-null values would lose its quantiles.
-    require(keyCol != "__gs_rk", "__gs_rk is reserved by exactQuantiles")
-    val keys = df.select(col(keyCol)).distinct()
-    keys.join(quantsByKey.withColumnRenamed(keyCol, "__gs_rk"),
-        col(keyCol) <=> col("__gs_rk"), "left")
-      .drop("__gs_rk")
-  }
+                     quantiles: Seq[(String, Double)]): DataFrame =
+    exactQuantilesMulti(df, keyCol, Seq(valCol), quantiles)
+      .toDF(keyCol +: quantiles.map { case (label, _) => s"q_$label" }: _*)
 
   /** Exact per-key quantiles over SEVERAL value columns in one pass:
     * p50/p95 of k metrics per key as ONE output row per key
     * (`q_<col>_<label>` columns), instead of k separate `exactQuantiles`
-    * calls the caller must join back together.
+    * calls the caller must join back together. The one quantile pipeline:
+    * [[exactQuantiles]] and [[exactMedian]] are its one-column case.
     *
     * Scale shape: the metrics are unpivoted to long form (one scan of the
     * input, k rows per input row) and ranked under the composite key
@@ -120,7 +61,7 @@ object GroupedStats {
     // column with one of those names would fail later with an opaque
     // ambiguous-attribute error instead of this contract message
     val gsReserved = Set("__gs_rk", "__gs_c", "__gs_v", "__gs_p", "__gs_w",
-      "__slo", "__shi")
+      "__slo", "__shi", "__n")
     (keyCol +: valCols).foreach(c => require(!gsReserved.contains(c),
       s"$c is reserved by exactQuantilesMulti"))
     // unpivot: (key, metric-INDEX, value) — one row per non-null metric
@@ -143,12 +84,15 @@ object GroupedStats {
       .select(col(keyCol), col("__gs_p.__gs_c").as("__gs_c"),
         col("__gs_p.__gs_v").as("__gs_v"))
       .where(col("__gs_v").isNotNull)
-    // histogram pre-collapse + weighted bracket ranking (r18) — see
-    // exactQuantiles: the map-side-combining count collapses repeated
-    // (key, metric, value) triples before the range exchange + pid-pin
-    // checkpoint + window sort measured as the q89 residual at 100×
-    // (lineitem: quantities collapse ~12×, and REPLICATED rows collapse by
-    // the copy count — exactly the repetition real prices/quantities have)
+    // histogram pre-collapse + weighted bracket ranking (r18): repeated
+    // (key, metric, value) triples are collapsed to ONE row carrying their
+    // count by a map-side-combining hash aggregate BEFORE the range
+    // exchange + pid-pin checkpoint + window sort measured as the q89
+    // residual at 100× (lineitem: quantities collapse ~12×, and REPLICATED
+    // rows collapse by the copy count — exactly the repetition real
+    // prices/quantities have). A rank t is covered by the unique histogram
+    // row whose span (__slo, __shi] contains it, so the bracket selection
+    // below is value-identical to ranking every raw row (SpanBracketsSpec).
     val hist = long0.groupBy(col(keyCol), col("__gs_c"), col("__gs_v"))
       .agg(count(lit(1)).as("__gs_w"))
     val ranked = graft.core.Scan.keyedSpanBrackets(

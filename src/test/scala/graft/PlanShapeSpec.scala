@@ -241,6 +241,17 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  // q44 and q58 run the keyed one-window pipeline (`calculateWide`, the
+  // one-window case of `calculateWideMulti`): ceilings, not exact counts —
+  // neither may plan more shuffle exchanges or sort-merge joins than the
+  // two-pipeline engine did (5 and 0 each at this scale).
+  for (name <- Seq("q44_keyed_rolling", "q58_keyed_nary"))
+    test(s"$name plans no more shuffle exchanges or sort-merge joins than before") {
+      val got = PlanAudit.shape(SparkEntry.queries(name)(spark, dir))
+      assert(got("shuffle_exchange") <= 5 && got("sort_merge_join") <= 0,
+        PlanAudit.render(got))
+    }
+
   test("q105's window bucket plans one sorted-collect buffer, no collect_list or array_sort") {
     // linear_trend_timewise and the value-only members (index mass,
     // linear_trend, Welch density) all read ONE CollectSortedVals aggregate

@@ -142,6 +142,74 @@ class KeyedFeaturesSpec extends SparkSpec {
       val (l4, m4) = per(1).getOrElse(k, (None, None))
       assert(got(k) == ((l2, m2, l4, m4)), s"at $k")
     }
+    // second, independent oracle: the single-series engine run per key
+    windows.zipWithIndex.foreach { case ((w, sts), wi) =>
+      val cells = got.flatMap { case (k, (l2, m2, l4, m4)) =>
+        val (l, m) = if (wi == 0) (l2, m2) else (l4, m4)
+        l.map(_ => k -> ((l, m)))
+      }
+      val single = Seq("a", "b", "c").flatMap { kk =>
+        FeatureCollection(
+          FeatureDescriptor(len, "x", Some(w), Some(sts)),
+          FeatureDescriptor(mean, "x", Some(w), Some(sts)))
+          .calculate(Seq(Series("x", df.where(col("k") === kk), "idx", "x")))
+          .select(col("idx"), col(s"`x__len__w=${w.render}`"),
+            col(s"`x__mean__w=${w.render}`"))
+          .collect().map(r => (kk, BigDecimal(r.getDouble(0))
+            .setScale(9, BigDecimal.RoundingMode.HALF_UP)) -> ((cell(r, 1), cell(r, 2))))
+      }
+      assert(single.map(_._1).distinct.length == single.length)
+      assert(cells == single.toMap, s"window ${w.render}: multi vs single-series engine")
+    }
+  }
+
+  test("fractional grid: each window's cells equal the single-series engine, none twice") {
+    import spark.implicits._
+    // one key, index 1.0 to 4.0 step 0.05. The 0.1 window's strides share
+    // starts whose offsets k·st differ in the last bit (3 × 0.1 vs 1 × 0.3)
+    // while s0 + k·st is one double: the grid and the assignment must
+    // agree on that start, or the window count grows.
+    val df = (0 to 60).map(i => ("a", 1.0 + i * 0.05, i.toDouble))
+      .toDF("k", "idx", "x")
+    val windows = Seq(
+      (Win.seq(0.1): Win) -> Seq[Win](Win.seq(0.1), Win.seq(0.3)),
+      (Win.seq(0.2): Win) -> Seq[Win](Win.seq(0.2)))
+    def r9(d: Double) = BigDecimal(d).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+    def mean9(r: org.apache.spark.sql.Row, i: Int) =
+      if (r.isNullAt(i)) None else Some(r9(r.getDouble(i)))
+    for ((w, sts) <- windows) {
+      val (l, m) = (s"x__len__w=${w.render}", s"x__mean__w=${w.render}")
+      val single = FeatureCollection(
+        FeatureDescriptor(len, "x", Some(w), Some(sts)),
+        FeatureDescriptor(mean, "x", Some(w), Some(sts)))
+        .calculate(Seq(Series("x", df, "idx", "x")))
+        .select(col("idx"), col(s"`$l`"), col(s"`$m`")).collect()
+        .map(r => (r.getDouble(0), r.getLong(1), mean9(r, 2))).sortBy(_._1).toSeq
+      // one window: bit-identical anchors
+      val one = KeyedFeatures.calculateWide(df, "k", "idx", w, sts,
+          unary = Seq("x" -> len, "x" -> mean))
+        .select(col("idx"), col(s"`$l`"), col(s"`$m`")).collect()
+        .map(r => (r.getDouble(0), r.getLong(1), mean9(r, 2))).sortBy(_._1).toSeq
+      assert(one == single, s"window ${w.render}: calculateWide vs single-series engine")
+      // several windows, fused and generic: anchors to 9 decimals
+      for (fused <- Seq(true, false)) {
+        val multi = Gates.scoped(fuse = fused) {
+          KeyedFeatures.calculateWideMulti(df, "k", "idx", windows,
+            unary = Seq("x" -> len, "x" -> mean))
+        }.where(col(s"`$l`").isNotNull)
+          .select(col("idx"), col(s"`$l`"), col(s"`$m`")).collect()
+          .map(r => (r.getDouble(0), r.getLong(1), mean9(r, 2))).toSeq
+        assert(multi.map(_._1).distinct.length == multi.length,
+          s"window ${w.render}, fused=$fused: a (key, window, anchor) cell appears twice")
+        // two windows of the single-series engine can start one ulp apart,
+        // so cells are compared as multisets of rounded values
+        def rounded(cs: Seq[(Double, Long, Option[BigDecimal])]) =
+          cs.map { case (a, n, mu) => (r9(a), n, mu.getOrElse(BigDecimal(-1))) }.sorted
+        assert(rounded(multi) == rounded(single),
+          s"window ${w.render}, fused=$fused: ${multi.length} cells, " +
+            s"${single.length} single-series windows")
+      }
+    }
   }
 
   test("keyed windowKeep: gated == ungated + post-filter (row-identical, W7 included)") {

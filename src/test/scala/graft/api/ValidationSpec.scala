@@ -100,26 +100,15 @@ class ValidationSpec extends SparkSpec {
   }
 
   test("the bounds are read once, not per (window, strides) bucket or check") {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
     val fc = FeatureCollection(
       FeatureDescriptor(mean, "v", Some(Win.seq(5L)), Some(Seq(Win.seq(5L)))),
       FeatureDescriptor(mean, "v", Some(Win.seq(4L)), Some(Seq(Win.seq(2L)))))
     // a gap at 6 and 7 makes the series sparse for both grids
     val data = Seq(Series("v", seqData(11).where(!col("idx").isin(6.0, 7.0)), "idx", "v"))
-    assert(graft.PlanAudit.drainListenerBus(spark, () => 0L))
-    spark.sparkContext.addSparkListener(l)
-    val rep = try {
-      // two sparsity buckets and the manual-segment check over one source
-      val r = fc.validate(data, segmentStartIdxs = Some(Seq(0.0, 50.0)),
-        segmentEndIdxs = Some(Seq(2.0, 52.0)))
-      assert(graft.PlanAudit.drainListenerBus(spark, () => n.get.toLong))
-      r
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(n.get == 1, s"${n.get} Spark jobs to build the report")
+    // two sparsity buckets and the manual-segment check over one source
+    val (rep, n) = jobsOf(fc.validate(data, segmentStartIdxs = Some(Seq(0.0, 50.0)),
+      segmentEndIdxs = Some(Seq(2.0, 52.0))))
+    assert(n == 1, s"$n Spark jobs to build the report")
     val found = checks(rep)
     assert(found.contains("segments_outside_data_bounds") && found.contains("sparsity"), found)
   }

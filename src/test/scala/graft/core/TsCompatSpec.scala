@@ -1,17 +1,15 @@
 package graft.core
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.{PlanAudit, SparkSpec}
+import graft.SparkSpec
 
 /** `TsCompat.readEvents` on an events file with a naive TIMESTAMP(MICROS)
   * `ts` (the encoding of the generated `events.parquet`): `ts` comes back as
@@ -98,21 +96,6 @@ class TsCompatSpec extends SparkSpec {
     spark.range(300).select(col("id"), (col("id") % 7).cast("string").as("s"))
       .repartition(3).write.parquet(dir)
     dir
-  }
-
-  /** `body`'s value and the Spark jobs it started. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    assert(PlanAudit.drainListenerBus(spark, () => 0L))
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      assert(PlanAudit.drainListenerBus(spark, () => n.get.toLong))
-      (out, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =

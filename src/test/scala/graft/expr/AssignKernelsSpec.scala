@@ -140,9 +140,11 @@ class AssignKernelsSpec extends SparkSpec {
       val bounds = Seq((0.0, 17.0), (0.0, 5.9), (3.0, 3.0), (0.0, 6.0),
         (-4.5, 8.25), (2.0, 1.0) /* e0 < s0 → empty */ )
         .toDF("s0", "e0")
-      // multi convention: union of tagged per-spec tables, row-distinct on
+      // multi-window plan: union of tagged per-spec tables, row-distinct on
       // (key, w, koff) — e0 stands in for the per-key identity the real
-      // plan carries through its distinct()
+      // plan carries through its distinct(). Every s0, w and st here is
+      // dyadic, so s0 + koff is exact and the kernel's one dedup rule on
+      // (w, s0 + koff) keeps the same rows.
       val want = ws.zip(sts).zipWithIndex.map { case ((w, st), i) =>
         bounds.select(col("s0"), col("e0"),
             explode(oldSegments(col("s0"), col("e0"), w, st, includeFinal))
@@ -155,7 +157,7 @@ class AssignKernelsSpec extends SparkSpec {
       val si = shiftrightunsigned(col("p"), KB).cast("int")
       val got = bounds.select(col("s0"), col("e0"),
           explode(SegmentsPacked(col("s0"), col("e0"), ws, sts,
-            includeFinal, dedupOnKoff = true)).as("p"))
+            includeFinal)).as("p"))
         .select(col("s0"), col("e0"), pick(si, ws).as("w"),
           (col("p").bitwiseAND(lit(KM)).cast("double") * pick(si, sts))
             .as("koff"))
@@ -177,8 +179,7 @@ class AssignKernelsSpec extends SparkSpec {
       val si1 = shiftrightunsigned(col("p"), KB).cast("int")
       val got1 = bounds.select(col("s0"), col("e0"),
           explode(SegmentsPacked(col("s0"), col("e0"),
-            Seq.fill(sts1.length)(w1), sts1, includeFinal,
-            dedupOnKoff = false)).as("p"))
+            Seq.fill(sts1.length)(w1), sts1, includeFinal)).as("p"))
         .select(col("s0"), col("e0"),
           (col("s0") + col("p").bitwiseAND(lit(KM)).cast("double")
             * pick(si1, sts1)).as("seg"))
@@ -245,7 +246,7 @@ class AssignKernelsSpec extends SparkSpec {
     val si = shiftrightunsigned(col("p"), KB).cast("int")
     val got = bounds.select(col("s0"), col("e0"),
         explode(SegmentsPacked(col("s0"), col("e0"), ws, sts,
-          includeFinal = false, dedupOnKoff = true)).as("p"))
+          includeFinal = false)).as("p"))
       .select(col("s0"), col("e0"), pick(si, ws).as("w"),
         (col("p").bitwiseAND(lit(KM)).cast("double") * pick(si, sts))
           .as("koff"))

@@ -1,12 +1,10 @@
 package graft.segment
 
 import java.lang.Double.doubleToRawLongBits
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, max, min}
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-import graft.{PlanAudit, SparkSpec}
+import graft.SparkSpec
 import graft.core.Series
 
 /** Property tests for `Segmenter.summary` and the bounds read off it: its
@@ -124,24 +122,11 @@ class BoundsPropSpec extends SparkSpec {
   }
 
   test("one Spark job per distinct source, whatever the partition count") {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
     val a = frame((0 until 50).map(i => Some(i.toDouble)), 16)
     val b = frame((0 until 20).map(i => Some(-i.toDouble)), 3)
-    assert(PlanAudit.drainListenerBus(spark, () => 0L))
-    spark.sparkContext.addSparkListener(l)
-    try {
-      def jobs(ss: Seq[Series]): Int = {
-        n.set(0)
-        Segmenter.bounds(ss, "outer")
-        assert(PlanAudit.drainListenerBus(spark, () => n.get.toLong))
-        n.get
-      }
-      assert(jobs(Seq(series(a))) == 1)
-      // a second series over the same frame and index is the same source
-      assert(jobs(Seq(series(a), Series("w", a, "idx", "v"), series(b))) == 2)
-    } finally spark.sparkContext.removeSparkListener(l)
+    def jobs(ss: Seq[Series]): Int = jobsOf(Segmenter.bounds(ss, "outer"))._2
+    assert(jobs(Seq(series(a))) == 1)
+    // a second series over the same frame and index is the same source
+    assert(jobs(Seq(series(a), Series("w", a, "idx", "v"), series(b))) == 2)
   }
 }

@@ -2,7 +2,11 @@
 """Local correctness harness mirroring the driver's DuckDB oracle compare.
 
 Usage: python3 tools/check.py [sfdir] [outdir]
-Runs after `sbt "runMain graft.Verify <sfdir> <outdir>"`.
+Runs after `sbt "runMain graft.Verify <sfdir> <outdir>"`. Prints OK/FAIL per
+query and writes `<outdir>/correctness.json`: per query, rows_match,
+schema_match, value_match, spark_rows, oracle_rows and err (null when the
+query compared), in the layout of the committed CORRECTNESS_*.json files
+with value_match in place of the driver's hash_match.
 """
 import json, sys, glob, os
 import duckdb
@@ -18,22 +22,35 @@ for p in glob.glob(f"{sfdir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+report = {}
 ok = fail = 0
 for name, sql in sorted(oracle.items()):
+    rec = report[name] = {"rows_match": False, "schema_match": False,
+                          "value_match": False, "spark_rows": None,
+                          "oracle_rows": None, "err": None}
+
+    def failed(msg):
+        global fail
+        print(f"FAIL {name}: {msg}"); rec["err"] = msg; fail += 1
+
     res_dir = f"{outdir}/{name}"
     if not os.path.isdir(res_dir):
-        print(f"FAIL {name}: no spark result"); fail += 1; continue
+        failed("no spark result"); continue
     try:
         got = pd.read_parquet(res_dir)
+        rec["spark_rows"] = len(got)
         exp = con.execute(sql).fetchdf()
+        rec["oracle_rows"] = len(exp)
     except Exception as e:
-        print(f"FAIL {name}: {type(e).__name__}: {e}"); fail += 1; continue
+        failed(f"{type(e).__name__}: {e}"); continue
+    rec["rows_match"] = len(got) == len(exp)
     g = got[sorted(got.columns)].reset_index(drop=True)
     e = exp[sorted(exp.columns)].reset_index(drop=True)
     if list(g.columns) != list(e.columns):
-        print(f"FAIL {name}: columns {list(g.columns)} vs {list(e.columns)}"); fail += 1; continue
+        failed(f"columns {list(g.columns)} vs {list(e.columns)}"); continue
+    rec["schema_match"] = True
     if len(g) != len(e):
-        print(f"FAIL {name}: rows {len(g)} vs {len(e)}"); fail += 1; continue
+        failed(f"rows {len(g)} vs {len(e)}"); continue
     # The driver's hash compare canonicalizes integer WIDTH (int32 == int64)
     # but not KIND: DuckDB HUGEINT surfaces as object/float and hash-
     # mismatches Spark BIGINT even when values agree. Flag kind-level drift.
@@ -61,10 +78,12 @@ for name, sql in sorted(oracle.items()):
             break
     if bad:
         c, i, gv, ev, n = bad
-        print(f"FAIL {name}: col {c} row {i}: got {gv!r} exp {ev!r} ({n} mismatches, {len(g)} rows)")
-        fail += 1
+        failed(f"col {c} row {i}: got {gv!r} exp {ev!r} ({n} mismatches, {len(g)} rows)")
     else:
+        rec["value_match"] = True
         print(f"OK   {name} ({len(g)} rows x {len(g.columns)} cols){drift}")
         ok += 1
+with open(f"{outdir}/correctness.json", "w") as f:
+    json.dump(report, f, indent=2, default=str)
 print(f"\n{ok} ok, {fail} fail")
 sys.exit(1 if fail else 0)
