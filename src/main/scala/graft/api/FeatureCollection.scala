@@ -148,14 +148,35 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     * clear duplicate-names error.
     */
   private def requireDistinctManualNames(): Unit = {
-    val eff = descriptors.flatMap(d => d.funcOutputNames match {
-      case Some(os) => os.map(o => Win.outputName(d.seriesNames, o, "manual"))
-      case None     => Seq(Win.outputName(d.seriesNames, d.funcName, "manual"))
-    })
+    val eff = descriptors.flatMap(d => expand(d, manualName(d), "manual").map(_._1))
     require(eff.distinct.length == eff.length,
       s"duplicate output names under manual segments: " +
         eff.diff(eff.distinct).distinct.mkString(", "))
   }
+
+  /** The `w=manual` name of a descriptor's aggregate column. */
+  private def manualName(d: AnyFeatureDescriptor): String =
+    Win.outputName(d.seriesNames, d.funcName, "manual")
+
+  /** A descriptor's output columns, each with its W10 name, off its
+    * aggregate column `aggName`: a multi-output function (A3 one-to-many)
+    * returns a struct, and each declared output gets its own column.
+    */
+  private def expand(d: AnyFeatureDescriptor, aggName: String,
+                     winR: String): Seq[(String, Column)] = d.funcOutputNames match {
+    case Some(os) => os.map { o =>
+      val n = Win.outputName(d.seriesNames, o, winR)
+      n -> qc(aggName).getField(o).as(n)
+    }
+    case None => Seq(aggName -> qc(aggName))
+  }
+
+  /** The group-by paths' (G1/G3) feature columns, sorted by name, off
+    * aggregate columns named [[manualName]].
+    */
+  private def manualOutputs: Seq[Column] =
+    descriptors.flatMap(d => expand(d, manualName(d), "manual"))
+      .sortBy(_._1).map(_._2)
 
   {
     val names = descriptors.flatMap(_.outputNamesAll)
@@ -261,8 +282,7 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     val bothManual = segmentStartIdxs.isDefined && segmentEndIdxs.isDefined
     if (bothManual) requireDistinctManualNames()
     def nameOf(d: AnyFeatureDescriptor): String =
-      if (bothManual) Win.outputName(d.seriesNames, d.funcName, "manual")
-      else d.outputName
+      if (bothManual) manualName(d) else d.outputName
 
     // lazy: manual-segment and pure sample-window plans never read the
     // bounds, which cost one eager scan per source
@@ -410,15 +430,6 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
           joined = joined.join(idxMap, anchorPos === col("__pos"), "left")
           series.restoreIdx(col("__orig_idx"))
         } else series.restoreIdx(anchorRaw)
-      // multi-output functions (A3 one-to-many) return a struct — expand
-      // each declared output into its own W10-named column
-      def expand(d: AnyFeatureDescriptor): Seq[Column] = d.funcOutputNames match {
-        case Some(os) =>
-          val winR = if (bothManual) "manual" else d.winRender
-          os.map(o => qc(nameOf(d)).getField(o)
-            .as(Win.outputName(d.seriesNames, o, winR)))
-        case None => Seq(qc(nameOf(d)))
-      }
       // anchor column carries the input zone as metadata (tz retention for
       // instant-typed indexes; NTZ indexes round-trip via restoreIdx).
       // Manual plans keep __seg_id: user-supplied segment arrays may contain
@@ -429,7 +440,8 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
         if (manualSegs) Seq(col("__seg_id"))
         else Nil
       joined.select(keyCols ++ (anchorCol.as(series.idxCol, series.idxMetadata) +:
-        ds.flatMap(expand)): _*)
+        ds.flatMap(d => expand(d, nameOf(d),
+          if (bothManual) "manual" else d.winRender).map(_._2))): _*)
     }
 
     // one calculate() merges every bucket on ONE anchor column — series
@@ -483,15 +495,12 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     val frames = groupedUnary.map { case (sName, ds) =>
       val series = byName(sName)
       val joined = series.internal.join(g, Seq("__idx"), "inner")
-      val aggCols = ds.map { d =>
-        val n = Win.outputName(d.seriesNames, d.funcName, "manual")
-        d.aggOver(col("__idx"), Seq(col("__v"))).as(n)
-      }
+      val aggCols = ds.map(d =>
+        d.aggOver(col("__idx"), Seq(col("__v"))).as(manualName(d)))
       joined.groupBy(col("__grp").as(group.name)).agg(aggCols.head, aggCols.tail: _*)
     }
     val merged = frames.reduce((a, c) => a.join(c, Seq(group.name), "full_outer"))
-    val featCols = merged.columns.filterNot(_ == group.name).sorted
-    merged.select(col(group.name) +: featCols.toIndexedSeq.map(qc): _*)
+    merged.select(col(group.name) +: manualOutputs: _*)
   }
 
   /** G2: pre-grouped wide-frame convenience — `df` holds the index, the
@@ -508,152 +517,84 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     * runs of equal group values form segments `[run_start, next_run_start)`
     * (last run closed by end + 1 unit/day), features per run, output gets
     * the group value plus `__start`/`__end` run boundaries (reference:
-    * feature_collection.py:568-724). Implemented as lag→change-flag→running
-    * sum → run table → broadcast range join.
+    * feature_collection.py:568-724).
+    *
+    * One plan over ONE ranged scan (`Scan.groupRunScan`), the reference's
+    * `(v != v.shift()).cumsum()`. The group's frame carries the group
+    * column and every value series of the same source (`Series.sameSource`)
+    * as one wide projection; each other source adds its own rows,
+    * `unionByName`'d with a null group and a source tag. Null-group rows
+    * neither start nor break runs: they carry the enclosing run. Ordering
+    * on `(__idx, __gn)` puts a run's first group row before the rows tied
+    * on its index, so those join the new run; run 0 (rows before the first
+    * run) is dropped, and the `max(group idx) + 1 unit/day` terminator is a
+    * bound filter fed by the scan's own summary. When every series shares
+    * the group's source (q12) one aggregate per run computes the
+    * boundaries, the group value and every feature. Otherwise the
+    * aggregate runs per (run, source) and a second one reads each source's
+    * features off that source's row: a run with no rows of a source gets
+    * NULL features. `Gates.fuse` off makes every series its own source —
+    * the differential twin (G3FusedSpec).
     */
   def calculateGroupByConsecutive(data: Seq[Series], group: Series): DataFrame = {
     requireSameTz(data :+ group)
-    // SAME-SOURCE FUSION (r19, guide §2.4 "remove shuffles/passes"): when
-    // every value series reads the group series' OWN frame and index column
-    // (q12's shape — group=user_id, value=value, both over one events read),
-    // run assignment needs no second scan, no start-marker union, no
-    // forward-fill pass and no segments-to-features join: ONE ranged scan
-    // (Scan.groupRunScan) tags every row with its run id, and ONE aggregate
-    // computes the run boundaries AND every feature. The generic path's
-    // 100× ablation: full query ~330-370 s CPU, of which the
-    // second scan + 2×rows union exchange/pin + fill-forward + the
-    // runs⋈feats join — everything this branch removes — own the majority.
-    // Series.sameSource is what makes `internalPlus` over the group frame
-    // see exactly each series' `internal` rows. `Gates.fuse` off forces the
-    // generic union-scan plan — the differential twin (G3FusedSpec)
-    val fusible = Gates.fuse && data.forall(group.sameSource)
-    if (fusible) return fusedGroupByConsecutive(data, group)
-    genericGroupByConsecutive(data, group)
-  }
-
-  /** The fused same-source G3 plan — see the gate above. Row-identical to
-    * [[genericGroupByConsecutive]] on same-source inputs (G3FusedSpec):
-    * every frame row is a value row of every series, so each run owns at
-    * least its own group row and the generic path's empty-segment NULL
-    * (a seg with no rows of some series) cannot arise; null-group rows
-    * carry the last run exactly like the forward-filled start markers; the
-    * `max(group idx) + 1 unit/day` terminator becomes a bound filter fed by
-    * the same per-partition summary the scan already aggregates.
-    */
-  private def fusedGroupByConsecutive(data: Seq[Series],
-                                      group: Series): DataFrame = {
-    val valueCols = data.map(s => s.name -> s.valueCol)
-    val wide = group.internalPlus(
-        valueCols.map { case (n, c) => c -> s"__val_$n" }: _*)
+    type Used = (Series, Seq[AnyFeatureDescriptor])
+    val byName = data.map(s => s.name -> s).toMap
+    val used: Seq[Used] = groupedUnary.sortBy(_._1).map { case (n, ds) =>
+      byName.getOrElse(n, throw new IllegalArgumentException(
+        s"series $n not in data")) -> ds }
+    val (own, others) =
+      if (Gates.fuse) used.partition(u => group.sameSource(u._1)) else (Nil, used)
+    // one part per other source: its series read off one projection
+    val sources = others.foldLeft(Vector.empty[Seq[Used]]) { (acc, u) =>
+      acc.indexWhere(ss => Gates.fuse && ss.head._1.sameSource(u._1)) match {
+        case -1 => acc :+ Seq(u)
+        case i  => acc.updated(i, acc(i) :+ u)
+      }
+    }
+    def vals(ss: Seq[Used]): Seq[(String, String)] =
+      ss.map { case (s, _) => s.valueCol -> s"__val_${s.name}" }
+    val wide = group.internalPlus(vals(own): _*)
       .withColumnRenamed("__v", "__grp")
-      // tie order: a run's first (group) row sorts before null-group rows
-      // at the same index — the union-scan path's tag-0-before-tag-1
-      // ordering for start markers
       .withColumn("__gn", when(col("__grp").isNotNull, 0).otherwise(1))
-    val scanned = Scan.groupRunScan(wide, Seq("__idx", "__gn"), "__grp",
+    val grpType = group.df.schema(group.valueCol).dataType
+    val frame = sources.zipWithIndex.foldLeft(
+        if (sources.isEmpty) wide else wide.withColumn("__src", lit(0))) {
+      case (f, (ss, i)) =>
+        val s0 = ss.head._1
+        f.unionByName(s0.internalPlus(vals(ss.tail): _*)
+          .withColumnRenamed("__v", s"__val_${s0.name}")
+          .withColumn("__grp", lit(null).cast(grpType))
+          .withColumn("__gn", lit(1))
+          .withColumn("__src", lit(i + 1)), allowMissingColumns = true)
+    }
+    val scanned = Scan.groupRunScan(frame, Seq("__idx", "__gn"), "__grp",
       "__idx", "__run", "__gmax")
-    // rows before the first run (run 0) and at/after the last segment's
-    // close are outside every segment — the generic path's null/-1 drops
     val kept = scanned.where(col("__run") > 0 &&
       col("__idx") < col("__gmax") + lit(group.domain.runEnd))
+    def featAggs(ss: Seq[Used]): Seq[Column] =
+      for ((s, ds) <- ss; d <- ds) yield
+        d.aggOver(col("__idx"), Seq(col(s"__val_${s.name}"))).as(manualName(d))
     val grpNN = col("__grp").isNotNull
-    val featAggs = groupedUnary.toSeq.flatMap { case (sName, ds) =>
-      ds.map { d =>
-        val n = Win.outputName(d.seriesNames, d.funcName, "manual")
-        d.aggOver(col("__idx"), Seq(col(s"__val_$sName"))).as(n)
+    val start = min(when(grpNN, col("__idx"))).as("__start")
+    val runAggs = Seq(max(when(grpNN, col("__idx"))).as("__end"),
+      first(col("__grp"), ignoreNulls = true).as("__grp"))
+    val out =
+      if (sources.isEmpty)
+        kept.groupBy("__run").agg(start, runAggs ++ featAggs(own): _*)
+      else {
+        val picks = for {
+          (ss, k) <- (own +: sources).zipWithIndex; (_, ds) <- ss; d <- ds
+        } yield first(when(col("__src") === k, qc(manualName(d))),
+          ignoreNulls = true).as(manualName(d))
+        kept.groupBy("__run", "__src")
+          .agg(start, runAggs ++ featAggs(used): _*)
+          .groupBy("__run").agg(min(col("__start")).as("__start"),
+            Seq(max(col("__end")).as("__end"),
+              first(col("__grp"), ignoreNulls = true).as("__grp")) ++ picks: _*)
       }
-    }
-    val aggCols =
-      Seq(max(when(grpNN, col("__idx"))).as("__end"),
-        first(col("__grp"), ignoreNulls = true).as("__grp")) ++ featAggs
-    val out = kept.groupBy("__run").agg(
-      min(when(grpNN, col("__idx"))).as("__start"), aggCols: _*)
-    val featCols = out.columns
-      .filterNot(Set("__run", "__start", "__end", "__grp"))
-      .sorted
     out.select(
-      (col("__grp").as(group.name) +:
-        featCols.toIndexedSeq.map(qc)) :+
-        group.restoreIdx(col("__start")).as("__start") :+
-        group.restoreIdx(col("__end")).as("__end"): _*)
-  }
-
-  private def genericGroupByConsecutive(data: Seq[Series],
-                                        group: Series): DataFrame = {
-    val byName = data.map(s => s.name -> s).toMap
-    // change-flag + run numbering as ONE fused distributed prefix scan
-    // (Scan.lagFlagScan) — the reference's `(v != v.shift()).cumsum()`
-    // without a single-partition global window, and without the second
-    // window pass a chained withLagged + runningSum would cost.
-    val runsBase = Scan.lagFlagScan(
-      group.internal.where(col("__v").isNotNull), "__idx", "__v",
-      (prev, cur) => prev.isNull || prev =!= cur, "__run")
-    // The run table feeds several plan branches (start markers per series
-    // frame, the next-run self-join, the final output join); a lazy
-    // localCheckpoint materializes the two-scan pipeline above ONCE and lets
-    // every branch read the cached result. It is bounded by the number of
-    // RUNS (not rows), and blocks are dropped when the frame is GC'd.
-    val runs = Pinned.checkpoint(runsBase.groupBy("__run").agg(
-      min(col("__idx")).as("__start"),
-      max(col("__idx")).as("__end"),
-      first(col("__v")).as("__grp")))
-    // run ids are CONSECUTIVE integers (inclusive running sum of change
-    // flags), so "next run's start" is a plain equi-join on run+1 — a hash
-    // join over the checkpointed run table, no ordered scan needed
-    val runsLead = runs.join(
-      runs.select((col("__run") - 1).as("__run"),
-        col("__start").as("__next_start")),
-      Seq("__run"), "left")
-    val segs = runsLead.withColumn("__seg_end",
-      coalesce(col("__next_start"), col("__end") + lit(group.domain.runEnd)))
-      .select(col("__run").as("__seg_id"), col("__start").as("__seg_start"),
-        col("__seg_end"), col("__start"), col("__end"), col("__grp"))
-
-    // Runs tile the index axis contiguously, so window→row assignment needs
-    // no join at all: union run-start markers with the data rows, sort, and
-    // propagate the last seen run id (an as-of assignment). Linear, vs the
-    // O(rows × runs) a nested-loop range join would cost.
-    val frames = groupedUnary.map { case (sName, ds) =>
-      val series = byName(sName)
-      val rows = series.internal
-      val vType = rows.schema("__v").dataType
-      // start markers come straight off the checkpointed run table (seg_start
-      // IS the run's min idx — no next-run join needed on this branch)
-      val starts = runs.select(col("__start").as("__idx"), lit(0).as("__tag"),
-        col("__run").as("__runid"), lit(null).cast(vType).as("__v"))
-      // the terminator closes the LAST run at max(__seg_end) = the group
-      // series' max index + runEnd. r19: read it off the CHECKPOINTED run
-      // table (global max(__end) = global max(__idx) over the non-null
-      // group rows — every row belongs to exactly one run and __end is the
-      // run's max index), replacing a second full scan of the group input
-      // with a tiny agg over the run rows (guide §2.4: remove passes; at
-      // scale the saved pass is a full input read)
-      val term = runs
-        .agg((max(col("__end")) + lit(group.domain.runEnd)).as("__idx"))
-        .select(col("__idx"), lit(0).as("__tag"), lit(-1L).as("__runid"),
-          lit(null).cast(vType).as("__v"))
-      val rowsT = rows.select(col("__idx"), lit(1).as("__tag"),
-        lit(null).cast("long").as("__runid"), col("__v"))
-      // as-of carry of the last seen run id — distributed forward fill
-      val assigned = Scan.fillForward(
-        starts.unionByName(term).unionByName(rowsT),
-        Seq("__idx", "__tag"), "__runid", "__seg_id")
-        .where(col("__tag") === 1 && col("__seg_id").isNotNull &&
-          col("__seg_id") =!= -1L)
-      val aggCols = ds.map { d =>
-        val n = Win.outputName(d.seriesNames, d.funcName, "manual")
-        d.aggOver(col("__idx"), Seq(col("__v"))).as(n)
-      }
-      assigned.groupBy("__seg_id").agg(aggCols.head, aggCols.tail: _*)
-    }
-    val feats = frames.reduce((a, c) => a.join(c, Seq("__seg_id"), "full_outer"))
-    val out = segs.join(feats, Seq("__seg_id"), "left")
-    val featCols = out.columns
-      .filterNot(Set("__seg_id", "__seg_start", "__seg_end", "__start", "__end", "__grp"))
-      .sorted
-    out.select(
-      (col("__grp").as(group.name) +:
-        featCols.toIndexedSeq.map(qc)) :+
+      (col("__grp").as(group.name) +: manualOutputs) :+
         group.restoreIdx(col("__start")).as("__start") :+
         group.restoreIdx(col("__end")).as("__end"): _*)
   }

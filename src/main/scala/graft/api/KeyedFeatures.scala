@@ -447,10 +447,22 @@ object KeyedFeatures {
     // the last run's segment closes at end + ext: trailing null-group rows
     // beyond that are outside every segment (single-series G3 terminator)
     val keyEnd = runs.groupBy("__key").agg(max(col("__end")).as("__kend"))
-    val names = unary.map { case (c, f) => Win.outputName(Seq(c), f.name, "manual") }
+    // a multi-output function's struct aggregate expands into one column
+    // per declared output (the main path's rule)
+    val aggNames = unary.map { case (c, f) => Win.outputName(Seq(c), f.name, "manual") }
+    val outs = unary.zip(aggNames).flatMap { case ((c, f), n) =>
+      f.outputNames match {
+        case Some(os) => os.map { o =>
+          val on = Win.outputName(Seq(c), o, "manual")
+          on -> col(s"`$n`").getField(o).as(on)
+        }
+        case None => Seq(n -> col(s"`$n`"))
+      }
+    }.sortBy(_._1)
+    val names = outs.map(_._1)
     require(names.distinct.length == names.length,
       "duplicate output names: " + names.diff(names.distinct).mkString(", "))
-    val aggs = unary.zip(names).map { case ((c, f), n) =>
+    val aggs = unary.zip(aggNames).map { case ((c, f), n) =>
       f.agg(col("__idx"), col(c)).as(n) }
     // plain equi-join on the key (NOT broadcast: one row per key is still
     // millions of rows at scale; AQE may still choose broadcast when small)
@@ -459,7 +471,7 @@ object KeyedFeatures {
       .groupBy("__key", "__run").agg(aggs.head, aggs.tail: _*)
     runs.join(feats, Seq("__key", "__run"), "left")
       .select(col("__key").as(keyCol) +: col("__g").as(groupCol) +:
-        names.sorted.map(n => col(s"`$n`")) :+
+        outs.map(_._2) :+
         series.restoreIdx(col("__start")).as("__start") :+
         series.restoreIdx(col("__end")).as("__end"): _*)
   }

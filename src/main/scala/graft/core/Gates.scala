@@ -23,9 +23,11 @@ import org.apache.spark.sql.functions.broadcast
   *     only above [[PruneMinRows]] ranked rows;
   *   - '''driver collect''' — `Components.connectedComponents` solves edge
   *     lists at or under [[DriverEdgeRows]] on the driver;
-  *   - '''fusion''' — the same-source tuple fusion, the same-source G3
-  *     scan, the keyed maskable aggregate and the block-sliced
-  *     sorted-buffer bucket replace their generic plans.
+  *   - '''fusion''' — the same-source tuple fusion, the keyed maskable
+  *     aggregate and the block-sliced sorted-buffer bucket replace their
+  *     generic plans; G3 has one plan, and fusion only reads every series
+  *     that shares the group's source off the group's frame (off, every
+  *     series adds its own rows to the run scan).
   *
   * Production code never overrides these. Specs reach the degrade branches
   * and the generic differential twins through [[scoped]], which holds for

@@ -434,8 +434,8 @@ object Scan {
     *
     * Ties in `orderCols` between a grp row and null-grp rows are the
     * caller's to order (G3 appends a grp-is-null tiebreaker so the run's
-    * first row sorts before null rows at the same index, matching the
-    * union-scan path's tag ordering).
+    * first row sorts before null rows at the same index: those rows join
+    * the run that starts there).
     */
   def groupRunScan(df: DataFrame, orderCols: Seq[String], grpCol: String,
                    boundCol: String, runCol: String,

@@ -17,6 +17,31 @@ import org.apache.spark.sql.functions._
   */
 object GroupedStats {
 
+  /** Every key of `df`, left-joined to its row of `result` (keyed on
+    * `keyCol`): keys whose statistic is degenerate (all-null, constant or
+    * too-short series) still surface, with NULLs. The join is null-safe
+    * (<=>), so a NULL key is one key, as in the operators' groupBys.
+    */
+  private def withEveryKey(df: DataFrame, keyCol: String, result: DataFrame,
+                           op: String): DataFrame = {
+    require(keyCol != "__gs_rk", s"__gs_rk is reserved by $op")
+    df.select(col(keyCol)).distinct()
+      .join(result.withColumnRenamed(keyCol, "__gs_rk"),
+        col(keyCol) <=> col("__gs_rk"), "left")
+      .drop("__gs_rk")
+  }
+
+  /** Least-squares slope of `y` on `x` over a group, by the moment
+    * formula: NULL with fewer than two distinct x, where Spark's
+    * `regr_slope` raises DIVIDE_BY_ZERO under ANSI.
+    */
+  private def olsSlope(x: Column, y: Column): Column = {
+    val n = count(lit(1)).cast("double")
+    val sx = sum(x); val sy = sum(y)
+    val sxy = sum(x * y); val sxx = sum(x * x)
+    when(n * sxx - sx * sx > 0, (n * sxy - sx * sy) / (n * sxx - sx * sx))
+  }
+
   /** Exact per-key quantiles with linear interpolation (numpy /
     * `quantile_cont` semantics): for each key and q, the value at fractional
     * rank `1 + (n-1)q`. Returns one row per key: (keyCol, q_<label>...).
@@ -119,10 +144,7 @@ object GroupedStats {
     val quantsByKey = ranked.where(needed)
       .groupBy(col(keyCol))
       .agg(aggs.head, aggs.tail: _*)
-    val keys = df.select(col(keyCol)).distinct()
-    keys.join(quantsByKey.withColumnRenamed(keyCol, "__gs_rk"),
-        col(keyCol) <=> col("__gs_rk"), "left")
-      .drop("__gs_rk")
+    withEveryKey(df, keyCol, quantsByKey, "exactQuantilesMulti")
   }
 
   /** Higuchi fractal dimension per key (antropy `higuchi_fd`, closing the
@@ -173,23 +195,9 @@ object GroupedStats {
       // a constant series gives L(k) = 0 → ln null; drop those points so
       // the moment sums and the count agree (SQL aggregates skip nulls)
       .where(col("__y").isNotNull)
-    // moment-formula slope: Spark's regr_slope raises DIVIDE_BY_ZERO
-    // under ANSI on a single point; this form yields NULL instead
-    val n = count(lit(1)).cast("double")
-    val sx = sum(col("__xk")); val sy = sum(col("__y"))
-    val sxy = sum(col("__xk") * col("__y"))
-    val sxx = sum(col("__xk") * col("__xk"))
-    val fd = lk.groupBy(keyCol).agg(
-      when(n * sxx - sx * sx > 0,
-        (n * sxy - sx * sy) / (n * sxx - sx * sx)).as("higuchi_fd"))
-    // keys whose every point was degenerate (constant/too-short series)
-    // still surface, with NULL — the same re-attach convention as
-    // exactQuantiles, null-safe for NULL keys
-    require(keyCol != "__gs_rk", "__gs_rk is reserved by higuchiFd")
-    df.select(col(keyCol)).distinct()
-      .join(fd.withColumnRenamed(keyCol, "__gs_rk"),
-        col(keyCol) <=> col("__gs_rk"), "left")
-      .drop("__gs_rk")
+    val fd = lk.groupBy(keyCol)
+      .agg(olsSlope(col("__xk"), col("__y")).as("higuchi_fd"))
+    withEveryKey(df, keyCol, fd, "higuchiFd")
   }
 
   /** Detrended fluctuation analysis per key (classic Peng DFA-1, the
@@ -212,7 +220,6 @@ object GroupedStats {
           boxSizes: Seq[Int] = Seq(4, 8, 16, 32, 64)): DataFrame = {
     require(boxSizes.forall(_ >= 2), "DFA box sizes must be >= 2")
     require(boxSizes.distinct.size >= 2, "DFA needs >= 2 distinct box sizes")
-    require(keyCol != "__gs_rk", "__gs_rk is reserved by dfa")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keyCol).orderBy(idxCol)
     val wk = Window.partitionBy(keyCol)
@@ -246,17 +253,9 @@ object GroupedStats {
       .where(col("__f") > 0)
       .select(col(keyCol), log(col("__f")).as("__yf"),
         log(col("__bs")).as("__xf"))
-    val n = count(lit(1)).cast("double")
-    val sx = sum(col("__xf")); val sy2 = sum(col("__yf"))
-    val sxy2 = sum(col("__xf") * col("__yf"))
-    val sxx2 = sum(col("__xf") * col("__xf"))
-    val alpha = fn.groupBy(keyCol).agg(
-      when(n * sxx2 - sx * sx > 0,
-        (n * sxy2 - sx * sy2) / (n * sxx2 - sx * sx)).as("dfa_alpha"))
-    df.select(col(keyCol)).distinct()
-      .join(alpha.withColumnRenamed(keyCol, "__gs_rk"),
-        col(keyCol) <=> col("__gs_rk"), "left")
-      .drop("__gs_rk")
+    val alpha = fn.groupBy(keyCol)
+      .agg(olsSlope(col("__xf"), col("__yf")).as("dfa_alpha"))
+    withEveryKey(df, keyCol, alpha, "dfa")
   }
 
   /** Hurst exponent per key by rescaled-range (R/S) analysis (the nolds
@@ -279,7 +278,6 @@ object GroupedStats {
               boxSizes: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
     require(boxSizes.forall(_ >= 2), "R/S box sizes must be >= 2")
     require(boxSizes.distinct.size >= 2, "R/S needs >= 2 distinct box sizes")
-    require(keyCol != "__gs_rk", "__gs_rk is reserved by hurstRs")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keyCol).orderBy(idxCol)
     val wk = Window.partitionBy(keyCol)
@@ -308,17 +306,9 @@ object GroupedStats {
       .where(col("__rsn") > 0)
       .select(col(keyCol), log(col("__rsn")).as("__yr"),
         log(col("__bs")).as("__xr"))
-    val n = count(lit(1)).cast("double")
-    val sx = sum(col("__xr")); val sy = sum(col("__yr"))
-    val sxy = sum(col("__xr") * col("__yr"))
-    val sxx = sum(col("__xr") * col("__xr"))
-    val h = rsn.groupBy(keyCol).agg(
-      when(n * sxx - sx * sx > 0,
-        (n * sxy - sx * sy) / (n * sxx - sx * sx)).as("hurst_rs"))
-    df.select(col(keyCol)).distinct()
-      .join(h.withColumnRenamed(keyCol, "__gs_rk"),
-        col(keyCol) <=> col("__gs_rk"), "left")
-      .drop("__gs_rk")
+    val h = rsn.groupBy(keyCol)
+      .agg(olsSlope(col("__xr"), col("__yr")).as("hurst_rs"))
+    withEveryKey(df, keyCol, h, "hurstRs")
   }
 
   /** Exact per-key median (linear interpolation on even counts). */
@@ -348,7 +338,6 @@ object GroupedStats {
   def corrDim(df: DataFrame, keyCol: String, idxCol: String,
               valCol: String, embDim: Int = 2): DataFrame = {
     require(embDim >= 1 && embDim <= 8, "corr_dim embDim must be in [1, 8]")
-    require(keyCol != "__gs_rk", "__gs_rk is reserved by corrDim")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keyCol).orderBy(idxCol)
     val wk = Window.partitionBy(keyCol)
@@ -386,10 +375,7 @@ object GroupedStats {
         when(col("__s") > 0 && col("__c1") > 0,
           (log(col("__c2").cast("double")) - log(col("__c1").cast("double")))
             / lit(math.log(2.0))).as("corr_dim"))
-    df.select(col(keyCol)).distinct()
-      .join(cd.withColumnRenamed(keyCol, "__gs_rk"),
-        col(keyCol) <=> col("__gs_rk"), "left")
-      .drop("__gs_rk")
+    withEveryKey(df, keyCol, cd, "corrDim")
   }
 
   /** Multiscale (sample) entropy per key (the pyentrp
@@ -417,7 +403,6 @@ object GroupedStats {
                         rFactor: Double = 0.2): DataFrame = {
     require(scales.nonEmpty && scales.forall(_ >= 1), "scales must be >= 1")
     require(scales.distinct.size == scales.size, "duplicate scales")
-    require(keyCol != "__gs_rk", "__gs_rk is reserved by multiscaleEntropy")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keyCol).orderBy(idxCol)
     val wk = Window.partitionBy(keyCol)
@@ -441,10 +426,7 @@ object GroupedStats {
     val aggs = scales.map(s =>
       max(when(col("__s") === s, col("__se"))).as(s"mse_$s"))
     val mse = perScale.groupBy(keyCol).agg(aggs.head, aggs.tail: _*)
-    df.select(col(keyCol)).distinct()
-      .join(mse.withColumnRenamed(keyCol, "__gs_rk"),
-        col(keyCol) <=> col("__gs_rk"), "left")
-      .drop("__gs_rk")
+    withEveryKey(df, keyCol, mse, "multiscaleEntropy")
   }
 
   /** Largest Lyapunov exponent per key, Rosenstein's method (the nolds
@@ -472,7 +454,6 @@ object GroupedStats {
             embDim: Int = 3, minTsep: Int = 5, trajLen: Int = 6): DataFrame = {
     require(embDim >= 2 && embDim <= 8, "lyap_r embDim must be in [2, 8]")
     require(minTsep >= 1 && trajLen >= 2, "minTsep >= 1, trajLen >= 2")
-    require(keyCol != "__gs_rk", "__gs_rk is reserved by lyapR")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keyCol).orderBy(idxCol)
     val base = df
@@ -516,17 +497,9 @@ object GroupedStats {
         log(sqrt(col("__dt2"))).as("__ld"))
     val curve = div.groupBy(col(keyCol), col("__tt"))
       .agg(avg(col("__ld")).as("__y"))
-    val n = count(lit(1)).cast("double")
-    val sx = sum(col("__tt")); val sy = sum(col("__y"))
-    val sxy = sum(col("__tt") * col("__y"))
-    val sxx = sum(col("__tt") * col("__tt"))
-    val le = curve.groupBy(keyCol).agg(
-      when(n * sxx - sx * sx > 0,
-        (n * sxy - sx * sy) / (n * sxx - sx * sx)).as("lyap_r"))
-    df.select(col(keyCol)).distinct()
-      .join(le.withColumnRenamed(keyCol, "__gs_rk"),
-        col(keyCol) <=> col("__gs_rk"), "left")
-      .drop("__gs_rk")
+    val le = curve.groupBy(keyCol)
+      .agg(olsSlope(col("__tt"), col("__y")).as("lyap_r"))
+    withEveryKey(df, keyCol, le, "lyapR")
   }
 
   /** Eckmann Lyapunov SPECTRUM `lyap_e` per key, matrix dimension 2 (the
@@ -549,7 +522,6 @@ object GroupedStats {
             minTsep: Int = 5, minNb: Int = 6,
             fusedRadius: Boolean = true): DataFrame = {
     require(minTsep >= 1 && minNb >= 2, "minTsep >= 1, minNb >= 2")
-    require(keyCol != "__gs_rk", "__gs_rk is reserved by lyapE")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keyCol).orderBy(idxCol)
     val e = df
@@ -624,11 +596,9 @@ object GroupedStats {
     val folded = fit.groupBy(keyCol)
       .agg(graft.expr.LyapEFold(array_sort(collect_list(
         struct(col("__ia"), col("__a1"), col("__a2"))))).as("__le"))
-      .select(col(keyCol).as("__gs_rk"),
+      .select(col(keyCol),
         col("__le").getField("lyap_e_1").as("lyap_e_1"),
         col("__le").getField("lyap_e_2").as("lyap_e_2"))
-    df.select(col(keyCol)).distinct()
-      .join(folded, col(keyCol) <=> col("__gs_rk"), "left")
-      .drop("__gs_rk")
+    withEveryKey(df, keyCol, folded, "lyapE")
   }
 }

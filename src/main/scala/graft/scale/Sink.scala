@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   */
 object Sink {
 
-  import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+  import org.apache.spark.sql.types.MapType
+  import graft.core.Scan.containsMapType
 
   private val cleanupRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -104,15 +105,6 @@ object Sink {
     }
   }
 
-  /** hash/xxhash64 reject MapType anywhere in the tree (map key order is
-    * undefined), so the tiebreak must skip such columns recursively. */
-  private def containsMap(dt: DataType): Boolean = dt match {
-    case _: MapType     => true
-    case s: StructType  => s.fields.exists(f => containsMap(f.dataType))
-    case a: ArrayType   => containsMap(a.elementType)
-    case _              => false
-  }
-
   /** Write `df` as parquet hive-partitioned by `partitionCols`, at most
     * `filesPerPartition` files per leaf directory, rows sorted by
     * `sortCols` within each file.
@@ -145,9 +137,9 @@ object Sink {
     // negligible but real.
     val hashableCols = df.schema.fields.toSeq.flatMap { f =>
       f.dataType match {
-        case m: MapType if !containsMap(m.keyType) && !containsMap(m.valueType) =>
+        case m: MapType if !containsMapType(m.keyType) && !containsMapType(m.valueType) =>
           Some(array_sort(map_entries(col(f.name))))
-        case dt if !containsMap(dt) => Some(col(f.name))
+        case dt if !containsMapType(dt) => Some(col(f.name))
         case _ => None
       }
     }

@@ -182,6 +182,34 @@ class FeatureCollectionSpec extends SparkSpec {
     assert(rows == Seq(("x", 3.0, 0L, 1L), ("y", 3.0, 2L, 2L), ("x", 4.0, 3L, 3L)))
   }
 
+  test("group-by paths expand a multi-output function into one column per output") {
+    import spark.implicits._
+    val df = Seq((0L, 1.0, "x"), (1L, 2.0, "x"), (2L, 3.0, "y"), (3L, 5.0, "x"))
+      .toDF("idx", "v", "g")
+    val fc = FeatureCollection(FeatureDescriptor(FeatureFuncs.minMax, "v", None, None))
+    val names = Seq("v__mm_max__w=manual", "v__mm_min__w=manual")
+    assert(fc.descriptors.flatMap(_.outputNamesAll).sorted == names)
+    val data = Seq(Series("v", df, "idx", "v"))
+    val group = Series("g", df, "idx", "g")
+    val g1 = fc.calculateGroupByAll(data, group)
+    assert(g1.columns.toSeq == "g" +: names)
+    assert(g1.orderBy("g").collect().map(_.toString).toSeq ==
+      Seq("[x,5.0,1.0]", "[y,3.0,3.0]"))
+    for (fuse <- Seq(true, false)) {
+      val g3 = graft.core.Gates.scoped(fuse = fuse) {
+        fc.calculateGroupByConsecutive(data, group)
+      }
+      assert(g3.columns.toSeq == ("g" +: names) ++ Seq("__start", "__end"))
+      assert(g3.orderBy("__start").collect().map(_.toString).toSeq ==
+        Seq("[x,2.0,1.0,0,1]", "[y,3.0,3.0,2,2]", "[x,5.0,5.0,3,3]"), s"fuse=$fuse")
+    }
+    val keyed = KeyedFeatures.calculateGroupByConsecutive(
+      df.withColumn("k", lit("a")), "k", "idx", "g", Seq("v" -> FeatureFuncs.minMax))
+    assert(keyed.columns.toSeq == ("k" +: "g" +: names) ++ Seq("__start", "__end"))
+    assert(keyed.orderBy("__start").collect().map(_.toString).toSeq ==
+      Seq("[a,x,2.0,1.0,0,1]", "[a,y,3.0,3.0,2,2]", "[a,x,5.0,5.0,3,3]"))
+  }
+
   test("A5 robust: min_nb_samples guard returns error_val") {
     val fc = FeatureCollection(FeatureDescriptor(mean.robust(10, -7.0), "dummy",
       Some(Win.seq(3L)), Some(Seq(Win.seq(1L)))))

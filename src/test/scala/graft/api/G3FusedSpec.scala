@@ -6,17 +6,19 @@ import graft.SparkSpec
 import graft.core.{FeatureFuncs, Gates, Series}
 import FeatureFuncs.{len, mean, min => fMin, max => fMax, sum => fSum}
 
-/** Differential spec for the r19 same-source G3 fusion
-  * (`FeatureCollection.fusedGroupByConsecutive`, gated in
-  * `calculateGroupByConsecutive`): on same-source inputs the fused
-  * single-scan plan must be ROW-IDENTICAL to the generic
-  * union-scan/forward-fill plan (`Gates.scoped(fuse = false)`), across nulls in
-  * the group column (runs neither started nor broken), nulls in values,
-  * leading rows before the first run, trailing rows inside and beyond the
-  * last segment's +1unit/day close, value rows tied on the run-start index,
-  * multiple value series, and both index domains. Exact comparison for
-  * group/len/min/max/start/end; mean/sum compared at 9 dp (aggregation
-  * order differs between the plans, like any shuffle reorder).
+/** Differential spec for group_by_consecutive's one run scan
+  * (`FeatureCollection.calculateGroupByConsecutive`): the plan that fuses
+  * every same-source series into the group's wide frame must be
+  * ROW-IDENTICAL to its twin, where `Gates.scoped(fuse = false)` makes
+  * every series its own source and adds its per-source rows to the scan,
+  * across nulls in the group column (runs neither started nor broken),
+  * nulls in values, leading rows before the first run, trailing rows
+  * inside and beyond the last segment's +1unit/day close, value rows tied
+  * on the run-start index, multiple value series, and both index domains.
+  * Exact comparison for group/len/min/max/start/end; mean/sum compared at
+  * 9 dp (aggregation order differs between the plans, like any shuffle
+  * reorder). Series off another frame than the group are pinned by
+  * hand-checked rows and by equality with each series computed alone.
   */
 class G3FusedSpec extends SparkSpec {
   import spark.implicits._
@@ -39,14 +41,14 @@ class G3FusedSpec extends SparkSpec {
   private def compare(data: Seq[Series], group: Series,
                       fc: FeatureCollection = fc2): Unit = {
     val fused = fc.calculateGroupByConsecutive(data, group)
-    val generic = Gates.scoped(fuse = false) {
+    val perSource = Gates.scoped(fuse = false) {
       fc.calculateGroupByConsecutive(data, group)
     }
-    assert(fused.columns.toSeq == generic.columns.toSeq)
-    val (f, g) = (rowsOf(fused), rowsOf(generic))
-    assert(f.size == g.size, s"row counts: fused=${f.size} generic=${g.size}")
+    assert(fused.columns.toSeq == perSource.columns.toSeq)
+    val (f, g) = (rowsOf(fused), rowsOf(perSource))
+    assert(f.size == g.size, s"row counts: fused=${f.size} per-source rows=${g.size}")
     f.zip(g).zipWithIndex.foreach { case ((a, b), i) =>
-      assert(a == b, s"row $i differs:\n  fused:   $a\n  generic: $b")
+      assert(a == b, s"row $i differs:\n  fused:   $a\n  per-source rows: $b")
     }
   }
 
@@ -149,14 +151,63 @@ class G3FusedSpec extends SparkSpec {
     compare(Seq(Series("value", a, "idx", "value")),
       Series("grp", b, "idx", "grp"))
     // a filtered frame is NOT same-source: the gate must fall back (the
-    // generic and gated entry must agree trivially because the gate is off)
+    // per-source rows plan and gated entry must agree trivially because the
+    // gate is off)
     val c = a.where(col("idx") < 50)
     val gated = fc2.calculateGroupByConsecutive(
       Seq(Series("value", c, "idx", "value")), Series("grp", b, "idx", "grp"))
-    val generic = Gates.scoped(fuse = false) {
+    val perSource = Gates.scoped(fuse = false) {
       fc2.calculateGroupByConsecutive(
         Seq(Series("value", c, "idx", "value")), Series("grp", b, "idx", "grp"))
     }
-    assert(rowsOf(gated) == rowsOf(generic))
+    assert(rowsOf(gated) == rowsOf(perSource))
+  }
+
+  test("series off another frame: hand-checked runs, an empty run, rows outside every run") {
+    // runs a@[0,5), b@[5,10), a@[10,11): -1 precedes every run, 0 ties on
+    // the first run's start and joins it, b holds no value row, 11 and 12
+    // sit at or past the last run's +1 close
+    val grp = Seq((0L, "a"), (5L, "b"), (10L, "a")).toDF("idx", "g")
+    val vals = Seq((-1L, 9.0), (0L, 1.0), (3L, 2.0), (10L, 3.0), (10L, 4.0),
+      (11L, 5.0), (12L, 6.0)).toDF("idx", "v")
+    val fc = FeatureCollection(FeatureDescriptor(len, "v", None, None),
+      FeatureDescriptor(fSum, "v", None, None))
+    for (fuse <- Seq(true, false)) {
+      val out = Gates.scoped(fuse = fuse) {
+        fc.calculateGroupByConsecutive(Seq(Series("v", vals, "idx", "v")),
+          Series("g", grp, "idx", "g"))
+      }
+      assert(out.columns.toSeq ==
+        Seq("g", "v__len__w=manual", "v__sum__w=manual", "__start", "__end"))
+      assert(out.orderBy("__start").collect().map(_.toString).toSeq ==
+        Seq("[a,2,3.0,0,0]", "[b,null,null,5,5]", "[a,2,7.0,10,10]"), s"fuse=$fuse")
+    }
+  }
+
+  test("a call mixing the group's frame and another frame equals each series alone") {
+    val r = new scala.util.Random(49)
+    val df = (0 until 150).map { i =>
+      (i.toLong * 2, r.nextGaussian(),
+        if (r.nextInt(8) == 0) null else "g" + r.nextInt(3))
+    }.toDF("idx", "value", "grp").repartition(3)
+    val other = (0 until 120).map(i => (i.toLong * 3 - 7, r.nextGaussian()))
+      .toDF("idx", "w").repartition(2)
+    val group = Series("grp", df, "idx", "grp")
+    val sv = Series("value", df, "idx", "value")
+    val sw = Series("w", other, "idx", "w")
+    val fc = FeatureCollection(
+      FeatureDescriptor(mean, "value", None, None),
+      FeatureDescriptor(len, "value", None, None),
+      FeatureDescriptor(fSum, "w", None, None),
+      FeatureDescriptor(fMax, "w", None, None))
+    val mixed = fc.calculateGroupByConsecutive(Seq(sv, sw), group)
+    def alone(s: Series) =
+      FeatureCollection.of(fc.descriptors.filter(_.seriesNames == Seq(s.name)))
+        .calculateGroupByConsecutive(Seq(s), group)
+    val both = alone(sv).join(alone(sw).drop("grp", "__end"), Seq("__start"))
+      .select(mixed.columns.toSeq.map(c => col(s"`$c`")): _*)
+    val m = rowsOf(mixed)
+    assert(m.size > 20, "the data should hold many runs")
+    assert(m == rowsOf(both))
   }
 }

@@ -215,6 +215,49 @@ class ScanSpec extends SparkSpec {
     }
   }
 
+  test("groupRunScan equals a global-window reference") {
+    import spark.implicits._
+    // two group values over ~30% null groups, so equal values repeat across
+    // null gaps (one run) and after another value (a new run); an index
+    // step of 0 ties a row on (idx, gn) with its predecessor, and such a row
+    // has a null group, so the one tie order that matters (a group row
+    // before the null-group rows at its index) is fixed by gn
+    val rnd = new scala.util.Random(13)
+    var t = 0L
+    val d = (1 to 2000).map { i =>
+      val step = rnd.nextInt(4)
+      t += step
+      val g = if (step == 0 || rnd.nextInt(10) < 3) null else s"g${rnd.nextInt(2)}"
+      (i.toLong, t, g, if (g == null) 1 else 0)
+    }.toDF("id", "idx", "g", "gn").repartition(16)
+    val w = Window.orderBy("idx", "gn")
+    val prevNN = last(col("g"), ignoreNulls = true)
+      .over(w.rowsBetween(Window.unboundedPreceding, -1))
+    val exp = d
+      .withColumn("f", when(col("g").isNotNull &&
+        (prevNN.isNull || prevNN =!= col("g")), 1L).otherwise(0L))
+      .select(col("id"), sum(col("f")).over(
+          w.rowsBetween(Window.unboundedPreceding, 0)),
+        max(when(col("g").isNotNull, col("idx"))).over(Window.partitionBy()))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1).toSeq
+    assert(exp.map(_._2).distinct.size > 100, "the data should hold many runs")
+    // AQE off: its coalescing would merge the range partitions back into one
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      for (parts <- Seq(1, 4, 37)) {
+        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+        val got = Scan.groupRunScan(d, Seq("idx", "gn"), "g", "idx", "run", "gmax")
+          .select("id", "run", "gmax").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+        assert(got == exp, s"$parts partitions diverged from the global window")
+      }
+    } finally {
+      spark.conf.unset("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.shuffle.partitions", "4")
+    }
+  }
+
   test("keyedRunningSum: an input carrying a working or output column name is rejected") {
     // the working columns ride unqualified through withColumn/agg — a
     // caller column of that name would be silently replaced, not summed
