@@ -158,18 +158,12 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
   private def manualName(d: AnyFeatureDescriptor): String =
     Win.outputName(d.seriesNames, d.funcName, "manual")
 
-  /** A descriptor's output columns, each with its W10 name, off its
-    * aggregate column `aggName`: a multi-output function (A3 one-to-many)
-    * returns a struct, and each declared output gets its own column.
+  /** A descriptor's output columns ([[Win.outputColumns]]) off its
+    * aggregate column `aggName`, the W10 name under window render `winR`.
     */
   private def expand(d: AnyFeatureDescriptor, aggName: String,
-                     winR: String): Seq[(String, Column)] = d.funcOutputNames match {
-    case Some(os) => os.map { o =>
-      val n = Win.outputName(d.seriesNames, o, winR)
-      n -> qc(aggName).getField(o).as(n)
-    }
-    case None => Seq(aggName -> qc(aggName))
-  }
+                     winR: String): Seq[(String, Column)] =
+    Win.outputColumns(d.seriesNames, d.funcName, d.funcOutputNames, winR, qc(aggName))
 
   /** The group-by paths' (G1/G3) feature columns, sorted by name, off
     * aggregate columns named [[manualName]].
@@ -531,10 +525,12 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
     * bound filter fed by the scan's own summary. When every series shares
     * the group's source (q12) one aggregate per run computes the
     * boundaries, the group value and every feature. Otherwise the
-    * aggregate runs per (run, source) and a second one reads each source's
-    * features off that source's row: a run with no rows of a source gets
-    * NULL features. `Gates.fuse` off makes every series its own source —
-    * the differential twin (G3FusedSpec).
+    * aggregate runs per (run, source), each source's features evaluated
+    * only in that source's groups, and a second one reads them off that
+    * source's row: a run with no rows of a source gets NULL features, and
+    * no function is called on an empty window (what a left join of
+    * per-source aggregates gives). `Gates.fuse` off makes every series its
+    * own source — the differential twin (G3FusedSpec).
     */
   def calculateGroupByConsecutive(data: Seq[Series], group: Series): DataFrame = {
     requireSameTz(data :+ group)
@@ -572,23 +568,26 @@ class FeatureCollection(val descriptors: Seq[AnyFeatureDescriptor]) {
       "__idx", "__run", "__gmax")
     val kept = scanned.where(col("__run") > 0 &&
       col("__idx") < col("__gmax") + lit(group.domain.runEnd))
-    def featAggs(ss: Seq[Used]): Seq[Column] =
-      for ((s, ds) <- ss; d <- ds) yield
-        d.aggOver(col("__idx"), Seq(col(s"__val_${s.name}"))).as(manualName(d))
+    // source k's features; `inSource` wraps each in its own source's
+    // groups — `__src` is a grouping key, so the CASE runs on the aggregate
+    // results and a function never sees another source's (empty) input
+    def featAggs(ss: Seq[Used], inSource: Column => Column): Seq[Column] =
+      for ((s, ds) <- ss; d <- ds) yield inSource(
+        d.aggOver(col("__idx"), Seq(qc(s"__val_${s.name}")))).as(manualName(d))
     val grpNN = col("__grp").isNotNull
     val start = min(when(grpNN, col("__idx"))).as("__start")
     val runAggs = Seq(max(when(grpNN, col("__idx"))).as("__end"),
       first(col("__grp"), ignoreNulls = true).as("__grp"))
     val out =
       if (sources.isEmpty)
-        kept.groupBy("__run").agg(start, runAggs ++ featAggs(own): _*)
+        kept.groupBy("__run").agg(start, runAggs ++ featAggs(own, identity): _*)
       else {
-        val picks = for {
-          (ss, k) <- (own +: sources).zipWithIndex; (_, ds) <- ss; d <- ds
-        } yield first(when(col("__src") === k, qc(manualName(d))),
-          ignoreNulls = true).as(manualName(d))
+        val feats = (own +: sources).zipWithIndex.flatMap { case (ss, k) =>
+          featAggs(ss, when(col("__src") === k, _)) }
+        val picks = for ((_, ds) <- used; d <- ds) yield
+          first(qc(manualName(d)), ignoreNulls = true).as(manualName(d))
         kept.groupBy("__run", "__src")
-          .agg(start, runAggs ++ featAggs(used): _*)
+          .agg(start, runAggs ++ feats: _*)
           .groupBy("__run").agg(min(col("__start")).as("__start"),
             Seq(max(col("__end")).as("__end"),
               first(col("__grp"), ignoreNulls = true).as("__grp")) ++ picks: _*)

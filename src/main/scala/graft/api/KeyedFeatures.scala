@@ -369,13 +369,10 @@ object KeyedFeatures {
 
     // multi-output functions return a struct — each declared output gets
     // its own W10-named column (same rule as the main path)
-    def funcNames(f: Feat, winR: String): Seq[(Column, String)] = f.outputNames match {
-      case Some(os) => os.map(o => (col(f.base).getField(o),
-        Win.outputName(f.seriesNames, o, winR)))
-      case None => Seq((col(f.base), Win.outputName(f.seriesNames, f.fname, winR)))
-    }
     val outs = for {
-      (win, _) <- specs; f <- feats; (src, n) <- funcNames(f, win.render)
+      (win, _) <- specs; f <- feats
+      (n, src) <- Win.outputColumns(f.seriesNames, f.fname, f.outputNames,
+        win.render, col(f.base))
     } yield (win.amount, src, n)
     val outNames = outs.map(_._3)
     require(outNames.distinct.length == outNames.length,
@@ -451,13 +448,7 @@ object KeyedFeatures {
     // per declared output (the main path's rule)
     val aggNames = unary.map { case (c, f) => Win.outputName(Seq(c), f.name, "manual") }
     val outs = unary.zip(aggNames).flatMap { case ((c, f), n) =>
-      f.outputNames match {
-        case Some(os) => os.map { o =>
-          val on = Win.outputName(Seq(c), o, "manual")
-          on -> col(s"`$n`").getField(o).as(on)
-        }
-        case None => Seq(n -> col(s"`$n`"))
-      }
+      Win.outputColumns(Seq(c), f.name, f.outputNames, "manual", col(s"`$n`"))
     }.sortBy(_._1)
     val names = outs.map(_._1)
     require(names.distinct.length == names.length,

@@ -147,4 +147,20 @@ object Win {
     */
   def outputName(seriesKeys: Seq[String], featName: String, winStr: String): String =
     s"${seriesKeys.mkString("|")}__${featName}__w=$winStr"
+
+  /** A feature's output columns off its aggregate column `agg`, each with
+    * its [[outputName]]: a multi-output function (A3 one-to-many) returns a
+    * struct, and each declared output is one field of it, aliased to its
+    * name; a single-output feature is `agg` itself.
+    */
+  def outputColumns(seriesKeys: Seq[String], featName: String,
+                    outputNames: Option[Seq[String]], winStr: String,
+                    agg: org.apache.spark.sql.Column): Seq[(String, org.apache.spark.sql.Column)] =
+    outputNames match {
+      case Some(os) => os.map { o =>
+        val n = outputName(seriesKeys, o, winStr)
+        n -> agg.getField(o).as(n)
+      }
+      case None => Seq(outputName(seriesKeys, featName, winStr) -> agg)
+    }
 }

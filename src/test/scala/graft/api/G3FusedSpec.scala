@@ -184,6 +184,37 @@ class G3FusedSpec extends SparkSpec {
     }
   }
 
+  test("a function undefined on empty input and a dotted name, off other frames") {
+    // runs a@[0,5), b@[5,10), a@[10,11). `value` shares the group's frame,
+    // `acc.x` and `w` each come off another frame; acc.x holds no row in
+    // run b and w none in either a run. A run a source has no rows in gets
+    // NULL features: the function is never called on an empty window.
+    val df = Seq[(Long, String, java.lang.Double)]((0L, "a", 1.0),
+      (2L, null, 4.0), (5L, "b", 2.0), (10L, "a", 3.0)).toDF("idx", "g", "value")
+    val acc = Seq((-1L, 9.0), (0L, 1.0), (3L, 2.0), (10L, 3.0), (10L, 4.0),
+      (11L, 5.0)).toDF("idx", "v")
+    val other = Seq((6L, 7.0), (7L, 8.0)).toDF("idx", "w")
+    val strictMax = FeatureFuncs.fromArray("smax", a => {
+      require(a.nonEmpty, "smax of an empty window"); a.max })
+    val names = Seq("value", "acc.x", "w")
+    val fc = FeatureCollection.of(names.flatMap(n => Seq(
+      FeatureDescriptor(len, n, None, None),
+      FeatureDescriptor(strictMax, n, None, None))))
+    val data = Seq(Series("value", df, "idx", "value"),
+      Series("acc.x", acc, "idx", "v"), Series("w", other, "idx", "w"))
+    for (fuse <- Seq(true, false)) {
+      val out = Gates.scoped(fuse = fuse) {
+        fc.calculateGroupByConsecutive(data, Series("g", df, "idx", "g"))
+      }
+      assert(out.columns.toSeq == ("g" +: Seq("acc.x", "value", "w").flatMap(n =>
+        Seq(s"${n}__len__w=manual", s"${n}__smax__w=manual"))) :+ "__start" :+ "__end")
+      assert(out.orderBy("__start").collect().map(_.toString).toSeq == Seq(
+        "[a,2,2.0,2,4.0,null,null,0,0]",
+        "[b,null,null,1,2.0,2,8.0,5,5]",
+        "[a,2,4.0,1,3.0,null,null,10,10]"), s"fuse=$fuse")
+    }
+  }
+
   test("a call mixing the group's frame and another frame equals each series alone") {
     val r = new scala.util.Random(49)
     val df = (0 until 150).map { i =>

@@ -6,7 +6,9 @@
 # Usage: tools/oracle.sh <sf> [outdir]
 #   <sf>      a scale-factor directory listed in TESTDATA.md (e.g. sf0.01)
 #   [outdir]  where Verify writes its parquet results
-#             (default: target/oracle_<sf>)
+#             (default: target/oracle_<sf>); it is DELETED first, so a
+#             given outdir that exists must be an earlier Verify output
+#             (one that holds oracle_sql.json), else the script refuses
 # Exits non-zero when Verify fails or any query FAILs the compare; a
 # compare with FAILs still copies its report, so the failure is recorded.
 set -euo pipefail
@@ -15,7 +17,13 @@ sf="${1:?usage: tools/oracle.sh <sf> [outdir]}"
 root="$(cd "$(dirname "$0")/.." && pwd)"
 data="/root/testdata/$sf"
 out="${2:-$root/target/oracle_$sf}"
+case "$out" in /*) ;; *) out="$PWD/$out" ;; esac
 [ -d "$data" ] || { echo "no test data at $data" >&2; exit 2; }
+
+if [ -n "${2:-}" ] && [ -e "$out" ] && [ ! -f "$out/oracle_sql.json" ]; then
+  echo "refusing to delete $out: not an earlier Verify output (no oracle_sql.json)" >&2
+  exit 2
+fi
 
 cd "$root"
 rm -rf "$out"
